@@ -74,6 +74,37 @@ def test_golden_payload_frozen(name):
     assert np.array_equal(out, GOLDEN_INPUT)
 
 
+def test_payload_layout_has_one_owner():
+    """Only tokseq/codecs/ knows the payload wire format: no engine
+    module, nor the selector or the stats screens, imports struct,
+    reads a codec's _HDR or defines a *_HDR constant — they reach
+    headers and streams through Codec.layout / assemble / payload_size.
+    (multimodal.py is outside this scope: its media container headers
+    are a different format.)"""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "tokseq"
+    files = sorted((root / "engine").glob("*.py"))
+    files += [root / "selector.py", root / "stats.py"]
+    bad = []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            modules, names = [], []
+            if isinstance(node, ast.Import):
+                modules = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                modules, names = [node.module or ""], [a.name for a in node.names]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            hits = [m for m in modules if m == "struct"]
+            hits += [x for x in names if x.endswith("_HDR")]
+            bad += [f"{path.name}:{node.lineno} {x}" for x in hits]
+    assert not bad, bad
+
+
 # --- hypothesis fuzz ---
 token_arrays = st.lists(
     st.integers(min_value=0, max_value=2**31 - 1), min_size=0, max_size=2000

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from tokseq.codecs import get_codec
+from tokseq.engine.agg import agg_batch_kernel
 from tokseq.engine.decode import decode_batch_kernel
 from tokseq.engine.encode import encode_batch_kernel
 
@@ -78,17 +79,29 @@ def test_grouped_path_tail_chunks_zero_extend_join(codec_name):
     """Chunks whose length is NOT a multiple of 8 have byte-padded (not
     8-field-padded) streams; the batch decoder zero-extends each
     section at join time. Every chunk here is unaligned and widths
-    vary, so a pad-math error would corrupt neighboring chunks."""
+    vary, so a pad-math error would corrupt neighboring chunks. The
+    aggregate kernel reads the same rle/dict streams through the same
+    group parsers, so it is checked on the same batches (unranged and
+    ranged); dict cardinalities reach 129-256, whose 8-bit index
+    streams take the memcpy-class per-chunk branch."""
     rng = np.random.default_rng(13)
     chunks = []
     for t in range(40):
         k = int(rng.integers(1, 900))
-        if k % 8 == 0:
-            k += 1
         hi_bits = int(rng.integers(3, 30))
         if codec_name == "dict":
-            card = int(rng.integers(1, 40))
-            v = rng.integers(0, 1 << hi_bits, card)[rng.integers(0, card, k)]
+            if t % 2:  # exact cardinality 129..256 -> index width 8
+                card = int(rng.integers(129, 257))
+                hi_bits = max(hi_bits, 9)
+                k = max(k, card + 1)
+                uniq = rng.choice(1 << hi_bits, card, replace=False)
+                pick = np.concatenate(
+                    [np.arange(card), rng.integers(0, card, k - card)]
+                )
+                v = uniq[rng.permutation(pick)]
+            else:
+                card = int(rng.integers(1, 129))
+                v = rng.integers(0, 1 << hi_bits, card)[rng.integers(0, card, k)]
         elif codec_name == "rle":
             v = np.repeat(
                 rng.integers(0, 1 << hi_bits, k // 9 + 1),
@@ -104,18 +117,31 @@ def test_grouped_path_tail_chunks_zero_extend_join(codec_name):
             v[m] = rng.integers(0, 1 << hi_bits, int(m.sum()))
         else:
             v = rng.integers(0, 1 << hi_bits, k)
+        if len(v) % 8 == 0:
+            v = np.append(v, v[0])
         chunks.append(np.asarray(v, dtype=np.int64))
+    if codec_name == "dict":
+        assert any(129 <= len(np.unique(c)) <= 256 for c in chunks)
     codec = get_codec(codec_name)
     encs = [codec.encode(c) for c in chunks]
-    ns = np.array([len(c) for c in chunks], dtype=np.int64)
-    flat, offs = decode_batch_kernel(
+    args = (
         [e.payload for e in encs],
         [codec_name] * len(chunks),
         np.array([e.bit_width for e in encs]),
         np.array([e.min_val for e in encs]),
-        ns,
+        np.array([len(c) for c in chunks], dtype=np.int64),
     )
+    flat, offs = decode_batch_kernel(*args)
     assert np.array_equal(flat, np.concatenate(chunks).astype(np.int32))
+
+    for lo, hi in ((None, None), (1 << 6, 1 << 16)):
+        cnts, sums, vmin, vmax = agg_batch_kernel(*args, lo, hi)
+        for i, c in enumerate(chunks):
+            sel = c if lo is None else c[(c >= lo) & (c <= hi)]
+            assert cnts[i] == len(sel), (i, lo)
+            assert sums[i] == int(sel.sum()), (i, lo)
+            if len(sel):
+                assert (vmin[i], vmax[i]) == (sel.min(), sel.max()), (i, lo)
 
 
 @pytest.mark.parametrize("codec_name", ["split", "split3", "dict"])

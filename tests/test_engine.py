@@ -138,19 +138,15 @@ def test_resume_duplicated_chunk_does_not_mask_missing(spark):
 
 
 def test_stitched_reassembly_equals_reference(spark, corpus_df, tmp_path):
-    """reassemble_docs_stitched (sorted-partition Arrow stitcher, the
-    EncodeJob.decode hot path) must equal the groupBy/array_sort
-    reference implementation — including docs whose chunk rows
-    straddle Arrow batches (forced via a tiny batch size)."""
+    """decode_docs (one shuffle of compressed bytes, then a fused
+    decode + stitch Arrow pass — the EncodeJob.decode hot path) must
+    equal the groupBy/array_sort reference reassembly — including docs
+    whose chunk rows straddle Arrow batches (forced via a tiny batch
+    size)."""
     import numpy as np
 
     from tokseq.engine.chunk import plan_chunks
-    from tokseq.engine.decode import (
-        decode_chunks,
-        decode_docs,
-        reassemble_docs,
-        reassemble_docs_stitched,
-    )
+    from tokseq.engine.decode import decode_chunks, decode_docs, reassemble_docs
     from tokseq.engine.encode import encode_chunks
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
@@ -159,16 +155,14 @@ def test_stitched_reassembly_equals_reference(spark, corpus_df, tmp_path):
         enc = encode_chunks(plan_chunks(corpus_df, 64), chunk_width=64)
         dec = decode_chunks(enc)
         ref = {r["doc_id"]: r["tokens"] for r in reassemble_docs(dec).collect()}
-        got = {r["doc_id"]: r["tokens"] for r in reassemble_docs_stitched(dec).collect()}
         # the fused one-shuffle-of-compressed-bytes path (EncodeJob.decode)
-        got2 = {r["doc_id"]: r["tokens"] for r in decode_docs(enc).collect()}
+        got = {r["doc_id"]: r["tokens"] for r in decode_docs(enc).collect()}
     finally:
         if old is not None:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert set(ref) == set(got) == set(got2)
+    assert set(ref) == set(got)
     for k in ref:
         assert np.array_equal(np.asarray(ref[k]), np.asarray(got[k])), k
-        assert np.array_equal(np.asarray(ref[k]), np.asarray(got2[k])), k
 
 
 def test_decode_docs_inline_dedup(spark, corpus_df):

@@ -294,6 +294,26 @@ def test_gather_slices_broadcasts_small_probe_set(spark, corpus_df, tmp_path):
     big = gather_slices(job.encoded(), probes, CHUNK_W, broadcast_threshold=0)
     assert {r["probe_id"]: list(r["tokens"]) for r in big.collect()} == got
 
+    # the bound counts only rows that expand into chunk keys (k > 0):
+    # many k = 0 rows next to a few real probes keep the broadcast plan
+    mixed = spark.createDataFrame(
+        [(i, doc["doc_id"], 0, 0) for i in range(1, 41)]
+        + [(0, doc["doc_id"], 2, 5), (41, doc["doc_id"], 3, 4)],
+        "probe_id int, doc_id string, pos long, k long",
+    )
+    # (size-based auto-broadcast off, so only the plan's own
+    # broadcast decision can put a BroadcastHashJoin in it)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        few = gather_slices(job.encoded(), mixed, CHUNK_W, broadcast_threshold=4)
+        plan = few._jdf.queryExecution().executedPlan().toString()
+        got_few = {r["probe_id"]: list(r["tokens"]) for r in few.collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastHashJoin" in plan
+    assert got_few == {0: got[0], 41: list(doc["tokens"][3:7])}
+
 
 def test_encode_job_chunk_width_persisted(spark, corpus_df, tmp_path):
     """The store remembers its chunk width (r5 ADVICE medium): a

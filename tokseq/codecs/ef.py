@@ -81,6 +81,16 @@ class PforEfCodec(Codec):
 
     name = "pfor_ef"
     _HDR = struct.Struct("<IBBB")
+    FIELDS = ("n_exc", "wb", "l", "we")
+
+    def streams(self, f):
+        n_exc = f["n_exc"]
+        return [
+            ("base", f["n"], f["wb"], False),
+            ("upper", np.where(n_exc > 0, ef_upper_bits(n_exc, f["n"], f["l"]), 0), 1, False),
+            ("lower", n_exc, f["l"], False),
+            ("exceptions", n_exc, f["we"], False),
+        ]
 
     def encode(self, values: np.ndarray, base_width: int | None = None) -> Encoded:
         v = as_int64(values)

@@ -2,7 +2,9 @@
 
 All operate on non-negative int64 chunks, are whole-array numpy, and
 round-trip bit-identically. Payload layouts are little-endian with
-minimal fixed headers (documented per codec).
+minimal fixed headers, documented per codec and declared once per
+class (``_HDR``/``FIELDS``/``streams``, see base.py) — the grouped
+engine kernels read and write payloads only through that declaration.
 
 Reference parity notes:
   - ``bitpack`` is the direct generalization of the reference's
@@ -26,7 +28,7 @@ import struct
 
 import numpy as np
 
-from .base import Codec, Encoded, as_int64, register
+from .base import Codec, Encoded, as_int64, gather_sections, register
 from .bitpack import bit_length, pack_bits_le, packed_size, unpack_bits_le
 
 
@@ -46,8 +48,8 @@ def _pack_padded(vals: np.ndarray, w: int) -> bytes:
     (pad fields are 0), so the stream's bit length is a multiple of 8
     for ANY width — same-width streams from different chunks then
     concatenate into one continuous field stream, which is what lets
-    the engine decode a whole group of chunks in a single unpack call
-    (see engine/decode.py). Costs <= 7 fields per stream (~0.3% on
+    a whole group of chunks decode in a single unpack call
+    (base.gather_sections). Costs <= 7 fields per stream (~0.3% on
     4096-token chunks)."""
     k = len(vals)
     pk = _pad8(k)
@@ -63,6 +65,9 @@ class BitpackCodec(Codec):
     ceil(n*w/8) bytes. bit_width=w, min_val=0."""
 
     name = "bitpack"
+
+    def streams(self, f):
+        return [("values", f["n"], f["bit_width"], False)]
 
     def encode(self, values: np.ndarray) -> Encoded:
         v = as_int64(values)
@@ -86,6 +91,7 @@ class ForCodec(Codec):
     w' = width(max-min). min lives in the min_val column; no header."""
 
     name = "for"
+    streams = BitpackCodec.streams
 
     def encode(self, values: np.ndarray) -> Encoded:
         v = as_int64(values)
@@ -112,6 +118,28 @@ class RleCodec(Codec):
 
     name = "rle"
     _HDR = struct.Struct("<IBB")
+    FIELDS = ("n_runs", "wv", "wl")
+
+    def streams(self, f):
+        return [
+            ("values", f["n_runs"], f["wv"], False),
+            ("lengths", f["n_runs"], f["wl"], False),
+        ]
+
+    def decode_runs(self, payloads, grp, ns, mins):
+        """Group run-stream parse -> (run values + min, run lengths,
+        runs per member), int64, chunk-major: each stream kind unpacks
+        once per distinct width. No memcpy-class width exclusion: run
+        streams are short (~n_runs fields), so per-call overhead
+        dominates even at byte widths."""
+        lay = self.layout(payloads, grp, ns)
+        total = int(lay.n_runs.sum())
+        run_vals = np.empty(total, np.int64)
+        run_lens = np.empty(total, np.int64)
+        gather_sections(payloads, grp, lay.values, run_vals, add=mins[grp])
+        gather_sections(payloads, grp, lay.lengths, run_lens)
+        run_lens += 1  # stored as len-1
+        return run_vals, run_lens, lay.n_runs
 
     def encode(self, values: np.ndarray) -> Encoded:
         v = as_int64(values)
@@ -153,11 +181,43 @@ class DictCodec(Codec):
             + pack_bits_le(indices, wi)          (wi may be 0 if card==1)
 
     The dictionary stream is 8-field padded so same-width dictionaries
-    concatenate across chunks (batched decode in engine/decode.py).
+    of different chunks concatenate into one unpack (decode_entries).
     """
 
     name = "dict"
     _HDR = struct.Struct("<IBB")
+    FIELDS = ("card", "wd", "wi")
+
+    def streams(self, f):
+        return [
+            ("dictionary", f["card"], f["wd"], True),
+            ("index", f["n"], f["wi"], False),
+        ]
+
+    def decode_entries(self, payloads, grp, ns, mins):
+        """Group dictionary-stream parse -> (every member's sorted
+        dictionary + min, int64, chunk-major; their offsets; per-member
+        index arrays, None when the index stream is empty (card == 1)).
+        Dictionaries unpack once per distinct width; index streams too,
+        except memcpy-class widths, whose per-member frombuffer-style
+        unpacks beat the join + copy."""
+        lay = self.layout(payloads, grp, ns)
+        doffs = np.concatenate(([0], np.cumsum(lay.card))).astype(np.int64)
+        dicts = np.empty(int(doffs[-1]), np.int64)
+        gather_sections(payloads, grp, lay.dictionary, dicts, add=mins[grp])
+        ix = lay.index
+        index: list[np.ndarray | None] = [None] * len(grp)
+        memcpy = np.isin(ix.width, (8, 16, 32))
+        sub = np.flatnonzero(~memcpy & (ix.width > 0))
+        if len(sub):
+            flat = np.empty(int(ix.count[sub].sum()), np.int64)
+            gather_sections(payloads, grp[sub], ix.take(sub), flat)
+            aoff = np.concatenate(([0], np.cumsum(ix.count[sub])))
+            for t, j in enumerate(sub):
+                index[j] = flat[aoff[t] : aoff[t + 1]]
+        for j in np.flatnonzero(memcpy):
+            index[j] = ix.unpack(payloads[grp[j]], j)
+        return dicts, doffs, index
 
     def encode(self, values: np.ndarray) -> Encoded:
         v = as_int64(values)
@@ -205,6 +265,14 @@ class PforCodec(Codec):
 
     name = "pfor"
     _HDR = struct.Struct("<IBBB")
+    FIELDS = ("n_exc", "wb", "wp", "we")
+
+    def streams(self, f):
+        return [
+            ("base", f["n"], f["wb"], False),
+            ("positions", f["n_exc"], f["wp"], False),
+            ("exceptions", f["n_exc"], f["we"], False),
+        ]
 
     def encode(self, values: np.ndarray, base_width: int | None = None) -> Encoded:
         v = as_int64(values)
@@ -278,12 +346,20 @@ class Split2Codec(Codec):
             + pack_padded(low deltas, w1)         (field count padded to 8k)
             + pack_padded(high deltas, w2)        (field count padded to 8k)
     min lives in min_val; bit_width reports w2 (the full FoR width).
-    Value streams are 8-field padded so same-width streams concatenate
-    across chunks (batched decode in engine/decode.py).
+    Value streams are 8-field padded so same-width streams of different
+    chunks concatenate into one grouped pack / unpack.
     """
 
     name = "split"
     _HDR = struct.Struct("<BBI")
+    FIELDS = ("w1", "w2", "n_high")
+
+    def streams(self, f):
+        return [
+            ("mask", f["n"], 1, False),
+            ("low", f["n"] - f["n_high"], f["w1"], True),
+            ("high", f["n_high"], f["w2"], True),
+        ]
 
     def encode(self, values: np.ndarray, low_width: int | None = None) -> Encoded:
         v = as_int64(values)
@@ -356,12 +432,23 @@ class Split3Codec(Codec):
             + pack_padded(mid deltas, wm)  (field count padded to 8k)
             + pack_padded(high deltas, w2) (field count padded to 8k)
     min lives in min_val; bit_width reports w2 (the full FoR width).
-    Value streams are 8-field padded so same-width streams concatenate
-    across chunks (batched decode in engine/decode.py).
+    Value streams are 8-field padded so same-width streams of different
+    chunks concatenate into one grouped pack / unpack.
     """
 
     name = "split3"
     _HDR = struct.Struct("<BBBII")
+    FIELDS = ("w1", "wm", "w2", "n_mid", "n_high")
+
+    def streams(self, f):
+        n_rest = f["n_mid"] + f["n_high"]
+        return [
+            ("mask", f["n"], 1, False),
+            ("mask2", n_rest, 1, False),
+            ("low", f["n"] - n_rest, f["w1"], True),
+            ("mid", f["n_mid"], f["wm"], True),
+            ("high", f["n_high"], f["w2"], True),
+        ]
 
     def encode(
         self,

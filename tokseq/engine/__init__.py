@@ -7,7 +7,6 @@ from .decode import (  # noqa: F401
     decode_chunks,
     decode_docs,
     reassemble_docs,
-    reassemble_docs_stitched,
 )
 from .verify import roundtrip_report  # noqa: F401
 from .pipeline import EncodeJob  # noqa: F401

@@ -59,7 +59,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .decode import _gather_padded_streams, decode_batch_kernel
+from ..codecs import DICT, RLE
+from .decode import decode_batch_kernel
 
 AGG_CHUNK_SCHEMA = (
     "doc_id string, chunk_idx int, source string, n_values long, "
@@ -157,26 +158,7 @@ def agg_batch_kernel(
     # --- rle: the true decode-skip (run streams only)
     grp = np.flatnonzero((codec_arr == "rle") & full)
     if len(grp):
-        from ..codecs.simple import RleCodec
-
-        hdr = RleCodec._HDR
-        hsz = hdr.size
-        harr = np.array(
-            [hdr.unpack_from(payloads[i], 0) for i in grp], dtype=np.int64
-        )
-        n_runs, wvs, wls = harr[:, 0], harr[:, 1], harr[:, 2]
-        vend = hsz + (n_runs * wvs + 7) // 8
-        lend = vend + (n_runs * wls + 7) // 8
-        total = int(n_runs.sum())
-        run_vals = np.empty(total, np.int64)
-        run_lens = np.empty(total, np.int64)
-        starts0 = np.full(len(grp), hsz, dtype=np.int64)
-        _gather_padded_streams(
-            payloads, grp, starts0, vend, wvs, n_runs, run_vals,
-            add=mins_arr[grp],
-        )
-        _gather_padded_streams(payloads, grp, vend, lend, wls, n_runs, run_lens)
-        run_lens += 1  # stored as len-1
+        run_vals, run_lens, n_runs = RLE.decode_runs(payloads, grp, ns, mins_arr)
         b = np.concatenate(([0], np.cumsum(n_runs[:-1]))).astype(np.int64)
         sums[grp] = np.add.reduceat(run_vals * run_lens, b)
         vmin[grp] = np.minimum.reduceat(run_vals, b)
@@ -188,55 +170,16 @@ def agg_batch_kernel(
     # sum from the narrow index stream
     grp = np.flatnonzero((codec_arr == "dict") & full)
     if len(grp):
-        from ..codecs import packed_size, unpack_bits_le
-        from ..codecs.simple import DictCodec
-
-        hdr = DictCodec._HDR
-        hsz = hdr.size
-        harr = np.array(
-            [hdr.unpack_from(payloads[i], 0) for i in grp], dtype=np.int64
-        )
-        cards, wds, wi_arr = harr[:, 0], harr[:, 1], harr[:, 2]
-        dict_end = hsz + (cards + 7) // 8 * wds
-        dict_all = np.empty(int(cards.sum()), np.int64)
-        doffs = np.concatenate(([0], np.cumsum(cards))).astype(np.int64)
-        _gather_padded_streams(
-            payloads, grp, np.full(len(grp), hsz, dtype=np.int64), dict_end,
-            wds, cards, dict_all, add=mins_arr[grp],
-        )
-        vmin[grp] = dict_all[doffs[:-1]]        # sorted: first = min
-        vmax[grp] = dict_all[doffs[1:] - 1]     # sorted: last = max
-        # index streams: one batched unpack per distinct width (the
-        # per-chunk tiny-unpack overhead dominates on doc-tail chunks,
-        # exactly as in decode_batch_kernel's dict path; memcpy-class
-        # widths keep per-chunk frombuffer-style unpacks)
-        idx_of: dict[int, np.ndarray] = {}
-        sub = np.flatnonzero(~np.isin(wi_arr, (0, 8, 16, 32)))
-        if len(sub):
-            ns_sub = ns[grp[sub]]
-            wi_sub = wi_arr[sub]
-            allidx = np.empty(int(ns_sub.sum()), np.int64)
-            _gather_padded_streams(
-                payloads, grp[sub], dict_end[sub],
-                dict_end[sub] + (ns_sub * wi_sub + 7) // 8,
-                wi_sub, ns_sub, allidx,
-            )
-            aoff = np.concatenate(([0], np.cumsum(ns_sub))).astype(np.int64)
-            for t, j in enumerate(sub):
-                idx_of[int(j)] = allidx[aoff[t] : aoff[t + 1]]
+        dicts, doffs, index = DICT.decode_entries(payloads, grp, ns, mins_arr)
+        vmin[grp] = dicts[doffs[:-1]]        # sorted: first = min
+        vmax[grp] = dicts[doffs[1:] - 1]     # sorted: last = max
         for j, i in enumerate(grp):
-            k = int(ns[i])
-            w = int(wi_arr[j])
-            uniq = dict_all[doffs[j] : doffs[j + 1]]
-            if w == 0:
-                sums[i] = int(uniq[0]) * k
+            uniq = dicts[doffs[j] : doffs[j + 1]]
+            if index[j] is None:
+                sums[i] = int(uniq[0]) * int(ns[i])
                 continue
-            idx = idx_of.get(j)
-            if idx is None:
-                idx = unpack_bits_le(
-                    payloads[i][int(dict_end[j]) : int(dict_end[j]) + packed_size(k, w)],
-                    w, k,
-                ).astype(np.int64)  # unpack emits uint64; bincount wants intp
+            # unpack emits uint64; bincount wants intp
+            idx = index[j].astype(np.int64, copy=False)
             sums[i] = int(
                 np.bincount(idx, minlength=len(uniq)).astype(np.int64) @ uniq
             )
@@ -271,25 +214,7 @@ def agg_batch_kernel(
         partial & (codec_arr == "rle") & ~has_mask
     ) if ranged else np.zeros(0, np.int64)
     if len(prle):
-        from ..codecs.simple import RleCodec
-
-        hdr = RleCodec._HDR
-        hsz = hdr.size
-        harr = np.array(
-            [hdr.unpack_from(payloads[i], 0) for i in prle], dtype=np.int64
-        )
-        n_runs, wvs, wls = harr[:, 0], harr[:, 1], harr[:, 2]
-        vend = hsz + (n_runs * wvs + 7) // 8
-        lend = vend + (n_runs * wls + 7) // 8
-        total = int(n_runs.sum())
-        run_vals = np.empty(total, np.int64)
-        run_lens = np.empty(total, np.int64)
-        _gather_padded_streams(
-            payloads, prle, np.full(len(prle), hsz, dtype=np.int64), vend,
-            wvs, n_runs, run_vals, add=mins_arr[prle],
-        )
-        _gather_padded_streams(payloads, prle, vend, lend, wls, n_runs, run_lens)
-        run_lens += 1
+        run_vals, run_lens, n_runs = RLE.decode_runs(payloads, prle, ns, mins_arr)
         m = (run_vals >= lo) & (run_vals <= hi)
         b = np.concatenate(([0], np.cumsum(n_runs[:-1]))).astype(np.int64)
         mi = m.astype(np.int64)

@@ -18,7 +18,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..codecs import get_codec, unpack_bits_le, unpack_bits_u8
+from ..codecs import DICT, RLE, get_codec
+from ..codecs.base import gather_sections
+from ..codecs.ef import ef_decode
 
 DECODED_SCHEMA = "doc_id string, chunk_idx int, chunk_tokens array<int>"
 DECODED_MASK_SCHEMA = DECODED_SCHEMA + ", mask binary"
@@ -55,13 +57,14 @@ def decode_batch_kernel(
     bit stream and decode in a single unpack call — the per-chunk
     Python/numpy call overhead (which dominates on short doc-tail
     chunks) is paid once per (codec, width) group instead of once per
-    chunk. Chunks whose length is a multiple of 8 are byte- AND
-    field-aligned as-is (n*w ≡ 0 mod 8); tail chunks are zero-extended
-    to the 8-field-padded size at join time (_gather_padded_streams
-    doc). Header-carrying codecs batch their streams the same way;
-    only fsst decodes per chunk (by measurement, see below)."""
+    chunk. Header-carrying codecs batch their streams the same way:
+    each group reads its payloads through the codec's own layout
+    (``Codec.layout``) and joins same-width sections with
+    ``gather_sections`` (tail chunks zero-extend at join time); only
+    fsst decodes per chunk (by measurement, see below)."""
     n_chunks = len(payloads)
     ns = np.asarray(ns, dtype=np.int64)
+    mins = np.asarray(mins)
     offsets = np.concatenate(([0], np.cumsum(ns))).astype(np.int64)
     flat = np.empty(int(offsets[-1]), np.int32)
     codec_arr = np.asarray(codecs)
@@ -69,94 +72,43 @@ def decode_batch_kernel(
     groupable = ns > 0
     for name in ("bitpack", "for"):
         cand = np.flatnonzero((codec_arr == name) & groupable)
-        if len(cand) == 0:
-            continue
-        wsel = np.asarray(widths)[cand].astype(np.int64)
         # memcpy-class per-chunk paths beat the join+slice at 8/16/32/64
-        keep = ~np.isin(wsel, (8, 16, 32, 64))
-        idx = cand[keep]
+        idx = cand[~np.isin(np.asarray(widths)[cand], (8, 16, 32, 64))]
         if len(idx) == 0:
             continue
-        ws = wsel[keep]
-        zero = np.zeros(len(idx), dtype=np.int64)
-        _gather_padded_streams(
-            payloads, idx, zero, zero + (ns[idx] * ws + 7) // 8, ws, ns[idx],
-            flat, dest_offs=offsets[idx],
-            add=np.asarray(mins)[idx] if name == "for" else None,
+        gather_sections(
+            payloads, idx, get_codec(name).layout(payloads, idx, ns, widths).values,
+            flat, dest_offs=offsets[idx], add=mins[idx] if name == "for" else None,
         )
         done[idx] = True
-    # dict: batch BOTH streams across chunks. The n-value index stream
-    # is byte-aligned for n%8==0 (one unpack per index width); the
-    # dictionary stream is 8-FIELD padded at encode (codecs/simple.py
-    # _pack_padded) so same-width dictionaries also concatenate — one
-    # unpack per dictionary width instead of one tiny unpack per chunk
+    # dict: batch BOTH streams across chunks — one unpack per
+    # dictionary width (the dictionary stream is 8-field padded at
+    # encode) and per index width, instead of tiny per-chunk unpacks
     # (the tiny calls were the dominant cost: ~30 values each).
-    dcand = np.flatnonzero((codec_arr == "dict") & groupable)
-    if len(dcand):
-        from ..codecs import packed_size
-        from ..codecs.simple import DictCodec, _pad8
-
-        hdrs = [DictCodec._HDR.unpack_from(payloads[i], 0) for i in dcand]
-        hsz = DictCodec._HDR.size
-        harr = np.array(hdrs, dtype=np.int64)
-        cards, wds, wi_arr = harr[:, 0], harr[:, 1], harr[:, 2]
-        dict_end = hsz + (cards + 7) // 8 * wds  # pad8(card)*wd/8 bytes
-        # dictionaries: one unpack per wd, mins fused into the gather
-        dict_all = np.empty(int(cards.sum()), np.int64)
-        doffs = np.concatenate(([0], np.cumsum(cards))).astype(np.int64)
-        _gather_padded_streams(
-            payloads, dcand, np.full(len(dcand), hsz), dict_end, wds, cards,
-            dict_all, add=np.asarray(mins)[dcand],
-        )
+    grp = np.flatnonzero((codec_arr == "dict") & groupable)
+    if len(grp):
+        dicts, doffs, index = DICT.decode_entries(payloads, grp, ns, mins)
         # int32 once here (token contract) -> every per-chunk gather
         # below writes int32 directly instead of casting 4M+ values
-        dict_all = dict_all.astype(np.int32)
-        # index streams: one unpack per distinct wi via the shared
-        # zero-extend gather (memcpy-class widths stay per-chunk:
-        # frombuffer views beat join+copy there)
-        idx_of: dict[int, np.ndarray] = {}
-        sub = np.flatnonzero(~np.isin(wi_arr, (0, 8, 16, 32)))
-        if len(sub):
-            ns_sub = ns[dcand[sub]]
-            wi_sub = wi_arr[sub]
-            allidx = np.empty(int(ns_sub.sum()), np.int64)
-            _gather_padded_streams(
-                payloads, dcand[sub], dict_end[sub],
-                dict_end[sub] + (ns_sub * wi_sub + 7) // 8,
-                wi_sub, ns_sub, allidx,
-            )
-            aoff = np.concatenate(([0], np.cumsum(ns_sub))).astype(np.int64)
-            for t, j in enumerate(sub):
-                idx_of[int(j)] = allidx[aoff[t] : aoff[t + 1]]
-        for j, i in enumerate(dcand):
-            k = int(ns[i])
-            uniq = dict_all[doffs[j] : doffs[j + 1]]
-            w = int(wi_arr[j])
-            if w == 0:
-                flat[offsets[i] : offsets[i] + k] = uniq[0]
+        dicts = dicts.astype(np.int32)
+        for j, i in enumerate(grp):
+            uniq = dicts[doffs[j] : doffs[j + 1]]
+            out = flat[offsets[i] : offsets[i + 1]]
+            if index[j] is None:
+                out[:] = uniq[0]
             else:
-                idx = idx_of.get(j)
-                if idx is None:
-                    idx = unpack_bits_le(
-                        payloads[i][dict_end[j] : dict_end[j] + packed_size(k, w)],
-                        w, k,
-                    )
-                flat[offsets[i] : offsets[i] + k] = uniq[idx]
-        done[dcand] = True
+                out[:] = uniq[index[j]]
+        done[grp] = True
 
     # split / split3: their value streams are 8-FIELD padded at encode
-    # (codecs/simple.py _pack_padded) precisely so that same-width
-    # streams from different chunks concatenate into one continuous
-    # bit stream — one unpack per distinct width per stream kind
-    # instead of 3 (split) / 5 (split3) unpacks per chunk.
-    # (any n > 0 groups here: the primary mask's per-chunk byte padding
-    # IS 8-field padding at width 1, so byte alignment is not required)
+    # precisely so that same-width streams from different chunks
+    # concatenate into one continuous bit stream — one unpack per
+    # distinct width per stream kind instead of 3 (split) / 5 (split3)
+    # unpacks per chunk.
     for name in ("split", "split3"):
         grp = np.flatnonzero((codec_arr == name) & groupable)
         if len(grp):
-            _decode_split_group(
-                name, grp, payloads, np.asarray(mins), ns, offsets, flat
-            )
+            _decode_split_group(name, grp, payloads, mins, ns, offsets, flat)
             done[grp] = True
 
     # pfor / pfor_ef: the dominant base stream is n fields at wb bits —
@@ -165,18 +117,20 @@ def decode_batch_kernel(
     for name in ("pfor", "pfor_ef"):
         grp = np.flatnonzero((codec_arr == name) & groupable)
         if len(grp):
-            _decode_pfor_group(
-                name, grp, payloads, np.asarray(mins), ns, offsets, flat
-            )
+            _decode_pfor_group(name, grp, payloads, mins, ns, offsets, flat)
             done[grp] = True
 
-    # rle: header-carrying, but both short streams (run values, run
-    # lengths) batch with the zero-extend join, and the run expansion
-    # is ONE group-global np.repeat (chunk-major stream order == output
-    # order) — instead of 2 unpacks + 1 repeat per chunk.
+    # rle: both short streams (run values, run lengths) batch with the
+    # zero-extend join, and the run expansion is ONE group-global
+    # np.repeat (chunk-major stream order == output order) — instead
+    # of 2 unpacks + 1 repeat per chunk.
     grp = np.flatnonzero((codec_arr == "rle") & groupable)
     if len(grp):
-        _decode_rle_group(grp, payloads, np.asarray(mins), ns, offsets, flat)
+        run_vals, run_lens, _ = RLE.decode_runs(payloads, grp, ns, mins)
+        out = np.repeat(run_vals.astype(np.int32), run_lens)
+        goff = np.concatenate(([0], np.cumsum(ns[grp]))).astype(np.int64)
+        for j, i in enumerate(grp):
+            flat[offsets[i] : offsets[i + 1]] = out[goff[j] : goff[j + 1]]
         done[grp] = True
 
     # fsst stays PER-CHUNK by measurement (r4, BENCH/KERNELS.md): a
@@ -194,133 +148,29 @@ def decode_batch_kernel(
     return flat, offsets
 
 
-def _gather_padded_streams(
-    payloads, grp, starts, ends, widths_arr, counts, dest,
-    dest_offs=None, add=None,
-):
-    """Unpack same-width sections in ONE call per distinct width, then
-    slice each chunk's fields (dropping its pad) into ``dest``.
-    ``starts``/``ends`` are per-group-index byte ranges inside each
-    payload. ``dest_offs`` overrides the default contiguous
-    group-order placement with explicit per-section target offsets
-    (e.g. final batch positions); ``add`` is an optional per-section
-    scalar added to the decoded fields (FoR minima), fused into the
-    single whole-group pass.
-
-    Sections may be 8-FIELD padded (their natural joined size) or
-    merely BYTE-padded (ceil(count*w/8) bytes — raw pack_bits_le
-    output, i.e. doc-tail chunks whose count is not a multiple of 8):
-    short sections are zero-extended to the 8-field-padded size at
-    join time, which keeps the joined buffer field-aligned throughout
-    (the pad fields decode to zeros and are dropped by the slicing).
-    This is the ONE implementation of that invariant on the decode
-    side; the encode mirror is the zero-pad in _encode_subbatch's
-    bitpack/for group and _pack_padded_group."""
-    padded = (counts + 7) // 8 * 8
-    if dest_offs is None:
-        dest_offs = np.concatenate(([0], np.cumsum(counts))).astype(np.int64)
-    for w in np.unique(widths_arr):
-        sel = np.flatnonzero(widths_arr == w)
-        need = padded[sel] * int(w) // 8
-        buf = b"".join(
-            payloads[grp[j]][starts[j] : ends[j]].ljust(int(nb), b"\0")
-            for j, nb in zip(sel, need)
-        )
-        if w == 1:
-            vals = unpack_bits_u8(buf, int(padded[sel].sum()))
-        else:
-            vals = unpack_bits_le(buf, int(w), int(padded[sel].sum()))
-        if add is not None:
-            vals = vals.astype(np.int64)
-            vals += np.repeat(np.asarray(add)[sel], padded[sel])
-        pos = 0
-        for j in sel:
-            k = int(counts[j])
-            dest[dest_offs[j] : dest_offs[j] + k] = vals[pos : pos + k]
-            pos += int(padded[j])
-
-
-def _decode_rle_group(grp, payloads, mins, ns, offsets, flat):
-    """Batched RLE decode. Streams are byte-padded per chunk
-    (codecs/simple.py RleCodec: header + run values at wv bits + run
-    lengths at wl bits), so the zero-extend join gathers each stream
-    kind in one unpack per distinct width; run expansion is one
-    group-global np.repeat. No width exclusion: run streams are short
-    (~n_runs fields), so per-call overhead dominates even at
-    memcpy-class widths."""
-    from ..codecs.simple import RleCodec
-
-    hdr = RleCodec._HDR
-    hsz = hdr.size
-    harr = np.array(
-        [hdr.unpack_from(payloads[i], 0) for i in grp], dtype=np.int64
-    )
-    n_runs, wvs, wls = harr[:, 0], harr[:, 1], harr[:, 2]
-    vend = hsz + (n_runs * wvs + 7) // 8
-    lend = vend + (n_runs * wls + 7) // 8
-    total_runs = int(n_runs.sum())
-    run_vals = np.empty(total_runs, np.int64)
-    run_lens = np.empty(total_runs, np.int64)
-    starts0 = np.full(len(grp), hsz, dtype=np.int64)
-    _gather_padded_streams(
-        payloads, grp, starts0, vend, wvs, n_runs, run_vals, add=mins[grp]
-    )
-    _gather_padded_streams(payloads, grp, vend, lend, wls, n_runs, run_lens)
-    run_lens += 1
-    out = np.repeat(run_vals.astype(np.int32), run_lens)
-    goff = np.concatenate(([0], np.cumsum(ns[grp]))).astype(np.int64)
-    for j, i in enumerate(grp):
-        flat[offsets[i] : offsets[i + 1]] = out[goff[j] : goff[j + 1]]
-
-
 def _decode_pfor_group(name, grp, payloads, mins, ns, offsets, flat):
     """Batched patched-FoR decode: one unpack per distinct base width
     for the whole group; exception positions/values are patched per
     chunk (they are rare by construction — the selector only picks
     pfor/pfor_ef when exceptions are a small fraction)."""
-    from ..codecs import packed_size
-    from ..codecs.ef import PFOR_EF, ef_decode, ef_upper_bits
-    from ..codecs.simple import PFOR
-
     is_ef = name == "pfor_ef"
-    hdr = (PFOR_EF if is_ef else PFOR)._HDR  # <u4 n_exc, u1 wb, u1 wp|l, u1 we>
-    hsz = hdr.size
-    hdrs = [hdr.unpack_from(payloads[i], 0) for i in grp]
-    harr = np.array(hdrs, dtype=np.int64)
-    n_exc, wbs = harr[:, 0], harr[:, 1]
-    ns_g = ns[grp]
-    total = int(ns_g.sum())
-    goff = np.concatenate(([0], np.cumsum(ns_g))).astype(np.int64)
+    lay = get_codec(name).layout(payloads, grp, ns)
+    total = int(lay.n.sum())
+    goff = np.concatenate(([0], np.cumsum(lay.n))).astype(np.int64)
 
     flat_g = np.empty(total, np.int32)
-    base_end = hsz + (ns_g * wbs + 7) // 8  # byte-padded (tails included)
-    _gather_padded_streams(
-        payloads, grp, np.full(len(grp), hsz), base_end, wbs, ns_g, flat_g
-    )
+    gather_sections(payloads, grp, lay.base, flat_g)
 
-    for j in np.flatnonzero(n_exc):
-        i = grp[j]
-        ne = int(n_exc[j])
-        _, wb, aux, we = hdrs[j]
-        off = int(base_end[j])
+    for j in np.flatnonzero(lay.n_exc):
+        p = payloads[grp[j]]
         if is_ef:
-            l = aux
-            ub = packed_size(ef_upper_bits(ne, int(ns[i]), l), 1)
-            lb = packed_size(ne, l)
             pos = ef_decode(
-                payloads[i][off : off + ub],
-                payloads[i][off + ub : off + ub + lb],
-                ne, int(ns[i]), l,
+                lay.upper.section(p, j), lay.lower.section(p, j),
+                int(lay.n_exc[j]), int(lay.n[j]), int(lay.l[j]),
             )
-            vals = unpack_bits_le(payloads[i][off + ub + lb :], we, ne)
         else:
-            wp = aux
-            pb = packed_size(ne, wp)
-            pos = np.cumsum(
-                unpack_bits_le(payloads[i][off : off + pb], wp, ne).astype(np.int64)
-            )
-            vals = unpack_bits_le(payloads[i][off + pb :], we, ne)
-        flat_g[goff[j] + pos] = vals.astype(np.int64)
+            pos = np.cumsum(lay.positions.unpack(p, j).astype(np.int64))
+        flat_g[goff[j] + pos] = lay.exceptions.unpack(p, j).astype(np.int64)
 
     for j, i in enumerate(grp):
         np.add(
@@ -335,86 +185,37 @@ def _decode_split_group(name, grp, payloads, mins, ns, offsets, flat):
     so all group buffers are int32 (half the scatter traffic of the
     generic int64 codec path); the per-chunk min is added fused into
     the final copy (one pass instead of repeat + iadd + copy)."""
-    from ..codecs.simple import SPLIT, SPLIT3
+    lay = get_codec(name).layout(payloads, grp, ns)
+    total = int(lay.n.sum())
+    goff = np.concatenate(([0], np.cumsum(lay.n))).astype(np.int64)
 
-    is3 = name == "split3"
-    hdr = (SPLIT3 if is3 else SPLIT)._HDR
-    hsz = hdr.size
-    hdrs = [hdr.unpack_from(payloads[i], 0) for i in grp]
-    ns_g = ns[grp]
-    total = int(ns_g.sum())
-    goff = np.concatenate(([0], np.cumsum(ns_g))).astype(np.int64)
-
-    # stream geometry per chunk (group order); all byte ranges precomputed
-    harr = np.array(hdrs, dtype=np.int64)
-    if is3:
-        w1s, wms, w2s, n_mid, n_high = (harr[:, k] for k in range(5))
-        n_rest = n_mid + n_high
-        n_low = ns_g - n_rest
-    else:
-        w1s, w2s, n_high = (harr[:, k] for k in range(3))
-        n_low = ns_g - n_high
-
-    def _pad8_arr(k):
-        return (k + 7) // 8 * 8
-
-    mask_end = hsz + (ns_g + 7) // 8  # primary mask: n bits, byte-padded
-    if is3:
-        mask2_end = mask_end + (n_rest + 7) // 8
-        low_start = mask2_end
-    else:
-        low_start = mask_end
-    low_end = low_start + _pad8_arr(n_low) * w1s // 8
-    if is3:
-        mid_end = low_end + _pad8_arr(n_mid) * wms // 8
-        high_end = mid_end + _pad8_arr(n_high) * w2s // 8
-    else:
-        high_end = low_end + _pad8_arr(n_high) * w2s // 8
+    def _stream(s, dtype=np.int32):
+        out = np.empty(int(s.count.sum()), dtype)
+        gather_sections(payloads, grp, s, out)
+        return out
 
     # 1) primary masks -> one 1-bit unpack straight to uint8 (byte
     # padding per chunk == 8-field padding at width 1, so the padded
     # gather handles arbitrary n)
-    sel_u8 = np.empty(total, np.uint8)
-    _gather_padded_streams(
-        payloads, grp, np.full(len(grp), hsz), mask_end,
-        np.ones(len(grp), np.int64), ns_g, sel_u8,
-    )
-    sel_g = sel_u8.view(bool)
+    sel_u8 = _stream(lay.mask, np.uint8)
 
     flat_g = np.empty(total, np.int32)
 
     # index-based scatters: flatnonzero + fancy assignment is ~1.5-4x
     # a boolean-mask assignment at these sizes (measured on this box)
     low_idx = np.flatnonzero(sel_u8 == 0)
-    rest_idx = np.flatnonzero(sel_g)
-
-    if is3:
-        # 2) secondary mask: n_rest bits, per-chunk byte-padded == an
-        # 8-field-padded 1-bit stream -> also one unpack
-        high_rest = np.empty(int(n_rest.sum()), np.uint8)
-        _gather_padded_streams(
-            payloads, grp, mask_end, mask2_end,
-            np.ones(len(grp), np.int64), n_rest, high_rest,
-        )
-
-        low_all = np.empty(int(n_low.sum()), np.int32)
-        mid_all = np.empty(int(n_mid.sum()), np.int32)
-        high_all = np.empty(int(n_high.sum()), np.int32)
-        _gather_padded_streams(payloads, grp, low_start, low_end, w1s, n_low, low_all)
-        _gather_padded_streams(payloads, grp, low_end, mid_end, wms, n_mid, mid_all)
-        _gather_padded_streams(payloads, grp, mid_end, high_end, w2s, n_high, high_all)
-        # group-global scatter: index order is chunk-major,
-        # position-minor — exactly the stream layout
-        flat_g[low_idx] = low_all
-        flat_g[rest_idx[np.flatnonzero(high_rest == 0)]] = mid_all
-        flat_g[rest_idx[np.flatnonzero(high_rest)]] = high_all
+    rest_idx = np.flatnonzero(sel_u8.view(bool))
+    flat_g[low_idx] = _stream(lay.low)
+    if name == "split3":
+        # secondary mask: n_rest bits, per-chunk byte-padded == an
+        # 8-field-padded 1-bit stream -> also one unpack. Group-global
+        # scatter: index order is chunk-major, position-minor —
+        # exactly the stream layout
+        high_rest = _stream(lay.mask2, np.uint8)
+        flat_g[rest_idx[np.flatnonzero(high_rest == 0)]] = _stream(lay.mid)
+        flat_g[rest_idx[np.flatnonzero(high_rest)]] = _stream(lay.high)
     else:
-        low_all = np.empty(int(n_low.sum()), np.int32)
-        high_all = np.empty(int(n_high.sum()), np.int32)
-        _gather_padded_streams(payloads, grp, low_start, low_end, w1s, n_low, low_all)
-        _gather_padded_streams(payloads, grp, low_end, high_end, w2s, n_high, high_all)
-        flat_g[low_idx] = low_all
-        flat_g[rest_idx] = high_all
+        flat_g[rest_idx] = _stream(lay.high)
 
     # fused min-add + copy back to batch positions (token domain is
     # int32 by engine contract, so int32 arithmetic cannot overflow)
@@ -475,16 +276,16 @@ def reassemble_docs(decoded_df: DataFrame) -> DataFrame:
 
     array_sort over structs orders by chunk_idx (first struct field),
     so reassembly is shuffle-order-independent. This is the reference
-    implementation; the engine's hot path uses
-    :func:`reassemble_docs_stitched` (same result, same single
-    shuffle, no per-doc JVM array materialization).
+    implementation; the engine's hot path is :func:`decode_docs`,
+    which starts from the ENCODED table (same result, one shuffle of
+    compressed payloads, no per-doc JVM array materialization).
 
     NOTE (scale): reassembly materializes one row per document, so a
     10^8-token doc becomes a ~400MB row on one executor. That is the
     cost of asking for whole documents; consumers that can stream
     should read (doc_id, chunk_idx, chunk_tokens) from decode_chunks
     directly and keep chunk granularity. Docs beyond 2^31-1 tokens
-    cannot be one list<int32> row at all — the stitchers split them
+    cannot be one list<int32> row at all — decode_docs splits them
     into consecutive same-doc_id segment rows by default, or raise a
     clear error (_giant_doc_error) in on_giant='error' mode."""
     return decoded_df.groupBy("doc_id").agg(
@@ -581,57 +382,6 @@ def _emit_one(doc_ids, token_arrays):
     )
 
 
-def _stitch_map(
-    batches: Iterator[pa.RecordBatch], strict: bool = False
-) -> Iterator[pa.RecordBatch]:
-    """Within one partition holding ALL chunks of its docs, sorted by
-    (doc_id, chunk_idx): concatenate each doc's chunk arrays. Python
-    work is O(docs) per batch; token movement is one flat copy. A doc's
-    rows may straddle Arrow batches, so the trailing partial doc is
-    carried into the next batch. Giant-doc handling per _carry_add."""
-    carry_id = None
-    carry_parts: list[np.ndarray] = []
-    carry_total = 0
-
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        ids = b.column("doc_id").to_pylist()
-        vals, offs = list_column_to_numpy_i32(b.column("chunk_tokens"))
-        # doc boundaries within the sorted batch
-        out_ids, out_toks = [], []
-        row = 0
-        n_rows = len(ids)
-        while row < n_rows:
-            j = row
-            while j + 1 < n_rows and ids[j + 1] == ids[row]:
-                j += 1
-            part = vals[offs[row] : offs[j + 1]]
-            if not (carry_id is not None and ids[row] == carry_id):
-                if carry_id is not None:
-                    out_ids.append(carry_id)
-                    out_toks.append(
-                        np.concatenate(carry_parts)
-                        if len(carry_parts) > 1
-                        else carry_parts[0]
-                    )
-                carry_id = ids[row]
-                carry_parts = []
-                carry_total = 0
-            carry_total = _carry_add(
-                carry_id, carry_parts, carry_total, part, out_ids, out_toks,
-                strict,
-            )
-            row = j + 1
-        if out_ids:
-            yield from _emit_doc_batches(out_ids, out_toks)
-    if carry_id is not None:
-        yield from _emit_doc_batches(
-            [carry_id],
-            [np.concatenate(carry_parts) if len(carry_parts) > 1 else carry_parts[0]],
-        )
-
-
 def list_column_to_numpy_i32(arr) -> tuple[np.ndarray, np.ndarray]:
     """list<int32> -> (flat int32 values, int64 offsets), null-safe."""
     if isinstance(arr, pa.ChunkedArray):
@@ -641,28 +391,6 @@ def list_column_to_numpy_i32(arr) -> tuple[np.ndarray, np.ndarray]:
         arr.value_lengths().fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
     )
     return values, np.concatenate(([0], np.cumsum(lens)))
-
-
-def reassemble_docs_stitched(
-    decoded_df: DataFrame, on_giant: str = "split"
-) -> DataFrame:
-    """Same result as :func:`reassemble_docs` with the same SINGLE
-    shuffle, but the per-doc assembly happens in an Arrow stitcher over
-    partitions sorted by (doc_id, chunk_idx) — no collect_list object
-    churn, no array_sort; the JVM only hash-partitions rows. Giant-doc
-    handling per ``on_giant`` (see :func:`decode_docs`).
-
-    NOTE: prefer :func:`decode_docs` when starting from the ENCODED
-    table — it shuffles compressed payloads (~0.95 B/token) instead of
-    decoded int32 arrays and decodes inside the stitcher, one Arrow
-    hop instead of three."""
-    strict = _strict_of(on_giant)
-    rep = decoded_df.repartition("doc_id").sortWithinPartitions(
-        "doc_id", "chunk_idx"
-    )
-    return rep.select("doc_id", "chunk_idx", "chunk_tokens").mapInArrow(
-        lambda it: _stitch_map(it, strict), "doc_id string, tokens array<int>"
-    )
 
 
 def _strict_of(on_giant: str) -> bool:

@@ -22,7 +22,8 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 
-from ..codecs import get_codec
+from ..codecs import BITPACK, DICT, FOR, RLE, SPLIT, SPLIT3, bit_length, get_codec
+from ..codecs.base import pack_sections
 from ..selector import CODEC_NAMES, FSST_SPEED_MULT, SPEED_MULT, select
 from ..stats import compute_chunk_stats
 
@@ -155,55 +156,17 @@ def encode_batch_kernel(
     return merged
 
 
-def _pack_padded_group(flat_vals, counts, widths):
-    """Pack per-chunk streams (chunk-major ``flat_vals`` with per-chunk
-    ``counts`` and ``widths``) into 8-field-padded sections — ONE
-    pack_bits_le call per distinct width for the whole group,
-    byte-identical to codecs.simple._pack_padded per chunk."""
-    from ..codecs.bitpack import pack_bits_le
-
-    counts = np.asarray(counts, dtype=np.int64)
-    widths = np.asarray(widths, dtype=np.int64)
-    sections: list[bytes] = [b""] * len(counts)
-    soff = np.concatenate(([0], np.cumsum(counts)))
-    padded = (counts + 7) // 8 * 8
-    for w in np.unique(widths):
-        selc = np.flatnonzero(widths == w)
-        cnt = counts[selc]
-        pad = padded[selc]
-        nsel = int(cnt.sum())
-        buf = np.zeros(int(pad.sum()), dtype=np.uint8 if w == 1 else np.int64)
-        if nsel:
-            poff = np.concatenate(([0], np.cumsum(pad)))[:-1]
-            within = np.arange(nsel, dtype=np.int64) - np.repeat(
-                np.concatenate(([0], np.cumsum(cnt)))[:-1], cnt
-            )
-            buf[np.repeat(poff, cnt) + within] = flat_vals[
-                np.repeat(soff[selc], cnt) + within
-            ]
-        packed = pack_bits_le(buf, int(w))
-        boff = np.concatenate(([0], np.cumsum(pad * int(w) // 8)))
-        for j, ci in enumerate(selc):
-            sections[ci] = packed[boff[j] : boff[j + 1]]
-    return sections
-
-
 def _encode_rle_group(values, offsets, grp, st, payloads, out_width, out_min):
     """Batched RLE encode: one change-mask pass over the group's
     gathered values (chunk starts forced to run starts, so no run ever
     spans chunks and the global diff of run starts is each run's exact
     length), run values/lengths extracted globally, per-chunk widths
-    via reduceat, then one pack per distinct width per stream via
-    _pack_padded_group (the payload keeps RleCodec's BYTE-padded
-    streams — the first packed_size bytes of each 8-field-padded
-    section are identical, since pad fields pack to zero bits).
-    Byte-identical to per-chunk RleCodec.encode (fuzz-tested). No
+    via reduceat, then one pack per distinct width per stream
+    (pack_sections; RleCodec.assemble keeps the codec's BYTE-padded
+    streams). Byte-identical to per-chunk RleCodec.encode (fuzz-tested). No
     floor-fallback needed: the selector's rle estimate is a provable
     upper bound (pessimistic max_run, chunk-range value width), so a
     chunk picked as rle always beats the floor."""
-    from ..codecs.bitpack import bit_length as _bl
-    from ..codecs.bitpack import packed_size
-    from ..codecs.simple import RleCodec
     from ..stats import _gather_segments
 
     ns_g = st.n[grp].astype(np.int64)
@@ -226,22 +189,22 @@ def _encode_rle_group(values, offsets, grp, st, payloads, out_width, out_min):
     lo = np.minimum.reduceat(run_vals, roff[:-1])
     hi = np.maximum.reduceat(run_vals, roff[:-1])
     maxlen = np.maximum.reduceat(run_lens, roff[:-1])
-    wv = np.maximum(_bl(hi - lo), 1).astype(np.int64)
-    wl = np.maximum(_bl(maxlen - 1), 1).astype(np.int64)
+    wv = np.maximum(bit_length(hi - lo), 1).astype(np.int64)
+    wl = np.maximum(bit_length(maxlen - 1), 1).astype(np.int64)
     run_vals -= np.repeat(lo, n_runs)
     run_lens -= 1
-    vsec = _pack_padded_group(run_vals, n_runs, wv)
-    lsec = _pack_padded_group(run_lens, n_runs, wl)
-    hdr = RleCodec._HDR
+    cut = roff[1:-1]
+    res = RLE.assemble(
+        {"n_runs": n_runs, "wv": wv, "wl": wl, "n": ns_g},
+        {
+            "values": pack_sections(np.split(run_vals, cut), wv),
+            "lengths": pack_sections(np.split(run_lens, cut), wl),
+        },
+    )
     for j, i in enumerate(grp):
-        k = int(n_runs[j])
-        payloads[i] = (
-            hdr.pack(k, int(wv[j]), int(wl[j]))
-            + vsec[j][: packed_size(k, int(wv[j]))]
-            + lsec[j][: packed_size(k, int(wl[j]))]
-        )
-        out_width[i] = wv[j]
-        out_min[i] = lo[j]
+        payloads[i] = res[j]
+    out_width[grp] = wv
+    out_min[grp] = lo
 
 
 def _encode_split_group(
@@ -251,9 +214,6 @@ def _encode_split_group(
     deltas, one 1-bit pack for all primary masks (n % 8 == 0 chunks
     concatenate exactly), and one pack per distinct width per stream.
     Produces payloads byte-identical to the per-chunk codec encode."""
-    from ..codecs.bitpack import bit_length as _bl
-    from ..codecs.simple import SPLIT, SPLIT3
-
     ns_g = st.n[grp].astype(np.int64)
     vmin = st.vmin[grp].astype(np.int64)
     total = int(ns_g.sum())
@@ -261,7 +221,7 @@ def _encode_split_group(
     within = np.arange(total, dtype=np.int64) - np.repeat(goff[:-1], ns_g)
     src = np.repeat(np.asarray(offsets)[:-1][grp], ns_g) + within
     d = values[src].astype(np.int64) - np.repeat(vmin, ns_g)
-    w2 = np.maximum(_bl((st.vmax[grp] - vmin)), 1).astype(np.int64)
+    w2 = np.maximum(bit_length((st.vmax[grp] - vmin)), 1).astype(np.int64)
     w1 = (sel.split3_w1 if is3 else sel.split_width)[grp].astype(np.int64)
 
     rest = d > np.repeat((np.int64(1) << w1) - 1, ns_g)
@@ -271,34 +231,28 @@ def _encode_split_group(
     # primary masks: 1-bit streams, per-chunk byte padding == 8-field
     # padding at width 1, so they batch through the same path
     ones = np.ones(len(grp), np.int64)
-    mask_s = _pack_padded_group(rest, ns_g, ones)
-
+    f = {"n": ns_g, "w1": w1, "w2": w2}
+    sections = {"mask": pack_sections(np.split(rest.view(np.uint8), goff[1:-1]), ones)}
     if is3:
         wm = sel.split3_wm[grp].astype(np.int64)
         high = d > np.repeat((np.int64(1) << wm) - 1, ns_g)
         csh = np.concatenate(([0], np.cumsum(high)))
         n_high = csh[goff[1:]] - csh[goff[:-1]]
         n_mid = n_rest - n_high
-        mask2 = _pack_padded_group(high[rest], n_rest, ones)
-        low_s = _pack_padded_group(d[~rest], n_low, w1)
-        mid_s = _pack_padded_group(d[rest & ~high], n_mid, wm)
-        high_s = _pack_padded_group(d[high], n_high, w2)
-        hdr = SPLIT3._HDR
-        for j, i in enumerate(grp):
-            payloads[i] = (
-                hdr.pack(int(w1[j]), int(wm[j]), int(w2[j]),
-                         int(n_mid[j]), int(n_high[j]))
-                + mask_s[j] + mask2[j] + low_s[j] + mid_s[j] + high_s[j]
-            )
+        f.update(wm=wm, n_mid=n_mid, n_high=n_high)
+        sections["mask2"] = pack_sections(
+            np.split(high[rest].view(np.uint8), np.cumsum(n_rest)[:-1]), ones
+        )
+        streams = (("low", ~rest, n_low, w1), ("mid", rest & ~high, n_mid, wm),
+                   ("high", high, n_high, w2))
     else:
-        low_s = _pack_padded_group(d[~rest], n_low, w1)
-        high_s = _pack_padded_group(d[rest], n_rest, w2)
-        hdr = SPLIT._HDR
-        for j, i in enumerate(grp):
-            payloads[i] = (
-                hdr.pack(int(w1[j]), int(w2[j]), int(n_rest[j]))
-                + mask_s[j] + low_s[j] + high_s[j]
-            )
+        f.update(n_high=n_rest)
+        streams = (("low", ~rest, n_low, w1), ("high", rest, n_rest, w2))
+    for name, m, cnt, w in streams:
+        sections[name] = pack_sections(np.split(d[m], np.cumsum(cnt)[:-1]), w)
+    res = (SPLIT3 if is3 else SPLIT).assemble(f, sections)
+    for j, i in enumerate(grp):
+        payloads[i] = res[j]
     out_width[grp] = w2
     out_min[grp] = vmin
 
@@ -308,13 +262,10 @@ def _encode_dict_group(values, offsets, grp, st, payloads, out_width, out_min):
     codes stay PER-CHUNK (cache-resident — the whole-group argsort lost
     in r3), via a sort-free bincount rank LUT when the chunk's value
     range is small, np.unique otherwise; the PACKS batch — dictionary
-    streams through one padded-group pack per distinct width, index
-    streams through one pack per distinct width for byte-aligned
-    chunks. Payloads byte-identical to DictCodec.encode."""
-    from ..codecs.bitpack import pack_bits_le, packed_size
-    from ..codecs.simple import DictCodec, _width_of
+    and index streams each through one pack per distinct width
+    (pack_sections). Payloads byte-identical to DictCodec.encode."""
+    from ..codecs.simple import _width_of
 
-    hdr = DictCodec._HDR
     k = len(grp)
     ns_g = st.n[grp].astype(np.int64)
     uniq_parts: list[np.ndarray] = []
@@ -342,32 +293,15 @@ def _encode_dict_group(values, offsets, grp, st, payloads, out_width, out_min):
         wis[j] = int(cards[j] - 1).bit_length()
         uniq_parts.append(uniq)
         codes_of[j] = codes
-    dict_s = _pack_padded_group(
-        np.concatenate(uniq_parts).astype(np.int64), cards, wds
+    res = DICT.assemble(
+        {"card": cards, "wd": wds, "wi": wis, "n": ns_g},
+        {
+            "dictionary": pack_sections(uniq_parts, wds),
+            "index": pack_sections(codes_of, wis),
+        },
     )
-    # index streams: byte-aligned chunks (n % 8 == 0) of one width
-    # concatenate into a single pack call, exactly like decode batches
-    # them back apart; others pack per chunk
-    idx_s: list[bytes] = [b""] * k
-    aligned = (ns_g % 8 == 0) & (wis > 0)
-    for w in np.unique(wis[aligned]):
-        selw = np.flatnonzero(aligned & (wis == w))
-        buf = pack_bits_le(
-            np.concatenate([codes_of[j] for j in selw]).astype(np.int64), int(w)
-        )
-        pos = 0
-        for j in selw:
-            nb = packed_size(int(ns_g[j]), int(w))
-            idx_s[j] = buf[pos : pos + nb]
-            pos += nb
-    for j in np.flatnonzero(~aligned & (wis > 0)):
-        idx_s[j] = pack_bits_le(codes_of[j], int(wis[j]))
     for j, i in enumerate(grp):
-        payloads[i] = (
-            hdr.pack(int(cards[j]), int(wds[j]), int(wis[j]))
-            + dict_s[j]
-            + idx_s[j]
-        )
+        payloads[i] = res[j]
     out_width[grp] = wds
     out_min[grp] = st.vmin[grp]
 
@@ -430,63 +364,43 @@ def _encode_subbatch(
     out_width = np.zeros(nseg, dtype=np.int32)
     out_min = np.zeros(nseg, dtype=np.int64)
     fsst = get_codec("fsst")
-    bitpack = get_codec("bitpack")
     fsst_deferred: dict[int, list[tuple[int, int]]] = {}
 
     # --- grouped fast path: ALL same-width bitpack/for chunks pack as
-    # ONE continuous bit stream and split on byte boundaries — the
-    # per-chunk pack-call overhead is paid once per (codec, width)
-    # group. Chunks with n % 8 == 0 are byte-aligned as-is (n*w ≡ 0
-    # mod 8); doc-TAIL chunks are zero-padded to the next multiple of
-    # 8 fields before the pack, which leaves their own ceil(n*w/8)
-    # payload bytes IDENTICAL to a per-chunk pack (pack_bits_le
-    # zero-fills pad bits either way) — the decode-side mirror of this
-    # trick is _gather_padded_streams' zero-extend join. Estimates for
-    # these two codecs are exact (== the payload size), so the floor
+    # ONE continuous bit stream (pack_sections) — the per-chunk
+    # pack-call overhead is paid once per (codec, width) group. Doc-TAIL
+    # chunks are zero-padded to the next multiple of 8 fields inside
+    # the pack, which leaves their own ceil(n*w/8) payload bytes
+    # IDENTICAL to a per-chunk pack — the decode-side mirror of this
+    # trick is gather_sections' zero-extend join. Estimates for these
+    # two codecs are exact (== the payload size), so the floor
     # fallback check is not needed. fsst candidates group too: their
     # group-produced payload IS the try-encode budget for the fsst
     # pass below the per-chunk loop.
-    # (deliberately NOT routed through _pack_padded_group: that helper
-    # scatters into an int64 zeros buffer — right for the short padded
-    # streams it serves, but 2x the memory traffic of this int32
-    # concat on the full token stream. Any change to the pad invariant
-    # must be mirrored in _pack_padded_group and the decode helper.)
-    from ..codecs.bitpack import bit_length as _bl
-    from ..codecs.bitpack import pack_bits_le, packed_size
-
     name_arr = np.asarray(names)
     done = np.zeros(nseg, dtype=bool)
     groupable = st.n > 0
-    w_full = np.maximum(_bl(st.vmax), 1).astype(np.int32)
-    w_for = np.maximum(_bl(st.vmax - st.vmin), 1).astype(np.int32)
-    zpad = np.zeros(7, dtype=values.dtype)
-    for cname, wvec, use_min in (("bitpack", w_full, False), ("for", w_for, True)):
-        cand = np.flatnonzero((name_arr == cname) & groupable)
-        if len(cand) == 0:
+    w_full = np.maximum(bit_length(st.vmax), 1).astype(np.int32)
+    w_for = np.maximum(bit_length(st.vmax - st.vmin), 1).astype(np.int32)
+    for codec, wvec, use_min in ((BITPACK, w_full, False), (FOR, w_for, True)):
+        idx = np.flatnonzero((name_arr == codec.name) & groupable)
+        if len(idx) == 0:
             continue
-        wsel = wvec[cand]
-        for w in np.unique(wsel):
-            idx = cand[wsel == w]
-            ns_i = st.n[idx]
-            padn = (ns_i + 7) // 8 * 8
-            parts = []
-            for t, i in enumerate(idx):
-                v = values[offsets[i] : offsets[i + 1]]
-                parts.append(v - st.vmin[i] if use_min else v)
-                p = int(padn[t] - ns_i[t])
-                if p:
-                    parts.append(zpad[:p])
-            big = np.concatenate(parts)
-            buf = pack_bits_le(big, int(w))
-            pos = 0
-            for t, i in enumerate(idx):
-                nb = packed_size(int(ns_i[t]), int(w))
-                payloads[i] = buf[pos : pos + nb]
-                pos += int(padn[t]) * int(w) // 8
-            out_width[idx] = w
-            if use_min:
-                out_min[idx] = st.vmin[idx]
-            done[idx] = True
+        parts = [
+            values[offsets[i] : offsets[i + 1]] - st.vmin[i] if use_min
+            else values[offsets[i] : offsets[i + 1]]
+            for i in idx
+        ]
+        res = codec.assemble(
+            {"n": st.n[idx], "bit_width": wvec[idx]},
+            {"values": pack_sections(parts, wvec[idx])},
+        )
+        for j, i in enumerate(idx):
+            payloads[i] = res[j]
+        out_width[idx] = wvec[idx]
+        if use_min:
+            out_min[idx] = st.vmin[idx]
+        done[idx] = True
 
     # --- grouped split/split3 encode: the two selector-bitmap codecs
     # pack 3 / 5 streams per chunk; with the 8-field stream padding
@@ -496,8 +410,8 @@ def _encode_subbatch(
     # 3-5 pack calls per 4096-token chunk. Estimates for these codecs
     # are exact, so no floor-fallback check is needed (same argument
     # as the bitpack/for group above).
-    # (any n > 0 groups here: the primary mask is itself packed via the
-    # padded-group path, so byte alignment is not required)
+    # (any n > 0 groups here: the primary mask is itself packed via
+    # pack_sections, so byte alignment is not required)
     for cname, is3 in (("split", False), ("split3", True)):
         grp = np.flatnonzero((name_arr == cname) & groupable & ~done)
         if len(grp):
@@ -521,9 +435,9 @@ def _encode_subbatch(
         _encode_rle_group(values, offsets, grp, st, payloads, out_width, out_min)
         done[grp] = True
 
-    for i in range(nseg):
-        if done[i]:
-            continue
+    # --- per chunk: pfor / pfor_ef (heuristic estimates, so the
+    # payload is floor-checked) and empty chunks
+    for i in np.flatnonzero(~done):
         v = values[offsets[i] : offsets[i + 1]]
         name = names[i]
         codec = get_codec(name)
@@ -531,20 +445,12 @@ def _encode_subbatch(
             enc = codec.encode(v, base_width=int(sel.pfor_width[i]))
         elif name == "pfor_ef":
             enc = codec.encode(v, base_width=int(sel.pfor_ef_width[i]))
-        elif name == "split":
-            enc = codec.encode(v, low_width=int(sel.split_width[i]))
-        elif name == "split3":
-            enc = codec.encode(
-                v,
-                low_width=int(sel.split3_w1[i]),
-                mid_width=int(sel.split3_wm[i]),
-            )
         else:
             enc = codec.encode(v)
         if len(enc.payload) > sel.floor_bytes[i]:
             # estimate was wrong (only possible for heuristic codecs):
             # fall back to the floor-exact bitpack
-            name, enc = "bitpack", bitpack.encode(v)
+            name, enc = "bitpack", BITPACK.encode(v)
         payloads[i] = enc.payload
         out_codec[i] = name
         out_width[i] = enc.bit_width

@@ -151,13 +151,14 @@ def gather_slices(
         F.lit("gather_slices: negative pos for doc "), F.col("doc_id"),
         F.lit(" at pos "), F.col("pos").cast("string"),
     )
+    # only rows with k > 0 expand into chunk keys; the rest are dropped
+    live = probes_df.select(
+        "probe_id", "doc_id",
+        F.col("pos").cast("long").alias("pos"),
+        F.col("k").cast("long").alias("k"),
+    ).filter(F.col("k") > 0)
     pr = (
-        probes_df.select(
-            "probe_id", "doc_id",
-            F.col("pos").cast("long").alias("pos"),
-            F.col("k").cast("long").alias("k"),
-        )
-        .filter(F.col("k") > 0)
+        live
         # assert-in-filter: raises at execution on any negative pos and
         # cannot be column-pruned away
         .filter(F.assert_true(F.col("pos") >= 0, neg_err).isNull())
@@ -182,17 +183,18 @@ def gather_slices(
         # rows (ADVICE r6 #2): a probe with a wide slice touches
         # ~ceil(k/W)+1 chunk keys, and F.broadcast bypasses Spark's
         # size safeguards, so wide-k probe sets must not sneak a huge
-        # key set past the row-count check. NOTE: this is an eager
-        # count job at plan-construction time (the price of choosing
-        # the store-never-shuffles plan); pass broadcast_threshold=0
-        # for a fully lazy API.
+        # key set past the row-count check. Both counts run over the
+        # rows that expand into keys (k > 0; a negative pos raises),
+        # so k <= 0 rows cannot push a small probe set off the
+        # broadcast plan. NOTE: this is an eager count job at
+        # plan-construction time (the price of choosing the
+        # store-never-shuffles plan); pass broadcast_threshold=0 for a
+        # fully lazy API.
         sample = (
-            probes_df.limit(broadcast_threshold + 1)
+            live.limit(broadcast_threshold + 1)
             .agg(
                 F.count("*").alias("n"),
-                F.sum(
-                    F.ceil(F.greatest(F.col("k"), F.lit(1)) / W) + 1
-                ).alias("keys_ub"),
+                F.sum(F.ceil(F.col("k") / W) + 1).alias("keys_ub"),
             )
             .collect()[0]
         )

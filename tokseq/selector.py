@@ -27,15 +27,9 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .codecs import BITPACK, DICT, FOR, PFOR, PFOR_EF, RLE, SPLIT, SPLIT3
 from .codecs.bitpack import bit_length
 from .stats import ChunkStats
-
-RLE_HDR = 6
-DICT_HDR = 6
-PFOR_HDR = 7
-SPLIT_HDR = 6
-PFOR_EF_HDR = 7
-SPLIT3_HDR = 11
 
 CODEC_NAMES = ("bitpack", "for", "rle", "dict", "pfor", "split", "pfor_ef", "split3")
 
@@ -86,10 +80,6 @@ def _w(x: np.ndarray) -> np.ndarray:
     return np.maximum(bit_length(x), 1)
 
 
-def _bytes(n, w):
-    return (n * w + 7) // 8
-
-
 @dataclass
 class Selection:
     codec_idx: np.ndarray       # index into CODEC_NAMES per chunk
@@ -115,18 +105,18 @@ def estimate_sizes(st: ChunkStats) -> np.ndarray:
     w_rl = _w(np.maximum(st.max_run - 1, 0))
     w_card = bit_length(np.maximum(st.card - 1, 0))  # may be 0 (constant)
 
-    bitpack = _bytes(n, w_full)
-    for_ = _bytes(n, w_for)
-    rle = RLE_HDR + _bytes(r, w_for) + _bytes(r, w_rl)
-    # dict's dictionary stream is 8-FIELD padded (pad8(card)*wd/8 bytes)
-    dict_ = DICT_HDR + ((st.card + 7) // 8) * w_for + _bytes(n, w_card)
+    # every estimate is the codec's own payload_size (header + streams,
+    # each stream padded by the codec's rule) evaluated on exact or
+    # estimated header fields
+    bitpack = BITPACK.payload_size(n=n, bit_width=w_full)
+    for_ = FOR.payload_size(n=n, bit_width=w_for)
+    rle = RLE.payload_size(n_runs=r, wv=w_for, wl=w_rl)
+    dict_ = DICT.payload_size(card=st.card, wd=w_for, wi=w_card, n=n)
 
-    # pfor: from the bit-length histogram, cost(wb) = n*wb bits + exceptions
-    # at ~ (bit_length(n) + w_for) bits each (position delta + value).
-    # The real payload byte-pads its three streams (base, positions,
-    # values) independently, so the estimate rounds each to bytes too —
-    # a single rounding could undercount by up to 2 bytes and let pfor
-    # win the argmin against a codec that is actually smaller.
+    # pfor: from the bit-length histogram, cost(wb) = the payload with
+    # exc_at[wb] exceptions at ~ (bit_length(n) + w_for) bits each
+    # (position delta + value), every stream byte-padded as in
+    # PforCodec.encode.
     # Width columns are trimmed to the sub-batch's max FoR width: no
     # delta has bit-length above its chunk's w_for, so every per-width
     # cost curve is non-decreasing past max(w_for) and the argmins are
@@ -136,14 +126,12 @@ def estimate_sizes(st: ChunkStats) -> np.ndarray:
     exc_at = n[:, None] - np.cumsum(hist, axis=1)  # exc_at[:, wb]
     widths = np.arange(W + 1)[None, :]
     wp_est = bit_length(np.maximum(n - 1, 0))[:, None]  # position-delta width
-    cost_bits = (
-        ((n[:, None] * widths + 7) // 8)
-        + ((exc_at * wp_est + 7) // 8)
-        + ((exc_at * w_for[:, None] + 7) // 8)
-    )  # now BYTES, per-stream padded like PforCodec.encode
-    cost_bits[:, 0] = np.iinfo(np.int64).max // 2  # wb >= 1
-    pfor_wb = np.argmin(cost_bits, axis=1)
-    pfor = PFOR_HDR + np.take_along_axis(cost_bits, pfor_wb[:, None], 1).ravel()
+    cost = PFOR.payload_size(
+        n=n[:, None], n_exc=exc_at, wb=widths, wp=wp_est, we=w_for[:, None]
+    )
+    cost[:, 0] = np.iinfo(np.int64).max // 2  # wb >= 1
+    pfor_wb = np.argmin(cost, axis=1)
+    pfor = np.take_along_axis(cost, pfor_wb[:, None], 1).ravel()
 
     # split (two-bucket selector bitmap): from the same histogram,
     # cost(w1) = n selector bits + n_low(w1)*w1 + n_high(w1)*w_for bits
@@ -152,36 +140,20 @@ def estimate_sizes(st: ChunkStats) -> np.ndarray:
     split_bits[:, 0] = np.iinfo(np.int64).max // 2  # w1 >= 1
     split_w1 = np.argmin(split_bits, axis=1)
     nl = np.take_along_axis(n_low, split_w1[:, None], 1).ravel()
-    # exact bytes: mask byte-padded; value streams 8-FIELD padded
-    # (pad8(k)*w/8 == ceil(k/8)*w bytes) to match _pack_padded
-    split = (
-        SPLIT_HDR
-        + (n + 7) // 8
-        + ((nl + 7) // 8) * split_w1
-        + ((n - nl + 7) // 8) * w_for
-    )
+    split = SPLIT.payload_size(n=n, w1=split_w1, w2=w_for, n_high=n - nl)
 
     # pfor_ef (true Elias-Fano exception positions,
     # /root/reference/src/packed_ef_n_seq.rs:17-60): same base stream,
     # EF position set of n_exc*(l+1) + (n>>l) + 1 bits with
     # l = floor(log2(n / n_exc)) — beats pfor's delta+bitpack positions
     # when the gap distribution is skewed (max gap >> mean gap)
-    # The real payload byte-pads four streams independently (base, EF
-    # upper bitmap, EF lower bits, exception values) — round each to
-    # bytes separately, like the split/split3 estimates.
-    exc_nz = np.maximum(exc_at, 1)
-    lvals = np.maximum(bit_length(n[:, None] // exc_nz) - 1, 0)
-    ef_upper = np.where(exc_at > 0, exc_at + (n[:, None] >> lvals) + 1, 0)
-    ef_lower = np.where(exc_at > 0, exc_at * lvals, 0)
-    cost_ef = (
-        ((n[:, None] * widths + 7) // 8)
-        + ((ef_upper + 7) // 8)
-        + ((ef_lower + 7) // 8)
-        + ((exc_at * w_for[:, None] + 7) // 8)
-    )  # BYTES, per-stream padded like PforEfCodec.encode
+    lvals = np.maximum(bit_length(n[:, None] // np.maximum(exc_at, 1)) - 1, 0)
+    cost_ef = PFOR_EF.payload_size(
+        n=n[:, None], n_exc=exc_at, wb=widths, l=lvals, we=w_for[:, None]
+    )
     cost_ef[:, 0] = np.iinfo(np.int64).max // 2  # wb >= 1
     pfor_ef_wb = np.argmin(cost_ef, axis=1)
-    pfor_ef = PFOR_EF_HDR + np.take_along_axis(cost_ef, pfor_ef_wb[:, None], 1).ravel()
+    pfor_ef = np.take_along_axis(cost_ef, pfor_ef_wb[:, None], 1).ravel()
 
     # split3 (hierarchical two-selector, three streams): per-chunk
     # coordinate descent from the split2 optimum — matches the
@@ -200,14 +172,8 @@ def estimate_sizes(st: ChunkStats) -> np.ndarray:
         w1v = np.argmin(cost_1, axis=1)
     c1f = np.take_along_axis(n_low, w1v[:, None], 1).ravel()
     cmf = np.take_along_axis(n_low, wmv[:, None], 1).ravel()
-    # masks byte-padded; the three value streams 8-FIELD padded
-    split3 = (
-        SPLIT3_HDR
-        + (n + 7) // 8
-        + (n - c1f + 7) // 8
-        + ((c1f + 7) // 8) * w1v
-        + ((cmf - c1f + 7) // 8) * wmv
-        + ((n - cmf + 7) // 8) * w_for
+    split3 = SPLIT3.payload_size(
+        n=n, w1=w1v, wm=wmv, w2=w_for, n_mid=cmf - c1f, n_high=n - cmf
     )
     split3[(w1v < 1) | (wmv <= w1v)] = big
 

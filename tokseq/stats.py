@@ -24,6 +24,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .codecs import BITPACK, DICT, FOR, RLE
 from .codecs.bitpack import bit_length
 
 
@@ -152,16 +153,16 @@ def compute_chunk_stats(
                 # second screen: dict is the ONLY consumer of exact
                 # cardinality, and the sampled distinct count k is a
                 # LOWER bound on card — so dict's size has the lower
-                # bound DICT_HDR + pad8(k)*w_for/8 + ceil(n*blen(k-1)/8)
-                # bytes. If bitpack/for/rle (whose estimates use no
-                # card and are identical in exact mode; rle's uses the
-                # same pessimistic max_run bound both modes) already
+                # bound DICT.payload_size(card=k, ...). If bitpack/for/rle
+                # (whose estimates use no card and are identical in exact
+                # mode; rle's uses the same pessimistic max_run bound
+                # both modes) already
                 # beat that bound STRICTLY under the decode-speed
                 # multipliers, dict can never win the weighted argmin,
                 # so card := n is selection-identical and the
                 # composite sort is skipped (it dominates stats on
                 # run-heavy chunks).
-                from .selector import DICT_HDR, RLE_HDR, SPEED_MULT
+                from .selector import SPEED_MULT
 
                 nb, kb = n[big], k.astype(np.int64)
                 wfor_b = np.maximum(
@@ -169,21 +170,15 @@ def compute_chunk_stats(
                 ).astype(np.int64)
                 wfull_b = np.maximum(bit_length(vmax[big]), 1).astype(np.int64)
                 wcard_lb = bit_length(np.maximum(kb - 1, 0))
-                dict_lb = (
-                    DICT_HDR + ((kb + 7) // 8) * wfor_b + (nb * wcard_lb + 7) // 8
-                )
+                dict_lb = DICT.payload_size(card=kb, wd=wfor_b, wi=wcard_lb, n=nb)
                 runs_b = n_runs[big]
                 maxrun_ub = np.maximum(nb - runs_b + 1, 1)
                 wrl_ub = np.maximum(bit_length(maxrun_ub - 1), 1)
-                rle_ub = (
-                    RLE_HDR
-                    + (runs_b * wfor_b + 7) // 8
-                    + (runs_b * wrl_ub + 7) // 8
-                )
+                rle_ub = RLE.payload_size(n_runs=runs_b, wv=wfor_b, wl=wrl_ub)
                 best_other = np.minimum(
                     np.minimum(
-                        (nb * wfull_b + 7) // 8 * SPEED_MULT[0],
-                        (nb * wfor_b + 7) // 8 * SPEED_MULT[1],
+                        BITPACK.payload_size(n=nb, bit_width=wfull_b) * SPEED_MULT[0],
+                        FOR.payload_size(n=nb, bit_width=wfor_b) * SPEED_MULT[1],
                     ),
                     rle_ub * SPEED_MULT[2],
                 )
