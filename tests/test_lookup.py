@@ -10,6 +10,22 @@ from tokseq.engine.lookup import point_lookup
 from tokseq.engine.pipeline import EncodeJob
 
 CHUNK_W = 512
+PROBE_SCHEMA = "probe_id int, doc_id string, pos long, k long"
+
+
+@pytest.fixture(scope="module")
+def store(spark, corpus_df, tmp_path_factory):
+    """One small store shared by the tests that only read it."""
+    job = EncodeJob(
+        spark, str(tmp_path_factory.mktemp("store")), chunk_width=CHUNK_W,
+        n_buckets=4,
+    )
+    job.run(corpus_df)
+    return job
+
+
+def _slices(df):
+    return {r["probe_id"]: list(r["tokens"]) for r in df.collect()}
 
 
 def test_point_lookup_matches_source(spark, corpus_df, tmp_path):
@@ -309,9 +325,12 @@ def test_gather_slices_broadcasts_small_probe_set(spark, corpus_df, tmp_path):
         few = gather_slices(job.encoded(), mixed, CHUNK_W, broadcast_threshold=4)
         plan = few._jdf.queryExecution().executedPlan().toString()
         got_few = {r["probe_id"]: list(r["tokens"]) for r in few.collect()}
+        lazy = gather_slices(job.encoded(), mixed, CHUNK_W, broadcast_threshold=0)
+        lazy_plan = lazy._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "BroadcastHashJoin" in plan
+    assert "BroadcastHashJoin" not in lazy_plan
     assert got_few == {0: got[0], 41: list(doc["tokens"][3:7])}
 
 
@@ -345,3 +364,150 @@ def test_encode_job_chunk_width_persisted(spark, corpus_df, tmp_path):
     # explicit contradicting width -> loud failure, with the fix named
     with pytest.raises(RuntimeError, match="chunk_width"):
         EncodeJob(spark, out, chunk_width=1024).encoded()
+
+
+def _store_with_copy(spark, job, tmp_path, doc_id, chunk_idx, change=None):
+    """A copy of ``job``'s store with a second copy of one chunk
+    appended, re-encoded with a different codec: its payload differs,
+    and it decodes to the chunk's own tokens, or to ``change(tokens)``."""
+    import shutil
+
+    from tokseq.codecs import get_codec
+    from tokseq.engine.encode import STORE_SCHEMA
+
+    out = str(tmp_path / "dup")
+    shutil.copytree(job.out_dir, out)
+    dup = EncodeJob(spark, out)
+    enc = dup.encoded()
+    row = enc.filter(
+        (F.col("doc_id") == doc_id) & (F.col("chunk_idx") == chunk_idx)
+    ).first().asDict()
+    tokens = get_codec(row["codec"]).decode(
+        bytes(row["payload"]), row["n_values"], row["bit_width"], row["min_val"]
+    )
+    if change is not None:
+        tokens = change(tokens)
+    codec = "bitpack" if row["codec"] == "for" else "for"
+    e = get_codec(codec).encode(np.asarray(tokens, dtype=np.int64))
+    assert bytes(e.payload) != bytes(row["payload"])
+    row.update(codec=codec, payload=e.payload, bit_width=e.bit_width,
+               min_val=e.min_val)
+    spark.createDataFrame(
+        [tuple(row[c] for c in enc.columns)], STORE_SCHEMA
+    ).write.mode("append").parquet(dup.encoded_path)
+    return dup
+
+
+def test_duplicate_chunks_judged_on_decoded_content(spark, store, corpus_df, tmp_path):
+    """An at-least-once duplicate chunk whose payload bytes differ but
+    whose tokens are the same must not change gather slices or
+    membership counts; a copy that decodes to different tokens must
+    make gather fail loudly."""
+    from tokseq.engine.lookup import gather_slices, token_membership
+
+    doc = (
+        corpus_df.filter(
+            (F.col("n_tok") > 2 * CHUNK_W + 10)
+            & (F.size(F.array_distinct("tokens")) > 100)
+        )
+        .select("doc_id", "tokens").orderBy("doc_id").first()
+    )
+    tokens = np.array(doc["tokens"])
+    dup = _store_with_copy(spark, store, tmp_path, doc["doc_id"], 1)
+    assert dup.encoded().count() == store.encoded().count() + 1
+
+    probes = spark.createDataFrame(
+        [(0, doc["doc_id"], CHUNK_W - 3, CHUNK_W + 6),
+         (1, doc["doc_id"], CHUNK_W + 5, 10),
+         (2, doc["doc_id"], 7, 4)],
+        PROBE_SCHEMA,
+    )
+    want = {0: tokens[CHUNK_W - 3 : 2 * CHUNK_W + 3].tolist(),
+            1: tokens[CHUNK_W + 5 : CHUNK_W + 15].tolist(),
+            2: tokens[7:11].tolist()}
+    for threshold in (100_000, 0):
+        assert _slices(gather_slices(store.encoded(), probes, CHUNK_W, threshold)) == want
+        assert _slices(gather_slices(dup.encoded(), probes, CHUNK_W, threshold)) == want
+
+    token = int(tokens[CHUNK_W])
+    def counts(job):
+        return {(r["doc_id"], r["n_occurrences"])
+                for r in token_membership(job.encoded(), token).collect()}
+    single = counts(store)
+    assert (doc["doc_id"], int((tokens == token).sum())) in single
+    assert counts(dup) == single
+
+    bad = _store_with_copy(spark, store, tmp_path / "bad", doc["doc_id"], 1,
+                           change=lambda t: t + 1)
+    with pytest.raises(Exception, match="chunk gap"):
+        gather_slices(bad.encoded(), probes, CHUNK_W).collect()
+
+
+def test_gather_reads_probe_side_once(spark, store, corpus_df):
+    """On the broadcast path the caller's probe DataFrame is evaluated
+    exactly once: the bounded collect returns the probe rows."""
+    from tokseq.engine.lookup import gather_slices
+
+    doc = corpus_df.filter(F.col("n_tok") > 3 * CHUNK_W).select(
+        "doc_id", "tokens"
+    ).first()
+    tokens = np.array(doc["tokens"])
+    n = 20
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_pos(pos):
+        seen.add(1)
+        return pos
+
+    base = spark.createDataFrame(
+        [(i, doc["doc_id"], i * 61, 40) for i in range(n)], PROBE_SCHEMA
+    )
+    probes = base.select(
+        "probe_id", "doc_id", F.udf(count_pos, "long")("pos").alias("pos"), "k"
+    )
+    got = _slices(gather_slices(store.encoded(), probes, CHUNK_W))
+    assert got == {i: tokens[i * 61 : i * 61 + 40].tolist() for i in range(n)}
+    assert seen.value == n
+
+
+def test_store_reads_start_no_spark_job(spark, store):
+    """Opening the store and its chunk manifest declares their schema
+    instead of inferring it from parquet footers, which runs a job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"store-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "open store and manifest")
+    try:
+        reader = EncodeJob(spark, store.out_dir)
+        enc = reader.encoded()
+        manifest = reader._read_manifest()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert manifest is not None
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    # the declared schemas are the ones the files carry
+    assert enc.schema == spark.read.parquet(reader.encoded_path).schema
+    assert manifest.schema == spark.read.parquet(reader.chunk_manifest_path).schema
+
+
+def test_gather_many_probes_on_one_chunk(spark, store, corpus_df):
+    """Dozens of probes touching one chunk share its decode inside a
+    batch; every probe still gets its own exact slice, on both the
+    broadcast and the shuffle-join plan."""
+    from tokseq.engine.lookup import gather_slices
+
+    doc = corpus_df.filter(F.col("n_tok") > 3 * CHUNK_W).select(
+        "doc_id", "tokens"
+    ).first()
+    tokens = np.array(doc["tokens"])
+    rng = np.random.default_rng(11)
+    pos = rng.integers(0, CHUNK_W, 60)
+    k = rng.integers(1, 2 * CHUNK_W, 60)
+    probes = spark.createDataFrame(
+        [(i, doc["doc_id"], int(p), int(q)) for i, (p, q) in enumerate(zip(pos, k))],
+        PROBE_SCHEMA,
+    )
+    want = {i: tokens[p : p + q].tolist() for i, (p, q) in enumerate(zip(pos, k))}
+    for threshold in (100_000, 0):
+        assert _slices(gather_slices(store.encoded(), probes, CHUNK_W, threshold)) == want

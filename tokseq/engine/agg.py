@@ -327,8 +327,8 @@ def agg_chunks(
     tokens, computed in the compressed domain (see module doc). No
     shuffle — a narrow map over the scan. chunk_idx is carried so
     consumers can dedup at-least-once duplicate chunks (resume
-    appends) downstream; duplicate chunks have byte-identical
-    payloads, so their summary rows are identical too.
+    appends) downstream; copies that decode to the same tokens have
+    identical summary rows, whatever their payload bytes.
 
     ``token_range=(lo, hi)`` restricts the aggregates to tokens in
     [lo, hi] (either side None = unbounded) and PRE-PRUNES chunks
@@ -366,10 +366,10 @@ def agg_tokens(
     deduped on (doc_id, chunk_idx) AFTER the kernel — the dedup
     exchange carries ~56-byte summary rows, never payloads or decoded
     tokens."""
-    # full-row distinct == the keyed dedup here: duplicate chunks have
-    # byte-identical payloads (chunk determinism), so their summary rows
-    # are identical too — and a keyless distinct plans as a map-side-
-    # combining HashAggregate, where dropDuplicates(keys) needs first()
+    # full-row distinct == the keyed dedup here: duplicate chunks decode
+    # to the same tokens, so their summary rows are identical even when
+    # their payload bytes differ — and a keyless distinct plans as a
+    # map-side-combining HashAggregate, where dropDuplicates(keys) needs first()
     # over the string column and degrades to Sort + SortAggregate on
     # both sides of the exchange (measured: 2 sorts + sort-aggs removed)
     per_chunk = agg_chunks(encoded_df, token_range, use_mask).dropDuplicates()

@@ -25,10 +25,12 @@ from ..codecs.ef import ef_decode
 DECODED_SCHEMA = "doc_id string, chunk_idx int, chunk_tokens array<int>"
 DECODED_MASK_SCHEMA = DECODED_SCHEMA + ", mask binary"
 
-# the chunk-deterministic columns a decode needs; duplicate chunk rows
-# (at-least-once appends) are IDENTICAL on exactly these columns, so a
-# keyless distinct over this projection equals a (doc_id, chunk_idx)
-# dedup — consumers rely on that for cheap map-side dedup plans
+# the columns a decode reads: the chunk key, the payload and the header
+# fields its decode depends on. Duplicate chunk rows (at-least-once
+# appends) share the key but not necessarily the payload bytes (a
+# shared fsst table may differ between encodes), so readers dedup on
+# the key (decode_docs) or on decoded content (gather_slices and the
+# agg_chunks-based reads), never on these columns
 DECODE_COLS = [
     "doc_id", "chunk_idx", "codec", "bit_width", "n_values", "min_val",
     "payload",
@@ -409,8 +411,8 @@ def _decode_stitch_map(
 
     At-least-once duplicate chunks (resume appends) are ADJACENT after
     the sort, so dedup happens inline — no dropDuplicates aggregate,
-    no second exchange. Duplicate payloads are byte-identical by chunk
-    determinism, so keeping the first is exact. Giant-doc handling per
+    no second exchange. Copies of a chunk decode to the same tokens,
+    so keeping the first is exact. Giant-doc handling per
     _carry_add (split rows by default, loud raise when strict)."""
     carry_id = None
     carry_last_cidx = -1

@@ -50,6 +50,11 @@ ENCODED_SCHEMA = (
     "mask binary"
 )
 
+# the written store: the kernel's columns plus the bucket the job adds
+# (resume.with_bucket). Store reads declare it instead of inferring it
+# from the parquet footers, which costs a Spark job per read
+STORE_SCHEMA = ENCODED_SCHEMA + ", bucket int"
+
 _ENCODED_PA_SCHEMA = pa.schema(
     [
         ("doc_id", pa.string()),

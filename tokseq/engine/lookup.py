@@ -14,10 +14,14 @@ slice. O(touched chunks), never a scan.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from ..codecs import get_codec
+from .decode import DECODE_COLS, decode_batch_kernel
+from .encode import STORE_SCHEMA
 
 
 def zone_range_filter(lo: int | None, hi: int | None):
@@ -80,31 +84,72 @@ def zone_contained_filter(lo: int | None, hi: int | None):
 
 
 def token_membership(encoded_df, token: int):
-    """(doc_id, n_occurrences) of ``token`` across the encoded table:
-    zone-prune -> decode only candidate chunks -> count. At 100 TB the
-    zone predicate reaches the parquet scan (min_val/bit_width are
-    plain columns with row-group stats), so cold chunks never leave
-    storage; random-token corpora degrade gracefully to a full decode."""
-    from .decode import DECODE_COLS, decode_chunks
+    """(doc_id, n_occurrences) of ``token`` across the encoded table,
+    answered like ``agg_tokens``: the zone predicate prunes chunks
+    whose [min_val, min_val + 2^w) bound excludes the token (at 100 TB
+    it reaches the parquet scan, so cold chunks never leave storage),
+    ``agg_chunks`` counts the matches of each candidate chunk inside
+    its kernel, and only those per-chunk counts reach the exchange —
+    no decoded token rows. At-least-once duplicate chunks are dropped
+    on their summary rows, i.e. on decoded content, not on payload
+    bytes. Random-token corpora degrade gracefully to a full scan."""
+    from .agg import agg_chunks
 
-    # project the chunk-deterministic decode columns BEFORE deduping:
-    # full-row distinct on them equals the keyed dedup (duplicate
-    # chunks are byte-identical) but plans as a map-side-combining
-    # HashAggregate instead of first(payload)'s Sort + SortAggregate
-    # pair — and columns like part_id (which DOES differ between
-    # duplicate appends) never enter the dedup
-    cand = (
-        encoded_df.filter(zone_filter(token))
-        .select(*DECODE_COLS)
-        .dropDuplicates()
-    )
-    dec = decode_chunks(cand)
+    t = int(token)
     return (
-        dec.select("doc_id", F.explode("chunk_tokens").alias("t"))
-        .filter(F.col("t") == int(token))
+        agg_chunks(encoded_df, (t, t))
+        .dropDuplicates()
+        .filter(F.col("n_values") > 0)
         .groupBy("doc_id")
-        .agg(F.count("*").alias("n_occurrences"))
+        .agg(F.sum("n_values").alias("n_occurrences"))
     )
+
+
+_PIECE_KEYS = ("probe_id", "doc_id", "pos", "k", "chunk_idx")
+
+
+def _slice_map(batches, W: int):
+    """(probe, touched chunk) rows -> each probe's piece of the chunk.
+    Every probe touching a chunk brings its own copy of the chunk row,
+    so each distinct chunk content decodes once per Arrow batch."""
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        payloads = batch.column("payload").to_pylist()
+        codecs = batch.column("codec").to_pylist()
+        widths = batch.column("bit_width").to_numpy(zero_copy_only=False)
+        mins = batch.column("min_val").to_numpy(zero_copy_only=False)
+        ns = batch.column("n_values").to_numpy(zero_copy_only=False).astype(np.int64)
+        seen: dict = {}
+        first = np.array([
+            seen.setdefault(key, i) for i, key in enumerate(
+                zip(codecs, widths.tolist(), mins.tolist(), ns.tolist(), payloads)
+            )
+        ])
+        uniq, slot = np.unique(first, return_inverse=True)
+        flat, offsets = decode_batch_kernel(
+            [payloads[i] for i in uniq], [codecs[i] for i in uniq],
+            widths[uniq], mins[uniq], ns[uniq],
+        )
+        # the probe's [pos, pos+k) relative to the chunk start, clipped
+        # to the chunk: a probe starting past the doc end gets an empty
+        # piece, like the short read it is
+        rel = (
+            batch.column("pos").to_numpy(zero_copy_only=False)
+            - batch.column("chunk_idx").to_numpy(zero_copy_only=False).astype(np.int64) * W
+        )
+        lo = np.clip(rel, 0, ns)
+        hi = np.clip(rel + batch.column("k").to_numpy(zero_copy_only=False), lo, ns)
+        lens = hi - lo
+        piece_offs = np.concatenate(([0], np.cumsum(lens)))
+        take = np.repeat(offsets[slot] + lo - piece_offs[:-1], lens) + np.arange(piece_offs[-1])
+        pieces = pa.ListArray.from_arrays(
+            pa.array(piece_offs, pa.int32()), pa.array(flat[take], pa.int32())
+        )
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(c) for c in _PIECE_KEYS] + [pieces],
+            names=[*_PIECE_KEYS, "piece"],
+        )
 
 
 def gather_slices(
@@ -118,34 +163,41 @@ def gather_slices(
     ``read_kmer`` workload (src/test.rs:891-920) at cluster scale,
     where :func:`point_lookup` is the single-probe driver-side path.
 
-    Plan shape: probes expand to their touched chunk keys
-    (pos//W .. (pos+k-1)//W — a handful per probe), ONE equi-join
-    against the encoded table on (doc_id, chunk_idx) selects the
-    candidate chunks, ONLY those decode (the mapInArrow runs on the
-    join output), each chunk contributes its declaratively-sliced
-    piece, and an array_sort/flatten groupBy stitches pieces per
-    probe. Nothing outside the touched chunks is ever joined, deduped,
-    or decoded (the probe-key join prunes the store FIRST; the
-    at-least-once dedup runs on the touched subset only); at 100 TB
-    the join is the standard shuffle-or-broadcast hash join on the
-    chunk key — and for the COMMON case of a small probe set (up to
-    ``broadcast_threshold`` probes, counted with a bounded
-    ``limit(threshold+1)`` probe) the touched chunk keys are
-    explicitly broadcast, so the store side never shuffles at all:
-    the join degenerates to a map-side filter over the store scan.
-    Short reads past the doc end truncate (as point_lookup
-    does); probes into missing docs return no row; probes with k <= 0
-    are dropped (deterministically: no row); a negative pos raises
+    Plan shape:
+
+    * Probe side, read once. For up to ``broadcast_threshold`` probes
+      (k > 0 rows), one eager bounded job collects
+      ``limit(threshold+1)`` of them; if they fit — at most
+      ``threshold`` rows and at most ``2*threshold`` touched chunk keys
+      (~ceil(k/W)+1 per probe, so wide slices cannot sneak a huge key
+      set past the row count) — the collected rows come back as a
+      local relation that is broadcast, and the caller's DataFrame is
+      never evaluated again. Otherwise (or with
+      ``broadcast_threshold=0``, a fully lazy API) the probes join the
+      store with a shuffle join inside the main query.
+    * One decode+slice stage. Probes expand to their touched chunk
+      keys (pos//W .. (pos+k-1)//W) and join the store on (doc_id,
+      chunk_idx); a broadcast probe side makes that a map-side filter
+      over the store scan, so the store never shuffles. One
+      ``mapInArrow`` kernel decodes each distinct touched chunk once
+      per Arrow batch and emits every probe's piece of it.
+    * One stitch exchange: pieces group per probe, and
+      ``array_sort(array_distinct(collect_list(struct(chunk_idx,
+      piece))))`` orders them. At-least-once duplicate chunks are
+      removed here, on decoded content rather than payload bytes.
+
+    Short reads past the doc end truncate (as point_lookup does);
+    probes into missing docs return no row; probes with k <= 0 are
+    dropped (deterministically: no row); a negative pos raises
     (checked on the probe side, BEFORE chunk expansion — a pos <= -W
     would otherwise expand to negative chunk keys, join nothing, and
-    vanish like a missing doc instead of failing). A
-    LEADING or INTERIOR missing chunk (partially-written store) fails
-    the job loudly instead of silently stitching misaligned slices —
-    the same gap contract point_lookup enforces.
+    vanish like a missing doc instead of failing). A LEADING or
+    INTERIOR missing chunk (partially-written store) fails the job
+    loudly instead of silently stitching misaligned slices — the same
+    gap contract point_lookup enforces — and so do two copies of a
+    chunk that decode differently (the guard counts distinct parts).
 
     Returns (probe_id, doc_id, pos, k, tokens array<int>)."""
-    from .decode import DECODE_COLS, decode_chunks
-
     W = chunk_width
     neg_err = F.concat(
         F.lit("gather_slices: negative pos for doc "), F.col("doc_id"),
@@ -157,6 +209,18 @@ def gather_slices(
         F.col("pos").cast("long").alias("pos"),
         F.col("k").cast("long").alias("k"),
     ).filter(F.col("k") > 0)
+    small = False
+    if broadcast_threshold and broadcast_threshold > 0:
+        # the bounded eager job also returns the probe rows, so a small
+        # probe set is never read from the caller's DataFrame again.
+        # F.broadcast bypasses Spark's size safeguards: bound the
+        # expanded key count (~ceil(k/W)+1 per probe), not just rows
+        head = live.limit(broadcast_threshold + 1).toArrow()
+        k = head.column("k").to_numpy()
+        keys_ub = int(np.sum(-(-k // W) + 1))
+        if head.num_rows <= broadcast_threshold and keys_ub <= 2 * broadcast_threshold:
+            live = probes_df.sparkSession.createDataFrame(head, schema=live.schema)
+            small = True
     pr = (
         live
         # assert-in-filter: raises at execution on any negative pos and
@@ -172,85 +236,42 @@ def gather_slices(
             ),
         )
     )
-    # prune the store to the touched chunk keys BEFORE deduping: a
-    # global dropDuplicates would shuffle every payload in the store
-    # for a handful of probes
-    keys = pr.select("doc_id", "chunk_idx").distinct()
-    if broadcast_threshold and broadcast_threshold > 0:
-        # bounded probe: limit(threshold+1) caps the probe-side work at
-        # threshold+1 rows no matter how large the probe table is. The
-        # broadcast decision bounds the EXPANDED key count, not probe
-        # rows (ADVICE r6 #2): a probe with a wide slice touches
-        # ~ceil(k/W)+1 chunk keys, and F.broadcast bypasses Spark's
-        # size safeguards, so wide-k probe sets must not sneak a huge
-        # key set past the row-count check. Both counts run over the
-        # rows that expand into keys (k > 0; a negative pos raises),
-        # so k <= 0 rows cannot push a small probe set off the
-        # broadcast plan. NOTE: this is an eager count job at
-        # plan-construction time (the price of choosing the
-        # store-never-shuffles plan); pass broadcast_threshold=0 for a
-        # fully lazy API.
-        sample = (
-            live.limit(broadcast_threshold + 1)
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.ceil(F.col("k") / W) + 1).alias("keys_ub"),
-            )
-            .collect()[0]
-        )
-        if sample["n"] <= broadcast_threshold and (
-            sample["keys_ub"] or 0
-        ) <= 2 * broadcast_threshold:
-            keys = F.broadcast(keys)
-    # project the chunk-deterministic decode columns BEFORE the join +
-    # dedup: the at-least-once dedup becomes a keyless distinct (map-
-    # side-combining HashAggregate instead of first(payload)'s
-    # Sort + SortAggregate), and non-deterministic-across-duplicates
-    # columns (part_id) never enter it
-    touched = (
-        keys
-        .join(encoded_df.select(*DECODE_COLS), ["doc_id", "chunk_idx"])
-        .dropDuplicates()
+    if small:
+        pr = F.broadcast(pr)
+    hits = pr.join(encoded_df.select(*DECODE_COLS), ["doc_id", "chunk_idx"])
+    piece_schema = StructType(
+        [StructField(c, hits.schema[c].dataType) for c in _PIECE_KEYS]
+        + [StructField("piece", ArrayType(IntegerType()))]
     )
-    dec = decode_chunks(touched)
-    hit = pr.join(dec, ["doc_id", "chunk_idx"])
-    base = F.col("chunk_idx").cast("long") * W
-    lo = F.greatest(F.col("pos") - base, F.lit(0))
-    hi = F.least(F.col("pos") + F.col("k") - base, F.size("chunk_tokens").cast("long"))
-    piece = F.slice(
-        "chunk_tokens", (lo + 1).cast("int"), F.greatest(hi - lo, F.lit(0)).cast("int")
-    )
+    parts = F.col("_parts")
     out = (
-        hit.select("probe_id", "doc_id", "pos", "k", "chunk_idx", piece.alias("piece"))
+        hits.mapInArrow(lambda it: _slice_map(it, W), piece_schema)
         .groupBy("probe_id", "doc_id", "pos", "k")
         .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("chunk_idx", "piece"))),
-                    lambda s: s.getField("piece"),
-                )
-            ).alias("tokens"),
-            F.count("*").alias("_nch"),
-            F.min("chunk_idx").alias("_c0"),
-            F.max("chunk_idx").alias("_c1"),
+            F.array_sort(
+                F.array_distinct(F.collect_list(F.struct("chunk_idx", "piece")))
+            ).alias("_parts")
         )
     )
-    # gap guard (mirrors point_lookup's ValueError): the joined chunks
+    # gap guard (mirrors point_lookup's ValueError): the distinct parts
     # must start at the probe's first chunk and be contiguous; only
-    # TRAILING chunks may be absent (short read past the doc end).
+    # TRAILING chunks may be absent (short read past the doc end), and
+    # a chunk whose copies decode differently counts twice.
     # pos >= 0 is asserted here too — int-cast truncation of a negative
     # pos would silently alias chunk 0.
+    c0 = parts[0]["chunk_idx"]
     ok = (
         (F.col("pos") >= 0)
-        & (F.col("_c0") == F.floor(F.col("pos") / W).cast("int"))
-        & (F.col("_c1") - F.col("_c0") + 1 == F.col("_nch"))
+        & (c0 == F.floor(F.col("pos") / W).cast("int"))
+        & (F.element_at(parts, -1)["chunk_idx"] - c0 + 1 == F.size(parts))
     )
     err = F.concat(
         F.lit("gather_slices: chunk gap or bad probe for doc "),
         F.col("doc_id"), F.lit(" at pos "), F.col("pos").cast("string"),
     )
     return out.filter(F.assert_true(ok, err).isNull()).select(
-        "probe_id", "doc_id", "pos", "k", "tokens"
+        "probe_id", "doc_id", "pos", "k",
+        F.flatten(F.transform(parts, lambda s: s["piece"])).alias("tokens"),
     )
 
 
@@ -263,15 +284,17 @@ def point_lookup(
     chunk_width: int = 4096,
     n_buckets: int | None = None,
 ) -> np.ndarray:
-    """tokens[pos : pos+k] of ``doc_id`` (short reads past the doc end)."""
+    """tokens[pos : pos+k] of ``doc_id`` (short reads past the doc end).
+    ``encoded_path`` is an EncodeJob store, read with its declared
+    schema (``STORE_SCHEMA``)."""
     first = pos // chunk_width
     last = (pos + max(k, 1) - 1) // chunk_width
-    enc = spark.read.parquet(encoded_path).filter(
+    enc = spark.read.schema(STORE_SCHEMA).parquet(encoded_path).filter(
         (F.col("doc_id") == doc_id)
         & (F.col("chunk_idx") >= first)
         & (F.col("chunk_idx") <= last)
     )
-    if n_buckets is not None and "bucket" in enc.columns:
+    if n_buckets is not None:
         # same hash Spark used at write time -> file/row-group pruning
         # on the bucket-clustered layout
         enc = enc.filter(

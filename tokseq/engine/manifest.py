@@ -20,10 +20,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .encode import STORE_SCHEMA
+
 CHUNK_MANIFEST_COLS = [
     "doc_id", "chunk_idx", "bucket", "codec", "bit_width",
     "n_values", "in_bytes", "out_bytes", "floor_bytes", "part_id",
 ]
+# the chunk manifest is the CHUNK_MANIFEST_COLS projection of the store
+_STORE_TYPES = dict(f.split(" ") for f in STORE_SCHEMA.split(", "))
+CHUNK_MANIFEST_SCHEMA = ", ".join(
+    f"{c} {_STORE_TYPES[c]}" for c in CHUNK_MANIFEST_COLS
+)
 
 
 def chunk_manifest(encoded: DataFrame) -> DataFrame:

@@ -29,9 +29,10 @@ from pyspark.sql import functions as F
 
 from .chunk import DEFAULT_CHUNK_WIDTH, plan_chunks, repartition_chunks
 from .decode import decode_chunks, decode_docs
-from .encode import encode_chunks
+from .encode import STORE_SCHEMA, encode_chunks
 from .manifest import (
     CHUNK_MANIFEST_COLS,
+    CHUNK_MANIFEST_SCHEMA,
     chunk_manifest,
     codec_summary,
     partition_manifest,
@@ -249,7 +250,9 @@ class EncodeJob:
         try:
             if self.table_prefix is not None:
                 return self.spark.read.table(self._tbl("chunk_manifest"))
-            return self.spark.read.parquet(self.chunk_manifest_path)
+            return self.spark.read.schema(CHUNK_MANIFEST_SCHEMA).parquet(
+                self.chunk_manifest_path
+            )
         except Exception:
             return None
 
@@ -336,7 +339,7 @@ class EncodeJob:
             out.write.mode(mode).option("compression", "none").parquet(
                 self.encoded_path
             )
-            enc_src = self.spark.read.parquet(self.encoded_path)
+            enc_src = self.spark.read.schema(STORE_SCHEMA).parquet(self.encoded_path)
 
         # manifest reflects the deduped logical table (appends are
         # at-least-once; resume counts depend on exact chunk counts).
@@ -362,7 +365,9 @@ class EncodeJob:
             chunk_manifest(enc).write.mode("overwrite").parquet(
                 self.chunk_manifest_path
             )
-            mf = self.spark.read.parquet(self.chunk_manifest_path)
+            mf = self.spark.read.schema(CHUNK_MANIFEST_SCHEMA).parquet(
+                self.chunk_manifest_path
+            )
             partition_manifest(mf).write.mode("overwrite").parquet(
                 self.partition_manifest_path
             )
@@ -395,7 +400,7 @@ class EncodeJob:
         self._check_format_marker("read store")
         if self.table_prefix is not None:
             return self.spark.read.table(self._tbl("encoded"))
-        return self.spark.read.parquet(self.encoded_path)
+        return self.spark.read.schema(STORE_SCHEMA).parquet(self.encoded_path)
 
     def decode(self) -> DataFrame:
         # resume appends are at-least-once: a chunk interrupted between
