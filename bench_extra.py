@@ -182,11 +182,11 @@ def cmd_encode_stages(cores):
                         st = compute_chunk_stats(values, offsets, approx=True)
                         t_stats += time.time() - t0
                         t0 = time.time()
-                        select(st, enable_fsst=True, workload="read")
+                        select(st, enable_fsst=True)
                         t_sel += time.time() - t0
                         continue
                     t0 = time.time()
-                    encode_batch_kernel(values, offsets, True, "read")
+                    encode_batch_kernel(values, offsets, True)
                     t_enc += time.time() - t0
             yield pa.RecordBatch.from_arrays(
                 [pa.array([x], pa.float64()) for x in

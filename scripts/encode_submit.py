@@ -57,10 +57,6 @@ def main() -> None:
     ap.add_argument("--verify", action="store_true",
                     help="decode everything back and assert bit-identical")
     ap.add_argument("--no-fsst", action="store_true")
-    ap.add_argument("--workload", choices=("read", "write"), default="read",
-                    help="codec-selection bias: 'read' (default) weights "
-                    "decode cost, 'write' weights encode cost for "
-                    "ingest-bound sites")
     ap.add_argument("--cores", type=int, default=None,
                     help="local[N] master; omit under spark-submit")
     args = ap.parse_args()
@@ -75,7 +71,6 @@ def main() -> None:
         chunk_width=args.chunk_width,
         n_buckets=args.buckets,
         enable_fsst=not args.no_fsst,
-        workload=args.workload,
         table_prefix=args.output_table_prefix,
     )
     if args.table:

@@ -1,8 +1,8 @@
 """Cross-route and format-stability guarantees.
 
 1. The DataFrame route (shuffle + JVM->Arrow) and the direct-scan
-   route (worker-side pyarrow) share one kernel — their encoded
-   outputs must be BYTE-identical per chunk key.
+   route (worker-side pyarrow) share one encode body (encode_rows) —
+   their encoded outputs must be BYTE-identical per chunk key.
 2. Frozen golden payloads per codec: the on-disk format must not
    drift across rounds (decode of old tables must keep working).
 3. Hypothesis property fuzz over the codec suite (SURVEY §5.4).
@@ -103,6 +103,33 @@ def test_payload_layout_has_one_owner():
             hits += [x for x in names if x.endswith("_HDR")]
             bad += [f"{path.name}:{node.lineno} {x}" for x in hits]
     assert not bad, bad
+
+
+def test_encode_body_has_one_owner():
+    """Both ingest routes build their encoded batches through
+    engine/encode.py's encode_rows: no other tokseq module names the
+    encoded Arrow schema, and tokseq/ has one list-column flattener
+    (one value_lengths( call)."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "tokseq"
+    schema_refs, flatteners = [], []
+    for path in sorted(root.rglob("*.py")):
+        text = path.read_text()
+        rel = str(path.relative_to(root))
+        flatteners += [rel] * text.count("value_lengths(")
+        for node in ast.walk(ast.parse(text)):
+            name = (
+                node.id if isinstance(node, ast.Name)
+                else node.attr if isinstance(node, ast.Attribute)
+                else node.name if isinstance(node, ast.alias)
+                else None
+            )
+            if name == "_ENCODED_PA_SCHEMA" and rel != "engine/encode.py":
+                schema_refs.append(f"{rel}:{getattr(node, 'lineno', '?')}")
+    assert not schema_refs, schema_refs
+    assert flatteners == ["engine/encode.py"], flatteners
 
 
 # --- hypothesis fuzz ---

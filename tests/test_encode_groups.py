@@ -1,6 +1,6 @@
 """Round-4 grouped-encode paths: dict group byte-identity fuzz,
-FSST shared-table + per-chunk-learn fallback routing, and the
-write-workload engine roundtrip."""
+FSST shared-table + per-chunk-learn fallback routing, the zipf-batch
+roundtrip, and the shared row encoder (encode_rows)."""
 
 import numpy as np
 import pytest
@@ -124,7 +124,7 @@ def test_fsst_fallback_recovers_chunk_local_wins():
     assert np.array_equal(flat, vals)
 
 
-def test_workload_write_roundtrips_and_respects_floor():
+def test_zipf_batch_roundtrips_and_respects_floor():
     rng = np.random.default_rng(11)
     chunks = [
         np.minimum(
@@ -133,7 +133,7 @@ def test_workload_write_roundtrips_and_respects_floor():
         for _ in range(30)
     ]
     vals, offs = _batch(chunks)
-    out = encode_batch_kernel(vals, offs, workload="write")
+    out = encode_batch_kernel(vals, offs)
     assert (np.asarray(out["out_bytes"]) <= np.asarray(out["floor_bytes"])).all()
     flat, _ = decode_batch_kernel(
         out["payload"], out["codec"], out["bit_width"],
@@ -142,32 +142,8 @@ def test_workload_write_roundtrips_and_respects_floor():
     assert np.array_equal(flat, vals)
 
 
-def test_workload_write_skips_per_chunk_learns():
-    """write mode keeps only the amortized shared-table FSST replaces:
-    on gram-rich chunks (where per-chunk learns are what wins) it must
-    pick fsst no more often than read mode, encode to >= read-mode
-    bytes, and still roundtrip exactly."""
-    rng = np.random.default_rng(7)
-    chunks = _phrase_chunks(rng, 40)
-    vals, offs = _batch(chunks)
-    out_r = encode_batch_kernel(vals, offs, enable_fsst=True, workload="read")
-    out_w = encode_batch_kernel(vals, offs, enable_fsst=True, workload="write")
-    n_r = sum(1 for c in out_r["codec"] if c == "fsst")
-    n_w = sum(1 for c in out_w["codec"] if c == "fsst")
-    assert n_w <= n_r
-    assert sum(map(len, out_w["payload"])) >= sum(map(len, out_r["payload"]))
-    assert (
-        np.asarray(out_w["out_bytes"]) <= np.asarray(out_w["floor_bytes"])
-    ).all()
-    flat, _ = decode_batch_kernel(
-        out_w["payload"], out_w["codec"], out_w["bit_width"],
-        out_w["min_val"], out_w["n_values"],
-    )
-    assert np.array_equal(flat, vals)
-
-
 def test_fsst_read_margin_prunes_marginal_wins(monkeypatch):
-    """Read-mode fsst acceptance carries a decode-cost margin
+    """fsst acceptance carries a decode-cost margin
     (selector.FSST_SPEED_MULT): vs a no-margin run on the same input it
     must only ever REMOVE fsst picks (never add), bytes weakly
     increase, floor still holds, and the output still roundtrips."""
@@ -178,11 +154,9 @@ def test_fsst_read_margin_prunes_marginal_wins(monkeypatch):
         rng.integers(0, 1 << 16, 4096).astype(np.int32) for _ in range(10)
     ]
     vals, offs = _batch(chunks)
-    out_m = encode_batch_kernel(vals, offs, enable_fsst=True, workload="read")
-    monkeypatch.setattr(
-        E, "_READ_FSST_BUDGET", {k: 1.0 for k in E._READ_FSST_BUDGET}
-    )
-    out_0 = encode_batch_kernel(vals, offs, enable_fsst=True, workload="read")
+    out_m = encode_batch_kernel(vals, offs, enable_fsst=True)
+    monkeypatch.setattr(E, "_FSST_MARGIN", {k: 1.0 for k in E._FSST_MARGIN})
+    out_0 = encode_batch_kernel(vals, offs, enable_fsst=True)
     fsst_m = {i for i, c in enumerate(out_m["codec"]) if c == "fsst"}
     fsst_0 = {i for i, c in enumerate(out_0["codec"]) if c == "fsst"}
     assert fsst_m <= fsst_0
@@ -197,8 +171,38 @@ def test_fsst_read_margin_prunes_marginal_wins(monkeypatch):
     assert np.array_equal(flat, vals)
 
 
-def test_workload_invalid_raises():
-    from tokseq.engine.pipeline import EncodeJob
+def test_encode_rows_null_row_and_quality_alignment():
+    """encode_rows, the body of both ingest routes: a null tokens row
+    encodes as one empty chunk, exactly like an empty list; aligned
+    quality yields per-chunk masks; misaligned quality raises naming the
+    first mismatched row."""
+    import pyarrow as pa
 
-    with pytest.raises(ValueError, match="workload"):
-        EncodeJob(None, "/tmp/x", num_partitions=4, workload="nope")
+    from tokseq.engine.decode import chunk_headers
+    from tokseq.engine.encode import encode_rows
+
+    ids, src = pa.array(["a", "b", "c"]), pa.array(["s", "s", "s"])
+    base = np.zeros(3, np.int64)
+
+    def enc(tokens, quality=None):
+        t = pa.array(tokens, pa.list_(pa.int32()))
+        q = None if quality is None else pa.array(quality, pa.list_(pa.int32()))
+        return encode_rows(ids, src, t, base, q, 16, True, 10, None, 7)
+
+    out = enc([[1, 2], None, [3]])
+    assert out.equals(enc([[1, 2], [], [3]]))
+    assert out.column("doc_id").to_pylist() == ["a", "b", "c"]
+    assert out.column("n_values").to_pylist() == [2, 0, 1]
+    assert out.column("part_id").to_pylist() == [7, 7, 7]
+    flat, _ = decode_batch_kernel(*chunk_headers(out))
+    assert flat.tolist() == [1, 2, 3]
+
+    masked = enc([[1, 2], [], [3]], [[30, 5], [], [30]])
+    masks = masked.column("mask").to_pylist()
+    assert masks[0] is not None and masks[1] is None and masks[2] is None
+    with pytest.raises(
+        ValueError,
+        match=r"quality arrays must align with tokens per row "
+        r"\(first mismatched row index: 2\)",
+    ):
+        enc([[1, 2], [], [3]], [[30, 30], [], [30, 30]])

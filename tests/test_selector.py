@@ -281,69 +281,3 @@ def test_card_screen_selection_parity_fuzz():
         se = select(compute_chunk_stats(vals, o, approx=False))
         sa = select(compute_chunk_stats(vals, o, approx=True))
         assert np.array_equal(se.codec_idx, sa.codec_idx), trial
-
-
-def test_encode_margin_argmin_invariant():
-    """workload="write" (VERDICT r3 task 5): the chosen codec minimizes
-    size * ENCODE_MULT — a slower-to-ENCODE codec (split3 packs 5
-    streams at ~1.35x split2's cost) wins only when its size saving
-    exceeds the encode-cost margin. Floor guarantee unchanged: bitpack
-    still carries the lowest multiplier."""
-    from tokseq.selector import ENCODE_MULT, estimate_sizes
-
-    rng = np.random.default_rng(17)
-    chunks = []
-    for t in range(60):
-        k = int(rng.integers(64, 5000))
-        v = np.minimum(
-            np.exp(rng.random(k) * np.log(50257)).astype(np.int64) - 1, 50256
-        )
-        chunks.append(v)
-    st = compute_chunk_stats(*make_batch(chunks))
-    sel = select(st, workload="write")
-    sizes = estimate_sizes(st)[0]
-    weighted = sizes * ENCODE_MULT[:, None]
-    best = weighted.min(axis=0)
-    chosen = np.take_along_axis(weighted, sel.codec_idx[None, :], 0).ravel()
-    assert np.allclose(chosen, best)
-    # floor bound: every pick's TRUE size <= the bitpack floor
-    assert (sel.est_bytes <= sel.floor_bytes).all()
-
-
-def test_encode_margin_flips_toward_cheaper_encode():
-    """Where read- and write-mode picks differ, the write pick must be
-    the cheaper-to-encode codec and the read pick's byte saving must be
-    inside the encode margin."""
-    from tokseq.selector import ENCODE_MULT, estimate_sizes
-
-    rng = np.random.default_rng(23)
-    chunks = []
-    for t in range(300):
-        k = 4096
-        v = np.minimum(
-            np.exp(rng.random(k) * np.log(2 ** int(rng.integers(8, 18)))).astype(
-                np.int64
-            )
-            - 1,
-            1 << 20,
-        )
-        chunks.append(v)
-    st = compute_chunk_stats(*make_batch(chunks))
-    sel_r = select(st, workload="read")
-    sel_w = select(st, workload="write")
-    sizes = estimate_sizes(st)[0]
-    diff = np.flatnonzero(sel_r.codec_idx != sel_w.codec_idx)
-    assert len(diff) > 0  # the margin must actually bite on zipf data
-    for i in diff:
-        r, w = int(sel_r.codec_idx[i]), int(sel_w.codec_idx[i])
-        assert ENCODE_MULT[w] < ENCODE_MULT[r]
-        assert sizes[r, i] * ENCODE_MULT[r] >= sizes[w, i]
-
-
-def test_workload_mode_validation():
-    import pytest as _pytest
-
-    rng = np.random.default_rng(5)
-    st = compute_chunk_stats(*make_batch([rng.integers(0, 100, 256)]))
-    with _pytest.raises(KeyError):
-        select(st, workload="nonsense")

@@ -57,6 +57,28 @@ def test_stream_encode_incremental(spark, tmp_path):
         enc.agg(F.sum("out_bytes")).collect()[0][0]
 
 
+def test_streamed_store_reads_as_encode_job_store(spark, tmp_path):
+    """stream_encode writes an EncodeJob store: its format marker
+    persists the width, so EncodeJob(spark, out_dir) adopts it and
+    decodes the streamed docs back exactly."""
+    from tokseq.engine import EncodeJob
+
+    table = generate_corpus(scale=0.1, include_boundary=False).slice(0, 10)
+    in_dir = tmp_path / "in"
+    out_dir = str(tmp_path / "out")
+    os.makedirs(in_dir)
+    _write_slice(table, 0, table.num_rows, str(in_dir / "part-0.parquet"))
+    stream_encode(spark, str(in_dir), out_dir, chunk_width=16,
+                  n_buckets=8, num_partitions=4).awaitTermination()
+
+    job = EncodeJob(spark, out_dir)
+    back = job.decode()
+    assert job.chunk_width == 16
+    docs = spark.createDataFrame(table.to_pandas())
+    assert back.count() == table.num_rows
+    assert count_mismatches(docs.select("doc_id", "tokens"), back) == 0
+
+
 def test_stateful_source_stats_accumulate_across_restarts(spark, tmp_path):
     """applyInPandasWithState: per-source cumulative (n_docs, n_tokens,
     token_sum) keyed state must ACCUMULATE across a checkpointed

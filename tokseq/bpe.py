@@ -84,14 +84,16 @@ def apply_merges_kernel(
 
 
 def _apply_merges_map(merges: list[tuple[int, int, int]]):
-    from .engine.decode import list_column_to_numpy_i32
+    from .engine.encode import list_column_to_numpy
 
     def _map(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            vals, offs = list_column_to_numpy_i32(batch.column("tokens"))
-            vals, offs = apply_merges_kernel(vals, offs, merges)
+            vals, offs = list_column_to_numpy(batch.column("tokens"))
+            vals, offs = apply_merges_kernel(
+                vals.astype(np.int32, copy=False), offs, merges
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("doc_id"),

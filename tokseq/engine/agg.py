@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codecs import DICT, RLE
-from .decode import decode_batch_kernel
+from .decode import chunk_headers, decode_batch_kernel
 
 AGG_CHUNK_SCHEMA = (
     "doc_id string, chunk_idx int, source string, n_values long, "
@@ -270,13 +270,8 @@ def _agg_map_factory(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ns = batch.column("n_values").to_numpy(zero_copy_only=False)
             cnts, sums, vmin, vmax = agg_batch_kernel(
-                batch.column("payload").to_pylist(),
-                batch.column("codec").to_pylist(),
-                batch.column("bit_width").to_numpy(zero_copy_only=False),
-                batch.column("min_val").to_numpy(zero_copy_only=False),
-                ns,
+                *chunk_headers(batch),
                 lo,
                 hi,
                 batch.column("mask").to_pylist() if use_mask else None,

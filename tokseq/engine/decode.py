@@ -36,6 +36,18 @@ DECODE_COLS = [
     "payload",
 ]
 
+
+def chunk_headers(batch) -> tuple[list, list, np.ndarray, np.ndarray, np.ndarray]:
+    """(payloads, codecs, widths, mins, ns) of an Arrow batch or table
+    of encoded chunks, in decode_batch_kernel's argument order."""
+    return (
+        batch.column("payload").to_pylist(),
+        batch.column("codec").to_pylist(),
+        batch.column("bit_width").to_numpy(zero_copy_only=False),
+        batch.column("min_val").to_numpy(zero_copy_only=False),
+        batch.column("n_values").to_numpy(zero_copy_only=False),
+    )
+
 _DECODED_PA_SCHEMA = pa.schema(
     [
         ("doc_id", pa.string()),
@@ -235,12 +247,7 @@ def _decode_map(
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        payloads = batch.column("payload").to_pylist()
-        codecs = batch.column("codec").to_pylist()
-        widths = batch.column("bit_width").to_numpy(zero_copy_only=False)
-        mins = batch.column("min_val").to_numpy(zero_copy_only=False)
-        ns = batch.column("n_values").to_numpy(zero_copy_only=False)
-        flat, offsets = decode_batch_kernel(payloads, codecs, widths, mins, ns)
+        flat, offsets = decode_batch_kernel(*chunk_headers(batch))
         tokens = pa.ListArray.from_arrays(
             pa.array(offsets, pa.int32()), pa.array(flat, pa.int32())
         )
@@ -384,17 +391,6 @@ def _emit_one(doc_ids, token_arrays):
     )
 
 
-def list_column_to_numpy_i32(arr) -> tuple[np.ndarray, np.ndarray]:
-    """list<int32> -> (flat int32 values, int64 offsets), null-safe."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    values = arr.flatten().to_numpy(zero_copy_only=False).astype(np.int32, copy=False)
-    lens = (
-        arr.value_lengths().fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
-    )
-    return values, np.concatenate(([0], np.cumsum(lens)))
-
-
 def _strict_of(on_giant: str) -> bool:
     if on_giant not in ("split", "error"):
         raise ValueError(f"on_giant must be 'split' or 'error', got {on_giant!r}")
@@ -424,13 +420,7 @@ def _decode_stitch_map(
             continue
         ids = b.column("doc_id").to_pylist()
         cidx = b.column("chunk_idx").to_numpy(zero_copy_only=False)
-        vals, offs = decode_batch_kernel(
-            b.column("payload").to_pylist(),
-            b.column("codec").to_pylist(),
-            b.column("bit_width").to_numpy(zero_copy_only=False),
-            b.column("min_val").to_numpy(zero_copy_only=False),
-            b.column("n_values").to_numpy(zero_copy_only=False),
-        )
+        vals, offs = decode_batch_kernel(*chunk_headers(b))
         out_ids, out_toks = [], []
         row, n_rows = 0, len(ids)
         while row < n_rows:

@@ -27,21 +27,14 @@ from ..codecs.base import pack_sections
 from ..selector import CODEC_NAMES, FSST_SPEED_MULT, SPEED_MULT, select
 from ..stats import compute_chunk_stats
 
-# read-mode fsst acceptance budget: the incumbent's payload scaled by
-# the decode-cost multiplier gap (selector.FSST_SPEED_MULT). fsst must
-# SAVE the gap, not tie it; write mode stays byte-greedy (the replace
-# against an already-learned shared table is ~free to encode, and the
-# margin is a decode-cost argument).
-_READ_FSST_BUDGET = {
+# fsst acceptance budget: the incumbent's payload scaled by the
+# decode-cost multiplier gap (selector.FSST_SPEED_MULT). fsst must SAVE
+# the gap, not tie it
+_FSST_MARGIN = {
     name: float(SPEED_MULT[i] / FSST_SPEED_MULT)
     for i, name in enumerate(CODEC_NAMES)
 }
 
-
-def _fsst_budget(budget: int, incumbent: str, workload: str) -> int:
-    if workload != "read":
-        return budget
-    return int(budget * _READ_FSST_BUDGET[incumbent])
 
 ENCODED_SCHEMA = (
     "doc_id string, chunk_idx int, source string, codec string, "
@@ -79,17 +72,17 @@ _ENCODED_PA_SCHEMA = pa.schema(
 
 
 def list_column_to_numpy(arr: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
-    """Arrow list<int*> column -> (flat int64 values, int64 offsets).
+    """Arrow list<int*> column -> (flat values, int64 offsets).
 
     Robust to chunked and sliced arrays (``flatten()`` respects the
-    slice; offsets are rebuilt from per-row lengths)."""
+    slice; offsets are rebuilt from per-row lengths). Null rows count
+    as empty (``flatten()`` already skips their values)."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     # keep the native int32: every downstream pass is bandwidth-bound
     values = arr.flatten().to_numpy(zero_copy_only=False)
-    lens = arr.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-    offsets = np.concatenate(([0], np.cumsum(lens)))
-    return values, offsets
+    lens = arr.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    return values, np.concatenate(([0], np.cumsum(lens, dtype=np.int64)))
 
 
 def rechunk_offsets(
@@ -123,13 +116,12 @@ def encode_batch_kernel(
     values: np.ndarray,
     offsets: np.ndarray,
     enable_fsst: bool = True,
-    workload: str = "read",
 ):
     """Encode a batch of chunks (cache-blocked). Returns dict of
     per-chunk output arrays."""
     nseg = len(offsets) - 1
     if nseg == 0:
-        return _encode_subbatch(values, offsets, enable_fsst, workload=workload)
+        return _encode_subbatch(values, offsets, enable_fsst)
     # shared FSST tables persist ACROSS sub-batches (keyed by byte
     # width, newest learn wins): short chunks — doc tails of the same
     # regime the table was just learned on — encode replace-only
@@ -146,9 +138,7 @@ def encode_batch_kernel(
             end += 1
         sub_off = offsets[start : end + 1] - offsets[start]
         sub_vals = values[offsets[start] : offsets[end]]
-        outs.append(
-            _encode_subbatch(sub_vals, sub_off, enable_fsst, fsst_cache, workload)
-        )
+        outs.append(_encode_subbatch(sub_vals, sub_off, enable_fsst, fsst_cache))
         start = end
     if len(outs) == 1:
         return outs[0]
@@ -316,7 +306,6 @@ def _encode_subbatch(
     offsets: np.ndarray,
     enable_fsst: bool = True,
     fsst_cache: dict | None = None,
-    workload: str = "read",
 ):
     st = compute_chunk_stats(values, offsets, approx=True)
     if len(st.vmin) and st.vmin.min() < 0:
@@ -325,7 +314,7 @@ def _encode_subbatch(
             f"negative token value in chunk {bad} (min={st.vmin[bad]}); "
             "token domain is [0, 2^31)"
         )
-    sel = select(st, enable_fsst=enable_fsst, workload=workload)
+    sel = select(st, enable_fsst=enable_fsst)
     names = sel.names()
     nseg = st.n_chunks
 
@@ -370,6 +359,12 @@ def _encode_subbatch(
     out_min = np.zeros(nseg, dtype=np.int64)
     fsst = get_codec("fsst")
     fsst_deferred: dict[int, list[tuple[int, int]]] = {}
+
+    def keep(i, name, enc):
+        payloads[i] = enc.payload
+        out_codec[i] = name
+        out_width[i] = enc.bit_width
+        out_min[i] = enc.min_val
 
     # --- grouped fast path: ALL same-width bitpack/for chunks pack as
     # ONE continuous bit stream (pack_sections) — the per-chunk
@@ -456,41 +451,29 @@ def _encode_subbatch(
             # estimate was wrong (only possible for heuristic codecs):
             # fall back to the floor-exact bitpack
             name, enc = "bitpack", BITPACK.encode(v)
-        payloads[i] = enc.payload
-        out_codec[i] = name
-        out_width[i] = enc.bit_width
-        out_min[i] = enc.min_val
+        keep(i, name, enc)
 
     # --- fsst try-encode pass over EVERY candidate: the incumbent
-    # payload (group-encoded or per-chunk) is the budget baseline.
+    # payload (group-encoded or per-chunk), shrunk by the decode-cost
+    # margin, is the budget.
     if enable_fsst:
         for i in np.flatnonzero(sel.fsst_candidate):
-            budget = len(payloads[i])
+            budget = int(len(payloads[i]) * _FSST_MARGIN[out_codec[i]])
             bw = _byte_width(int(st.vmax[i] - st.vmin[i]))
             if shared_tables.get(bw) is not None:
                 # defer to the batched shared-table pass below (any
                 # stream length: replace-only costs ~nothing and the
-                # budget check keeps losers out); read mode shrinks
-                # the budget by the decode-cost margin
-                fsst_deferred.setdefault(bw, []).append(
-                    (i, _fsst_budget(budget, out_codec[i], workload))
-                )
-            elif workload == "read":
+                # budget check keeps losers out)
+                fsst_deferred.setdefault(bw, []).append((i, budget))
+            else:
                 # no table yet for this byte width (e.g. a regime whose
                 # chunks are all short): per-chunk learn, screen- and
-                # budget-guarded like every other fsst attempt.
-                # write-heavy sites keep only the amortized shared-
-                # table replaces — per-chunk learns are the most
-                # expensive encode step.
-                b_eff = _fsst_budget(budget, out_codec[i], workload)
+                # budget-guarded like every other fsst attempt
                 fenc = fsst.encode(
-                    values[offsets[i] : offsets[i + 1]], budget_bytes=b_eff
+                    values[offsets[i] : offsets[i + 1]], budget_bytes=budget
                 )
-                if fenc is not None and len(fenc.payload) < b_eff:
-                    payloads[i] = fenc.payload
-                    out_codec[i] = "fsst"
-                    out_width[i] = fenc.bit_width
-                    out_min[i] = fenc.min_val
+                if fenc is not None and len(fenc.payload) < budget:
+                    keep(i, "fsst", fenc)
 
     # batched shared-table FSST try-encode: all deferred candidates of
     # one byte width replace in ONE pass per round (chunk-boundary
@@ -523,22 +506,12 @@ def _encode_subbatch(
         )
         for (i, budget, lo, w), stream, fenc in zip(metas, streams, encs):
             if fenc is not None and len(fenc.payload) < budget:
-                payloads[i] = fenc.payload
-                out_codec[i] = "fsst"
-                out_width[i] = fenc.bit_width
-                out_min[i] = fenc.min_val
-            elif workload == "read":
-                # write-heavy sites skip the fallback learns: a
-                # per-chunk learn is the single most expensive encode
-                # step (~0.5ms/chunk) and the shared replace above
-                # already captured the cheap part of the win
+                keep(i, "fsst", fenc)
+            else:
                 best = budget if fenc is None else min(budget, len(fenc.payload))
                 fb = _fsst_learn(stream, bw, w, lo, best)
                 if fb is not None and len(fb.payload) < budget:
-                    payloads[i] = fb.payload
-                    out_codec[i] = "fsst"
-                    out_width[i] = fb.bit_width
-                    out_min[i] = fb.min_val
+                    keep(i, "fsst", fb)
 
     return {
         "codec": out_codec,
@@ -571,72 +544,98 @@ def mask_batch_kernel(
     return out
 
 
+def encode_rows(
+    doc_id: pa.Array,
+    source: pa.Array,
+    tokens: pa.Array,
+    base_idx: np.ndarray,
+    quality: pa.Array | None,
+    chunk_width: int,
+    enable_fsst: bool,
+    quality_threshold: int,
+    mask_vocab: int | None,
+    part_id: int,
+) -> pa.RecordBatch:
+    """Rows of token lists (columns of one batch) -> one encoded batch
+    (ENCODED_SCHEMA): the body of both ingest routes, the DataFrame
+    route (_encode_map) and the worker-side parquet scan
+    (scan._scan_encode_map).
+
+    Each row is re-chunked into W-sized chunks numbered from its
+    ``base_idx``; a null or empty row encodes as one empty chunk. With a
+    ``quality`` column (or ``mask_vocab`` set) each chunk also gets its
+    1-bit validity bitmap in ``mask`` (null = all positions valid)."""
+    values, row_offsets = list_column_to_numpy(tokens)
+    q_vals = None
+    if quality is not None:
+        q_vals, q_off = list_column_to_numpy(quality)
+        # compare per-row offsets, not just flat totals: per-row length
+        # mismatches whose totals coincide would silently shift every
+        # subsequent chunk's bitmap onto the wrong tokens
+        if not np.array_equal(q_off, row_offsets):
+            bad = int(np.flatnonzero(q_off != row_offsets)[0]) - 1
+            raise ValueError(
+                "quality arrays must align with tokens per row "
+                f"(first mismatched row index: {bad})"
+            )
+    offsets, row_of, chunk_idx = rechunk_offsets(row_offsets, base_idx, chunk_width)
+    out = encode_batch_kernel(values, offsets, enable_fsst)
+    n = len(chunk_idx)
+    if quality is None and mask_vocab is None:
+        mask_arr = pa.nulls(n, pa.binary())
+    else:
+        mask_arr = pa.array(
+            mask_batch_kernel(values, q_vals, offsets, quality_threshold, mask_vocab),
+            pa.binary(),
+        )
+    take = pa.array(row_of, pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [
+            doc_id.take(take),
+            pa.array(chunk_idx.astype(np.int32), pa.int32()),
+            source.take(take),
+            pa.array(out["codec"], pa.string()),
+            pa.array(out["bit_width"], pa.int32()),
+            pa.array(out["n_values"], pa.int64()),
+            pa.array(out["min_val"], pa.int64()),
+            pa.array(out["payload"], pa.binary()),
+            pa.array(out["in_bytes"], pa.int64()),
+            pa.array(out["out_bytes"], pa.int64()),
+            pa.array(out["floor_bytes"], pa.int64()),
+            pa.array(np.full(n, part_id, dtype=np.int32), pa.int32()),
+            mask_arr,
+        ],
+        schema=_ENCODED_PA_SCHEMA,
+    )
+
+
+def task_partition_id() -> int:
+    """The running Spark task's partition id (-1 outside a task)."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else -1
+
+
 def _encode_map(
     batches: Iterator[pa.RecordBatch],
     enable_fsst: bool,
     chunk_width: int,
     quality_threshold: int = 10,
     mask_vocab: int | None = None,
-    workload: str = "read",
 ) -> Iterator[pa.RecordBatch]:
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    part_id = ctx.partitionId() if ctx is not None else -1
+    part_id = task_partition_id()
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        values, row_offsets = list_column_to_numpy(batch.column("chunk_tokens"))
-        base_idx = batch.column("chunk_idx").to_numpy(zero_copy_only=False).astype(np.int64)
-        offsets, row_of, chunk_idx = rechunk_offsets(row_offsets, base_idx, chunk_width)
-        out = encode_batch_kernel(values, offsets, enable_fsst, workload)
-        n = len(chunk_idx)
         has_quality = batch.schema.get_field_index("chunk_quality") != -1
-        if has_quality or mask_vocab is not None:
-            quality = None
-            if has_quality:
-                quality, q_off = list_column_to_numpy(batch.column("chunk_quality"))
-                # compare per-row offsets, not just flat totals: per-row
-                # length mismatches whose totals coincide would silently
-                # shift every subsequent chunk's bitmap onto the wrong
-                # tokens
-                if len(q_off) != len(row_offsets) or not np.array_equal(
-                    q_off, row_offsets
-                ):
-                    bad = (
-                        int(np.flatnonzero(q_off != row_offsets)[0]) - 1
-                        if len(q_off) == len(row_offsets)
-                        else -1
-                    )
-                    raise ValueError(
-                        "chunk_quality arrays must align with chunk_tokens "
-                        f"per row (first mismatched row index: {bad}; "
-                        f"{len(quality)} quality vs {len(values)} tokens)"
-                    )
-            masks = mask_batch_kernel(
-                values, quality, offsets, quality_threshold, mask_vocab
-            )
-            mask_arr = pa.array(masks, pa.binary())
-        else:
-            mask_arr = pa.nulls(n, pa.binary())
-        take = pa.array(row_of, pa.int64())
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("doc_id").take(take),
-                pa.array(chunk_idx.astype(np.int32), pa.int32()),
-                batch.column("source").take(take),
-                pa.array(out["codec"], pa.string()),
-                pa.array(out["bit_width"], pa.int32()),
-                pa.array(out["n_values"], pa.int64()),
-                pa.array(out["min_val"], pa.int64()),
-                pa.array(out["payload"], pa.binary()),
-                pa.array(out["in_bytes"], pa.int64()),
-                pa.array(out["out_bytes"], pa.int64()),
-                pa.array(out["floor_bytes"], pa.int64()),
-                pa.array(np.full(n, part_id, dtype=np.int32), pa.int32()),
-                mask_arr,
-            ],
-            schema=_ENCODED_PA_SCHEMA,
+        yield encode_rows(
+            batch.column("doc_id"),
+            batch.column("source"),
+            batch.column("chunk_tokens"),
+            batch.column("chunk_idx").to_numpy(zero_copy_only=False).astype(np.int64),
+            batch.column("chunk_quality") if has_quality else None,
+            chunk_width, enable_fsst, quality_threshold, mask_vocab, part_id,
         )
 
 
@@ -646,7 +645,6 @@ def encode_chunks(
     chunk_width: int = 4096,
     quality_threshold: int = 10,
     mask_vocab: int | None = None,
-    workload: str = "read",
 ):
     """(doc_id, source, chunk_idx, chunk_tokens[, chunk_quality]) ->
     encoded DataFrame.
@@ -659,7 +657,7 @@ def encode_chunks(
     column — the PackedNSeq pairing (null = all positions valid)."""
     return chunks_df.mapInArrow(
         lambda it: _encode_map(
-            it, enable_fsst, chunk_width, quality_threshold, mask_vocab, workload
+            it, enable_fsst, chunk_width, quality_threshold, mask_vocab
         ),
         ENCODED_SCHEMA,
     )

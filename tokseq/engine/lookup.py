@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from ..codecs import get_codec
-from .decode import DECODE_COLS, decode_batch_kernel
+from .decode import DECODE_COLS, chunk_headers, decode_batch_kernel
 from .encode import STORE_SCHEMA
 
 
@@ -115,11 +115,7 @@ def _slice_map(batches, W: int):
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        payloads = batch.column("payload").to_pylist()
-        codecs = batch.column("codec").to_pylist()
-        widths = batch.column("bit_width").to_numpy(zero_copy_only=False)
-        mins = batch.column("min_val").to_numpy(zero_copy_only=False)
-        ns = batch.column("n_values").to_numpy(zero_copy_only=False).astype(np.int64)
+        payloads, codecs, widths, mins, ns = chunk_headers(batch)
         seen: dict = {}
         first = np.array([
             seen.setdefault(key, i) for i, key in enumerate(

@@ -70,7 +70,6 @@ class EncodeJob:
         num_partitions: int | None = None,
         quality_threshold: int = 10,
         mask_vocab: int | None = None,
-        workload: str = "read",
         table_prefix: str | None = None,
     ):
         """``out_dir`` selects PATH mode (parquet directories). Passing
@@ -109,12 +108,6 @@ class EncodeJob:
         self.num_partitions = num_partitions or spark.sparkContext.defaultParallelism
         self.quality_threshold = quality_threshold
         self.mask_vocab = mask_vocab
-        if workload not in ("read", "write"):
-            raise ValueError(f"workload must be 'read' or 'write', got {workload!r}")
-        # "read" (default): codec argmin biased by DECODE cost — right
-        # for a write-once-read-many store. "write": biased by ENCODE
-        # cost (selector.ENCODE_MULT) for ingest-bound deployments.
-        self.workload = workload
 
     # --- paths ---
     @property
@@ -256,6 +249,33 @@ class EncodeJob:
         except Exception:
             return None
 
+    def store_layout(self, encoded: DataFrame) -> DataFrame:
+        """Encoded chunks -> the rows a store write appends, in file
+        order. The bucket does not survive the encode kernel, so it is
+        recomputed (deterministic).
+
+        Files cluster by bucket instead of being hive-partitioned by
+        it: partitionBy(bucket) means every task writes up to
+        n_buckets files (task_count x buckets tiny files); one shuffle
+        gives ~1 file per output partition, and bucket-range pruning
+        still works off parquet column stats (each file holds a narrow
+        bucket range). The shuffle key is a FINER doc hash (16x
+        n_buckets) that still determines bucket ((x mod 16B) mod B ==
+        x mod B): with n_buckets ~= 2x tasks, hashing the raw bucket
+        value lands 2-5 buckets on some tasks and 0 on others
+        (balls-in-bins on ~2 keys/task), and the biggest write task
+        straggles the whole stage; ~16 subbuckets per task keeps the
+        spread near-uniform while a doc's chunks still colocate and
+        files still cluster by bucket after the sort."""
+        subbucket = F.pmod(
+            F.xxhash64(F.col("doc_id")), F.lit(int(self.n_buckets) * 16)
+        )
+        return (
+            with_bucket(encoded, self.n_buckets)
+            .repartition(self.num_partitions, subbucket)
+            .sortWithinPartitions("bucket")
+        )
+
     # --- the job ---
     def plan(self, docs: DataFrame, resume: bool = False) -> DataFrame:
         """Produce the hybrid chunk plan (whole docs + pre-exploded
@@ -288,9 +308,8 @@ class EncodeJob:
             from .scan import encode_parquet_direct
 
             encoded = encode_parquet_direct(
-                self.spark, corpus_path, self.chunk_width,
-                self.enable_fsst, self.num_partitions,
-                self.quality_threshold, self.mask_vocab, self.workload,
+                self.spark, corpus_path, self.chunk_width, self.enable_fsst,
+                self.quality_threshold, self.mask_vocab,
             )
         else:
             if docs is None:
@@ -299,33 +318,10 @@ class EncodeJob:
             chunks = repartition_chunks(chunks, self.num_partitions)
             encoded = encode_chunks(
                 chunks, self.enable_fsst, self.chunk_width,
-                self.quality_threshold, self.mask_vocab, self.workload,
+                self.quality_threshold, self.mask_vocab,
             )
-        # bucket must survive the encode kernel: recompute (deterministic)
-        encoded = with_bucket(encoded, self.n_buckets)
-
         mode = "append" if resume else "overwrite"
-        # cluster files by bucket instead of hive-partitioning by it:
-        # partitionBy(bucket) here means every task writes up to
-        # n_buckets files (task_count x buckets tiny files); one
-        # shuffle keyed on bucket gives ~1 file per output partition,
-        # and bucket-range pruning still works off parquet column
-        # stats (each file holds a narrow bucket range).
-        # The shuffle key is a FINER doc hash (16x n_buckets) that
-        # still determines bucket ((x mod 16B) mod B == x mod B): with
-        # n_buckets ~= 2x tasks, hashing the raw bucket value lands
-        # 2-5 buckets on some tasks and 0 on others (balls-in-bins on
-        # ~2 keys/task — guide §2.5 "too few distinct key values"),
-        # and the biggest write task straggles the whole stage; ~16
-        # subbuckets per task keeps the spread near-uniform while a
-        # doc's chunks still colocate and files still cluster by
-        # bucket after the sort
-        subbucket = F.pmod(
-            F.xxhash64(F.col("doc_id")), F.lit(int(self.n_buckets) * 16)
-        )
-        out = encoded.repartition(
-            self.num_partitions, subbucket
-        ).sortWithinPartitions("bucket")
+        out = self.store_layout(encoded)
         # payloads are already entropy-coded; snappy on top costs CPU
         # for ~no size win
         if self.table_prefix is not None:

@@ -13,7 +13,7 @@ JVM scan would.
 
 Used for full-table encode jobs (bench + production path). The
 DataFrame route (encode.py) stays for arbitrary upstream DataFrames
-(e.g. resume anti-joins, derived tables); both share the same kernel,
+(e.g. resume anti-joins, derived tables); both call ``encode_rows``,
 so outputs are byte-identical.
 """
 
@@ -25,12 +25,14 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 
+from .decode import chunk_headers, decode_batch_kernel
 from .encode import (
     ENCODED_SCHEMA,
-    _ENCODED_PA_SCHEMA,
     encode_batch_kernel,
+    encode_rows,
     list_column_to_numpy,
     rechunk_offsets,
+    task_partition_id,
 )
 
 
@@ -94,73 +96,24 @@ def _scan_encode_map(
     chunk_width: int,
     quality_threshold: int = 10,
     mask_vocab: int | None = None,
-    workload: str = "read",
 ) -> Iterator[pa.RecordBatch]:
     import pyarrow.parquet as pq
 
-    from pyspark import TaskContext
-
-    from .encode import mask_batch_kernel
-
-    ctx = TaskContext.get()
-    part_id = ctx.partitionId() if ctx is not None else -1
+    part_id = task_partition_id()
     for b in batches:
-        paths = b.column("path").to_pylist()
-        groups = b.column("row_group").to_pylist()
-        for path, rg in zip(paths, groups):
+        for path, rg in zip(b.column("path").to_pylist(), b.column("row_group").to_pylist()):
             pf = pq.ParquetFile(path)
             # corpora carrying a per-token quality column keep their
-            # validity bitmaps on the fast path too (the PackedNSeq
-            # pairing, /root/reference/src/packed_n_seq.rs:79-136)
-            has_quality = "quality" in pf.schema_arrow.names
-            cols = ["doc_id", "tokens", "source"] + (
-                ["quality"] if has_quality else []
-            )
-            tbl = pf.read_row_group(rg, columns=cols)
-            values, row_offsets = list_column_to_numpy(tbl.column("tokens"))
-            base_idx = np.zeros(tbl.num_rows, dtype=np.int64)
-            offsets, row_of, chunk_idx = rechunk_offsets(
-                row_offsets, base_idx, chunk_width
-            )
-            out = encode_batch_kernel(values, offsets, enable_fsst, workload)
-            take = pa.array(row_of, pa.int64())
-            doc_id = tbl.column("doc_id").combine_chunks().take(take)
-            source = tbl.column("source").combine_chunks().take(take)
-            n = len(chunk_idx)
-            if has_quality or mask_vocab is not None:
-                quality = None
-                if has_quality:
-                    quality, q_off = list_column_to_numpy(tbl.column("quality"))
-                    if len(q_off) != len(row_offsets) or not np.array_equal(
-                        q_off, row_offsets
-                    ):
-                        raise ValueError(
-                            f"quality arrays must align with tokens per row "
-                            f"({path} row group {rg})"
-                        )
-                masks = mask_batch_kernel(
-                    values, quality, offsets, quality_threshold, mask_vocab
-                )
-                mask_arr = pa.array(masks, pa.binary())
-            else:
-                mask_arr = pa.nulls(n, pa.binary())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_id,
-                    pa.array(chunk_idx.astype(np.int32), pa.int32()),
-                    source,
-                    pa.array(out["codec"], pa.string()),
-                    pa.array(out["bit_width"], pa.int32()),
-                    pa.array(out["n_values"], pa.int64()),
-                    pa.array(out["min_val"], pa.int64()),
-                    pa.array(out["payload"], pa.binary()),
-                    pa.array(out["in_bytes"], pa.int64()),
-                    pa.array(out["out_bytes"], pa.int64()),
-                    pa.array(out["floor_bytes"], pa.int64()),
-                    pa.array(np.full(n, part_id, dtype=np.int32), pa.int32()),
-                    mask_arr,
-                ],
-                schema=_ENCODED_PA_SCHEMA,
+            # validity bitmaps on the fast path too (the reference's
+            # PackedNSeq pairing, src/packed_n_seq.rs:79-136)
+            names = ["doc_id", "tokens", "source"]
+            names += ["quality"] if "quality" in pf.schema_arrow.names else []
+            tbl = pf.read_row_group(rg, columns=names)
+            col = {c: tbl.column(c).combine_chunks() for c in names}
+            yield encode_rows(
+                col["doc_id"], col["source"], col["tokens"],
+                np.zeros(tbl.num_rows, dtype=np.int64), col.get("quality"),
+                chunk_width, enable_fsst, quality_threshold, mask_vocab, part_id,
             )
 
 
@@ -197,7 +150,6 @@ def encode_parquet_summary(
     path: str,
     chunk_width: int = 4096,
     enable_fsst: bool = True,
-    num_partitions: int | None = None,
     max_splits: int | None = None,
 ):
     """Compute-only encode probe: per-split summaries, no payload
@@ -218,10 +170,8 @@ def encode_parquet_direct(
     path: str,
     chunk_width: int = 4096,
     enable_fsst: bool = True,
-    num_partitions: int | None = None,
     quality_threshold: int = 10,
     mask_vocab: int | None = None,
-    workload: str = "read",
 ):
     """Encode a parquet corpus via worker-side pyarrow reads.
 
@@ -236,7 +186,7 @@ def encode_parquet_direct(
     sdf = _splits_df(spark, splits)
     return sdf.mapInArrow(
         lambda it: _scan_encode_map(
-            it, enable_fsst, chunk_width, quality_threshold, mask_vocab, workload
+            it, enable_fsst, chunk_width, quality_threshold, mask_vocab
         ),
         ENCODED_SCHEMA,
     )
@@ -247,20 +197,12 @@ def _scan_decode_summary_map(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.R
     decode every chunk, emit per-split totals + a token-sum checksum."""
     import pyarrow.parquet as pq
 
-    from .decode import decode_batch_kernel
-
     for b in batches:
         for path, rg in zip(b.column("path").to_pylist(), b.column("row_group").to_pylist()):
             tbl = pq.ParquetFile(path).read_row_group(
                 rg, columns=["payload", "codec", "bit_width", "n_values", "min_val"]
             )
-            flat, offsets = decode_batch_kernel(
-                tbl.column("payload").to_pylist(),
-                tbl.column("codec").to_pylist(),
-                tbl.column("bit_width").to_numpy(zero_copy_only=False),
-                tbl.column("min_val").to_numpy(zero_copy_only=False),
-                tbl.column("n_values").to_numpy(zero_copy_only=False),
-            )
+            flat, offsets = decode_batch_kernel(*chunk_headers(tbl))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array([int(offsets[-1])], pa.int64()),

@@ -7,6 +7,9 @@ encode kernel into a file-source stream via ``foreachBatch``:
     new parquet files -> micro-batch DataFrame -> plan_chunks ->
     encode_chunks -> append to encoded/ + manifest/chunks/
 
+The output is an EncodeJob store (same paths, format marker and file
+layout), so ``EncodeJob(spark, out_dir)`` reads, queries and resumes it.
+
 Exactly-once story: foreachBatch is at-least-once under retries; chunk
 ids are deterministic and payloads idempotent, so readers dedup on
 (doc_id, chunk_idx) exactly as the batch resume path does
@@ -25,7 +28,8 @@ from pyspark.sql import functions as F
 from .chunk import DEFAULT_CHUNK_WIDTH, plan_chunks, repartition_chunks
 from .encode import encode_chunks
 from .manifest import chunk_manifest
-from .resume import DEFAULT_BUCKETS, with_bucket
+from .pipeline import EncodeJob
+from .resume import DEFAULT_BUCKETS
 
 TOKSEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -44,10 +48,20 @@ def stream_encode(
 
     Returns the StreamingQuery. ``available_now=True`` processes all
     currently-visible files then stops — the batch-ingest-as-stream
-    mode; with False it keeps running on a micro-batch trigger."""
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    encoded_path = os.path.join(out_dir, "encoded")
-    manifest_path = os.path.join(out_dir, "manifest", "chunks")
+    mode; with False it keeps running on a micro-batch trigger.
+
+    The first stream into ``out_dir`` writes the store's format marker
+    (with ``chunk_width``); later ones check it, so a restart with
+    another width fails loudly."""
+    job = EncodeJob(
+        spark, out_dir, chunk_width=chunk_width, n_buckets=n_buckets,
+        enable_fsst=enable_fsst, num_partitions=num_partitions,
+    )
+    if os.path.exists(job.format_marker_path):
+        job._check_format_marker("stream onto store")
+    else:
+        os.makedirs(out_dir, exist_ok=True)
+        job._write_format_marker()
     checkpoint = os.path.join(out_dir, "_checkpoint")
 
     stream = (
@@ -57,19 +71,16 @@ def stream_encode(
     )
 
     def process(batch_df, batch_id: int) -> None:
-        chunks = repartition_chunks(plan_chunks(batch_df, chunk_width), parts)
-        enc = with_bucket(
-            encode_chunks(chunks, enable_fsst, chunk_width), n_buckets
+        chunks = repartition_chunks(
+            plan_chunks(batch_df, chunk_width), job.num_partitions
         )
-        # finer doc-hash shuffle key, same as EncodeJob.run: hashing the
-        # raw bucket value lands ~2 keys per task (stragglers); 16x
-        # subbuckets spread evenly while preserving bucket clustering
-        sub = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(int(n_buckets) * 16))
-        enc = enc.repartition(parts, sub).sortWithinPartitions("bucket")
+        enc = job.store_layout(encode_chunks(chunks, enable_fsst, chunk_width))
         enc.persist()
         try:
-            enc.write.mode("append").parquet(encoded_path)
-            chunk_manifest(enc).write.mode("append").parquet(manifest_path)
+            enc.write.mode("append").parquet(job.encoded_path)
+            chunk_manifest(enc).write.mode("append").parquet(
+                job.chunk_manifest_path
+            )
         finally:
             enc.unpersist()
 

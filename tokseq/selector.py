@@ -48,26 +48,11 @@ SPEED_MULT = np.array(
     [1.000, 1.000, 1.005, 1.010, 1.020, 1.015, 1.020, 1.030]
 )
 
-# Encode-cost-aware mode (write-heavy stores, VERDICT r3 task 5): same
-# argmin construction but the multipliers follow the measured
-# single-core ENCODE rates (BENCH/KERNELS.md r4: bitpack 35 / for 25 /
-# rle 28 / dict 22 / zipf-split3 10 Mtok/s — split3 packs 5 streams at
-# ~1.35x split2's batched cost). Under these margins split3 displaces
-# split only when it saves >= ~2.5% of bytes and bitpack only at
-# >= 4%. bitpack still carries the lowest multiplier, so the
-# "payload <= bitpack floor" guarantee holds by the same argument as
-# SPEED_MULT's.
-ENCODE_MULT = np.array(
-    [1.000, 1.000, 1.005, 1.010, 1.025, 1.015, 1.030, 1.040]
-)
-
-WORKLOAD_MULT = {"read": SPEED_MULT, "write": ENCODE_MULT}
-
 # fsst sits outside the estimate matrix (it try-encodes against the
 # argmin winner's actual payload), but the same decode-cost philosophy
 # applies: fsst decodes ~11 Mtok/s single-core vs 25-150+ for the
 # batch paths (BENCH/KERNELS.md), so on the SPEED_MULT scale (split3
-# at ~25-30 Mtok/s carries 1.030) fsst sits at ~1.05. Read-mode
+# at ~25-30 Mtok/s carries 1.030) fsst sits at ~1.05. fsst
 # acceptance requires size_fsst * FSST_SPEED_MULT < budget *
 # mult_incumbent — fsst must beat the incumbent by the multiplier gap
 # (~2-5%), not merely tie it. The budget only ever SHRINKS, so the
@@ -183,17 +168,13 @@ def estimate_sizes(st: ChunkStats) -> np.ndarray:
     return sizes, pfor_wb, split_w1, pfor_ef_wb, w1v, wmv
 
 
-def select(
-    st: ChunkStats, enable_fsst: bool = True, workload: str = "read"
-) -> Selection:
+def select(st: ChunkStats, enable_fsst: bool = True) -> Selection:
     sizes, pfor_wb, split_w1, pfor_ef_wb, split3_w1, split3_wm = estimate_sizes(st)
-    # cost-aware argmin: size weighted by the decode-speed multiplier
-    # (default: a 100-TB store is read-heavy) or, in workload="write"
-    # mode, by the encode-cost multiplier; prefer lower codec index on
-    # ties -> bitpack wins ties (simplest decode). est_bytes stays the
-    # TRUE size of the pick (manifests).
-    mult = WORKLOAD_MULT[workload]
-    codec_idx = np.argmin(sizes * mult[:, None], axis=0)
+    # cost-aware argmin: size weighted by the decode-speed multiplier (a
+    # 100-TB store is read-heavy); prefer lower codec index on ties ->
+    # bitpack wins ties (simplest decode). est_bytes stays the TRUE size
+    # of the pick (manifests).
+    codec_idx = np.argmin(sizes * SPEED_MULT[:, None], axis=0)
     est = np.take_along_axis(sizes, codec_idx[None, :], 0).ravel()
     floor = sizes[0]
     # fsst candidacy: big-enough chunk, >= 9-bit values, and the best

@@ -75,22 +75,12 @@ def windowed_any_naive(mask: np.ndarray, k: int) -> np.ndarray:
     return np.array([mask[i : i + k].any() for i in range(n - k + 1)], dtype=bool)
 
 
-def _flatten_list_column(arr) -> tuple[np.ndarray, np.ndarray]:
-    """list<int*> -> (flat values, offsets); null rows count as empty
-    (flatten() already skips their values)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    values = arr.flatten().to_numpy(zero_copy_only=False)
-    lens = (
-        arr.value_lengths().fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
-    )
-    return values, np.concatenate(([0], np.cumsum(lens)))
-
-
 def _mask_map(batches: Iterator[pa.RecordBatch], threshold: int, vocab: int | None):
+    from .engine.encode import list_column_to_numpy
+
     for b in batches:
-        t_vals, t_off = _flatten_list_column(b.column("tokens"))
-        q_vals, q_off = _flatten_list_column(b.column("quality"))
+        t_vals, t_off = list_column_to_numpy(b.column("tokens"))
+        q_vals, q_off = list_column_to_numpy(b.column("quality"))
         # vocab part over the whole flat token array (no per-row Python)
         m = build_mask(t_vals, None, threshold, vocab)
         t_lens = np.diff(t_off)
