@@ -5,7 +5,7 @@
     spark-submit --py-files tokseq.zip scripts/decode_submit.py \
         --input s3://bucket/encoded-root --output s3://bucket/tokens
 
---input is the EncodeJob out_dir (containing encoded/ + manifest/).
+--input is the EncodeJob out_dir (containing encoded/).
 Writes (doc_id string, tokens array<int>) reassembled documents; pass
 --chunks to keep chunk granularity (doc_id, chunk_idx, chunk_tokens)
 instead (the streaming-friendly shape; see decode.py scale note).

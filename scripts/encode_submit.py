@@ -11,8 +11,8 @@ Cluster (package the lib first: `cd repo && zip -r tokseq.zip tokseq`):
 
 Input: parquet (or, with --table, an Iceberg/catalog table via
 spark.read.table) with columns (doc_id string, tokens array<int>,
-n_tok int, source string). Output layout: encoded/ + manifest/
-(see tokseq.engine.pipeline).
+n_tok int, source string). Output layout: encoded/ +
+_tokseq_format.json (see tokseq.engine.pipeline).
 """
 
 from __future__ import annotations
@@ -41,10 +41,9 @@ def main() -> None:
     out = ap.add_mutually_exclusive_group(required=True)
     out.add_argument("--output", help="output DIRECTORY (path mode)")
     out.add_argument("--output-table-prefix",
-                     help="write catalog tables {prefix}_encoded / "
-                          "{prefix}_chunk_manifest / {prefix}_partition_"
-                          "manifest instead of a directory (Iceberg when "
-                          "a catalog is configured)")
+                     help="write the catalog table {prefix}_encoded "
+                          "instead of a directory (Iceberg when a "
+                          "catalog is configured)")
     ap.add_argument("--table", action="store_true",
                     help="treat --input as a catalog (e.g. Iceberg) table name")
     ap.add_argument("--chunk-width", type=int, default=None,

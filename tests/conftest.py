@@ -30,3 +30,24 @@ def corpus_df(spark):
 
     table = generate_corpus(scale=0.25, chunk_width=512)
     return spark.createDataFrame(table.to_pandas()).cache()
+
+
+@pytest.fixture
+def drop_store_chunks(spark):
+    """``drop(job, keep)`` removes the rows of ``job``'s store that fail
+    the Column predicate ``keep`` — what a crash part-way through an
+    encode leaves behind. The kept rows are written aside, then
+    swapped in for the store."""
+    import shutil
+
+    from tokseq.engine.encode import STORE_SCHEMA
+
+    def drop(job, keep):
+        aside = job.encoded_path + ".kept"
+        spark.read.schema(STORE_SCHEMA).parquet(job.encoded_path).filter(
+            keep
+        ).write.parquet(aside)
+        shutil.rmtree(job.encoded_path)
+        os.rename(aside, job.encoded_path)
+
+    return drop

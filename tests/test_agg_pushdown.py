@@ -259,9 +259,9 @@ def test_agg_dedups_at_least_once_duplicate_chunks(spark, tmp_path):
         enc.unpersist()
 
 
-def test_encodejob_count_uses_manifest(spark, tmp_path):
-    """EncodeJob.count_tokens answers from the chunk manifest (deduped
-    at write time) — same number as the store aggregate."""
+def test_encodejob_count_tokens_matches_corpus(spark, tmp_path):
+    """EncodeJob.count_tokens over a written store equals the corpus
+    token count."""
     from tokseq.datagen import generate_corpus
     from tokseq.engine import EncodeJob
 

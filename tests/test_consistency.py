@@ -105,6 +105,26 @@ def test_payload_layout_has_one_owner():
     assert not bad, bad
 
 
+def test_store_has_one_copy():
+    """The store is its own chunk manifest: no tokseq module names a
+    manifest directory or a *_manifest catalog table, so nothing writes
+    or reads a second copy of the store's lineage columns."""
+    import ast
+    from pathlib import Path
+
+    names = {"manifest", "chunk_manifest", "partition_manifest"}
+    root = Path(__file__).resolve().parents[1] / "tokseq"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                # path parts ("manifest", "manifest/"), table names
+                # ("chunk_manifest", the "_chunk_manifest" f-string tail)
+                if node.value.strip("/_") in names:
+                    bad.append(f"{path.relative_to(root)}:{node.lineno} {node.value!r}")
+    assert not bad, bad
+
+
 def test_encode_body_has_one_owner():
     """Both ingest routes build their encoded batches through
     engine/encode.py's encode_rows: no other tokseq module names the

@@ -1,6 +1,8 @@
 """Spark pipeline tests: chunking properties, end-to-end roundtrip
 (the master invariant), size floor, manifests, resume (FIXTURES F5)."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -8,6 +10,7 @@ from pyspark.sql import functions as F
 from tokseq.engine.chunk import chunk_docs
 from tokseq.engine.decode import decode_chunks, reassemble_docs
 from tokseq.engine.encode import encode_chunks
+from tokseq.engine.manifest import chunk_manifest, partition_manifest
 from tokseq.engine.pipeline import EncodeJob
 from tokseq.engine.resume import pending_docs, with_bucket
 from tokseq.engine.verify import count_mismatches
@@ -47,13 +50,13 @@ def test_end_to_end_roundtrip(spark, corpus_df, tmp_path):
     # multiple codecs actually selected on the mixed corpus
     codecs = {r["codec"] for r in enc.select("codec").distinct().collect()}
     assert {"bitpack", "rle", "dict"} <= codecs
-    # manifests exist and agree with the encoded table
-    man = spark.read.parquet(job.chunk_manifest_path)
+    # the store's manifest projections agree with the job totals
+    man = chunk_manifest(enc)
     assert man.count() == res.n_chunks
     assert (
         man.agg(F.sum("out_bytes")).collect()[0][0] == res.out_bytes
     )
-    pm = spark.read.parquet(job.partition_manifest_path)
+    pm = partition_manifest(job.encoded())
     assert pm.agg(F.sum("n_chunks")).collect()[0][0] == res.n_chunks
 
 
@@ -67,14 +70,14 @@ def test_saturation_and_width(spark, corpus_df, tmp_path):
     assert count_mismatches(sat, back) == 0
 
 
-def test_resume_pending_exact(spark, corpus_df, tmp_path):
-    """Drop all manifest chunks of half the docs plus ONE chunk of a
+def test_resume_pending_exact(spark, corpus_df, tmp_path, drop_store_chunks):
+    """Drop all store chunks of half the docs plus ONE chunk of a
     multi-chunk doc; pending must be exactly those docs (FIXTURES F5
     resume property, doc-level granularity)."""
     out = str(tmp_path / "out")
     job = EncodeJob(spark, out, chunk_width=CHUNK_W, n_buckets=16)
     job.run(corpus_df)
-    man = spark.read.parquet(job.chunk_manifest_path)
+    man = chunk_manifest(job.encoded())
     total_chunks = man.count()
 
     victim = F.xxhash64("doc_id") % 2 != 0
@@ -82,17 +85,16 @@ def test_resume_pending_exact(spark, corpus_df, tmp_path):
         man.groupBy("doc_id").count().filter((F.col("count") >= 2) & ~victim)
         .orderBy("doc_id").limit(1).collect()[0]["doc_id"]
     )
-    kept = man.filter(
-        ~victim & ~((F.col("doc_id") == partial_doc) & (F.col("chunk_idx") == 0))
-    ).toPandas()
     victim_docs = {r.doc_id for r in man.filter(victim).select("doc_id").distinct().collect()}
     victim_docs.add(partial_doc)
     expected_new = man.filter(F.col("doc_id").isin(list(victim_docs))).count()
-    spark.createDataFrame(kept).write.mode("overwrite").parquet(job.chunk_manifest_path)
+    drop_store_chunks(job, ~victim & ~(
+        (F.col("doc_id") == partial_doc) & (F.col("chunk_idx") == 0)
+    ))
+    kept = job.encoded().count()
 
     pending = pending_docs(
-        with_bucket(corpus_df, 16), spark.read.parquet(job.chunk_manifest_path),
-        CHUNK_W, 16,
+        with_bucket(corpus_df, 16), job._read_manifest(), CHUNK_W, 16,
     )
     pend = {r.doc_id for r in pending.select("doc_id").collect()}
     assert pend == victim_docs
@@ -101,17 +103,46 @@ def test_resume_pending_exact(spark, corpus_df, tmp_path):
     # (the partial doc's surviving chunks) are deduped by the reader —
     # roundtrip must still be exact.
     res = job.run(corpus_df, resume=True)
-    assert res.n_chunks == total_chunks  # manifest counts deduped chunks
+    assert res.n_chunks == total_chunks  # job totals count deduped chunks
     enc_rows = spark.read.parquet(job.encoded_path).count()
-    assert enc_rows == total_chunks + expected_new
+    assert enc_rows == kept + expected_new
     assert job.verify_roundtrip(corpus_df) == 0
+
+
+def test_parent_layout_stale_manifest_is_ignored(spark, corpus_df, tmp_path):
+    """Stores written before the store became its own manifest carry a
+    manifest/chunks copy; a crash between the store append and that
+    copy's rebuild left it stale. Counts and resume read the store, so
+    a stale copy holding half the docs changes neither."""
+    job = EncodeJob(spark, str(tmp_path / "out"), chunk_width=CHUNK_W, n_buckets=16)
+    job.run(corpus_df)
+    half = chunk_manifest(job.encoded()).filter(F.xxhash64("doc_id") % 2 == 0)
+    half.write.mode("overwrite").parquet(os.path.join(job.out_dir, "manifest", "chunks"))
+
+    n_tok = corpus_df.agg(F.sum("n_tok")).collect()[0][0]
+    assert job.count_tokens().collect()[0]["n_tokens"] == n_tok
+    assert job.plan(corpus_df, resume=True).count() == 0
+
+
+def test_manifest_is_none_only_before_first_write(spark, tmp_path):
+    """A store whose marker is written but whose first write never
+    landed has no chunks: its manifest reads as None. A width error
+    from the store read propagates instead of turning a resume into a
+    full re-encode."""
+    out = str(tmp_path / "out")
+    job = EncodeJob(spark, out, chunk_width=CHUNK_W)
+    os.makedirs(out)
+    job._write_format_marker()
+    assert job._read_manifest() is None
+    with pytest.raises(RuntimeError, match="chunk_width"):
+        EncodeJob(spark, out, chunk_width=2 * CHUNK_W)._read_manifest()
 
 
 def test_no_resume_means_full_reencode(spark, corpus_df, tmp_path):
     out = str(tmp_path / "out2")
     job = EncodeJob(spark, out, chunk_width=CHUNK_W, n_buckets=16)
     r1 = job.run(corpus_df)
-    r2 = job.run(corpus_df, resume=True)  # manifest complete -> nothing pending
+    r2 = job.run(corpus_df, resume=True)  # store complete -> nothing pending
     assert r2.n_chunks == r1.n_chunks  # table unchanged (append of zero rows)
 
 
@@ -231,7 +262,7 @@ def test_format_marker_guards_store(spark, corpus_df, tmp_path):
 
 def test_encodejob_catalog_mode_roundtrip_and_marker(spark, corpus_df):
     """CATALOG mode (table_prefix instead of out_dir): the whole job —
-    encode, manifests, marker, resume append, decode, aggregate
+    encode, marker, resume append, decode, count, aggregate
     pushdown — runs against catalog tables (saveAsTable/read.table),
     the exact surface an Iceberg catalog binds to when its runtime jar
     exists. The payload-format marker rides TBLPROPERTIES and guards
@@ -241,8 +272,7 @@ def test_encodejob_catalog_mode_roundtrip_and_marker(spark, corpus_df):
     from tokseq.engine.verify import count_mismatches
 
     prefix = "tokseq_cattest"
-    for t in ("encoded", "chunk_manifest", "partition_manifest"):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+    spark.sql(f"DROP TABLE IF EXISTS {prefix}_encoded")
     try:
         job = EncodeJob(spark, table_prefix=prefix, chunk_width=512, n_buckets=8)
         res = job.run(corpus_df)
@@ -257,7 +287,7 @@ def test_encodejob_catalog_mode_roundtrip_and_marker(spark, corpus_df):
         assert count_mismatches(
             corpus_df.select("doc_id", "tokens"), job.decode()
         ) == 0
-        # agg pushdown + manifest-backed count work on catalog tables
+        # agg pushdown + payload-free count work on catalog tables
         n_tok = corpus_df.agg(F.sum("n_tok")).collect()[0][0]
         assert job.count_tokens().collect()[0]["n_tokens"] == n_tok
         assert job.agg_tokens().collect()[0]["n_tokens"] == n_tok
@@ -276,8 +306,7 @@ def test_encodejob_catalog_mode_roundtrip_and_marker(spark, corpus_df):
         with pytest.raises(RuntimeError, match="format_version"):
             job.encoded()
     finally:
-        for t in ("encoded", "chunk_manifest", "partition_manifest"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_encoded")
 
 
 def test_encodejob_requires_exactly_one_target(spark):
@@ -310,5 +339,4 @@ def test_catalog_mode_chunk_width_property(spark, corpus_df):
         with pytest.raises(RuntimeError, match="chunk_width"):
             EncodeJob(spark, table_prefix=prefix, chunk_width=4096).encoded()
     finally:
-        for t in ("encoded", "chunk_manifest", "partition_manifest"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_encoded")

@@ -429,6 +429,28 @@ def test_duplicate_chunks_judged_on_decoded_content(spark, store, corpus_df, tmp
         assert _slices(gather_slices(store.encoded(), probes, CHUNK_W, threshold)) == want
         assert _slices(gather_slices(dup.encoded(), probes, CHUNK_W, threshold)) == want
 
+    # the keyless dedups of the count and aggregate paths hold for a
+    # copy whose codec and payload differ from the original's
+    chunk = tokens[CHUNK_W : 2 * CHUNK_W]
+    rng = (int(chunk.min()), int(chunk.max()))
+    whole = [lambda j: j.count_tokens(), lambda j: j.agg_tokens()]
+    def ranged(r):
+        return [lambda j: j.count_tokens(r), lambda j: j.agg_tokens(token_range=r)]
+    for q in whole + ranged(rng):
+        assert q(dup).collect() == q(store).collect()
+    # ... and for one whose zone differs too: a "for" chunk copied as
+    # bitpack, over a range that holds the original's zone whole and
+    # crosses the copy's
+    row = (
+        store.encoded().filter((F.col("codec") == "for") & (F.col("min_val") > 0))
+        .orderBy("doc_id", "chunk_idx").first()
+    )
+    moved = _store_with_copy(spark, store, tmp_path / "zone", row["doc_id"],
+                             row["chunk_idx"])
+    zone = (row["min_val"], row["min_val"] + (1 << row["bit_width"]) - 1)
+    for q in whole + ranged(zone):
+        assert q(moved).collect() == q(store).collect()
+
     token = int(tokens[CHUNK_W])
     def counts(job):
         return {(r["doc_id"], r["n_occurrences"])
@@ -471,9 +493,12 @@ def test_gather_reads_probe_side_once(spark, store, corpus_df):
 
 
 def test_store_reads_start_no_spark_job(spark, store):
-    """Opening the store and its chunk manifest declares their schema
-    instead of inferring it from parquet footers, which runs a job."""
+    """Opening the store and its chunk manifest projection declares
+    their schema instead of inferring it from parquet footers, which
+    runs a job."""
     import uuid
+
+    from tokseq.engine.manifest import chunk_manifest
 
     sc = spark.sparkContext
     group = f"store-read-{uuid.uuid4().hex}"
@@ -488,7 +513,9 @@ def test_store_reads_start_no_spark_job(spark, store):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     # the declared schemas are the ones the files carry
     assert enc.schema == spark.read.parquet(reader.encoded_path).schema
-    assert manifest.schema == spark.read.parquet(reader.chunk_manifest_path).schema
+    assert manifest.schema == chunk_manifest(
+        spark.read.parquet(reader.encoded_path)
+    ).schema
 
 
 def test_gather_many_probes_on_one_chunk(spark, store, corpus_df):

@@ -5,13 +5,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from tokseq.engine.manifest import chunk_manifest
 from tokseq.engine.pipeline import EncodeJob
 
 CHUNK_W = 256
 BIG = CHUNK_W * 16  # > threshold -> pre-exploded giant
 
 
-def test_giant_doc_resumes_at_chunk_level(spark, tmp_path):
+def test_giant_doc_resumes_at_chunk_level(spark, tmp_path, drop_store_chunks):
     rng = np.random.default_rng(42)
     rows = []
     # one giant doc (64 chunks) + a few small docs
@@ -27,18 +28,19 @@ def test_giant_doc_resumes_at_chunk_level(spark, tmp_path):
     out = str(tmp_path / "out")
     job = EncodeJob(spark, out, chunk_width=CHUNK_W, n_buckets=8)
     job.run(docs)
-    man = spark.read.parquet(job.chunk_manifest_path)
+    man = chunk_manifest(job.encoded())
     total = man.count()
     giant_chunks = man.filter(F.col("doc_id") == "giant-0").count()
     assert giant_chunks == BIG * 4 // CHUNK_W
 
     # drop ONE chunk of the giant and ALL chunks of one small doc
-    kept = man.filter(
-        ~((F.col("doc_id") == "giant-0") & (F.col("chunk_idx") == 17))
-        & (F.col("doc_id") != "small-3")
-    ).toPandas()
     small3_chunks = man.filter(F.col("doc_id") == "small-3").count()
-    spark.createDataFrame(kept).write.mode("overwrite").parquet(job.chunk_manifest_path)
+    drop_store_chunks(
+        job,
+        ~((F.col("doc_id") == "giant-0") & (F.col("chunk_idx") == 17))
+        & (F.col("doc_id") != "small-3"),
+    )
+    kept = job.encoded().count()
 
     plan = job.plan(docs, resume=True)
     pend = plan.select("doc_id", "chunk_idx", F.size("chunk_tokens").alias("sz")).collect()
@@ -54,4 +56,4 @@ def test_giant_doc_resumes_at_chunk_level(spark, tmp_path):
     assert res.n_chunks == total  # deduped chunk count restored
     assert job.verify_roundtrip(docs) == 0
     enc_rows = spark.read.parquet(job.encoded_path).count()
-    assert enc_rows == total + 1 + small3_chunks  # appended exactly the gap
+    assert enc_rows == kept + 1 + small3_chunks == total  # appended exactly the gap

@@ -50,11 +50,33 @@ def test_stream_encode_incremental(spark, tmp_path):
     back = reassemble_docs(decode_chunks(enc.dropDuplicates(["doc_id", "chunk_idx"])))
     assert count_mismatches(docs.select("doc_id", "tokens"), back) == 0
 
-    # manifest grew with both batches
-    man = spark.read.parquet(os.path.join(out_dir, "manifest", "chunks"))
-    assert man.count() == enc.count()
-    assert man.agg(F.sum("out_bytes")).collect()[0][0] == \
-        enc.agg(F.sum("out_bytes")).collect()[0][0]
+    # the store is its own chunk manifest: no second copy is written
+    assert not os.path.exists(os.path.join(out_dir, "manifest"))
+
+
+def test_replayed_stream_counts_each_token_once(spark, tmp_path):
+    """A lost checkpoint replays the stream's input (at-least-once):
+    every chunk lands twice, and the store's token count still counts
+    each token once."""
+    import shutil
+
+    from tokseq.engine import EncodeJob
+
+    table = generate_corpus(scale=0.05, include_boundary=False)
+    in_dir = tmp_path / "in"
+    out_dir = str(tmp_path / "out")
+    os.makedirs(in_dir)
+    _write_slice(table, 0, table.num_rows, str(in_dir / "part-0.parquet"))
+    for _ in range(2):
+        shutil.rmtree(os.path.join(out_dir, "_checkpoint"), ignore_errors=True)
+        stream_encode(spark, str(in_dir), out_dir, chunk_width=512,
+                      n_buckets=8, num_partitions=4).awaitTermination()
+
+    job = EncodeJob(spark, out_dir)
+    enc = job.encoded()
+    assert enc.count() == 2 * enc.dropDuplicates(["doc_id", "chunk_idx"]).count()
+    n_tok = sum(table.column("n_tok").to_pylist())
+    assert job.count_tokens().collect()[0]["n_tokens"] == n_tok
 
 
 def test_streamed_store_reads_as_encode_job_store(spark, tmp_path):

@@ -116,7 +116,7 @@ def test_mask_travels_through_encode_pipeline(spark):
     assert enc2.filter(F.col("mask").isNotNull()).count() == 0
 
 
-def test_mask_survives_encodejob_write_and_resume(spark, tmp_path):
+def test_mask_survives_encodejob_write_and_resume(spark, tmp_path, drop_store_chunks):
     """PackedNSeq pairing through the FULL job: quality-carrying docs
     -> EncodeJob.run (write parquet) -> read back -> masks intact; a
     resume re-encode of a doc keeps its mask column consistent."""
@@ -164,10 +164,8 @@ def test_mask_survives_encodejob_write_and_resume(spark, tmp_path):
         assert got_any
 
     check()
-    # drop one doc's manifest rows, resume, re-check (incl. the re-encode)
-    man = spark.read.parquet(job.chunk_manifest_path)
-    kept = man.filter(F.col("doc_id") != "d3").toPandas()
-    spark.createDataFrame(kept).write.mode("overwrite").parquet(job.chunk_manifest_path)
+    # drop one doc's store rows, resume, re-check (incl. the re-encode)
+    drop_store_chunks(job, F.col("doc_id") != "d3")
     job.run(docs, resume=True)
     assert job.verify_roundtrip(docs) == 0
     check()

@@ -11,9 +11,8 @@ token-array materialization, no reassembly shuffle) where it doesn't.
 Cost ladder, cheapest first:
 
   count           SQL over ``n_values`` — never touches payload bytes;
-                  parquet column pruning skips them (count_tokens; the
-                  EncodeJob method reads the already-deduped chunk
-                  manifest, skipping even the chunk-key dedup).
+                  parquet column pruning skips them (count_tokens,
+                  also behind EncodeJob.count_tokens).
   min/max bounds  SQL over the zone map [min_val, min_val + 2^w) —
                   same, payload never read (engine/lookup.py).
   exact agg       ``agg_chunks``: one mapInArrow pass emitting ONE
@@ -395,9 +394,6 @@ def count_tokens(
     """Token count WITHOUT reading payload bytes: three manifest-shaped
     columns leave the parquet scan (ReadSchema shows no `payload`),
     deduped on the chunk key (at-least-once appends), then summed.
-    When an EncodeJob store is at hand, its chunk manifest is already
-    deduped — EncodeJob.count_tokens() reads that and skips the
-    dedup exchange entirely.
 
     With ``token_range=(lo, hi)`` the count covers only tokens in the
     range, and the zone map splits the work three ways: DISJOINT
@@ -412,8 +408,8 @@ def count_tokens(
     from .lookup import zone_contained_filter, zone_range_filter
 
     # keyless distincts below: equivalent to the keyed dedup because
-    # the projected columns are all chunk-deterministic (duplicate
-    # chunk rows are identical), and distinct partial-aggregates
+    # the projected columns depend only on the chunk's tokens (copies
+    # agree on them whatever their codec), and distinct partial-aggregates
     # map-side without first() buffers (see agg_tokens)
     if token_range is None:
         return (
@@ -424,17 +420,13 @@ def count_tokens(
     lo, hi = token_range
     cand = encoded_df.filter(zone_range_filter(lo, hi))
     contained = zone_contained_filter(lo, hi)
-    full = (
-        cand.filter(contained)
-        .select("doc_id", "chunk_idx", "n_values")
+    # one distinct over both sides: a duplicate re-encoded with another
+    # codec can land on the other side of the zone split, and its
+    # (doc_id, chunk_idx, in-range count) row still equals the original's
+    full = cand.filter(contained).select("doc_id", "chunk_idx", "n_values")
+    boundary = agg_chunks(cand.filter(~contained), token_range=token_range)
+    return (
+        full.unionAll(boundary.select(*full.columns))
         .dropDuplicates()
-        .agg(F.sum("n_values").alias("c"))
-    )
-    boundary = (
-        agg_chunks(cand.filter(~contained), token_range=token_range)
-        .dropDuplicates()
-        .agg(F.sum("n_values").alias("c"))
-    )
-    return full.unionAll(boundary).agg(
-        F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_tokens")
+        .agg(F.coalesce(F.sum("n_values"), F.lit(0)).cast("long").alias("n_tokens"))
     )

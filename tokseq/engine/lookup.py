@@ -312,8 +312,9 @@ def point_lookup(
     if not parts:
         return np.zeros(0, dtype=np.int64)
     # the touched range must start at `first` and be gap-free: a
-    # missing leading or interior chunk (partially-written table before
-    # manifest catch-up) would otherwise silently misalign the slice
+    # missing leading or interior chunk (a partially-written table,
+    # before a resume fills it in) would otherwise silently misalign
+    # the slice
     idxs = sorted(by_idx)
     if idxs[0] != first or idxs != list(range(first, first + len(idxs))):
         raise ValueError(

@@ -1,18 +1,23 @@
 """Per-partition encoding manifests (north rule: "per-partition
-lineage + metrics").
+lineage + metrics"), as projections of the encoded store.
 
-Two levels, both plain DataFrames written as parquet next to the
-encoded table:
+Every store row carries its chunk's lineage and metrics, so the
+manifests are views, not a second copy kept in sync:
 
-  chunks/      chunk lineage: (doc_id, chunk_idx, bucket, codec,
-               bit_width, n_values, in_bytes, out_bytes, floor_bytes,
-               part_id) — the source of truth for resume.
-  partitions/  per-task metrics: (part_id, n_chunks, n_values,
-               in_bytes, out_bytes, floor_bytes, codec_counts map)
+  chunk_manifest      chunk lineage: (doc_id, chunk_idx, bucket, codec,
+                      bit_width, n_values, in_bytes, out_bytes,
+                      floor_bytes, part_id) — the source of truth for
+                      resume; parquet column pruning reads it without
+                      touching payload bytes.
+  partition_manifest  per-task metrics: (part_id, n_chunks, n_values,
+                      in_bytes, out_bytes, floor_bytes, codec_counts map)
+
+Appends are at-least-once, so a store may hold a chunk twice; readers
+dedup on (doc_id, chunk_idx).
 
 The manifest is the engine analog of the reference returning the char
-Range of every pushed record (/root/reference/src/traits.rs:254-266):
-it is what makes the encoded buffer addressable and the job resumable.
+Range of every pushed record (src/traits.rs:254-266): it is what
+makes the encoded buffer addressable and the job resumable.
 """
 
 from __future__ import annotations
@@ -20,17 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .encode import STORE_SCHEMA
-
 CHUNK_MANIFEST_COLS = [
     "doc_id", "chunk_idx", "bucket", "codec", "bit_width",
     "n_values", "in_bytes", "out_bytes", "floor_bytes", "part_id",
 ]
-# the chunk manifest is the CHUNK_MANIFEST_COLS projection of the store
-_STORE_TYPES = dict(f.split(" ") for f in STORE_SCHEMA.split(", "))
-CHUNK_MANIFEST_SCHEMA = ", ".join(
-    f"{c} {_STORE_TYPES[c]}" for c in CHUNK_MANIFEST_COLS
-)
 
 
 def chunk_manifest(encoded: DataFrame) -> DataFrame:

@@ -1,5 +1,5 @@
 """End-to-end encode job: scan → chunk → resume-filter → salted
-repartition → encode → write encoded table + manifests.
+repartition → encode → write the encoded table.
 
 Input contract: doc_id values must be unique (they are the resume and
 reassembly key). Duplicate ids are not silently merged — the roundtrip
@@ -12,9 +12,12 @@ runtime jar in this sandbox (SURVEY §7.0), so the shim defaults to
 Parquet.
 
 Layout under ``out_dir``:
-    encoded/             the encoded chunk table (parquet, partitioned by bucket)
-    manifest/chunks/     chunk-level lineage (resume source of truth)
-    manifest/partitions/ per-task metrics
+    encoded/             the encoded chunk table (parquet, clustered by
+                         bucket); also the chunk manifest: its lineage
+                         and metrics columns, read payload-free
+                         (manifest.chunk_manifest), are the record of
+                         which chunks exist
+    _tokseq_format.json  payload format version and chunk width
 """
 
 from __future__ import annotations
@@ -24,19 +27,14 @@ import os
 import time
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .chunk import DEFAULT_CHUNK_WIDTH, plan_chunks, repartition_chunks
 from .decode import decode_chunks, decode_docs
 from .encode import STORE_SCHEMA, encode_chunks
-from .manifest import (
-    CHUNK_MANIFEST_COLS,
-    CHUNK_MANIFEST_SCHEMA,
-    chunk_manifest,
-    codec_summary,
-    partition_manifest,
-)
+from .manifest import chunk_manifest, codec_summary
 from .resume import DEFAULT_BUCKETS, pending_plan, with_bucket
 from .verify import count_mismatches
 
@@ -74,11 +72,9 @@ class EncodeJob:
     ):
         """``out_dir`` selects PATH mode (parquet directories). Passing
         ``table_prefix`` instead selects CATALOG mode: the encoded
-        table and both manifests live as catalog tables
-        ``{prefix}_encoded`` / ``{prefix}_chunk_manifest`` /
-        ``{prefix}_partition_manifest`` (``saveAsTable`` /
-        ``spark.read.table``), and the payload-format marker rides the
-        encoded table's TBLPROPERTIES instead of a marker file. With
+        table lives as the catalog table ``{prefix}_encoded``
+        (``saveAsTable`` / ``spark.read.table``), and the payload-format
+        marker rides its TBLPROPERTIES instead of a marker file. With
         only Spark's built-in session catalog this stores parquet
         under the warehouse dir; point ``table_prefix`` at a
         configured Iceberg catalog (``catalog.db.name`` — needs the
@@ -114,16 +110,13 @@ class EncodeJob:
     def encoded_path(self) -> str:
         return os.path.join(self.out_dir, "encoded")
 
-    @property
-    def chunk_manifest_path(self) -> str:
-        return os.path.join(self.out_dir, "manifest", "chunks")
+    # the store is its own chunk manifest; the name stays for callers
+    # that read it as a path (perfbench/workloads.py)
+    chunk_manifest_path = encoded_path
 
     @property
-    def partition_manifest_path(self) -> str:
-        return os.path.join(self.out_dir, "manifest", "partitions")
-
-    def _tbl(self, which: str) -> str:
-        return f"{self.table_prefix}_{which}"
+    def encoded_table(self) -> str:
+        return f"{self.table_prefix}_encoded"
 
     _MARKER_PROP = "tokseq.format_version"
     _WIDTH_PROP = "tokseq.chunk_width"
@@ -139,7 +132,7 @@ class EncodeJob:
             # rides the encoded table's properties; caller invokes this
             # AFTER the table exists
             self.spark.sql(
-                f"ALTER TABLE {self._tbl('encoded')} SET TBLPROPERTIES "
+                f"ALTER TABLE {self.encoded_table} SET TBLPROPERTIES "
                 f"('{self._MARKER_PROP}' = '{FORMAT_VERSION}', "
                 f"'{self._WIDTH_PROP}' = '{self.chunk_width}')"
             )
@@ -190,7 +183,7 @@ class EncodeJob:
         from ..codecs import FORMAT_VERSION
 
         if self.table_prefix is not None:
-            name = self._tbl("encoded")
+            name = self.encoded_table
             try:
                 props = {
                     r["key"]: r["value"]
@@ -240,13 +233,14 @@ class EncodeJob:
         self._apply_stored_width(marker.get("chunk_width"), action)
 
     def _read_manifest(self) -> DataFrame | None:
+        """The store's chunk manifest, read payload-free; None when no
+        store has been written yet. Format and width errors propagate:
+        a resume must not read them as "nothing encoded yet"."""
         try:
-            if self.table_prefix is not None:
-                return self.spark.read.table(self._tbl("chunk_manifest"))
-            return self.spark.read.schema(CHUNK_MANIFEST_SCHEMA).parquet(
-                self.chunk_manifest_path
-            )
-        except Exception:
+            return chunk_manifest(self.encoded())
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
             return None
 
     def store_layout(self, encoded: DataFrame) -> DataFrame:
@@ -326,55 +320,28 @@ class EncodeJob:
         # for ~no size win
         if self.table_prefix is not None:
             out.write.mode(mode).option("compression", "none").saveAsTable(
-                self._tbl("encoded")
+                self.encoded_table
             )
             if not resume:
                 self._write_format_marker()  # property needs the table
-            enc_src = self.spark.read.table(self._tbl("encoded"))
         else:
             out.write.mode(mode).option("compression", "none").parquet(
                 self.encoded_path
             )
-            enc_src = self.spark.read.schema(STORE_SCHEMA).parquet(self.encoded_path)
 
-        # manifest reflects the deduped logical table (appends are
-        # at-least-once; resume counts depend on exact chunk counts).
-        # project BEFORE deduping so the payload column never enters
-        # the dedup shuffle (column pruning keeps the re-read cheap).
-        # The partition manifest and the job totals then derive from
-        # the WRITTEN chunk manifest (a tiny table) instead of each
-        # re-scanning + re-deduping the encoded store — the store is
-        # scanned once after the write, not three times (r7; rows are
-        # identical, the manifest IS the deduped projection)
-        enc = enc_src.select(*CHUNK_MANIFEST_COLS).dropDuplicates(
-            ["doc_id", "chunk_idx"]
+        # totals over the deduped logical table: appends are
+        # at-least-once, and a duplicate's out_bytes can differ from
+        # the original's, so the dedup is keyed
+        totals = (
+            chunk_manifest(self.encoded()).dropDuplicates(["doc_id", "chunk_idx"])
+            .agg(
+                F.count("*").alias("c"),
+                F.sum("n_values").alias("v"),
+                F.sum("in_bytes").alias("i"),
+                F.sum("out_bytes").alias("o"),
+                F.sum("floor_bytes").alias("f"),
+            ).collect()[0]
         )
-        if self.table_prefix is not None:
-            chunk_manifest(enc).write.mode("overwrite").saveAsTable(
-                self._tbl("chunk_manifest")
-            )
-            mf = self.spark.read.table(self._tbl("chunk_manifest"))
-            partition_manifest(mf).write.mode("overwrite").saveAsTable(
-                self._tbl("partition_manifest")
-            )
-        else:
-            chunk_manifest(enc).write.mode("overwrite").parquet(
-                self.chunk_manifest_path
-            )
-            mf = self.spark.read.schema(CHUNK_MANIFEST_SCHEMA).parquet(
-                self.chunk_manifest_path
-            )
-            partition_manifest(mf).write.mode("overwrite").parquet(
-                self.partition_manifest_path
-            )
-
-        totals = mf.agg(
-            F.count("*").alias("c"),
-            F.sum("n_values").alias("v"),
-            F.sum("in_bytes").alias("i"),
-            F.sum("out_bytes").alias("o"),
-            F.sum("floor_bytes").alias("f"),
-        ).collect()[0]
         wall = time.time() - t0
         result = EncodeResult(
             n_chunks=totals["c"] or 0,
@@ -395,12 +362,12 @@ class EncodeJob:
     def encoded(self) -> DataFrame:
         self._check_format_marker("read store")
         if self.table_prefix is not None:
-            return self.spark.read.table(self._tbl("encoded"))
+            return self.spark.read.table(self.encoded_table)
         return self.spark.read.schema(STORE_SCHEMA).parquet(self.encoded_path)
 
     def decode(self) -> DataFrame:
-        # resume appends are at-least-once: a chunk interrupted between
-        # data write and manifest write may exist twice. Chunk ids are
+        # appends are at-least-once: a replayed resume or stream batch
+        # writes its chunks twice. Chunk ids are
         # deterministic and payloads idempotent; decode_docs dedups
         # INLINE after its (doc_id, chunk_idx) sort — one exchange of
         # compressed bytes total (SURVEY §7.2 "exactly-once per chunk").
@@ -448,17 +415,9 @@ class EncodeJob:
         self,
         token_range: tuple[int | None, int | None] | None = None,
     ) -> DataFrame:
-        """Token count from the chunk manifest — already deduped at
-        write time, so no payload read AND no dedup exchange. With
-        ``token_range`` the count needs the zone columns and boundary
-        payloads, so it runs against the encoded table (still
-        payload-free for zone-contained chunks — agg.count_tokens)."""
+        """Token count over the store's deduped chunks, optionally
+        restricted to a token range; payload-free except for
+        zone-boundary chunks of a ranged count (agg.count_tokens)."""
         from .agg import count_tokens
 
-        if token_range is not None:
-            return count_tokens(self.encoded(), token_range)
-        self._check_format_marker("read store")
-        manifest = self._read_manifest()
-        if manifest is not None:
-            return manifest.agg(F.sum("n_values").alias("n_tokens"))
-        return count_tokens(self.encoded())
+        return count_tokens(self.encoded(), token_range)

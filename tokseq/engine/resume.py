@@ -1,8 +1,9 @@
 """Checkpoint resume: pending = planned work − already-encoded work.
 
-The chunk manifest is the source of truth. Resume granularity is the
-DOCUMENT: a doc is complete iff the manifest holds exactly
-ceil(n_tok/W) (min 1) chunks for it. Incomplete docs are re-encoded
+The store's chunk manifest (manifest.chunk_manifest, the payload-free
+projection of the encoded table) is the source of truth. Resume
+granularity is the DOCUMENT: a doc is complete iff the store holds
+exactly ceil(n_tok/W) (min 1) chunks for it. Incomplete docs are re-encoded
 whole — chunk ids are deterministic and payloads idempotent, so the
 at-least-once append is resolved by the reader's dedup on
 (doc_id, chunk_idx) (SURVEY §7.2 "exactly-once per chunk").
@@ -73,15 +74,16 @@ def pending_docs(
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """docs: the input table (doc_id, tokens, n_tok, source [, bucket]);
-    manifest: chunk manifest of completed work (None => everything is
-    pending). Returns the subset of docs needing (re-)encoding."""
+    manifest: chunk manifest of the store's completed work (None =>
+    everything is pending). Returns the subset of docs needing
+    (re-)encoding."""
     if "bucket" not in docs.columns:
         docs = with_bucket(docs, n_buckets)
     if manifest is None:
         return docs
 
-    # The streaming path appends chunk manifests at-least-once, so raw
-    # row counts over-count: a bucket with one duplicated and one
+    # Store appends (resume and stream batches) are at-least-once, so
+    # raw row counts over-count: a bucket with one duplicated and one
     # missing chunk would read as complete and be wrongly pruned.
     # Count over the deduped logical table the rest of the engine
     # assumes (reader dedup on (doc_id, chunk_idx)).

@@ -5,7 +5,7 @@ training-data pipeline ingests continuously; this wires the same
 encode kernel into a file-source stream via ``foreachBatch``:
 
     new parquet files -> micro-batch DataFrame -> plan_chunks ->
-    encode_chunks -> append to encoded/ + manifest/chunks/
+    encode_chunks -> append to encoded/
 
 The output is an EncodeJob store (same paths, format marker and file
 layout), so ``EncodeJob(spark, out_dir)`` reads, queries and resumes it.
@@ -14,7 +14,7 @@ Exactly-once story: foreachBatch is at-least-once under retries; chunk
 ids are deterministic and payloads idempotent, so readers dedup on
 (doc_id, chunk_idx) exactly as the batch resume path does
 (pipeline.EncodeJob.decode). The streaming checkpoint tracks which
-FILES were consumed; the manifest stays the source of truth for which
+FILES were consumed; the store stays the source of truth for which
 CHUNKS exist.
 """
 
@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from .chunk import DEFAULT_CHUNK_WIDTH, plan_chunks, repartition_chunks
 from .encode import encode_chunks
-from .manifest import chunk_manifest
 from .pipeline import EncodeJob
 from .resume import DEFAULT_BUCKETS
 
@@ -75,14 +74,7 @@ def stream_encode(
             plan_chunks(batch_df, chunk_width), job.num_partitions
         )
         enc = job.store_layout(encode_chunks(chunks, enable_fsst, chunk_width))
-        enc.persist()
-        try:
-            enc.write.mode("append").parquet(job.encoded_path)
-            chunk_manifest(enc).write.mode("append").parquet(
-                job.chunk_manifest_path
-            )
-        finally:
-            enc.unpersist()
+        enc.write.mode("append").parquet(job.encoded_path)
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint
