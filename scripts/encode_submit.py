@@ -51,7 +51,10 @@ def main() -> None:
                     "persisted width on --resume, else 4096); an "
                     "explicit value contradicting an existing store "
                     "fails loudly")
-    ap.add_argument("--buckets", type=int, default=256)
+    ap.add_argument("--buckets", type=int, default=None,
+                    help="bucket count (default: the store's persisted "
+                    "count on --resume, else 256); an explicit value "
+                    "contradicting an existing store fails loudly")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--verify", action="store_true",
                     help="decode everything back and assert bit-identical")

@@ -125,6 +125,26 @@ def test_store_has_one_copy():
     assert not bad, bad
 
 
+def test_bucket_rule_has_one_owner():
+    """The store's bucket rule lives in engine/encode.py (bucket_of):
+    the store writer and the point lookup both call it, so no other
+    engine module hashes doc ids itself."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "tokseq" / "engine"
+    bad = []
+    for path in sorted(root.glob("*.py")):
+        if path.name == "encode.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and "xxhash64" in (
+                getattr(node.func, "attr", None), getattr(node.func, "id", None)
+            ):
+                bad.append(f"{path.name}:{node.lineno}")
+    assert not bad, bad
+
+
 def test_encode_body_has_one_owner():
     """Both ingest routes build their encoded batches through
     engine/encode.py's encode_rows: no other tokseq module names the

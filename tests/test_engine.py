@@ -12,7 +12,7 @@ from tokseq.engine.decode import decode_chunks, reassemble_docs
 from tokseq.engine.encode import encode_chunks
 from tokseq.engine.manifest import chunk_manifest, partition_manifest
 from tokseq.engine.pipeline import EncodeJob
-from tokseq.engine.resume import pending_docs, with_bucket
+from tokseq.engine.resume import pending_docs, pending_plan
 from tokseq.engine.verify import count_mismatches
 
 CHUNK_W = 512  # small so boundary docs straddle chunk edges
@@ -93,9 +93,7 @@ def test_resume_pending_exact(spark, corpus_df, tmp_path, drop_store_chunks):
     ))
     kept = job.encoded().count()
 
-    pending = pending_docs(
-        with_bucket(corpus_df, 16), job._read_manifest(), CHUNK_W, 16,
-    )
+    pending = pending_docs(corpus_df, job._read_manifest(), CHUNK_W)
     pend = {r.doc_id for r in pending.select("doc_id").collect()}
     assert pend == victim_docs
 
@@ -147,25 +145,64 @@ def test_no_resume_means_full_reencode(spark, corpus_df, tmp_path):
 
 
 def test_resume_duplicated_chunk_does_not_mask_missing(spark):
-    """Regression (ADVICE r2): the streaming path appends manifests
-    at-least-once, so a bucket holding one DUPLICATED chunk and one
-    MISSING chunk has planned_n == raw row count; counts must run over
-    the deduped (doc_id, chunk_idx) table or the missing doc is never
-    re-encoded."""
+    """Store appends are at-least-once, so a doc's chunks are counted
+    distinct — a DUPLICATED chunk must not mask a MISSING one. The
+    pending plan at its edges (W=10, giants above 16*W=160 tokens):
+    incomplete small docs come back whole, a giant only its missing
+    chunks, and store keys of docs outside the input are ignored."""
+
+    def doc(d, n):
+        return (d, list(range(n)), n, "s")
+
     docs = spark.createDataFrame(
-        [("a", list(range(20)), 20, "s"), ("b", list(range(20)), 20, "s")],
+        [
+            doc("a", 20),  # chunk 0 duplicated, complete
+            doc("b", 20),  # chunk 1 missing
+            doc("c", 20),  # chunk 0 duplicated AND chunk 1 missing
+            doc("e", 0),  # empty, absent from the store
+            doc("f", 10),  # one chunk of exactly W, present
+            doc("g", 160),  # 16*W: travels whole, chunk 7 missing
+            doc("h", 165),  # giant: chunk 8 missing, chunk 3 duplicated
+        ],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    # chunk_width=10 -> each doc expects chunks {0,1}; b's chunk 1 is
-    # missing while a's chunk 0 is duplicated (4 raw rows == planned 4)
-    manifest = spark.createDataFrame(
-        [("a", 0, 0), ("a", 0, 0), ("a", 1, 0), ("b", 0, 0)],
-        "doc_id string, chunk_idx int, bucket int",
+    keys = (
+        [("a", 0), ("a", 0), ("a", 1), ("b", 0), ("c", 0), ("c", 0), ("f", 0)]
+        + [("g", i) for i in range(16) if i != 7]
+        + [("h", i) for i in range(17) if i != 8] + [("h", 3)]
+        + [("z", 0), ("z", 1)]  # a doc not in the input
     )
-    pend = pending_docs(
-        docs.withColumn("bucket", F.lit(0)), manifest, chunk_width=10, n_buckets=1
+    manifest = spark.createDataFrame(keys, "doc_id string, chunk_idx int")
+
+    pend = pending_docs(docs, manifest, chunk_width=10)
+    assert {r.doc_id for r in pend.select("doc_id").collect()} == {
+        "b", "c", "e", "g", "h"
+    }
+    plan = pending_plan(docs, manifest, chunk_width=10)
+    rows = plan.select("doc_id", "chunk_idx", F.size("chunk_tokens")).collect()
+    assert sorted(tuple(r) for r in rows) == [
+        ("b", 0, 20), ("c", 0, 20), ("e", 0, 0), ("g", 0, 160), ("h", 8, 10),
+    ]
+
+
+def test_resume_reads_input_once(spark, corpus_df, tmp_path):
+    """The resume plan over a partly written store evaluates its input
+    once per doc: one per-doc count and one chunk anti-join, no second
+    read of the docs to prune or re-split them."""
+    job = EncodeJob(spark, str(tmp_path / "out"), chunk_width=CHUNK_W)
+    job.run(corpus_df.filter(F.xxhash64("doc_id") % 3 != 0))
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_n_tok(n):
+        seen.add(1)
+        return n
+
+    docs = corpus_df.select(
+        "doc_id", "tokens", F.udf(count_n_tok, "int")("n_tok").alias("n_tok"),
+        "source",
     )
-    assert {r.doc_id for r in pend.select("doc_id").collect()} == {"b"}
+    job.plan(docs, resume=True).write.format("noop").mode("overwrite").save()
+    assert seen.value == corpus_df.count()
 
 
 def test_stitched_reassembly_equals_reference(spark, corpus_df, tmp_path):

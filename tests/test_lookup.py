@@ -366,6 +366,35 @@ def test_encode_job_chunk_width_persisted(spark, corpus_df, tmp_path):
         EncodeJob(spark, out, chunk_width=1024).encoded()
 
 
+def test_reopened_store_adopts_bucket_count(spark, tmp_path):
+    """A job that leaves n_buckets unset adopts the store's bucket
+    count, so its resume appends rows bucketed like the rest of the
+    store and bucket-pruned point lookups find every doc; an explicit
+    count that contradicts the store fails loudly."""
+    from tokseq.datagen import generate_corpus
+
+    docs = spark.createDataFrame(generate_corpus(scale=0.05, seed=3).to_pandas())
+    out = str(tmp_path / "b")
+    EncodeJob(spark, out, chunk_width=CHUNK_W, n_buckets=8).run(
+        docs.filter(F.xxhash64("doc_id") % 3 != 0)
+    )
+    job = EncodeJob(spark, out)
+    job.run(docs, resume=True)
+    assert (job.chunk_width, job.n_buckets) == (CHUNK_W, 8)
+
+    rows = (
+        docs.filter(F.col("n_tok") > 0).select("doc_id", "tokens")
+        .orderBy("doc_id").limit(60).collect()
+    )
+    for r in rows:
+        got = point_lookup(spark, job.encoded_path, r["doc_id"], 0, len(r["tokens"]),
+                           chunk_width=CHUNK_W, n_buckets=job.n_buckets)
+        assert np.array_equal(got, r["tokens"]), r["doc_id"]
+
+    with pytest.raises(RuntimeError, match="n_buckets"):
+        EncodeJob(spark, out, n_buckets=16).encoded()
+
+
 def _store_with_copy(spark, job, tmp_path, doc_id, chunk_idx, change=None):
     """A copy of ``job``'s store with a second copy of one chunk
     appended, re-encoded with a different codec: its payload differs,

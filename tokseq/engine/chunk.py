@@ -34,8 +34,8 @@ DEFAULT_BIG_FACTOR = 16
 
 def chunk_docs(df: DataFrame, chunk_width: int = DEFAULT_CHUNK_WIDTH) -> DataFrame:
     """Full declarative explode: every doc becomes ceil(n/W) rows
-    (min 1 so empty docs survive). Used for big docs, and directly in
-    tests as the reference planner. A per-token ``quality`` array
+    (min 1 so empty docs survive). Tests use it as the reference
+    planner. A per-token ``quality`` array
     column, when present, is sliced in lockstep (the PackedNSeq
     validity stream travels with its tokens)."""
     w = int(chunk_width)

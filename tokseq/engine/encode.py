@@ -21,6 +21,7 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+from pyspark.sql import functions as F
 
 from ..codecs import BITPACK, DICT, FOR, RLE, SPLIT, SPLIT3, bit_length, get_codec
 from ..codecs.base import pack_sections
@@ -44,9 +45,18 @@ ENCODED_SCHEMA = (
 )
 
 # the written store: the kernel's columns plus the bucket the job adds
-# (resume.with_bucket). Store reads declare it instead of inferring it
-# from the parquet footers, which costs a Spark job per read
+# (bucket_of). Store reads declare it instead of inferring it from the
+# parquet footers, which costs a Spark job per read
 STORE_SCHEMA = ENCODED_SCHEMA + ", bucket int"
+
+DEFAULT_BUCKETS = 256
+
+
+def bucket_of(doc_id, n_buckets: int):
+    """The store's bucket rule, ``pmod(xxhash64(doc_id), n_buckets)``,
+    over a doc_id Column. Writes cluster files by it and point lookups
+    prune by it, so both must hash alike."""
+    return F.pmod(F.xxhash64(doc_id), F.lit(int(n_buckets)))
 
 _ENCODED_PA_SCHEMA = pa.schema(
     [

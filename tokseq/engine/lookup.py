@@ -21,7 +21,7 @@ from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from ..codecs import get_codec
 from .decode import DECODE_COLS, chunk_headers, decode_batch_kernel
-from .encode import STORE_SCHEMA
+from .encode import STORE_SCHEMA, bucket_of
 
 
 def zone_range_filter(lo: int | None, hi: int | None):
@@ -293,9 +293,7 @@ def point_lookup(
     if n_buckets is not None:
         # same hash Spark used at write time -> file/row-group pruning
         # on the bucket-clustered layout
-        enc = enc.filter(
-            F.col("bucket") == F.pmod(F.xxhash64(F.lit(doc_id)), F.lit(n_buckets))
-        )
+        enc = enc.filter(F.col("bucket") == bucket_of(F.lit(doc_id), n_buckets))
     rows = enc.select(
         "chunk_idx", "codec", "bit_width", "n_values", "min_val", "payload"
     ).collect()

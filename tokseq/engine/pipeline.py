@@ -17,7 +17,8 @@ Layout under ``out_dir``:
                          and metrics columns, read payload-free
                          (manifest.chunk_manifest), are the record of
                          which chunks exist
-    _tokseq_format.json  payload format version and chunk width
+    _tokseq_format.json  payload format version, chunk width and bucket
+                         count
 """
 
 from __future__ import annotations
@@ -33,9 +34,9 @@ from pyspark.sql import functions as F
 
 from .chunk import DEFAULT_CHUNK_WIDTH, plan_chunks, repartition_chunks
 from .decode import decode_chunks, decode_docs
-from .encode import STORE_SCHEMA, encode_chunks
+from .encode import DEFAULT_BUCKETS, STORE_SCHEMA, bucket_of, encode_chunks
 from .manifest import chunk_manifest, codec_summary
-from .resume import DEFAULT_BUCKETS, pending_plan, with_bucket
+from .resume import pending_plan
 from .verify import count_mismatches
 
 
@@ -63,7 +64,7 @@ class EncodeJob:
         spark: SparkSession,
         out_dir: str | None = None,
         chunk_width: int | None = None,
-        n_buckets: int = DEFAULT_BUCKETS,
+        n_buckets: int | None = None,
         enable_fsst: bool = True,
         num_partitions: int | None = None,
         quality_threshold: int = 10,
@@ -87,7 +88,9 @@ class EncodeJob:
         EXPLICIT width that contradicts an existing store's marker
         fails loudly — chunk keys (``pos // W``) are meaningless under
         the wrong width and single-chunk gathers would return silently
-        wrong tokens."""
+        wrong tokens. ``n_buckets`` is adopted the same way (default
+        DEFAULT_BUCKETS on a fresh store): an append bucketed mod
+        another count lands where bucket-pruned lookups do not look."""
         if chunk_width is not None and chunk_width < 16:
             # W=1-ish widths explode row counts (one row per token) and
             # drown the engine in per-chunk headers
@@ -97,9 +100,12 @@ class EncodeJob:
         self.spark = spark
         self.out_dir = out_dir
         self.table_prefix = table_prefix
-        self._chunk_width_explicit = chunk_width is not None
+        self._explicit = {
+            k for k, v in (("chunk_width", chunk_width), ("n_buckets", n_buckets))
+            if v is not None
+        }
         self.chunk_width = chunk_width or DEFAULT_CHUNK_WIDTH
-        self.n_buckets = n_buckets
+        self.n_buckets = n_buckets or DEFAULT_BUCKETS
         self.enable_fsst = enable_fsst
         self.num_partitions = num_partitions or spark.sparkContext.defaultParallelism
         self.quality_threshold = quality_threshold
@@ -119,7 +125,16 @@ class EncodeJob:
         return f"{self.table_prefix}_encoded"
 
     _MARKER_PROP = "tokseq.format_version"
-    _WIDTH_PROP = "tokseq.chunk_width"
+    # the settings a store persists (marker keys, and "tokseq.<name>"
+    # table properties): adopted by a job that leaves them unset,
+    # checked against one that sets them. Chunk keys are pos // W, so a
+    # reader with the wrong width computes wrong keys, and single-chunk
+    # gathers pass the gap guard with silently wrong tokens
+    _STORED = {
+        "chunk_width": "Chunk keys (pos // W) do not line up across widths",
+        "n_buckets": "Rows bucketed mod another count are invisible to "
+        "bucket-pruned lookups",
+    }
 
     @property
     def format_marker_path(self) -> str:
@@ -128,50 +143,39 @@ class EncodeJob:
     def _write_format_marker(self) -> None:
         from ..codecs import FORMAT_VERSION
 
+        stored = {k: getattr(self, k) for k in self._STORED}
         if self.table_prefix is not None:
             # rides the encoded table's properties; caller invokes this
             # AFTER the table exists
+            props = "".join(f", 'tokseq.{k}' = '{v}'" for k, v in stored.items())
             self.spark.sql(
                 f"ALTER TABLE {self.encoded_table} SET TBLPROPERTIES "
-                f"('{self._MARKER_PROP}' = '{FORMAT_VERSION}', "
-                f"'{self._WIDTH_PROP}' = '{self.chunk_width}')"
+                f"('{self._MARKER_PROP}' = '{FORMAT_VERSION}'{props})"
             )
             return
         if "://" in self.out_dir:  # raw object-store path: no local file
             return
         with open(self.format_marker_path, "w") as f:
-            json.dump(
-                {
-                    "format_version": FORMAT_VERSION,
-                    # chunk keys are pos // W: the store must remember W
-                    # or a reader with the wrong width computes wrong
-                    # keys (and single-chunk gathers pass the gap guard
-                    # with silently wrong tokens)
-                    "chunk_width": self.chunk_width,
-                    "n_buckets": self.n_buckets,
-                },
-                f,
-            )
+            json.dump({"format_version": FORMAT_VERSION, **stored}, f)
 
-    def _apply_stored_width(self, stored, action: str) -> None:
-        """Validate (explicit width) or adopt (default width) the
-        chunk_width persisted with the store. Stores written before the
-        width was persisted carry None — nothing to check."""
-        if stored is None:
-            return
-        stored = int(stored)
-        if not self._chunk_width_explicit:
-            self.chunk_width = stored
-            return
-        if stored != self.chunk_width:
-            raise RuntimeError(
-                f"cannot {action}: store was written with chunk_width="
-                f"{stored} but this job was constructed with "
-                f"chunk_width={self.chunk_width}. Chunk keys (pos // W) "
-                "do not line up across widths — pass "
-                f"chunk_width={stored} (or omit it to adopt the "
-                "store's)."
-            )
+    def _apply_stored(self, stored: dict, action: str) -> None:
+        """Validate (explicit value) or adopt (default value) each
+        setting persisted with the store (``stored`` maps _STORED names
+        to values). Stores written before a setting was persisted carry
+        None for it — nothing to check."""
+        for key, why in self._STORED.items():
+            if stored.get(key) is None:
+                continue
+            value = int(stored[key])
+            if key not in self._explicit:
+                setattr(self, key, value)
+            elif value != getattr(self, key):
+                raise RuntimeError(
+                    f"cannot {action}: store was written with {key}="
+                    f"{value} but this job was constructed with "
+                    f"{key}={getattr(self, key)}. {why} — pass "
+                    f"{key}={value} (or omit it to adopt the store's)."
+                )
 
     def _check_format_marker(self, action: str) -> None:
         """Refuse to mix payload format versions in one store. Payloads
@@ -209,7 +213,9 @@ class EncodeJob:
                     f"this build reads/writes v{FORMAT_VERSION}. Re-encode "
                     "the store (resume=False) or use a matching build."
                 )
-            self._apply_stored_width(props.get(self._WIDTH_PROP), action)
+            self._apply_stored(
+                {k: props.get(f"tokseq.{k}") for k in self._STORED}, action
+            )
             return
         if "://" in self.out_dir:
             return
@@ -230,7 +236,7 @@ class EncodeJob:
                 f"this build reads/writes v{FORMAT_VERSION}. Re-encode the "
                 "store (resume=False) or use a matching tokseq build."
             )
-        self._apply_stored_width(marker.get("chunk_width"), action)
+        self._apply_stored(marker, action)
 
     def _read_manifest(self) -> DataFrame | None:
         """The store's chunk manifest, read payload-free; None when no
@@ -261,26 +267,34 @@ class EncodeJob:
         straggles the whole stage; ~16 subbuckets per task keeps the
         spread near-uniform while a doc's chunks still colocate and
         files still cluster by bucket after the sort."""
-        subbucket = F.pmod(
-            F.xxhash64(F.col("doc_id")), F.lit(int(self.n_buckets) * 16)
-        )
+        doc_id = F.col("doc_id")
         return (
-            with_bucket(encoded, self.n_buckets)
-            .repartition(self.num_partitions, subbucket)
+            encoded.withColumn("bucket", bucket_of(doc_id, self.n_buckets).cast("int"))
+            .repartition(self.num_partitions, bucket_of(doc_id, self.n_buckets * 16))
             .sortWithinPartitions("bucket")
         )
 
     # --- the job ---
     def plan(self, docs: DataFrame, resume: bool = False) -> DataFrame:
-        """Produce the hybrid chunk plan (whole docs + pre-exploded
-        giants). On resume, small docs re-plan at doc granularity and
-        giants at chunk granularity (resume.pending_plan)."""
-        docs = with_bucket(docs, self.n_buckets)
+        """The hybrid chunk plan (chunk.plan_chunks: whole docs plus
+        pre-exploded giants). On resume, only what the store lacks
+        (resume.pending_plan): incomplete docs, minus the one-chunk rows
+        the store already holds. With no store yet, everything."""
         if resume:
-            return pending_plan(
-                docs, self._read_manifest(), self.chunk_width, self.n_buckets
-            )
+            # the manifest read first: it adopts the store's chunk width
+            manifest = self._read_manifest()
+            return pending_plan(docs, manifest, self.chunk_width)
         return plan_chunks(docs, self.chunk_width)
+
+    def store_rows(self, docs: DataFrame, resume: bool = False) -> DataFrame:
+        """docs -> the rows a store write appends: plan -> salted
+        repartition -> encode -> store layout. The DataFrame route of
+        ``run`` and every micro-batch of streaming.stream_encode."""
+        chunks = repartition_chunks(self.plan(docs, resume), self.num_partitions)
+        return self.store_layout(encode_chunks(
+            chunks, self.enable_fsst, self.chunk_width,
+            self.quality_threshold, self.mask_vocab,
+        ))
 
     def run(
         self,
@@ -301,21 +315,15 @@ class EncodeJob:
         if corpus_path is not None and not resume:
             from .scan import encode_parquet_direct
 
-            encoded = encode_parquet_direct(
+            out = self.store_layout(encode_parquet_direct(
                 self.spark, corpus_path, self.chunk_width, self.enable_fsst,
                 self.quality_threshold, self.mask_vocab,
-            )
+            ))
         else:
             if docs is None:
                 docs = self.spark.read.parquet(corpus_path)
-            chunks = self.plan(docs, resume=resume)
-            chunks = repartition_chunks(chunks, self.num_partitions)
-            encoded = encode_chunks(
-                chunks, self.enable_fsst, self.chunk_width,
-                self.quality_threshold, self.mask_vocab,
-            )
+            out = self.store_rows(docs, resume)
         mode = "append" if resume else "overwrite"
-        out = self.store_layout(encoded)
         # payloads are already entropy-coded; snappy on top costs CPU
         # for ~no size win
         if self.table_prefix is not None:

@@ -4,8 +4,8 @@ The reference is a batch library (SURVEY §2.5: no streaming), but a
 training-data pipeline ingests continuously; this wires the same
 encode kernel into a file-source stream via ``foreachBatch``:
 
-    new parquet files -> micro-batch DataFrame -> plan_chunks ->
-    encode_chunks -> append to encoded/
+    new parquet files -> micro-batch DataFrame -> EncodeJob.store_rows
+    (plan, encode, store layout) -> append to encoded/
 
 The output is an EncodeJob store (same paths, format marker and file
 layout), so ``EncodeJob(spark, out_dir)`` reads, queries and resumes it.
@@ -25,10 +25,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .chunk import DEFAULT_CHUNK_WIDTH, plan_chunks, repartition_chunks
-from .encode import encode_chunks
+from .chunk import DEFAULT_CHUNK_WIDTH
 from .pipeline import EncodeJob
-from .resume import DEFAULT_BUCKETS
 
 TOKSEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -38,7 +36,7 @@ def stream_encode(
     input_dir: str,
     out_dir: str,
     chunk_width: int = DEFAULT_CHUNK_WIDTH,
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: int | None = None,
     enable_fsst: bool = True,
     available_now: bool = True,
     num_partitions: int | None = None,
@@ -50,8 +48,10 @@ def stream_encode(
     mode; with False it keeps running on a micro-batch trigger.
 
     The first stream into ``out_dir`` writes the store's format marker
-    (with ``chunk_width``); later ones check it, so a restart with
-    another width fails loudly."""
+    (with ``chunk_width`` and ``n_buckets``); later ones check it, so a
+    restart with another width fails loudly. ``n_buckets=None`` adopts
+    the store's bucket count (EncodeJob's rule: DEFAULT_BUCKETS on a
+    fresh store), and an explicit count that contradicts it fails."""
     job = EncodeJob(
         spark, out_dir, chunk_width=chunk_width, n_buckets=n_buckets,
         enable_fsst=enable_fsst, num_partitions=num_partitions,
@@ -70,11 +70,7 @@ def stream_encode(
     )
 
     def process(batch_df, batch_id: int) -> None:
-        chunks = repartition_chunks(
-            plan_chunks(batch_df, chunk_width), job.num_partitions
-        )
-        enc = job.store_layout(encode_chunks(chunks, enable_fsst, chunk_width))
-        enc.write.mode("append").parquet(job.encoded_path)
+        job.store_rows(batch_df).write.mode("append").parquet(job.encoded_path)
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint
