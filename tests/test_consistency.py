@@ -15,7 +15,10 @@ from hypothesis import given, settings, strategies as st
 from tokseq.codecs import all_codecs, get_codec
 
 
-def test_routes_byte_identical(spark, tmp_path):
+# (0.5, 4096) is the production width: its chunk streams are long
+# enough that any batch-level FSST state would show as differing bytes
+@pytest.mark.parametrize("scale,W", [(0.1, 512), (0.5, 4096)])
+def test_routes_byte_identical(spark, tmp_path, scale, W):
     import pyarrow.parquet as pq
 
     from tokseq.datagen import generate_corpus
@@ -23,15 +26,15 @@ def test_routes_byte_identical(spark, tmp_path):
     from tokseq.engine.encode import encode_chunks
     from tokseq.engine.scan import encode_parquet_direct
 
-    table = generate_corpus(scale=0.1, chunk_width=512)
+    table = generate_corpus(scale=scale, chunk_width=W)
     corpus = str(tmp_path / "c.parquet")
     pq.write_table(table, corpus, row_group_size=256)
 
     docs = spark.createDataFrame(table.to_pandas())
     df_route = encode_chunks(
-        repartition_chunks(plan_chunks(docs, 512), 4), chunk_width=512
+        repartition_chunks(plan_chunks(docs, W), 4), chunk_width=W
     )
-    direct = encode_parquet_direct(spark, corpus, chunk_width=512)
+    direct = encode_parquet_direct(spark, corpus, chunk_width=W)
 
     a = {(r["doc_id"], r["chunk_idx"]): (r["codec"], bytes(r["payload"]), r["bit_width"], r["min_val"])
          for r in df_route.collect()}

@@ -1,6 +1,7 @@
-"""Round-4 grouped-encode paths: dict group byte-identity fuzz,
-FSST shared-table + per-chunk-learn fallback routing, the zipf-batch
-roundtrip, and the shared row encoder (encode_rows)."""
+"""Grouped-encode paths: dict and rle group byte-identity fuzz, the
+per-chunk FSST learn on gram-rich chunks, payloads that do not depend on
+batch composition, the zipf-batch roundtrip, and the shared row encoder
+(encode_rows)."""
 
 import numpy as np
 import pytest
@@ -92,7 +93,7 @@ def test_rle_group_payloads_byte_identical():
 
 def _phrase_chunks(rng, n_chunks, bank_size=100):
     """Phrases-like chunks: global phrase bank, zipf popularity —
-    gram-rich data where per-chunk FSST tables beat shared ones."""
+    gram-rich data where each chunk's own FSST table pays off."""
     bank = [
         rng.integers(0, 1 << 16, int(rng.integers(8, 33))) for _ in range(bank_size)
     ]
@@ -107,9 +108,9 @@ def _phrase_chunks(rng, n_chunks, bank_size=100):
 
 
 def test_fsst_fallback_recovers_chunk_local_wins():
-    """Shared-table losers that pass the screen get a per-chunk learn;
-    on gram-rich chunks this must produce MORE fsst picks (and fewer
-    bytes) than shared-replace alone, and still roundtrip exactly."""
+    """Every fsst candidate that passes the screen gets a per-chunk
+    learn; on gram-rich chunks this must win a good share of them,
+    stay under the floor, and still roundtrip exactly."""
     rng = np.random.default_rng(7)
     chunks = _phrase_chunks(rng, 40)
     vals, offs = _batch(chunks)
@@ -122,6 +123,34 @@ def test_fsst_fallback_recovers_chunk_local_wins():
         out["min_val"], out["n_values"],
     )
     assert np.array_equal(flat, vals)
+
+
+def test_payload_independent_of_batch_composition():
+    """A chunk's codec and payload depend only on its tokens: the same
+    chunks encoded in forward and in reversed order, in 1,024-chunk
+    batches, give identical (codec, payload) per chunk."""
+    from tokseq.datagen import generate_corpus
+    from tokseq.engine.encode import list_column_to_numpy, rechunk_offsets
+
+    table = generate_corpus(scale=0.5, seed=1)
+    values, row_off = list_column_to_numpy(table.column("tokens"))
+    offs, _, _ = rechunk_offsets(row_off, np.zeros(table.num_rows, np.int64), 4096)
+    chunks = [values[offs[i] : offs[i + 1]] for i in range(len(offs) - 1)]
+
+    def encode(order):
+        got = {}
+        for s in range(0, len(order), 1024):
+            part = order[s : s + 1024]
+            out = encode_batch_kernel(*_batch([chunks[i] for i in part]))
+            for j, i in enumerate(part):
+                got[i] = (out["codec"][j], out["payload"][j])
+        return got
+
+    order = list(range(len(chunks)))
+    fwd, rev = encode(order), encode(order[::-1])
+    assert sum(c == "fsst" for c, _ in fwd.values()) > 0
+    diff = [i for i in order if fwd[i] != rev[i]]
+    assert not diff, f"{len(diff)} of {len(order)} chunks differ, e.g. {diff[:3]}"
 
 
 def test_zipf_batch_roundtrips_and_respects_floor():

@@ -53,6 +53,15 @@ def test_stream_encode_incremental(spark, tmp_path):
     # the store is its own chunk manifest: no second copy is written
     assert not os.path.exists(os.path.join(out_dir, "manifest"))
 
+    # streamed files are written like EncodeJob.run's: uncompressed
+    files = [f for f in os.listdir(enc_path) if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        meta = pq.ParquetFile(os.path.join(enc_path, f)).metadata
+        for g in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                assert meta.row_group(g).column(c).compression == "UNCOMPRESSED"
+
 
 def test_replayed_stream_counts_each_token_once(spark, tmp_path):
     """A lost checkpoint replays the stream's input (at-least-once):

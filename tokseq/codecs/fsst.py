@@ -15,12 +15,10 @@ left-to-right pair selection uses the alternating-run trick: within a
 maximal run of consecutive candidate positions, every other position
 starting at the run head is selected (identical to sequential greedy).
 
-Two encode modes:
-  * per-chunk: learn a table on the chunk itself (best ratio);
-  * shared-table (:class:`SharedFsstTable`): learn once on a sample of
-    a batch of similar chunks, then replace-only per chunk — real
-    FSST's amortization trick; payloads stay self-contained because
-    each chunk's header stores only the symbols it actually used.
+Each chunk learns its own table, so its payload depends only on its
+tokens, never on which chunks were encoded next to it. The header
+carries only the symbols the code stream uses, so every payload
+decodes on its own.
 
 Reference parity: this plays the role the reference's byte-level
 packing tricks play for DNA — exploiting distributional redundancy the
@@ -79,19 +77,17 @@ def _greedy_select(cand: np.ndarray) -> np.ndarray:
     return cand & (((pos - start) & 1) == 0)
 
 
-def _select_top_pairs(stream: np.ndarray, budget: int, alpha: int,
-                      min_count: int = _MIN_PAIR_COUNT):
+def _select_top_pairs(stream: np.ndarray, budget: int, alpha: int):
     """Pick up to ``budget`` frequent adjacent pairs, count-descending.
-    Pair ids live in the FIXED ``alpha`` space so a learned table
-    applies to other streams. Sort-based counting: streams are
-    chunk-sized (cache-resident), so unique+counts beats a bincount/
-    LUT over the alpha^2 pair space (megabyte alloc+memset per call).
-    Returns (top, top_sorted, rank) or None."""
+    Sort-based counting: streams are chunk-sized (cache-resident), so
+    unique+counts beats a bincount/LUT over the alpha^2 pair space
+    (megabyte alloc+memset per call). Returns (top, top_sorted, rank)
+    or None."""
     if len(stream) < 2 or budget <= 0:
         return None
     pair_ids = stream[:-1].astype(np.int32) * np.int32(alpha) + stream[1:]
     uniq, counts = np.unique(pair_ids, return_counts=True)
-    good = counts >= min_count
+    good = counts >= _MIN_PAIR_COUNT
     if not good.any():
         return None
     guniq = uniq[good]
@@ -124,16 +120,14 @@ def _replace_pairs(stream, alpha, base_global, top_sorted, rank):
     return out[keep]
 
 
-def _learn(stream: np.ndarray, min_count: int = _MIN_PAIR_COUNT):
+def _learn(stream: np.ndarray):
     """Run up to _ROUNDS BPE rounds on ``stream``.
-    Returns (rounds, id_exp, final_stream) where rounds entries are
-    (alpha, base_global, top_sorted, rank)."""
+    Returns (id_exp, final_stream)."""
     id_exp = dict(_ID_EXP_BASE)
-    rounds = []
     alpha = 256
     for _ in range(_ROUNDS):
         budget = _MAX_SYMBOLS - (len(id_exp) - 256)
-        sel_t = _select_top_pairs(stream, budget, alpha, min_count)
+        sel_t = _select_top_pairs(stream, budget, alpha)
         if sel_t is None:
             break
         top, top_sorted, rank = sel_t
@@ -144,10 +138,9 @@ def _learn(stream: np.ndarray, min_count: int = _MIN_PAIR_COUNT):
         for j, pid in enumerate(top):
             a, b = divmod(int(pid), alpha)
             id_exp[base_global + j] = id_exp[a] + id_exp[b]
-        rounds.append((alpha, base_global, top_sorted, rank))
         stream = new_stream
         alpha = base_global + len(top)
-    return rounds, id_exp, stream
+    return id_exp, stream
 
 
 def _finalize(stream: np.ndarray, id_exp: dict, bw: int, w: int, lo: int) -> Encoded:
@@ -250,99 +243,6 @@ def _prepare(values: np.ndarray):
     return lo, w, bw, _to_bytes(d, bw).astype(np.int32)
 
 
-def learn_encode_stream(stream, bw, w, lo, budget_bytes=None):
-    """Per-chunk learn + finalize on an already-prepared stream; None
-    when the post-replace length proves the chunk cannot beat budget."""
-    rounds, id_exp, stream = _learn(stream)
-    if budget_bytes is not None and len(stream) + 2 >= budget_bytes:
-        return None
-    return _finalize(stream, id_exp, bw, w, lo)
-
-
-class SharedFsstTable:
-    """A symbol table learned once on a sample of similar chunks and
-    applied replace-only per chunk (FSST's block-level amortization).
-    Payloads stay self-contained: _finalize trims each chunk's header
-    to the symbols it used, so the decoder is unchanged."""
-
-    __slots__ = ("bw", "rounds", "id_exp")
-
-    def __init__(self, bw, rounds, id_exp):
-        self.bw = bw
-        self.rounds = rounds
-        self.id_exp = id_exp
-
-    @classmethod
-    def learn(cls, sample_stream: np.ndarray, bw: int) -> "SharedFsstTable":
-        # keep the same pair DENSITY bar as per-chunk learning
-        # (count >= 8 per ~8KB stream); a pooled sample otherwise
-        # admits symbols too rare per chunk to pay for their code slot
-        min_count = max(_MIN_PAIR_COUNT, len(sample_stream) // 1024)
-        rounds, id_exp, _ = _learn(sample_stream, min_count)
-        return cls(bw, rounds, id_exp)
-
-    def encode_stream(self, stream: np.ndarray, w: int, lo: int) -> Encoded:
-        for alpha, base_global, top_sorted, rank in self.rounds:
-            ns = _replace_pairs(stream, alpha, base_global, top_sorted, rank)
-            if ns is not None:
-                stream = ns
-        return _finalize(stream, self.id_exp, self.bw, w, lo)
-
-    def encode_streams_batch(
-        self,
-        streams: list[np.ndarray],
-        ws: list[int],
-        los: list[int],
-        budgets: list[int] | None = None,
-    ) -> list:
-        """Replace-only encode of MANY chunks in one pass per round:
-        streams concatenate, pairs that would span a chunk boundary
-        are forbidden (so each chunk's greedy replacement is identical
-        to its standalone encode_stream result, byte for byte), and
-        the pair-id searchsorted is paid once per round instead of
-        once per chunk. Per-chunk finalize keeps payloads
-        self-contained."""
-        lens = np.array([len(s) for s in streams], dtype=np.int64)
-        stream = np.concatenate(streams) if streams else np.zeros(0, np.int32)
-        for alpha, base_global, top_sorted, rank in self.rounds:
-            m = len(stream)
-            if m < 2 or len(top_sorted) == 0:
-                continue
-            pair_ids = stream[:-1].astype(np.int32) * np.int32(alpha) + stream[1:]
-            idx = np.searchsorted(top_sorted, pair_ids).clip(
-                max=len(top_sorted) - 1
-            )
-            cand = top_sorted[idx] == pair_ids
-            ends = np.cumsum(lens)
-            if len(ends) > 1:
-                cand[ends[:-1] - 1] = False  # no pairs across chunks
-            sel = _greedy_select(cand)
-            if not sel.any():
-                continue
-            out = stream.astype(np.int32, copy=True)
-            out[:-1][sel] = np.int32(base_global) + rank[idx[sel]]
-            keep = np.ones(m, dtype=bool)
-            keep[1:][sel] = False
-            stream = out[keep]
-            # each removal deletes position p+1, same chunk as p
-            sel_pos = np.flatnonzero(sel)
-            removed = np.bincount(
-                np.searchsorted(ends, sel_pos, side="right"),
-                minlength=len(lens),
-            )
-            lens = lens - removed
-        offs = np.concatenate(([0], np.cumsum(lens)))
-        # certain losers (post-replace length already >= budget) skip
-        # finalize — it is the batch path's dominant per-chunk cost
-        return [
-            None
-            if budgets is not None and lens[j] + 2 >= budgets[j]
-            else _finalize(stream[offs[j] : offs[j + 1]], self.id_exp,
-                           self.bw, ws[j], los[j])
-            for j in range(len(streams))
-        ]
-
-
 class FsstCodec(Codec):
     """payload layout:
         <u1 bw, u1 L>
@@ -368,29 +268,12 @@ class FsstCodec(Codec):
         if _screen_reject(stream, budget_bytes):
             return None
 
-        # learn_encode_stream skips the (expensive) finalize when the
-        # post-replace length already proves the chunk over budget
-        return learn_encode_stream(stream, bw, w, lo, budget_bytes)
-
-    def encode_with_table(
-        self,
-        values: np.ndarray,
-        table: SharedFsstTable,
-        budget_bytes: int | None = None,
-    ):
-        """Replace-only encode against a shared table; returns None if
-        the chunk's byte width differs from the table's, or if the
-        same cheap upper-bound estimate as ``encode`` says the chunk
-        cannot beat ``budget_bytes``."""
-        n = len(values)
-        if n == 0:
-            return Encoded(b"", 0, 0)
-        lo, w, bw, stream = _prepare(values)
-        if bw != table.bw:
+        id_exp, stream = _learn(stream)
+        # skip the (expensive) finalize when the post-replace length
+        # already proves the chunk over budget
+        if budget_bytes is not None and len(stream) + 2 >= budget_bytes:
             return None
-        if _screen_reject(stream, budget_bytes):
-            return None
-        return table.encode_stream(stream, w, lo)
+        return _finalize(stream, id_exp, bw, w, lo)
 
     def decode(self, payload: bytes, n: int, bit_width: int, min_val: int) -> np.ndarray:
         if n == 0:

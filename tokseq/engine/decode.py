@@ -27,10 +27,10 @@ DECODED_MASK_SCHEMA = DECODED_SCHEMA + ", mask binary"
 
 # the columns a decode reads: the chunk key, the payload and the header
 # fields its decode depends on. Duplicate chunk rows (at-least-once
-# appends) share the key but not necessarily the payload bytes (a
-# shared fsst table may differ between encodes), so readers dedup on
-# the key (decode_docs) or on decoded content (gather_slices and the
-# agg_chunks-based reads), never on these columns
+# appends) share the key but not necessarily the payload bytes (stores
+# written by earlier builds may hold byte-different duplicates), so
+# readers dedup on the key (decode_docs) or on decoded content
+# (gather_slices and the agg_chunks-based reads), never on these columns
 DECODE_COLS = [
     "doc_id", "chunk_idx", "codec", "bit_width", "n_values", "min_val",
     "payload",

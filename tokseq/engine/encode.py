@@ -132,12 +132,6 @@ def encode_batch_kernel(
     nseg = len(offsets) - 1
     if nseg == 0:
         return _encode_subbatch(values, offsets, enable_fsst)
-    # shared FSST tables persist ACROSS sub-batches (keyed by byte
-    # width, newest learn wins): short chunks — doc tails of the same
-    # regime the table was just learned on — encode replace-only
-    # against it instead of paying a per-chunk learn (the dominant
-    # mixed-corpus encode cost, ~30% of wall in the r4 profile)
-    fsst_cache: dict = {}
     # split chunk ranges into slices of ~_SUBBATCH_VALUES values
     outs = []
     start = 0
@@ -148,7 +142,7 @@ def encode_batch_kernel(
             end += 1
         sub_off = offsets[start : end + 1] - offsets[start]
         sub_vals = values[offsets[start] : offsets[end]]
-        outs.append(_encode_subbatch(sub_vals, sub_off, enable_fsst, fsst_cache))
+        outs.append(_encode_subbatch(sub_vals, sub_off, enable_fsst))
         start = end
     if len(outs) == 1:
         return outs[0]
@@ -315,7 +309,6 @@ def _encode_subbatch(
     values: np.ndarray,
     offsets: np.ndarray,
     enable_fsst: bool = True,
-    fsst_cache: dict | None = None,
 ):
     st = compute_chunk_stats(values, offsets, approx=True)
     if len(st.vmin) and st.vmin.min() < 0:
@@ -328,47 +321,11 @@ def _encode_subbatch(
     names = sel.names()
     nseg = st.n_chunks
 
-    # shared FSST tables: when a sub-batch carries enough candidates of
-    # one byte width, learn the symbol table ONCE on a sample and apply
-    # replace-only per chunk (FSST's block amortization; per-chunk
-    # learning is the kernel's dominant cost on text-like tokens)
-    from ..codecs.fsst import SharedFsstTable, _byte_width, _prepare
-
-    # tables are LEARNED only from long streams (>= ~4KB — enough pair
-    # mass to pick stable symbols) but APPLIED replace-only to every
-    # candidate of their byte width, including short doc-tail chunks
-    # (budget-checked, so a poor fit just keeps the cheaper codec)
-    _SHARED_MIN_STREAM = 4096
-    shared_tables: dict[int, SharedFsstTable] = (
-        fsst_cache if fsst_cache is not None else {}
-    )
-    if enable_fsst:
-        cand_idx = np.flatnonzero(sel.fsst_candidate)
-        if len(cand_idx) >= 6:
-            by_bw: dict[int, list[int]] = {}
-            for i in cand_idx:
-                bw = _byte_width(int(st.vmax[i] - st.vmin[i]))
-                if int(st.n[i]) * bw >= _SHARED_MIN_STREAM:
-                    by_bw.setdefault(bw, []).append(int(i))
-            for bw, idxs in by_bw.items():
-                if len(idxs) < 6:
-                    continue
-                parts = []
-                for i in idxs[:16]:
-                    _, _, _, s = _prepare(values[offsets[i] : offsets[i + 1]])
-                    parts.append(s[:2048])
-                # newest learn wins: the corpus is source-clustered, so
-                # the freshest table tracks the current regime
-                shared_tables[bw] = SharedFsstTable.learn(
-                    np.concatenate(parts), bw
-                )
-
     payloads: list[bytes] = [b""] * nseg
     out_codec: list[str] = list(names)
     out_width = np.zeros(nseg, dtype=np.int32)
     out_min = np.zeros(nseg, dtype=np.int64)
     fsst = get_codec("fsst")
-    fsst_deferred: dict[int, list[tuple[int, int]]] = {}
 
     def keep(i, name, enc):
         payloads[i] = enc.payload
@@ -386,7 +343,7 @@ def _encode_subbatch(
     # two codecs are exact (== the payload size), so the floor
     # fallback check is not needed. fsst candidates group too: their
     # group-produced payload IS the try-encode budget for the fsst
-    # pass below the per-chunk loop.
+    # pass after the per-chunk loop.
     name_arr = np.asarray(names)
     done = np.zeros(nseg, dtype=bool)
     groupable = st.n > 0
@@ -465,63 +422,17 @@ def _encode_subbatch(
 
     # --- fsst try-encode pass over EVERY candidate: the incumbent
     # payload (group-encoded or per-chunk), shrunk by the decode-cost
-    # margin, is the budget.
+    # margin, is the budget. Each candidate learns its own table
+    # (screen- and budget-guarded), so its payload depends only on its
+    # tokens, not on the batch it was encoded in.
     if enable_fsst:
         for i in np.flatnonzero(sel.fsst_candidate):
             budget = int(len(payloads[i]) * _FSST_MARGIN[out_codec[i]])
-            bw = _byte_width(int(st.vmax[i] - st.vmin[i]))
-            if shared_tables.get(bw) is not None:
-                # defer to the batched shared-table pass below (any
-                # stream length: replace-only costs ~nothing and the
-                # budget check keeps losers out)
-                fsst_deferred.setdefault(bw, []).append((i, budget))
-            else:
-                # no table yet for this byte width (e.g. a regime whose
-                # chunks are all short): per-chunk learn, screen- and
-                # budget-guarded like every other fsst attempt
-                fenc = fsst.encode(
-                    values[offsets[i] : offsets[i + 1]], budget_bytes=budget
-                )
-                if fenc is not None and len(fenc.payload) < budget:
-                    keep(i, "fsst", fenc)
-
-    # batched shared-table FSST try-encode: all deferred candidates of
-    # one byte width replace in ONE pass per round (chunk-boundary
-    # pairs forbidden -> byte-identical to per-chunk encode_with_table).
-    # Chunks that pass the screen but LOSE against the shared table get
-    # a per-chunk learn fallback: on gram-rich data the shared symbol
-    # budget (254 slots for the whole regime) undershoots what a
-    # chunk-local table captures — measured on the phrases regime,
-    # per-chunk tables reach 1.73 B/tok where shared plateaus at 1.91
-    # (BENCH/KERNELS.md r4). The screen already filtered the hopeless,
-    # so fallback learns are mostly winners, not waste.
-    from ..codecs.fsst import _prepare as _fsst_prepare
-    from ..codecs.fsst import _screen_reject as _fsst_screen
-    from ..codecs.fsst import learn_encode_stream as _fsst_learn
-
-    for bw, items in fsst_deferred.items():
-        table = shared_tables[bw]
-        streams, metas = [], []
-        for i, budget in items:
-            lo, w, bw2, stream = _fsst_prepare(values[offsets[i] : offsets[i + 1]])
-            if bw2 != bw or _fsst_screen(stream, budget):
-                continue
-            streams.append(stream)
-            metas.append((i, budget, lo, w))
-        if not streams:
-            continue
-        encs = table.encode_streams_batch(
-            streams, [m[3] for m in metas], [m[2] for m in metas],
-            budgets=[m[1] for m in metas],
-        )
-        for (i, budget, lo, w), stream, fenc in zip(metas, streams, encs):
+            fenc = fsst.encode(
+                values[offsets[i] : offsets[i + 1]], budget_bytes=budget
+            )
             if fenc is not None and len(fenc.payload) < budget:
                 keep(i, "fsst", fenc)
-            else:
-                best = budget if fenc is None else min(budget, len(fenc.payload))
-                fb = _fsst_learn(stream, bw, w, lo, best)
-                if fb is not None and len(fb.payload) < budget:
-                    keep(i, "fsst", fb)
 
     return {
         "codec": out_codec,

@@ -296,6 +296,18 @@ class EncodeJob:
             self.quality_threshold, self.mask_vocab,
         ))
 
+    def write_rows(self, rows: DataFrame, mode: str) -> None:
+        """Write store rows (``store_rows`` / ``store_layout`` output)
+        to the encoded table or path: the one store write of ``run``
+        and of streaming.stream_encode. Parquet compression is off:
+        payloads are already bit-packed, and one setting keeps both
+        routes' stores alike."""
+        writer = rows.write.mode(mode).option("compression", "none")
+        if self.table_prefix is not None:
+            writer.saveAsTable(self.encoded_table)
+        else:
+            writer.parquet(self.encoded_path)
+
     def run(
         self,
         docs: DataFrame | None = None,
@@ -323,23 +335,13 @@ class EncodeJob:
             if docs is None:
                 docs = self.spark.read.parquet(corpus_path)
             out = self.store_rows(docs, resume)
-        mode = "append" if resume else "overwrite"
-        # payloads are already entropy-coded; snappy on top costs CPU
-        # for ~no size win
-        if self.table_prefix is not None:
-            out.write.mode(mode).option("compression", "none").saveAsTable(
-                self.encoded_table
-            )
-            if not resume:
-                self._write_format_marker()  # property needs the table
-        else:
-            out.write.mode(mode).option("compression", "none").parquet(
-                self.encoded_path
-            )
+        self.write_rows(out, "append" if resume else "overwrite")
+        if self.table_prefix is not None and not resume:
+            self._write_format_marker()  # property needs the table
 
         # totals over the deduped logical table: appends are
-        # at-least-once, and a duplicate's out_bytes can differ from
-        # the original's, so the dedup is keyed
+        # at-least-once, and stores written by earlier builds may hold
+        # duplicates whose out_bytes differ, so the dedup is keyed
         totals = (
             chunk_manifest(self.encoded()).dropDuplicates(["doc_id", "chunk_idx"])
             .agg(

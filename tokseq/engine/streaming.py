@@ -5,15 +5,15 @@ training-data pipeline ingests continuously; this wires the same
 encode kernel into a file-source stream via ``foreachBatch``:
 
     new parquet files -> micro-batch DataFrame -> EncodeJob.store_rows
-    (plan, encode, store layout) -> append to encoded/
+    (plan, encode, store layout) -> EncodeJob.write_rows (append)
 
 The output is an EncodeJob store (same paths, format marker and file
 layout), so ``EncodeJob(spark, out_dir)`` reads, queries and resumes it.
 
 Exactly-once story: foreachBatch is at-least-once under retries; chunk
-ids are deterministic and payloads idempotent, so readers dedup on
-(doc_id, chunk_idx) exactly as the batch resume path does
-(pipeline.EncodeJob.decode). The streaming checkpoint tracks which
+ids are deterministic and payloads depend only on chunk content, so
+readers dedup on (doc_id, chunk_idx) exactly as the batch resume path
+does (pipeline.EncodeJob.decode). The streaming checkpoint tracks which
 FILES were consumed; the store stays the source of truth for which
 CHUNKS exist.
 """
@@ -70,7 +70,7 @@ def stream_encode(
     )
 
     def process(batch_df, batch_id: int) -> None:
-        job.store_rows(batch_df).write.mode("append").parquet(job.encoded_path)
+        job.write_rows(job.store_rows(batch_df), "append")
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint

@@ -514,8 +514,8 @@ def _spread_small_input(spark, docs, mode):
     an at-scale multi-file corpus never trips it, so the production
     plan is untouched. ``mode="kernel"`` targets ~64 KB of compressed
     input per task instead of full fan-out: the encode kernel's batch
-    amortization (shared fsst tables, grouped packs) collapses on tiny
-    Arrow batches, and the measured sweet spot is ~300k tokens/task
+    amortization (grouped packs) collapses on tiny Arrow batches, and
+    the measured sweet spot is ~300k tokens/task
     (p=8 at sf0.1: 0.81 -> 0.67 s; p=32: 1.08 s)."""
     p = spark.sparkContext.defaultParallelism
     size = int(
