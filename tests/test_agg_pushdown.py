@@ -549,13 +549,12 @@ def test_agg_filtered_dedups_duplicate_chunks(spark):
         enc.unpersist()
 
 
-def test_count_tokens_ranged_payload_free_contained_side(spark, tmp_path):
-    """Ranged count: zone-CONTAINED chunks count through a
-    payload-free manifest-shaped scan (their ReadSchema omits
-    payload); only boundary chunks decode. Correctness vs the decoded
-    reference on both a zoned corpus and a generic one, including a
-    range with zero matches (count 0, not null) and duplicate-chunk
-    dedup."""
+def test_count_tokens_ranged_matches_reference_in_one_scan(spark, tmp_path):
+    """Ranged count: the deduplicated n_values of the ranged
+    agg_chunks summaries, read in ONE store scan. Correctness vs the
+    decoded reference on both a zoned corpus and a generic one,
+    including a range with zero matches (count 0, not null) and
+    duplicate-chunk dedup."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -585,13 +584,12 @@ def test_count_tokens_ranged_payload_free_contained_side(spark, tmp_path):
         .count()
     )
     assert got == want
-    # the contained side's scan is payload-free
+    # one range path: the store is scanned once
     plan = (
         job.count_tokens(token_range=(lo, hi))
         ._jdf.queryExecution().executedPlan().toString()
     )
-    schemas = [l for l in plan.splitlines() if "ReadSchema" in l]
-    assert any("payload" not in l for l in schemas), schemas
+    assert plan.count("FileScan") == 1, plan
 
     # zero-match range -> 0 (not null)
     assert job.count_tokens(token_range=(10**9, 2 * 10**9)).collect()[0][

@@ -148,6 +148,32 @@ def test_bucket_rule_has_one_owner():
     assert not bad, bad
 
 
+def test_zone_rule_has_one_owner():
+    """The zone rule [min_val, min_val + 2^bit_width) lives in
+    engine/agg.py beside the kernel that uses it: no other tokseq
+    module spells the zone's Spark expression or defines a zone_*
+    function."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "tokseq"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        if rel == "engine/agg.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Constant)
+                and node.value == "shiftleft(1L, bit_width)"
+            ) or (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.name.startswith("zone_")
+            ):
+                bad.append(f"{rel}:{node.lineno}")
+    assert not bad, bad
+
+
 def test_encode_body_has_one_owner():
     """Both ingest routes build their encoded batches through
     engine/encode.py's encode_rows: no other tokseq module names the

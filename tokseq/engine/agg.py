@@ -11,10 +11,10 @@ token-array materialization, no reassembly shuffle) where it doesn't.
 Cost ladder, cheapest first:
 
   count           SQL over ``n_values`` — never touches payload bytes;
-                  parquet column pruning skips them (count_tokens,
-                  also behind EncodeJob.count_tokens).
+                  parquet column pruning skips them (unranged
+                  count_tokens, also behind EncodeJob.count_tokens).
   min/max bounds  SQL over the zone map [min_val, min_val + 2^w) —
-                  same, payload never read (engine/lookup.py).
+                  same, payload never read (zone_range_filter).
   exact agg       ``agg_chunks``: one mapInArrow pass emitting ONE
                   summary row per chunk. rle reads only its run
                   streams (O(runs) ≪ O(n)); dict reads the dictionary
@@ -29,18 +29,22 @@ At 100 TB the difference is the whole job: a full-table sum becomes a
 scan of compressed payloads with a scalar combine, zero exchanges of
 token data.
 
-Predicates (round 6) compose the zone map with the kernel:
-``token_range=(lo, hi)`` restricts every aggregate to tokens in
-[lo, hi]. Chunks whose zone [min_val, min_val + 2^w) is DISJOINT from
-the range are pruned by a plain-column filter that reaches the
-parquet scan (row-group stats on min_val/bit_width — those chunks
-never leave storage); chunks whose zone is CONTAINED in the range
-take the unfiltered fast paths above (rle still never decodes); only
-boundary chunks pay a masked in-kernel reduction. ``use_mask=True``
-restricts aggregates to VALID positions (per-chunk validity bitmap
-clear — the reference's ambiguity-aware S7/S8 semantics applied to
-the compressed store); chunks with a null mask (all valid, the common
-case) keep the fast paths.
+Predicates compose the zone map with the kernel, and every
+token-range read takes this one path: ``token_range=(lo, hi)``
+restricts the ``agg_chunks`` summaries to tokens in [lo, hi], and
+agg_tokens, the ranged count_tokens and lookup.token_membership are
+those deduplicated summaries grouped in different ways. This module
+owns the zone rule: chunks whose zone [min_val, min_val + 2^w) is
+DISJOINT from the range are pruned by a plain-column filter that
+reaches the parquet scan (row-group stats on min_val/bit_width —
+those chunks never leave storage); rle chunks apply the range per
+run without decoding, dict chunks whose zone is CONTAINED in the
+range keep the dictionary shortcut, and every other candidate chunk
+pays a masked in-kernel reduction. ``use_mask=True`` restricts
+aggregates to VALID positions (per-chunk validity bitmap clear — the
+reference's ambiguity-aware S7/S8 semantics applied to the compressed
+store); chunks with a null mask (all valid, the common case) keep the
+fast paths.
 
 Default semantics are unchanged: aggregates cover the tokens AS
 STORED — validity bitmaps ride separately unless ``use_mask=True`` is
@@ -59,6 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codecs import DICT, RLE
+from ..validity import unpack_mask
 from .decode import chunk_headers, decode_batch_kernel
 
 AGG_CHUNK_SCHEMA = (
@@ -77,6 +82,62 @@ _AGG_PA_SCHEMA = pa.schema(
         ("max_val", pa.int64()),
     ]
 )
+# masked-out sentinel for min/max registers, and the bound of an open range
+_BIG = np.int64(2**62)
+
+
+# The zone rule: a chunk's tokens lie in [min_val, min_val + 2^bit_width)
+# for the frame-of-reference family. The patched codecs store exceptions
+# WIDER than bit_width, so their zone bounds nothing above min_val; and
+# widths from _UNBOUNDED_WIDTH up are treated as unbounded (Spark masks
+# shift counts to 6 bits and shiftleft(1L, 63) overflows; unreachable
+# under the int32 token contract, but sound for 64-bit values).
+_INEXACT_ZONE_CODECS = ("pfor", "pfor_ef")
+_UNBOUNDED_WIDTH = 62
+
+
+def zone_range_filter(lo: int | None, hi: int | None):
+    """Zone-map predicate over the encoded table for a token RANGE
+    [lo, hi] (either side None = unbounded): chunks whose zone is
+    DISJOINT from the range are pruned WITHOUT decoding (the Parquet
+    row-group min/max idea, applied one level deeper: inside the
+    compressed payloads). Chunks with an inexact zone stay
+    conservative candidates whenever the range reaches past min_val."""
+    zone_top = F.col("min_val") + F.expr("shiftleft(1L, bit_width)") - 1
+    cond = F.lit(True)
+    if hi is not None:
+        # every codec is frame-of-reference-shifted, so value >= min_val
+        # holds unconditionally — keep this bound a TOP-LEVEL conjunct
+        # on a plain column so Spark pushes it to the parquet scan
+        # (row-group stats pruning on the min_val column)
+        cond = cond & (F.lit(int(hi)) >= F.col("min_val"))
+    if lo is not None:
+        cond = cond & (
+            (F.lit(int(lo)) <= zone_top)
+            | F.col("codec").isin(*_INEXACT_ZONE_CODECS)
+            | (F.col("bit_width") >= _UNBOUNDED_WIDTH)
+        )
+    return cond
+
+
+def zone_filter(token: int):
+    """Single-token membership zone predicate: the range filter
+    degenerate case [token, token]."""
+    return zone_range_filter(int(token), int(token))
+
+
+def zone_contained(
+    codecs: np.ndarray, widths: np.ndarray, mins: np.ndarray, lo: int, hi: int
+) -> np.ndarray:
+    """Per chunk: does the zone PROVE every stored token lies in
+    [lo, hi]? (zone_range_filter's numpy twin, for the kernel.)"""
+    ztop = mins + (np.int64(1) << np.minimum(widths, _UNBOUNDED_WIDTH)) - 1
+    return (
+        ~np.isin(codecs, _INEXACT_ZONE_CODECS)
+        & (widths < _UNBOUNDED_WIDTH)
+        & (mins >= lo)
+        & (ztop <= hi)
+    )
 
 
 def agg_batch_kernel(
@@ -96,19 +157,18 @@ def agg_batch_kernel(
 
     ``lo``/``hi`` restrict the aggregates to tokens in [lo, hi];
     ``masks`` (per-chunk 1-bit validity bitmaps, None = all valid)
-    restrict them to valid positions. Chunks where EVERY token passes
-    (no mask, and either no range or zone ⊆ [lo, hi] for an
-    exactly-bounded codec) take the unfiltered fast paths:
+    restrict them to valid positions.
 
-    rle: sum = Σ (run_val+bias)·run_len from the two run streams —
-    O(runs) per chunk, batched across the group with the same
-    zero-extend joins the decoder uses — and a RANGE-boundary rle
-    chunk still only reads its run streams (the mask applies per run).
-    dict: min/max from the sorted dictionary (first/last, O(1) per
-    chunk after one batched unpack); sum = histogram(indices) ·
-    dictionary. Everything else decodes through decode_batch_kernel
-    and reduces straight out of the flat buffer (reduceat) — no
-    per-token Python, no Arrow list emit."""
+    rle (no validity mask): reads only the two run streams — O(runs)
+    per chunk, batched across the group with the same zero-extend
+    joins the decoder uses — and applies the range per run.
+    dict, when every token passes (no mask, zone ⊆ [lo, hi]): min/max
+    from the sorted dictionary (first/last, O(1) per chunk after one
+    batched unpack); sum = histogram(indices) · dictionary.
+    Everything else decodes through one decode_batch_kernel call and
+    reduces straight out of the flat buffer (reduceat) under one
+    positional pass mask (range ∧ validity) — no per-token Python, no
+    Arrow list emit."""
     n_chunks = len(payloads)
     ns = np.asarray(ns, dtype=np.int64)
     mins_arr = np.asarray(mins, dtype=np.int64)
@@ -118,58 +178,45 @@ def agg_batch_kernel(
     sums = np.zeros(n_chunks, np.int64)
     vmin = np.zeros(n_chunks, np.int64)
     vmax = np.zeros(n_chunks, np.int64)
-    nonempty = ns > 0
     ranged = lo is not None or hi is not None
-    if ranged:
-        lo = int(-(2**62) if lo is None else lo)
-        hi = int(2**62 if hi is None else hi)
-        if lo > hi:
-            raise ValueError(f"empty token range [{lo}, {hi}]")
+    lo = int(-_BIG if lo is None else lo)
+    hi = int(_BIG if hi is None else hi)
+    if lo > hi:
+        raise ValueError(f"empty token range [{lo}, {hi}]")
     if masks is not None:
         has_mask = np.fromiter(
             (m is not None for m in masks), bool, count=n_chunks
         )
     else:
         has_mask = np.zeros(n_chunks, bool)
-
-    # full-pass classification: every stored token contributes. The
-    # zone [min_val, min_val + 2^w) bounds exactly for the
-    # frame-of-reference family; the patched codecs store exceptions
-    # WIDER than bit_width, so containment cannot be concluded for
-    # them (they stay boundary chunks — still correct, just masked).
-    if ranged:
-        ztop = mins_arr + (np.int64(1) << np.minimum(widths_arr, 62)) - 1
-        exact = (~np.isin(codec_arr, ("pfor", "pfor_ef"))) & (
-            widths_arr < 62
-        )
-        full = (
-            nonempty
-            & ~has_mask
-            & exact
-            & (mins_arr >= lo)
-            & (ztop <= hi)
-        )
-    else:
-        full = nonempty & ~has_mask
-    cnts[full] = ns[full]
-    done = ~full
+    todo = ns > 0
+    plain = todo & ~has_mask
 
     # --- rle: the true decode-skip (run streams only)
-    grp = np.flatnonzero((codec_arr == "rle") & full)
+    grp = np.flatnonzero(plain & (codec_arr == "rle"))
     if len(grp):
         run_vals, run_lens, n_runs = RLE.decode_runs(payloads, grp, ns, mins_arr)
+        m = (run_vals >= lo) & (run_vals <= hi)
         b = np.concatenate(([0], np.cumsum(n_runs[:-1]))).astype(np.int64)
-        sums[grp] = np.add.reduceat(run_vals * run_lens, b)
-        vmin[grp] = np.minimum.reduceat(run_vals, b)
-        vmax[grp] = np.maximum.reduceat(run_vals, b)
-        done[grp] = True
+        mi = m.astype(np.int64)
+        cnts[grp] = np.add.reduceat(run_lens * mi, b)
+        sums[grp] = np.add.reduceat(run_vals * run_lens * mi, b)
+        vmin[grp] = np.minimum.reduceat(np.where(m, run_vals, _BIG), b)
+        vmax[grp] = np.maximum.reduceat(np.where(m, run_vals, -_BIG), b)
+        todo[grp] = False
 
-    # --- dict: min/max from the dictionary (sorted ascending by
-    # construction — np.unique / bincount-rank LUT both emit sorted),
-    # sum from the narrow index stream
-    grp = np.flatnonzero((codec_arr == "dict") & full)
+    # --- dict, every token passing: min/max from the dictionary (sorted
+    # ascending by construction — np.unique / bincount-rank LUT both
+    # emit sorted), sum from the narrow index stream. Once a mask
+    # applies, the O(n) index stream dominates either way, so those
+    # chunks take the decode below.
+    full = plain & (codec_arr == "dict")
+    if ranged:
+        full &= zone_contained(codec_arr, widths_arr, mins_arr, lo, hi)
+    grp = np.flatnonzero(full)
     if len(grp):
         dicts, doffs, index = DICT.decode_entries(payloads, grp, ns, mins_arr)
+        cnts[grp] = ns[grp]
         vmin[grp] = dicts[doffs[:-1]]        # sorted: first = min
         vmax[grp] = dicts[doffs[1:] - 1]     # sorted: last = max
         for j, i in enumerate(grp):
@@ -182,80 +229,37 @@ def agg_batch_kernel(
             sums[i] = int(
                 np.bincount(idx, minlength=len(uniq)).astype(np.int64) @ uniq
             )
-        done[grp] = True
+        todo[grp] = False
 
-    # --- remaining full-pass chunks: decode inside the kernel, reduce
-    # to registers (the flat buffer dies here — nothing is emitted)
-    rest = np.flatnonzero(full & ~done)
+    # --- everything else: decode inside the kernel, reduce to registers
+    # (the flat buffer dies here — nothing is emitted)
+    rest = np.flatnonzero(todo)
     if len(rest):
         flat, offs = decode_batch_kernel(
             [payloads[i] for i in rest],
             [codecs[i] for i in rest],
-            np.asarray(widths)[rest],
+            widths_arr[rest],
             mins_arr[rest],
             ns[rest],
         )
-        b = offs[:-1]
         # int64 accumulate: 4096 tokens near 2^31 overflow int32 sums
-        sums[rest] = np.add.reduceat(flat.astype(np.int64), b)
-        vmin[rest] = np.minimum.reduceat(flat, b)
-        vmax[rest] = np.maximum.reduceat(flat, b)
-
-    # === boundary chunks: a predicate or validity mask applies ===
-    partial = nonempty & ~full
-    if not partial.any():
-        return cnts, sums, vmin, vmax
-    BIG = np.int64(2**62)
-
-    # --- rle boundary chunks (range predicate, no validity mask):
-    # STILL no decode — the range mask applies per run, O(runs)
-    prle = np.flatnonzero(
-        partial & (codec_arr == "rle") & ~has_mask
-    ) if ranged else np.zeros(0, np.int64)
-    if len(prle):
-        run_vals, run_lens, n_runs = RLE.decode_runs(payloads, prle, ns, mins_arr)
-        m = (run_vals >= lo) & (run_vals <= hi)
-        b = np.concatenate(([0], np.cumsum(n_runs[:-1]))).astype(np.int64)
-        mi = m.astype(np.int64)
-        cnts[prle] = np.add.reduceat(run_lens * mi, b)
-        sums[prle] = np.add.reduceat(run_vals * run_lens * mi, b)
-        vmin[prle] = np.minimum.reduceat(np.where(m, run_vals, BIG), b)
-        vmax[prle] = np.maximum.reduceat(np.where(m, run_vals, -BIG), b)
-
-    # --- everything else on the boundary: decode in-kernel, build the
-    # positional pass mask (range ∧ validity), segment-reduce. dict
-    # boundary chunks land here too: their cost is dominated by the
-    # O(n) index stream either way, so the histogram shortcut buys
-    # nothing once a mask applies.
-    pset = partial.copy()
-    if len(prle):
-        pset[prle] = False
-    prest = np.flatnonzero(pset)
-    if len(prest):
-        from ..validity import unpack_mask
-
-        flat, offs = decode_batch_kernel(
-            [payloads[i] for i in prest],
-            [codecs[i] for i in prest],
-            np.asarray(widths)[prest],
-            mins_arr[prest],
-            ns[prest],
-        )
         f64 = flat.astype(np.int64)
-        m = np.ones(len(flat), bool)
-        if ranged:
-            m &= (f64 >= lo) & (f64 <= hi)
-        for t, i in enumerate(prest):
-            if has_mask[i]:
-                m[offs[t] : offs[t + 1]] &= ~unpack_mask(
-                    masks[i], int(ns[i])
-                )
         b = offs[:-1]
-        mi = m.astype(np.int64)
-        cnts[prest] = np.add.reduceat(mi, b)
-        sums[prest] = np.add.reduceat(f64 * mi, b)
-        vmin[prest] = np.minimum.reduceat(np.where(m, f64, BIG), b)
-        vmax[prest] = np.maximum.reduceat(np.where(m, f64, -BIG), b)
+        if not ranged and not has_mask[rest].any():
+            cnts[rest] = ns[rest]
+            sums[rest] = np.add.reduceat(f64, b)
+            vmin[rest] = np.minimum.reduceat(f64, b)
+            vmax[rest] = np.maximum.reduceat(f64, b)
+        else:
+            m = (f64 >= lo) & (f64 <= hi)
+            for t, i in enumerate(rest):
+                if has_mask[i]:
+                    m[offs[t] : offs[t + 1]] &= ~unpack_mask(masks[i], int(ns[i]))
+            mi = m.astype(np.int64)
+            cnts[rest] = np.add.reduceat(mi, b)
+            sums[rest] = np.add.reduceat(f64 * mi, b)
+            vmin[rest] = np.minimum.reduceat(np.where(m, f64, _BIG), b)
+            vmax[rest] = np.maximum.reduceat(np.where(m, f64, -_BIG), b)
 
     return cnts, sums, vmin, vmax
 
@@ -332,8 +336,6 @@ def agg_chunks(
     zero-match chunks emit no row. ``use_mask=True`` additionally
     (or independently) restricts to valid positions per the chunk's
     validity bitmap."""
-    from .lookup import zone_range_filter
-
     cols = ["doc_id", "chunk_idx", "source", "codec", "bit_width",
             "n_values", "min_val", "payload"]
     lo = hi = None
@@ -391,42 +393,25 @@ def count_tokens(
     encoded_df: DataFrame,
     token_range: tuple[int | None, int | None] | None = None,
 ) -> DataFrame:
-    """Token count WITHOUT reading payload bytes: three manifest-shaped
-    columns leave the parquet scan (ReadSchema shows no `payload`),
-    deduped on the chunk key (at-least-once appends), then summed.
+    """Token count over the deduped chunks. Unranged, it reads no
+    payload bytes: three manifest-shaped columns leave the parquet
+    scan (ReadSchema shows no `payload`), deduped on the chunk key
+    (at-least-once appends), then summed.
 
     With ``token_range=(lo, hi)`` the count covers only tokens in the
-    range, and the zone map splits the work three ways: DISJOINT
-    chunks are pruned at the scan; CONTAINED chunks contribute their
-    stored n_values through the same payload-free manifest-shaped
-    scan as the unranged count; only BOUNDARY chunks (zone straddles
-    a range edge, or inexact pfor/pfor_ef bounds) pay the in-kernel
-    masked count. On a zoned store a range count therefore reads
-    payload bytes for a sliver of the chunks it counts — the
-    compressed-domain analog of answering COUNT from parquet
-    row-group statistics plus a residual scan."""
-    from .lookup import zone_contained_filter, zone_range_filter
-
-    # keyless distincts below: equivalent to the keyed dedup because
-    # the projected columns depend only on the chunk's tokens (copies
-    # agree on them whatever their codec), and distinct partial-aggregates
+    range: it is the n_values column of the ranged ``agg_chunks``
+    summaries, so zone-disjoint chunks are pruned at the scan and
+    every candidate chunk counts its matches inside the kernel (rle
+    per run, without decoding)."""
+    per_chunk = (
+        encoded_df if token_range is None else agg_chunks(encoded_df, token_range)
+    )
+    # keyless distinct: equivalent to the keyed dedup because the
+    # projected columns depend only on the chunk's tokens (copies agree
+    # on them whatever their codec), and a distinct partial-aggregates
     # map-side without first() buffers (see agg_tokens)
-    if token_range is None:
-        return (
-            encoded_df.select("doc_id", "chunk_idx", "n_values")
-            .dropDuplicates()
-            .agg(F.sum("n_values").alias("n_tokens"))
-        )
-    lo, hi = token_range
-    cand = encoded_df.filter(zone_range_filter(lo, hi))
-    contained = zone_contained_filter(lo, hi)
-    # one distinct over both sides: a duplicate re-encoded with another
-    # codec can land on the other side of the zone split, and its
-    # (doc_id, chunk_idx, in-range count) row still equals the original's
-    full = cand.filter(contained).select("doc_id", "chunk_idx", "n_values")
-    boundary = agg_chunks(cand.filter(~contained), token_range=token_range)
     return (
-        full.unionAll(boundary.select(*full.columns))
+        per_chunk.select("doc_id", "chunk_idx", "n_values")
         .dropDuplicates()
         .agg(F.coalesce(F.sum("n_values"), F.lit(0)).cast("long").alias("n_tokens"))
     )

@@ -9,6 +9,12 @@ BETWEEN pos//W AND (pos+k-1)//W`` — which Parquet row-group statistics
 prune to a handful of pages (the encoded table is written clustered by
 bucket), then a decode of only the touched chunks and an in-memory
 slice. O(touched chunks), never a scan.
+
+Membership is a token-range read like any other: ``token_membership``
+is ``agg_tokens`` per doc over the one-token range, so it prunes with
+the zone rule and counts inside the kernel of engine/agg.py, which
+owns both (``zone_range_filter`` / ``zone_filter`` are importable from
+here too).
 """
 
 from __future__ import annotations
@@ -19,89 +25,26 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-from ..codecs import get_codec
+# the zone predicates live with the kernel they prune for; imported
+# here so callers can keep reaching them through this module
+from .agg import agg_tokens, zone_filter, zone_range_filter  # noqa: F401
 from .decode import DECODE_COLS, chunk_headers, decode_batch_kernel
 from .encode import STORE_SCHEMA, bucket_of
 
 
-def zone_range_filter(lo: int | None, hi: int | None):
-    """Zone-map predicate over the encoded table for a token RANGE
-    [lo, hi] (either side None = unbounded): chunk columns (min_val,
-    bit_width) bound every decoded value for the frame-of-reference
-    codec family — value ∈ [min_val, min_val + 2^bit_width) — so
-    chunks whose zone is DISJOINT from the range are pruned WITHOUT
-    decoding (the Parquet row-group min/max idea, applied one level
-    deeper: inside the compressed payloads). The patched codecs
-    (pfor/pfor_ef) store exceptions WIDER than bit_width, so they stay
-    conservative candidates whenever the range reaches past min_val."""
-    zone_top = F.col("min_val") + F.expr("shiftleft(1L, bit_width)") - 1
-    cond = F.lit(True)
-    if hi is not None:
-        # every codec is frame-of-reference-shifted, so value >= min_val
-        # holds unconditionally — keep this bound a TOP-LEVEL conjunct
-        # on a plain column so Spark pushes it to the parquet scan
-        # (row-group stats pruning on the min_val column)
-        cond = cond & (F.lit(int(hi)) >= F.col("min_val"))
-    if lo is not None:
-        cond = cond & (
-            (F.lit(int(lo)) <= zone_top)
-            | F.col("codec").isin("pfor", "pfor_ef")
-            # Spark masks shift counts to 6 bits (shiftleft(1L, 64) ==
-            # 1L), and shiftleft(1L, 63) overflows to Long.MIN_VALUE —
-            # either would collapse/negate the top bound: treat width
-            # >= 62 as unbounded, matching agg_batch_kernel's
-            # `widths_arr < 62` exact-zone classification (ADVICE r6
-            # #1; unreachable under the int32 token contract, but
-            # sound if the engine ever carries 64-bit values)
-            | (F.col("bit_width") >= 62)
-        )
-    return cond
-
-
-def zone_filter(token: int):
-    """Single-token membership zone predicate: the range filter
-    degenerate case [token, token]."""
-    return zone_range_filter(int(token), int(token))
-
-
-def zone_contained_filter(lo: int | None, hi: int | None):
-    """Chunks whose zone PROVES every stored token lies in [lo, hi]:
-    min_val >= lo and min_val + 2^w - 1 <= hi, restricted to codecs
-    whose zone bound is exact (the patched codecs store exceptions
-    wider than bit_width, so containment can never be concluded for
-    them). The complement within zone_range_filter's candidates is
-    the boundary set — the only chunks whose payloads a range COUNT
-    has to read (engine/agg.py count_tokens)."""
-    zone_top = F.col("min_val") + F.expr("shiftleft(1L, bit_width)") - 1
-    cond = (~F.col("codec").isin("pfor", "pfor_ef")) & (
-        F.col("bit_width") < 62
-    )
-    if lo is not None:
-        cond = cond & (F.col("min_val") >= int(lo))
-    if hi is not None:
-        cond = cond & (zone_top <= int(hi))
-    return cond
-
-
 def token_membership(encoded_df, token: int):
-    """(doc_id, n_occurrences) of ``token`` across the encoded table,
-    answered like ``agg_tokens``: the zone predicate prunes chunks
-    whose [min_val, min_val + 2^w) bound excludes the token (at 100 TB
-    it reaches the parquet scan, so cold chunks never leave storage),
-    ``agg_chunks`` counts the matches of each candidate chunk inside
-    its kernel, and only those per-chunk counts reach the exchange —
-    no decoded token rows. At-least-once duplicate chunks are dropped
-    on their summary rows, i.e. on decoded content, not on payload
-    bytes. Random-token corpora degrade gracefully to a full scan."""
-    from .agg import agg_chunks
-
+    """(doc_id, n_occurrences) of ``token`` across the encoded table:
+    ``agg_tokens`` per doc over the one-token range, so the zone
+    predicate prunes chunks whose [min_val, min_val + 2^w) bound
+    excludes the token (at 100 TB it reaches the parquet scan, so cold
+    chunks never leave storage), each candidate chunk counts its
+    matches inside the kernel, and only docs with a match get a row.
+    At-least-once duplicate chunks are dropped on their summary rows,
+    i.e. on decoded content, not on payload bytes. Random-token
+    corpora degrade gracefully to a full scan."""
     t = int(token)
-    return (
-        agg_chunks(encoded_df, (t, t))
-        .dropDuplicates()
-        .filter(F.col("n_values") > 0)
-        .groupBy("doc_id")
-        .agg(F.sum("n_values").alias("n_occurrences"))
+    return agg_tokens(encoded_df, "doc_id", token_range=(t, t)).select(
+        "doc_id", F.col("n_tokens").alias("n_occurrences")
     )
 
 
@@ -294,32 +237,23 @@ def point_lookup(
         # same hash Spark used at write time -> file/row-group pruning
         # on the bucket-clustered layout
         enc = enc.filter(F.col("bucket") == bucket_of(F.lit(doc_id), n_buckets))
-    rows = enc.select(
-        "chunk_idx", "codec", "bit_width", "n_values", "min_val", "payload"
-    ).collect()
+    tbl = enc.select(*DECODE_COLS).toArrow()
     # at-least-once writes: dedup on chunk_idx
-    by_idx = {r["chunk_idx"]: r for r in rows}
-    parts = []
-    for ci in sorted(by_idx):
-        r = by_idx[ci]
-        codec = get_codec(r["codec"])
-        parts.append(
-            codec.decode(bytes(r["payload"]), int(r["n_values"]),
-                         int(r["bit_width"]), int(r["min_val"]))
-        )
-    if not parts:
-        return np.zeros(0, dtype=np.int64)
+    idxs, keep = np.unique(
+        tbl.column("chunk_idx").to_numpy(zero_copy_only=False), return_index=True
+    )
+    if not len(idxs):
+        return np.zeros(0, dtype=np.int32)
     # the touched range must start at `first` and be gap-free: a
     # missing leading or interior chunk (a partially-written table,
     # before a resume fills it in) would otherwise silently misalign
     # the slice
-    idxs = sorted(by_idx)
-    if idxs[0] != first or idxs != list(range(first, first + len(idxs))):
+    if idxs[0] != first or idxs[-1] != first + len(idxs) - 1:
         raise ValueError(
             f"point_lookup: encoded table has a gap in chunks "
-            f"[{first},{last}] of doc {doc_id!r} (found {idxs}); "
+            f"[{first},{last}] of doc {doc_id!r} (found {idxs.tolist()}); "
             "table is incomplete at this position"
         )
-    flat = np.concatenate(parts)
+    flat, _ = decode_batch_kernel(*chunk_headers(tbl.take(keep)))
     start = pos - first * chunk_width
     return flat[start : start + k]

@@ -183,56 +183,48 @@ class EncodeJob:
         so the store-level marker is the loud guard: a v1 store (or any
         store written before markers existed) fails here with a clear
         message instead of decoding to silently wrong tokens. Catalog
-        mode keeps the same guard as a table property."""
+        mode keeps the same marker as table properties."""
         from ..codecs import FORMAT_VERSION
 
         if self.table_prefix is not None:
-            name = self.encoded_table
+            where = self.encoded_table
             try:
                 props = {
                     r["key"]: r["value"]
-                    for r in self.spark.sql(f"SHOW TBLPROPERTIES {name}").collect()
+                    for r in self.spark.sql(f"SHOW TBLPROPERTIES {where}").collect()
                 }
             except Exception as exc:
                 raise RuntimeError(
-                    f"cannot {action}: catalog table {name} does not exist"
+                    f"cannot {action}: catalog table {where} does not exist"
                 ) from exc
-            ver = props.get(self._MARKER_PROP)
-            if ver is None:
-                raise RuntimeError(
-                    f"cannot {action}: {name} has no {self._MARKER_PROP} "
-                    "table property — written by a pre-v2 build whose "
-                    "payload layout this decoder does not read. Re-encode "
-                    "the store (resume=False)."
-                )
-            # string compare: int(ver) on a hand-mangled property would
-            # raise a bare ValueError and lose the re-encode guidance
-            if str(ver).strip() != str(FORMAT_VERSION):
-                raise RuntimeError(
-                    f"cannot {action}: {name} is payload format v{ver}, "
-                    f"this build reads/writes v{FORMAT_VERSION}. Re-encode "
-                    "the store (resume=False) or use a matching build."
-                )
-            self._apply_stored(
-                {k: props.get(f"tokseq.{k}") for k in self._STORED}, action
+            # the marker's keys, each stored as a "tokseq.<key>" property
+            marker = {
+                k: props.get(f"tokseq.{k}") for k in ("format_version", *self._STORED)
+            }
+            missing = f"no {self._MARKER_PROP} table property"
+        elif "://" in self.out_dir:
+            return
+        else:
+            where = self.out_dir
+            try:
+                with open(self.format_marker_path) as f:
+                    marker = json.load(f)
+            except FileNotFoundError:
+                marker = {}
+            missing = "no _tokseq_format.json marker"
+        ver = marker.get("format_version")
+        if ver is None:
+            raise RuntimeError(
+                f"cannot {action}: {where} has {missing} — it was written "
+                "by a pre-v2 build whose payload layout (unpadded "
+                "dict/split/split3 streams) this decoder does not read. "
+                "Re-encode the store (resume=False)."
             )
-            return
-        if "://" in self.out_dir:
-            return
-        try:
-            with open(self.format_marker_path) as f:
-                marker = json.load(f)
-            ver = marker.get("format_version")
-        except FileNotFoundError:
+        # string compare: int(ver) on a hand-mangled property would
+        # raise a bare ValueError and lose the re-encode guidance
+        if str(ver).strip() != str(FORMAT_VERSION):
             raise RuntimeError(
-                f"cannot {action}: {self.out_dir} has no _tokseq_format.json "
-                "marker — it was written by a pre-v2 build whose payload "
-                "layout (unpadded dict/split/split3 streams) this decoder "
-                "does not read. Re-encode the store (resume=False)."
-            ) from None
-        if ver != FORMAT_VERSION:
-            raise RuntimeError(
-                f"cannot {action}: {self.out_dir} is payload format v{ver}, "
+                f"cannot {action}: {where} is payload format v{ver}, "
                 f"this build reads/writes v{FORMAT_VERSION}. Re-encode the "
                 "store (resume=False) or use a matching tokseq build."
             )
@@ -426,8 +418,8 @@ class EncodeJob:
         token_range: tuple[int | None, int | None] | None = None,
     ) -> DataFrame:
         """Token count over the store's deduped chunks, optionally
-        restricted to a token range; payload-free except for
-        zone-boundary chunks of a ranged count (agg.count_tokens)."""
+        restricted to a token range: payload-free when unranged, the
+        ranged agg_chunks summaries otherwise (agg.count_tokens)."""
         from .agg import count_tokens
 
         return count_tokens(self.encoded(), token_range)

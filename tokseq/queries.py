@@ -872,13 +872,11 @@ GROUP BY source
 
 
 def q_engine_range_count(spark, sf_dir):
-    """Three-way zone-split RANGE COUNT (engine/agg.py count_tokens):
-    zone-disjoint chunks are pruned at the scan, zone-CONTAINED
-    chunks contribute their stored n_values through a payload-free
-    manifest-shaped scan (pytest asserts the pruned ReadSchema), and
-    only boundary chunks pay the in-kernel masked count — the
-    compressed-domain analog of COUNT from row-group statistics plus
-    a residual scan. DuckDB recomputes the count from raw text."""
+    """RANGE COUNT (engine/agg.py count_tokens): the n_values of the
+    ranged agg_chunks summaries, deduplicated and summed in one store
+    scan — zone-disjoint chunks are pruned at the scan and every
+    candidate chunk counts its matches in the kernel (rle per run,
+    without decoding). DuckDB recomputes the count from raw text."""
     from .engine.agg import count_tokens
     from .engine.chunk import plan_chunks
     from .engine.encode import encode_chunks
