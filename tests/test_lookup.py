@@ -283,12 +283,14 @@ def test_gather_slices_raises_on_chunk_gap(spark, corpus_df, tmp_path):
         gather_slices(holey, probes, CHUNK_W).collect()
 
 
-def test_gather_slices_broadcasts_small_probe_set(spark, corpus_df, tmp_path):
-    """A small probe set must turn the store-side join into a
-    BroadcastHashJoin (the store never shuffles — at 100 TB the
-    alternative is a full-store exchange for a handful of probes);
-    disabling the threshold keeps the generic shuffle join for
-    arbitrarily large probe tables."""
+def test_gather_slices_broadcasts_small_probe_set(spark, corpus_df, tmp_path, monkeypatch):
+    """A probe set small enough to finish on the driver returns a local
+    relation; above the driver cap, a small probe set must turn the
+    store-side join into a BroadcastHashJoin (the store never
+    shuffles — at 100 TB the alternative is a full-store exchange for a
+    handful of probes); disabling the threshold keeps the generic
+    shuffle join for arbitrarily large probe tables."""
+    from tokseq.engine import lookup
     from tokseq.engine.lookup import gather_slices
 
     out = str(tmp_path / "bc")
@@ -301,7 +303,7 @@ def test_gather_slices_broadcasts_small_probe_set(spark, corpus_df, tmp_path):
 
     small = gather_slices(job.encoded(), probes, CHUNK_W)
     plan = small._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    assert plan.startswith("LocalTableScan"), plan
     got = {r["probe_id"]: list(r["tokens"]) for r in small.collect()}
     assert got[0] == list(doc["tokens"][2:7])
 
@@ -319,6 +321,8 @@ def test_gather_slices_broadcasts_small_probe_set(spark, corpus_df, tmp_path):
     )
     # (size-based auto-broadcast off, so only the plan's own
     # broadcast decision can put a BroadcastHashJoin in it)
+    # (driver finish off, so the broadcast plan is the one built)
+    monkeypatch.setattr(lookup, "DRIVER_CHUNKS", 0)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -567,3 +571,141 @@ def test_gather_many_probes_on_one_chunk(spark, store, corpus_df):
     want = {i: tokens[p : p + q].tolist() for i, (p, q) in enumerate(zip(pos, k))}
     for threshold in (100_000, 0):
         assert _slices(gather_slices(store.encoded(), probes, CHUNK_W, threshold)) == want
+
+
+def _jobs(spark, run):
+    """[(job id, stage count)] of the Spark jobs ``run()`` starts."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    return [
+        (j, len(tracker.getJobInfo(j).stageIds))
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+
+
+def test_small_gather_finishes_on_the_driver(spark, store, corpus_df):
+    """A small gather is 2 Spark jobs, the probe read and the store
+    read, and the store read does not shuffle (the probe read's bounded
+    limit gathers a multi-partition probe table into one partition); a
+    point lookup is 1 job. The store read ships exactly the touched
+    chunk rows to the driver."""
+    from tokseq.engine.lookup import gather_slices
+
+    doc = corpus_df.filter(F.col("n_tok") > 3 * CHUNK_W).select(
+        "doc_id", "tokens"
+    ).first()
+    tokens = np.array(doc["tokens"])
+    probes = spark.createDataFrame(
+        [(i, doc["doc_id"], i * 97, 2 * CHUNK_W) for i in range(8)], PROBE_SCHEMA
+    )
+    enc = store.encoded()
+    jobs = sorted(_jobs(spark, lambda: _slices(gather_slices(enc, probes, CHUNK_W))))
+    assert len(jobs) == 2, jobs
+    assert jobs[1][1] == 1, jobs  # the store read: one stage, no shuffle
+    point = _jobs(spark, lambda: point_lookup(
+        spark, store.encoded_path, doc["doc_id"], 5, 2 * CHUNK_W,
+        chunk_width=CHUNK_W, n_buckets=store.n_buckets,
+    ))
+    assert [n_stages for _, n_stages in point] == [1]
+
+    # a doc probed at its first and last chunk reads 2 store rows, not
+    # the chunks between them
+    last = (len(tokens) - 1) // CHUNK_W
+    assert last >= 3
+    rows = []
+    to_arrow = type(enc).toArrow
+
+    def counted(df):
+        tbl = to_arrow(df)
+        rows.append(tbl.num_rows)
+        return tbl
+
+    ends = spark.createDataFrame(
+        [(0, doc["doc_id"], 1, 3), (1, doc["doc_id"], last * CHUNK_W, 3)],
+        PROBE_SCHEMA,
+    )
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(type(enc), "toArrow", counted)
+        got = _slices(gather_slices(enc, ends, CHUNK_W))
+    assert rows == [2, 2]  # the probe read, then the store read
+    assert got == {0: tokens[1:4].tolist(), 1: tokens[last * CHUNK_W :][:3].tolist()}
+
+
+def test_driver_gather_matches_spark_plans(spark, store, corpus_df, tmp_path, monkeypatch):
+    """With the driver cap off (0), at 1 chunk key and at its default,
+    gather_slices returns the same rows and schema, on a clean store and
+    on one holding an at-least-once duplicate chunk; a copy that gives
+    a probe a different piece fails the gather on both paths."""
+    from tokseq.engine import lookup
+    from tokseq.engine.lookup import gather_slices
+
+    doc = (
+        corpus_df.filter(
+            (F.col("n_tok") > 2 * CHUNK_W + 10)
+            & (F.size(F.array_distinct("tokens")) > 100)
+        )
+        .select("doc_id", "tokens").orderBy("doc_id").first()
+    )
+    tokens = np.array(doc["tokens"])
+    n = len(tokens)
+    dup = _store_with_copy(spark, store, tmp_path, doc["doc_id"], 1)
+    probes = spark.createDataFrame(
+        [(0, doc["doc_id"], CHUNK_W - 3, CHUNK_W + 6),
+         (1, doc["doc_id"], CHUNK_W + 5, 10),
+         (2, doc["doc_id"], n - 2, 50),            # short read
+         (3, doc["doc_id"], 7, 0),                 # k = 0: no row
+         (4, "no-such-doc", 0, 4),                 # missing doc: no row
+         (5, doc["doc_id"], 7, 4), (5, doc["doc_id"], 7, 4)],  # one probe
+        PROBE_SCHEMA,
+    )
+
+    def gather(enc):
+        return sorted(
+            (r["probe_id"], r["doc_id"], r["pos"], r["k"], list(r["tokens"]))
+            for r in gather_slices(enc, probes, CHUNK_W).collect()
+        )
+
+    default = lookup.DRIVER_CHUNKS
+    for job in (store, dup):
+        got = {}
+        for cap in (0, 1, default):
+            monkeypatch.setattr(lookup, "DRIVER_CHUNKS", cap)
+            got[cap] = gather(job.encoded())
+        assert got[0] == got[1] == got[default]
+    assert {r[0]: r[4] for r in got[0]} == {
+        0: tokens[CHUNK_W - 3 : 2 * CHUNK_W + 3].tolist(),
+        1: tokens[CHUNK_W + 5 : CHUNK_W + 15].tolist(),
+        2: tokens[n - 2 :].tolist(),
+        5: tokens[7:11].tolist(),
+    }
+    on_driver = gather_slices(store.encoded(), probes, CHUNK_W).schema
+    monkeypatch.setattr(lookup, "DRIVER_CHUNKS", 0)
+    assert gather_slices(store.encoded(), probes, CHUNK_W).schema == on_driver
+
+    bad = _store_with_copy(spark, store, tmp_path / "bad", doc["doc_id"], 1,
+                           change=lambda t: t + 1)
+    # copies are judged per probe piece on both paths: a copy that
+    # differs only in the chunk's last token fails probe 0, which reads
+    # the whole chunk, and not probe 1, which reads tokens 5..14 of it
+    tail = _store_with_copy(
+        spark, store, tmp_path / "tail", doc["doc_id"], 1,
+        change=lambda t: np.concatenate([t[:-1], t[-1:] + 1]),
+    )
+    inside = probes.filter(F.col("probe_id") == 1)
+    for cap in (0, default):
+        monkeypatch.setattr(lookup, "DRIVER_CHUNKS", cap)
+        with pytest.raises(Exception, match="chunk gap"):
+            gather_slices(bad.encoded(), probes, CHUNK_W).collect()
+        with pytest.raises(Exception, match="chunk gap"):
+            gather_slices(tail.encoded(), probes, CHUNK_W).collect()
+        assert _slices(gather_slices(tail.encoded(), inside, CHUNK_W)) == {
+            1: tokens[CHUNK_W + 5 : CHUNK_W + 15].tolist()
+        }

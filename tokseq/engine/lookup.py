@@ -3,12 +3,17 @@ encoded table — the reference's third entry point
 (``read_kmer`` / ``slice(..).as_u64``, SURVEY §3.3,
 /root/reference/src/traits.rs:84-87, src/packed_seq.rs:468-482).
 
-Spark rendering: a point lookup is a manifest-shaped predicate on the
-encoded table — ``bucket = h(doc) AND doc_id = ... AND chunk_idx
-BETWEEN pos//W AND (pos+k-1)//W`` — which Parquet row-group statistics
-prune to a handful of pages (the encoded table is written clustered by
-bucket), then a decode of only the touched chunks and an in-memory
-slice. O(touched chunks), never a scan.
+Spark rendering: a read touches the chunks pos//W .. (pos+k-1)//W of
+its doc. A small read (every point lookup, and a gather of at most
+``DRIVER_CHUNKS`` touched chunk keys) is a manifest-shaped predicate
+on the encoded table — ``doc_id IN (...) AND chunk_idx BETWEEN ...``,
+plus ``bucket IN (...)`` for a point lookup, which Parquet row-group
+statistics prune on the bucket-clustered layout, and the exact
+``(doc_id, chunk_idx)`` key set, filtered on the executors — read by
+ONE Spark job into Arrow; the dedup, gap guard, decode and stitch then
+run in numpy on the driver, like the reference's local ``slice``.
+Larger probe tables join the store on Spark (:func:`gather_slices`).
+O(touched chunks) of decode either way.
 
 Membership is a token-range read like any other: ``token_membership``
 is ``agg_tokens`` per doc over the one-token range, so it prunes with
@@ -31,6 +36,15 @@ from .agg import agg_tokens, zone_filter, zone_range_filter  # noqa: F401
 from .decode import DECODE_COLS, chunk_headers, decode_batch_kernel
 from .encode import STORE_SCHEMA, bucket_of
 
+# Gathers that touch at most this many chunk keys finish on the driver:
+# one bounded Spark job collects the touched store rows into Arrow and
+# numpy does the dedup, gap guard, decode and stitch. Above it the
+# broadcast join is faster: on a 4-core host and a 20,722-chunk store
+# the driver finish took 0.65-0.85x the broadcast plan's time up to
+# 2048 keys, 0.94-1.11x at 4096 and 1.3x at 8192. At W=4096 the cap is
+# ~32 MB of decoded int32 on the driver. 0 turns the driver finish off.
+DRIVER_CHUNKS = 2048
+
 
 def token_membership(encoded_df, token: int):
     """(doc_id, n_occurrences) of ``token`` across the encoded table:
@@ -49,6 +63,126 @@ def token_membership(encoded_df, token: int):
 
 
 _PIECE_KEYS = ("probe_id", "doc_id", "pos", "k", "chunk_idx")
+
+
+def _pieces(flat, starts, ns, pos, k, chunk_idx, W: int):
+    """Each (probe, chunk) pair's piece of its decoded chunk, which
+    starts at ``starts`` in ``flat`` and holds ``ns`` tokens ->
+    (piece offsets, concatenated piece tokens). The piece is the
+    probe's [pos, pos+k) relative to the chunk start, clipped to the
+    chunk: a probe starting past the doc end gets an empty piece, like
+    the short read it is."""
+    rel = pos - np.asarray(chunk_idx, np.int64) * W
+    lo = np.clip(rel, 0, ns)
+    hi = np.clip(rel + k, lo, ns)
+    lens = hi - lo
+    piece_offs = np.concatenate(([0], np.cumsum(lens)))
+    take = np.repeat(starts + lo - piece_offs[:-1], lens) + np.arange(piece_offs[-1])
+    return piece_offs, flat[take]
+
+
+def _sql_str(s) -> str:
+    """A Spark SQL literal for the string ``s``: its UTF-8 bytes as a
+    hex binary literal, so no quoting or escape setting can change it."""
+    return f"CAST(X'{str(s).encode().hex()}' AS STRING)"
+
+
+def _gather_local(
+    encoded_df, probes: pa.Table, W: int, n_buckets: int | None = None
+) -> pa.Table:
+    """Driver-side gather of a small probe table (probe_id, doc_id,
+    pos, k > 0) -> the same columns plus ``tokens``, with the row
+    semantics of the Spark plan in :func:`gather_slices`. One Spark job
+    reads exactly the touched chunk keys' store rows (``doc_id IN
+    (...)`` and a ``chunk_idx`` bound for the scan to prune on, plus
+    ``bucket IN (...)`` when ``n_buckets`` is given, and the exact
+    ``(doc_id, chunk_idx)`` key set filtered on the executors), and each
+    row decodes once; copies of a key count as one chunk only if they
+    give each probe the same piece, as in the Spark plan."""
+    # identical probe rows are one probe, as in the Spark plan's group-by
+    probes = probes.group_by(probes.column_names).aggregate([])
+    pos = probes.column("pos").to_numpy().astype(np.int64)
+    k = probes.column("k").to_numpy().astype(np.int64)
+    doc = probes.column("doc_id").to_numpy(zero_copy_only=False)
+    neg = np.flatnonzero(pos < 0)
+    if len(neg):
+        i = neg[0]
+        raise ValueError(f"negative pos for doc {doc[i]} at pos {pos[i]}")
+    if not len(pos):
+        return probes.append_column("tokens", pa.array([], pa.list_(pa.int32())))
+    # (probe, chunk) pairs, probe-major: chunks pos//W .. (pos+k-1)//W
+    c0 = pos // W
+    n = (pos + k - 1) // W - c0 + 1
+    probe = np.repeat(np.arange(len(pos)), n)
+    first_pair = np.concatenate(([0], np.cumsum(n)[:-1]))
+    nth = np.arange(len(probe)) - first_pair[probe]
+    chunk = c0[probe] + nth
+    docs, pdoc = np.unique(doc, return_inverse=True)
+    # chunk key = (doc's index in docs, chunk_idx)
+    pkey = (pdoc[probe].astype(np.int64) << 32) | chunk
+    keys = np.unique(pkey)
+    cond = F.expr(
+        f"doc_id IN ({', '.join(map(_sql_str, docs))})"
+        f" AND chunk_idx BETWEEN {int(c0.min())} AND {int(chunk.max())}"
+        " AND (doc_id, chunk_idx) IN ("
+        + ", ".join(f"({_sql_str(docs[x >> 32])}, {x & 0xFFFFFFFF})" for x in keys)
+        + ")"
+    )
+    if n_buckets is not None:
+        # same hash Spark used at write time -> file/row-group pruning
+        # on the bucket-clustered layout
+        cond &= F.col("bucket").isin(
+            *(bucket_of(F.lit(d), n_buckets) for d in docs.tolist())
+        )
+    store = encoded_df.filter(cond).select(*DECODE_COLS).toArrow()
+    sdoc = np.searchsorted(docs, store.column("doc_id").to_numpy(zero_copy_only=False))
+    skey = (sdoc.astype(np.int64) << 32) | store.column("chunk_idx").to_numpy(
+        zero_copy_only=False
+    )
+    flat, offs = decode_batch_kernel(*chunk_headers(store))
+
+    # gap guard: a probe's present chunks must be a prefix of its
+    # touched range (only TRAILING chunks may be absent: a short read);
+    # a probe with none present is a missing doc or past the doc end
+    order = np.argsort(skey, kind="stable")
+    ukey, first, copies = np.unique(skey[order], return_index=True, return_counts=True)
+    present = np.isin(pkey, ukey)
+    n_present = np.add.reduceat(present.astype(np.int64), first_pair)
+    gap = np.flatnonzero(~present & (nth < n_present[probe]))
+    if len(gap):
+        i = probe[gap[0]]
+        raise ValueError(f"chunk gap or bad probe for doc {doc[i]} at pos {pos[i]}")
+
+    # each present pair's piece from every copy of its chunk
+    u = np.searchsorted(ukey, pkey[present])
+    m = copies[u]
+    pair = np.repeat(np.flatnonzero(present), m)
+    nth_copy = np.arange(len(pair)) - np.repeat(np.cumsum(m) - m, m)
+    r = order[np.repeat(first[u], m) + nth_copy]
+    piece_offs, vals = _pieces(
+        flat, offs[r], offs[r + 1] - offs[r], pos[probe[pair]], k[probe[pair]],
+        chunk[pair], W,
+    )
+    # copies must agree on the piece, as the Spark plan's array_distinct
+    # of (chunk_idx, piece) requires
+    for i in np.flatnonzero(nth_copy):
+        a = i - nth_copy[i]
+        if not np.array_equal(
+            vals[piece_offs[a] : piece_offs[a + 1]], vals[piece_offs[i] : piece_offs[i + 1]]
+        ):
+            raise ValueError(
+                f"chunk gap or bad probe for doc {doc[probe[pair[i]]]} at pos "
+                f"{pos[probe[pair[i]]]}: copies of chunk {chunk[pair[i]]} differ"
+            )
+    lead, lens = nth_copy == 0, np.diff(piece_offs)
+    vals = vals[np.repeat(lead, lens)]
+    piece_offs = np.concatenate(([0], np.cumsum(lens[lead])))
+    # pairs are probe-major, so each probe's pieces are contiguous
+    tokens = pa.ListArray.from_arrays(
+        pa.array(piece_offs[np.concatenate(([0], np.cumsum(n_present)))], pa.int32()),
+        pa.array(vals, pa.int32()),
+    )
+    return probes.append_column("tokens", tokens).filter(pa.array(n_present > 0))
 
 
 def _slice_map(batches, W: int):
@@ -70,20 +204,14 @@ def _slice_map(batches, W: int):
             [payloads[i] for i in uniq], [codecs[i] for i in uniq],
             widths[uniq], mins[uniq], ns[uniq],
         )
-        # the probe's [pos, pos+k) relative to the chunk start, clipped
-        # to the chunk: a probe starting past the doc end gets an empty
-        # piece, like the short read it is
-        rel = (
-            batch.column("pos").to_numpy(zero_copy_only=False)
-            - batch.column("chunk_idx").to_numpy(zero_copy_only=False).astype(np.int64) * W
+        piece_offs, vals = _pieces(
+            flat, offsets[slot], ns,
+            batch.column("pos").to_numpy(zero_copy_only=False),
+            batch.column("k").to_numpy(zero_copy_only=False),
+            batch.column("chunk_idx").to_numpy(zero_copy_only=False), W,
         )
-        lo = np.clip(rel, 0, ns)
-        hi = np.clip(rel + batch.column("k").to_numpy(zero_copy_only=False), lo, ns)
-        lens = hi - lo
-        piece_offs = np.concatenate(([0], np.cumsum(lens)))
-        take = np.repeat(offsets[slot] + lo - piece_offs[:-1], lens) + np.arange(piece_offs[-1])
         pieces = pa.ListArray.from_arrays(
-            pa.array(piece_offs, pa.int32()), pa.array(flat[take], pa.int32())
+            pa.array(piece_offs, pa.int32()), pa.array(vals, pa.int32())
         )
         yield pa.RecordBatch.from_arrays(
             [batch.column(c) for c in _PIECE_KEYS] + [pieces],
@@ -109,18 +237,27 @@ def gather_slices(
       ``limit(threshold+1)`` of them; if they fit — at most
       ``threshold`` rows and at most ``2*threshold`` touched chunk keys
       (~ceil(k/W)+1 per probe, so wide slices cannot sneak a huge key
-      set past the row count) — the collected rows come back as a
-      local relation that is broadcast, and the caller's DataFrame is
-      never evaluated again. Otherwise (or with
-      ``broadcast_threshold=0``, a fully lazy API) the probes join the
-      store with a shuffle join inside the main query.
-    * One decode+slice stage. Probes expand to their touched chunk
-      keys (pos//W .. (pos+k-1)//W) and join the store on (doc_id,
-      chunk_idx); a broadcast probe side makes that a map-side filter
-      over the store scan, so the store never shuffles. One
-      ``mapInArrow`` kernel decodes each distinct touched chunk once
+      set past the row count) — the caller's DataFrame is never
+      evaluated again. Otherwise (or with ``broadcast_threshold=0``, a
+      fully lazy API) the probes join the store with a shuffle join
+      inside the main query.
+    * Driver finish. When the collected probes touch at most
+      ``DRIVER_CHUNKS`` chunk keys (2048; 8M tokens at W=4096),
+      one more job reads exactly those keys' store rows into Arrow
+      (``doc_id IN (...)`` and a ``chunk_idx`` bound prune the scan;
+      the ``(doc_id, chunk_idx)`` key set is filtered on the
+      executors), and the dedup, gap guard, decode and stitch run in
+      numpy on the driver, under the rules below. The result is a
+      local DataFrame: 2 Spark jobs in all, no join and no stitch
+      exchange. Between the cap and the broadcast bound, the collected
+      probes come back as a local relation that is broadcast instead.
+    * Spark plan, one decode+slice stage. Probes expand to their
+      touched chunk keys (pos//W .. (pos+k-1)//W) and join the store
+      on (doc_id, chunk_idx); a broadcast probe side makes that a
+      map-side filter over the store scan, so the store never
+      shuffles. One ``mapInArrow`` kernel decodes each distinct touched chunk once
       per Arrow batch and emits every probe's piece of it.
-    * One stitch exchange: pieces group per probe, and
+    * Spark plan, one stitch exchange: pieces group per probe, and
       ``array_sort(array_distinct(collect_list(struct(chunk_idx,
       piece))))`` orders them. At-least-once duplicate chunks are
       removed here, on decoded content rather than payload bytes.
@@ -131,10 +268,13 @@ def gather_slices(
     (checked on the probe side, BEFORE chunk expansion — a pos <= -W
     would otherwise expand to negative chunk keys, join nothing, and
     vanish like a missing doc instead of failing). A LEADING or
-    INTERIOR missing chunk (partially-written store) fails the job
-    loudly instead of silently stitching misaligned slices — the same
-    gap contract point_lookup enforces — and so do two copies of a
-    chunk that decode differently (the guard counts distinct parts).
+    INTERIOR missing chunk (partially-written store) fails loudly
+    instead of silently stitching misaligned slices — the same gap
+    contract point_lookup enforces — and so do two copies of a chunk
+    that give a probe different pieces (the Spark guard counts
+    distinct parts; the driver finish compares each copy's piece). On
+    the driver finish these errors are a ValueError raised by this
+    call.
 
     Returns (probe_id, doc_id, pos, k, tokens array<int>)."""
     W = chunk_width
@@ -158,7 +298,19 @@ def gather_slices(
         k = head.column("k").to_numpy()
         keys_ub = int(np.sum(-(-k // W) + 1))
         if head.num_rows <= broadcast_threshold and keys_ub <= 2 * broadcast_threshold:
-            live = probes_df.sparkSession.createDataFrame(head, schema=live.schema)
+            spark = probes_df.sparkSession
+            if DRIVER_CHUNKS and keys_ub <= DRIVER_CHUNKS:
+                got = _gather_local(encoded_df, head, W)
+                # createDataFrame rejects the zero-chunk columns that
+                # an empty filter leaves behind
+                return spark.createDataFrame(
+                    got if got.num_rows else got.schema.empty_table(),
+                    StructType(
+                        live.schema.fields
+                        + [StructField("tokens", ArrayType(IntegerType()))]
+                    ),
+                )
+            live = spark.createDataFrame(head, schema=live.schema)
             small = True
     pr = (
         live
@@ -225,35 +377,18 @@ def point_lookup(
 ) -> np.ndarray:
     """tokens[pos : pos+k] of ``doc_id`` (short reads past the doc end).
     ``encoded_path`` is an EncodeJob store, read with its declared
-    schema (``STORE_SCHEMA``)."""
-    first = pos // chunk_width
-    last = (pos + max(k, 1) - 1) // chunk_width
-    enc = spark.read.schema(STORE_SCHEMA).parquet(encoded_path).filter(
-        (F.col("doc_id") == doc_id)
-        & (F.col("chunk_idx") >= first)
-        & (F.col("chunk_idx") <= last)
-    )
-    if n_buckets is not None:
-        # same hash Spark used at write time -> file/row-group pruning
-        # on the bucket-clustered layout
-        enc = enc.filter(F.col("bucket") == bucket_of(F.lit(doc_id), n_buckets))
-    tbl = enc.select(*DECODE_COLS).toArrow()
-    # at-least-once writes: dedup on chunk_idx
-    idxs, keep = np.unique(
-        tbl.column("chunk_idx").to_numpy(zero_copy_only=False), return_index=True
-    )
-    if not len(idxs):
+    schema (``STORE_SCHEMA``). The one-probe case of the driver gather:
+    one Spark job reads the touched chunks (pruned by ``bucket`` too
+    when ``n_buckets`` is given), under gather_slices' gap and
+    duplicate rules; a missing doc reads as empty."""
+    if k <= 0:
         return np.zeros(0, dtype=np.int32)
-    # the touched range must start at `first` and be gap-free: a
-    # missing leading or interior chunk (a partially-written table,
-    # before a resume fills it in) would otherwise silently misalign
-    # the slice
-    if idxs[0] != first or idxs[-1] != first + len(idxs) - 1:
-        raise ValueError(
-            f"point_lookup: encoded table has a gap in chunks "
-            f"[{first},{last}] of doc {doc_id!r} (found {idxs.tolist()}); "
-            "table is incomplete at this position"
-        )
-    flat, _ = decode_batch_kernel(*chunk_headers(tbl.take(keep)))
-    start = pos - first * chunk_width
-    return flat[start : start + k]
+    probe = pa.table({
+        "probe_id": [0], "doc_id": [doc_id],
+        "pos": pa.array([pos], pa.int64()), "k": pa.array([k], pa.int64()),
+    })
+    enc = spark.read.schema(STORE_SCHEMA).parquet(encoded_path)
+    got = _gather_local(enc, probe, chunk_width, n_buckets).column("tokens")
+    if not len(got):
+        return np.zeros(0, dtype=np.int32)
+    return got[0].values.to_numpy(zero_copy_only=False)

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .chunk import DEFAULT_CHUNK_WIDTH, plan_chunks, repartition_chunks
-from .decode import decode_chunks, decode_docs
+from .decode import decode_docs
 from .encode import DEFAULT_BUCKETS, STORE_SCHEMA, bucket_of, encode_chunks
 from .manifest import chunk_manifest, codec_summary
 from .resume import pending_plan
