@@ -549,9 +549,10 @@ def test_agg_filtered_dedups_duplicate_chunks(spark):
         enc.unpersist()
 
 
-def test_count_tokens_ranged_matches_reference_in_one_scan(spark, tmp_path):
+def test_count_tokens_ranged_matches_reference_in_one_scan(spark, tmp_path, monkeypatch):
     """Ranged count: the deduplicated n_values of the ranged
-    agg_chunks summaries, read in ONE store scan. Correctness vs the
+    agg_chunks summaries, read in ONE store scan (the Spark plan, which
+    serves reads above the driver cap). Correctness vs the
     decoded reference on both a zoned corpus and a generic one,
     including a range with zero matches (count 0, not null) and
     duplicate-chunk dedup."""
@@ -559,7 +560,7 @@ def test_count_tokens_ranged_matches_reference_in_one_scan(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from tokseq.datagen import generate_corpus
-    from tokseq.engine import EncodeJob
+    from tokseq.engine import EncodeJob, finish
     from tokseq.engine.agg import count_tokens
     from tokseq.engine.chunk import plan_chunks
     from tokseq.engine.encode import encode_chunks
@@ -584,11 +585,14 @@ def test_count_tokens_ranged_matches_reference_in_one_scan(spark, tmp_path):
         .count()
     )
     assert got == want
-    # one range path: the store is scanned once
-    plan = (
-        job.count_tokens(token_range=(lo, hi))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    # one range path: the store is scanned once (cap 0: this small
+    # store's candidates would otherwise finish on the driver)
+    with monkeypatch.context() as m:
+        m.setattr(finish, "DRIVER_CHUNKS", 0)
+        plan = (
+            job.count_tokens(token_range=(lo, hi))
+            ._jdf.queryExecution().executedPlan().toString()
+        )
     assert plan.count("FileScan") == 1, plan
 
     # zero-match range -> 0 (not null)

@@ -128,6 +128,33 @@ def test_store_has_one_copy():
     assert not bad, bad
 
 
+def test_driver_cap_has_one_owner():
+    """One cap decides which reads finish on the driver: DRIVER_CHUNKS
+    is assigned once in tokseq/ (engine/finish.py), and no module
+    imports the name, which would freeze its value at import time —
+    gathers, point lookups and token-range reads read
+    ``finish.DRIVER_CHUNKS`` at call time."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "tokseq"
+    assigned, imported = [], []
+    for path in sorted(root.rglob("*.py")):
+        where = path.relative_to(root)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name) and n.id == "DRIVER_CHUNKS":
+                            assigned.append(f"{where}:{node.lineno}")
+            elif isinstance(node, ast.ImportFrom):
+                if any(a.name == "DRIVER_CHUNKS" for a in node.names):
+                    imported.append(f"{where}:{node.lineno}")
+    assert [a.split(":")[0] for a in assigned] == ["engine/finish.py"], assigned
+    assert not imported, imported
+
+
 def test_bucket_rule_has_one_owner():
     """The store's bucket rule lives in engine/encode.py (bucket_of):
     the store writer and the point lookup both call it, so no other

@@ -290,7 +290,7 @@ def test_gather_slices_broadcasts_small_probe_set(spark, corpus_df, tmp_path, mo
     shuffles — at 100 TB the alternative is a full-store exchange for a
     handful of probes); disabling the threshold keeps the generic
     shuffle join for arbitrarily large probe tables."""
-    from tokseq.engine import lookup
+    from tokseq.engine import finish
     from tokseq.engine.lookup import gather_slices
 
     out = str(tmp_path / "bc")
@@ -322,7 +322,7 @@ def test_gather_slices_broadcasts_small_probe_set(spark, corpus_df, tmp_path, mo
     # (size-based auto-broadcast off, so only the plan's own
     # broadcast decision can put a BroadcastHashJoin in it)
     # (driver finish off, so the broadcast plan is the one built)
-    monkeypatch.setattr(lookup, "DRIVER_CHUNKS", 0)
+    monkeypatch.setattr(finish, "DRIVER_CHUNKS", 0)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -644,7 +644,7 @@ def test_driver_gather_matches_spark_plans(spark, store, corpus_df, tmp_path, mo
     gather_slices returns the same rows and schema, on a clean store and
     on one holding an at-least-once duplicate chunk; a copy that gives
     a probe a different piece fails the gather on both paths."""
-    from tokseq.engine import lookup
+    from tokseq.engine import finish
     from tokseq.engine.lookup import gather_slices
 
     doc = (
@@ -673,11 +673,11 @@ def test_driver_gather_matches_spark_plans(spark, store, corpus_df, tmp_path, mo
             for r in gather_slices(enc, probes, CHUNK_W).collect()
         )
 
-    default = lookup.DRIVER_CHUNKS
+    default = finish.DRIVER_CHUNKS
     for job in (store, dup):
         got = {}
         for cap in (0, 1, default):
-            monkeypatch.setattr(lookup, "DRIVER_CHUNKS", cap)
+            monkeypatch.setattr(finish, "DRIVER_CHUNKS", cap)
             got[cap] = gather(job.encoded())
         assert got[0] == got[1] == got[default]
     assert {r[0]: r[4] for r in got[0]} == {
@@ -687,7 +687,7 @@ def test_driver_gather_matches_spark_plans(spark, store, corpus_df, tmp_path, mo
         5: tokens[7:11].tolist(),
     }
     on_driver = gather_slices(store.encoded(), probes, CHUNK_W).schema
-    monkeypatch.setattr(lookup, "DRIVER_CHUNKS", 0)
+    monkeypatch.setattr(finish, "DRIVER_CHUNKS", 0)
     assert gather_slices(store.encoded(), probes, CHUNK_W).schema == on_driver
 
     bad = _store_with_copy(spark, store, tmp_path / "bad", doc["doc_id"], 1,
@@ -701,7 +701,7 @@ def test_driver_gather_matches_spark_plans(spark, store, corpus_df, tmp_path, mo
     )
     inside = probes.filter(F.col("probe_id") == 1)
     for cap in (0, default):
-        monkeypatch.setattr(lookup, "DRIVER_CHUNKS", cap)
+        monkeypatch.setattr(finish, "DRIVER_CHUNKS", cap)
         with pytest.raises(Exception, match="chunk gap"):
             gather_slices(bad.encoded(), probes, CHUNK_W).collect()
         with pytest.raises(Exception, match="chunk gap"):
@@ -709,3 +709,211 @@ def test_driver_gather_matches_spark_plans(spark, store, corpus_df, tmp_path, mo
         assert _slices(gather_slices(tail.encoded(), inside, CHUNK_W)) == {
             1: tokens[CHUNK_W + 5 : CHUNK_W + 15].tolist()
         }
+
+
+def test_point_lookup_adopts_store_marker(spark, store, corpus_df, tmp_path):
+    """point_lookup runs the store's format-marker check: with no
+    chunk width or bucket count given it adopts the store's (a W=512
+    store read at the default width returned no tokens), and a value
+    that contradicts the marker fails loudly instead of reading
+    nothing. Only the store's encoded directory is checked."""
+    import json
+    import shutil
+
+    doc = corpus_df.filter(F.col("n_tok") > 2 * CHUNK_W).select(
+        "doc_id", "tokens"
+    ).orderBy("doc_id").first()
+    tokens = np.array(doc["tokens"])
+    got = point_lookup(spark, store.encoded_path, doc["doc_id"], 700, 5)
+    assert np.array_equal(got, tokens[700:705])
+    assert np.array_equal(
+        point_lookup(spark, store.encoded_path + "/", doc["doc_id"], 700, 5),
+        tokens[700:705],
+    )
+    with pytest.raises(RuntimeError, match="n_buckets"):
+        point_lookup(spark, store.encoded_path, doc["doc_id"], 700, 5, n_buckets=16)
+    with pytest.raises(RuntimeError, match="chunk_width"):
+        point_lookup(spark, store.encoded_path, doc["doc_id"], 700, 5,
+                     chunk_width=1024)
+
+    # a store of another payload format version fails the same check
+    old = str(tmp_path / "old")
+    shutil.copytree(store.out_dir, old)
+    marker = EncodeJob(spark, old).format_marker_path
+    with open(marker) as f:
+        meta = json.load(f)
+    with open(marker, "w") as f:
+        json.dump({**meta, "format_version": 1}, f)
+    with pytest.raises(RuntimeError, match="format v1"):
+        point_lookup(spark, EncodeJob(spark, old).encoded_path, doc["doc_id"], 700, 5)
+    # the marker describes only the store's encoded directory: a parquet
+    # copy beside it is read as a bare path, not checked against it
+    beside = str(tmp_path / "old" / "copy")
+    shutil.copytree(EncodeJob(spark, old).encoded_path, beside)
+    assert np.array_equal(
+        point_lookup(spark, beside, doc["doc_id"], 700, 5, chunk_width=CHUNK_W),
+        tokens[700:705],
+    )
+
+
+def _python_nodes(df) -> list[str]:
+    """The Python-stage operators in ``df``'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+                        "BatchEvalPython") if n in plan]
+
+
+def _range_reads(enc, lo, hi):
+    """The three token-range reads, as name -> DataFrame thunk."""
+    from tokseq.engine.agg import agg_tokens, count_tokens
+    from tokseq.engine.lookup import token_membership
+
+    return {
+        "agg_source": lambda: agg_tokens(enc, "source", token_range=(lo, hi)),
+        "count": lambda: count_tokens(enc, (lo, hi)),
+        "membership": lambda: token_membership(enc, lo),
+    }
+
+
+def test_small_range_reads_finish_on_the_driver(spark, store, monkeypatch):
+    """A ranged agg_tokens, count_tokens and token_membership whose
+    zone candidates fit the driver cap each run exactly 2 one-stage
+    Spark jobs, a payload-free sizing read and the candidate read, and
+    no plan they run holds a Python stage: the agg kernel runs on the
+    driver. Above the cap, the sizing read is the only job before the
+    Spark plan, so no payload is read twice."""
+    from tokseq.engine import finish
+    from tokseq.engine.agg import zone_range_filter
+
+    enc = store.encoded()
+    n_chunks = enc.count()
+    assert n_chunks >= 300, n_chunks
+    row = enc.filter(F.col("codec") == "for").orderBy("doc_id", "chunk_idx").first()
+    lo = int(row["min_val"])
+    reads = _range_reads(enc, lo, lo + 9)
+    # zone candidates per read (membership reads the one-token range)
+    n_cands = {
+        name: enc.filter(zone_range_filter(lo, lo if name == "membership" else lo + 9))
+        .count()
+        for name in reads
+    }
+    assert min(n_cands.values()) > 1, n_cands
+    to_arrow = type(enc).toArrow
+
+    def arrow_reads(read):
+        """(jobs, plans read into Arrow) of ``read().collect()``."""
+        plans = []
+
+        def counted(df):
+            plans.append(df)
+            return to_arrow(df)
+
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(type(enc), "toArrow", counted)
+            jobs = _jobs(spark, lambda: read().collect())
+        return jobs, plans
+
+    def read_schema(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [line for line in plan.splitlines() if "ReadSchema" in line]
+
+    for name, read in reads.items():
+        jobs, plans = arrow_reads(read)
+        assert [stages for _, stages in jobs] == [1, 1], (name, jobs)
+        assert len(plans) == 2, name
+        sizing, candidates = plans
+        assert "payload" not in str(read_schema(sizing)), name
+        assert "payload" in str(read_schema(candidates)), name
+        assert [_python_nodes(p) for p in plans] == [[], []], name
+        assert _python_nodes(read()) == [], name
+        # a cap of exactly the candidate count still finishes on the
+        # driver; one below it, the payload-free sizing read is all
+        # that runs before the Spark plan, which runs the kernel in a
+        # Python stage
+        monkeypatch.setattr(finish, "DRIVER_CHUNKS", n_cands[name])
+        assert len(arrow_reads(read)[1]) == 2, name
+        monkeypatch.setattr(finish, "DRIVER_CHUNKS", n_cands[name] - 1)
+        _, plans = arrow_reads(read)
+        assert len(plans) == 1, name
+        assert "payload" not in str(read_schema(plans[0])), name
+        assert _python_nodes(read()) != [], name
+        # the sizing read returns at most cap + 1 flags per partition
+        monkeypatch.setattr(finish, "DRIVER_CHUNKS", 1)
+        sizing = arrow_reads(read)[1][0]
+        parts = sizing.rdd.getNumPartitions()
+        assert n_cands[name] > 2 * parts, (name, parts)
+        assert to_arrow(sizing).num_rows == 2 * parts, name
+        monkeypatch.setattr(finish, "DRIVER_CHUNKS", 0)
+        assert _python_nodes(read()) != [], name
+        monkeypatch.undo()
+
+
+def test_driver_range_reads_match_spark_plans(
+    spark, store, corpus_df, tmp_path, monkeypatch
+):
+    """With the driver cap off (0), at 1 candidate chunk and at its
+    default, every token-range read returns the same rows and the same
+    schema, nullability included, on a clean store, on one holding an
+    at-least-once duplicate chunk and on a store with validity masks;
+    a bad group column raises as the Spark plan does."""
+    from pyspark.errors import AnalysisException
+
+    from tokseq.datagen import generate_corpus
+    from tokseq.engine import finish
+    from tokseq.engine.agg import agg_tokens, count_tokens
+
+    doc = (
+        corpus_df.filter(
+            (F.col("n_tok") > 2 * CHUNK_W + 10)
+            & (F.size(F.array_distinct("tokens")) > 100)
+        )
+        .select("doc_id", "tokens").orderBy("doc_id").first()
+    )
+    chunk = np.array(doc["tokens"])[CHUNK_W : 2 * CHUNK_W]
+    dup = _store_with_copy(spark, store, tmp_path, doc["doc_id"], 1)
+    masked = EncodeJob(spark, str(tmp_path / "masked"), chunk_width=256,
+                       n_buckets=4, mask_vocab=512)
+    masked.run(spark.createDataFrame(generate_corpus(scale=0.05, seed=31).to_pandas()))
+    empty = (10**9, 10**9 + 5)
+
+    def results(enc, lo, hi):
+        reads = {
+            **_range_reads(enc, lo, hi),
+            "agg_doc": lambda: agg_tokens(enc, "doc_id", token_range=(lo, hi)),
+            "agg_all": lambda: agg_tokens(enc, token_range=(lo, hi)),
+            "agg_mask": lambda: agg_tokens(
+                enc, "Source", token_range=(lo, hi), use_mask=True
+            ),
+            "agg_empty": lambda: agg_tokens(enc, token_range=empty),
+            "agg_empty_doc": lambda: agg_tokens(enc, "doc_id", token_range=empty),
+            "count_empty": lambda: count_tokens(enc, empty),
+        }
+        out = {}
+        for name, read in reads.items():
+            df = read()
+            out[name] = (df.schema, sorted(tuple(r) for r in df.collect()))
+        return out
+
+    cases = [
+        (store, int(chunk.min()), int(chunk.max())),
+        (dup, int(chunk.min()), int(chunk.max())),
+        (masked, 100, 700),
+    ]
+    default = finish.DRIVER_CHUNKS
+    for job, lo, hi in cases:
+        got = {}
+        for cap in (0, 1, default):
+            monkeypatch.setattr(finish, "DRIVER_CHUNKS", cap)
+            got[cap] = results(job.encoded(), lo, hi)
+            with pytest.raises(AnalysisException):
+                agg_tokens(job.encoded(), "no_such_col", token_range=(lo, hi))
+        assert got[0] == got[1] == got[default], job.out_dir
+        rows = got[0]
+        assert rows["agg_all"][1][0][0] == rows["count"][1][0][0] > 0
+        assert rows["agg_empty"][1] == [(0, None, None, None)]
+        assert rows["agg_empty_doc"][1] == [] and rows["count_empty"][1] == [(0,)]
+    # the duplicate chunk counts once: the copy store answers as the
+    # clean store does
+    monkeypatch.setattr(finish, "DRIVER_CHUNKS", default)
+    lo, hi = int(chunk.min()), int(chunk.max())
+    assert results(dup.encoded(), lo, hi) == results(store.encoded(), lo, hi)

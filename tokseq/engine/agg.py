@@ -15,6 +15,16 @@ Cost ladder, cheapest first:
                   count_tokens, also behind EncodeJob.count_tokens).
   min/max bounds  SQL over the zone map [min_val, min_val + 2^w) —
                   same, payload never read (zone_range_filter).
+  small ranged    a token-range read whose zone candidates number at
+  read            most ``finish.DRIVER_CHUNKS``: a payload-free,
+                  bounded Spark job sizes them, a second JVM-only job
+                  reads them into Arrow (no Python stage, whose fixed
+                  cost dwarfs the kernel: engine/finish.py), the
+                  kernel below runs on the driver, and the dedup and
+                  grouping run in pyarrow — 2 jobs, no Python stage,
+                  no payload in an exchange. Above the cap the read
+                  falls through to the next rung, after paying the
+                  payload-free sizing job.
   exact agg       ``agg_chunks``: one mapInArrow pass emitting ONE
                   summary row per chunk. rle reads only its run
                   streams (O(runs) ≪ O(n)); dict reads the dictionary
@@ -33,7 +43,8 @@ Predicates compose the zone map with the kernel, and every
 token-range read takes this one path: ``token_range=(lo, hi)``
 restricts the ``agg_chunks`` summaries to tokens in [lo, hi], and
 agg_tokens, the ranged count_tokens and lookup.token_membership are
-those deduplicated summaries grouped in different ways. This module
+those deduplicated summaries grouped in different ways — on the
+driver or on Spark, the kernel and its rows are the same. This module
 owns the zone rule: chunks whose zone [min_val, min_val + 2^w) is
 DISJOINT from the range are pruned by a plain-column filter that
 reaches the parquet scan (row-group stats on min_val/bit_width —
@@ -58,12 +69,14 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codecs import DICT, RLE
 from ..validity import unpack_mask
+from . import finish
 from .decode import chunk_headers, decode_batch_kernel
 
 AGG_CHUNK_SCHEMA = (
@@ -103,21 +116,22 @@ def zone_range_filter(lo: int | None, hi: int | None):
     row-group min/max idea, applied one level deeper: inside the
     compressed payloads). Chunks with an inexact zone stay
     conservative candidates whenever the range reaches past min_val."""
-    zone_top = F.col("min_val") + F.expr("shiftleft(1L, bit_width)") - 1
-    cond = F.lit(True)
+    # one SQL string: the JVM parses it in one call, where building it
+    # from Column operators costs a py4j round trip per operator
+    conds = []
     if hi is not None:
         # every codec is frame-of-reference-shifted, so value >= min_val
         # holds unconditionally — keep this bound a TOP-LEVEL conjunct
         # on a plain column so Spark pushes it to the parquet scan
         # (row-group stats pruning on the min_val column)
-        cond = cond & (F.lit(int(hi)) >= F.col("min_val"))
+        conds.append(f"{int(hi)}L >= min_val")
     if lo is not None:
-        cond = cond & (
-            (F.lit(int(lo)) <= zone_top)
-            | F.col("codec").isin(*_INEXACT_ZONE_CODECS)
-            | (F.col("bit_width") >= _UNBOUNDED_WIDTH)
+        inexact = ", ".join(f"'{c}'" for c in _INEXACT_ZONE_CODECS)
+        conds.append(
+            f"({int(lo)}L <= min_val + shiftleft(1L, bit_width) - 1"
+            f" OR codec IN ({inexact}) OR bit_width >= {_UNBOUNDED_WIDTH})"
         )
-    return cond
+    return F.expr(" AND ".join(conds) or "true")
 
 
 def zone_filter(token: int):
@@ -315,6 +329,22 @@ def _agg_map_factory(
     return _agg_map
 
 
+def _kernel_input(
+    encoded_df: DataFrame,
+    token_range: tuple[int | None, int | None] | None,
+    use_mask: bool,
+) -> DataFrame:
+    """The store columns the agg kernel reads, zone-pruned to
+    ``token_range`` (None = every chunk)."""
+    cols = ["doc_id", "chunk_idx", "source", "codec", "bit_width",
+            "n_values", "min_val", "payload"]
+    if token_range is not None:
+        encoded_df = encoded_df.filter(zone_range_filter(*token_range))
+    if use_mask:
+        cols.append("mask")
+    return encoded_df.select(*cols)
+
+
 def agg_chunks(
     encoded_df: DataFrame,
     token_range: tuple[int | None, int | None] | None = None,
@@ -336,17 +366,56 @@ def agg_chunks(
     zero-match chunks emit no row. ``use_mask=True`` additionally
     (or independently) restricts to valid positions per the chunk's
     validity bitmap."""
-    cols = ["doc_id", "chunk_idx", "source", "codec", "bit_width",
-            "n_values", "min_val", "payload"]
-    lo = hi = None
-    if token_range is not None:
-        lo, hi = token_range
-        encoded_df = encoded_df.filter(zone_range_filter(lo, hi))
-    if use_mask:
-        cols.append("mask")
-    return encoded_df.select(*cols).mapInArrow(
+    return _summaries(
+        _kernel_input(encoded_df, token_range, use_mask), token_range, use_mask
+    )
+
+
+def _summaries(
+    kernel_input: DataFrame,
+    token_range: tuple[int | None, int | None] | None,
+    use_mask: bool,
+) -> DataFrame:
+    """``_kernel_input`` rows -> the agg_chunks summary rows."""
+    lo, hi = token_range or (None, None)
+    return kernel_input.mapInArrow(
         _agg_map_factory(lo, hi, use_mask), AGG_CHUNK_SCHEMA
     )
+
+
+def _finish_ranged(
+    plan: DataFrame,
+    kernel_input: DataFrame,
+    token_range: tuple[int | None, int | None] | None,
+    use_mask: bool,
+    reduce,
+) -> DataFrame:
+    """A token-range read's driver finish. A payload-free, one-stage
+    Spark job counts the zone candidates (``kernel_input``), at most
+    ``finish.DRIVER_CHUNKS`` + 1 per partition; if at most the cap
+    exist, a second JVM-only job reads them into Arrow, the agg kernel
+    runs on the driver and emits exactly the rows ``agg_chunks`` would,
+    and ``reduce`` (summary table -> result table) applies the read's
+    dedup and grouping. The result is a local DataFrame with ``plan``'s
+    schema. Unranged reads, and reads with more candidates than the
+    cap, return ``plan`` itself."""
+    cap = finish.DRIVER_CHUNKS
+    if token_range is None or not cap:
+        return plan
+    # size in one stage with no payload: the low 33 bits of
+    # monotonically_increasing_id number a partition's rows, so at most
+    # cap + 1 flags per partition come back, more than cap in all iff
+    # more than cap candidates exist. (A limit plans a shuffle into one
+    # partition, and one carrying payloads would ship up to cap + 1 of
+    # them per partition on a read that then falls back.)
+    first = F.expr(f"monotonically_increasing_id() & {(1 << 33) - 1} <= {cap}")
+    if kernel_input.select(first.alias("keep")).filter("keep").toArrow().num_rows > cap:
+        return plan
+    rows = kernel_input.toArrow()
+    summaries = pa.Table.from_batches(
+        _agg_map_factory(*token_range, use_mask)(rows.to_batches()), _AGG_PA_SCHEMA
+    )
+    return finish.local_frame(kernel_input.sparkSession, reduce(summaries), plan.schema)
 
 
 def agg_tokens(
@@ -359,34 +428,60 @@ def agg_tokens(
     (default: whole table) answered from the encoded store, optionally
     restricted to a token range and/or valid positions (agg_chunks
     doc). Resume appends are at-least-once, so duplicate chunks are
-    deduped on (doc_id, chunk_idx) AFTER the kernel — the dedup
-    exchange carries ~56-byte summary rows, never payloads or decoded
-    tokens."""
+    deduped on their summary rows (decoded content) AFTER the kernel.
+
+    Unranged, the result is a lazy Spark plan whose dedup exchange
+    carries ~56-byte summary rows, never payloads or decoded tokens.
+    Ranged, the call first sizes the zone candidates in one bounded,
+    payload-free Spark job: up to ``finish.DRIVER_CHUNKS`` of them are
+    read and finish on the driver, and the result is a local
+    DataFrame — an eager snapshot of the store, as a small gather's
+    is. With more candidates, the call has paid that sizing job and
+    returns the lazy plan."""
     # full-row distinct == the keyed dedup here: duplicate chunks decode
     # to the same tokens, so their summary rows are identical even when
     # their payload bytes differ — and a keyless distinct plans as a
     # map-side-combining HashAggregate, where dropDuplicates(keys) needs first()
     # over the string column and degrades to Sort + SortAggregate on
     # both sides of the exchange (measured: 2 sorts + sort-aggs removed)
-    per_chunk = agg_chunks(encoded_df, token_range, use_mask).dropDuplicates()
+    inp = _kernel_input(encoded_df, token_range, use_mask)
+    per_chunk = _summaries(inp, token_range, use_mask).dropDuplicates()
     grouped = (
         per_chunk.groupBy(*group_cols) if group_cols else per_chunk.groupBy()
     )
-    agged = grouped.agg(
+    plan = grouped.agg(
         F.sum("n_values").alias("n_tokens"),
         F.sum("sum_val").alias("sum_tokens"),
         F.min("min_val").alias("min_token"),
         F.max("max_val").alias("max_token"),
     )
-    if group_cols:
-        return agged
-    # ungrouped: match SQL global-aggregate semantics when nothing
-    # passes the range/mask (COUNT(*) = 0, SUM = NULL) instead of a
-    # NULL count (ADVICE r6 #3; the count_tokens path already did)
-    return agged.select(
-        F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        "sum_tokens", "min_token", "max_token",
-    )
+    if not group_cols:
+        # ungrouped: match SQL global-aggregate semantics when nothing
+        # passes the range/mask (COUNT(*) = 0, SUM = NULL) instead of a
+        # NULL count (ADVICE r6 #3; the count_tokens path already did)
+        plan = plan.select(
+            F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias("n_tokens"),
+            "sum_tokens", "min_token", "max_token",
+        )
+
+    def reduce(summaries: pa.Table) -> pa.Table:
+        # Spark resolves group columns case-insensitively and names them
+        # as spelled; the summary columns are lower-case
+        keys = [c.lower() for c in plan.columns[: len(group_cols)]]
+        out = (
+            summaries.group_by(summaries.column_names).aggregate([])
+            .group_by(keys)
+            .aggregate([("n_values", "sum"), ("sum_val", "sum"),
+                        ("min_val", "min"), ("max_val", "max")])
+        )
+        cols = [out[c] for c in keys] + [
+            out[c] for c in ("n_values_sum", "sum_val_sum", "min_val_min", "max_val_max")
+        ]
+        if not keys:
+            cols[0] = cols[0].fill_null(0)  # the plan's coalesce
+        return pa.table(cols, names=plan.columns)
+
+    return _finish_ranged(plan, inp, token_range, use_mask, reduce)
 
 
 def count_tokens(
@@ -396,22 +491,35 @@ def count_tokens(
     """Token count over the deduped chunks. Unranged, it reads no
     payload bytes: three manifest-shaped columns leave the parquet
     scan (ReadSchema shows no `payload`), deduped on the chunk key
-    (at-least-once appends), then summed.
+    (at-least-once appends), then summed — a lazy Spark plan.
 
     With ``token_range=(lo, hi)`` the count covers only tokens in the
     range: it is the n_values column of the ranged ``agg_chunks``
     summaries, so zone-disjoint chunks are pruned at the scan and
     every candidate chunk counts its matches inside the kernel (rle
-    per run, without decoding)."""
-    per_chunk = (
-        encoded_df if token_range is None else agg_chunks(encoded_df, token_range)
-    )
+    per run, without decoding). Like the ranged ``agg_tokens``, up to
+    ``finish.DRIVER_CHUNKS`` candidates finish on the driver as an
+    eager local result; above the cap the call pays the payload-free
+    sizing job, then returns the one-scan Spark plan."""
     # keyless distinct: equivalent to the keyed dedup because the
     # projected columns depend only on the chunk's tokens (copies agree
     # on them whatever their codec), and a distinct partial-aggregates
     # map-side without first() buffers (see agg_tokens)
-    return (
-        per_chunk.select("doc_id", "chunk_idx", "n_values")
-        .dropDuplicates()
-        .agg(F.coalesce(F.sum("n_values"), F.lit(0)).cast("long").alias("n_tokens"))
-    )
+    key = ["doc_id", "chunk_idx", "n_values"]
+
+    def count(per_chunk: DataFrame) -> DataFrame:
+        return per_chunk.select(*key).dropDuplicates().agg(
+            F.coalesce(F.sum("n_values"), F.lit(0)).cast("long").alias("n_tokens")
+        )
+
+    if token_range is None:
+        return count(encoded_df)
+
+    def reduce(summaries: pa.Table) -> pa.Table:
+        rows = summaries.select(key).group_by(key).aggregate([])
+        n = pc.sum(rows["n_values"]).as_py() or 0
+        return pa.table({"n_tokens": pa.array([n], pa.int64())})
+
+    inp = _kernel_input(encoded_df, token_range, False)
+    plan = count(_summaries(inp, token_range, False))
+    return _finish_ranged(plan, inp, token_range, False, reduce)

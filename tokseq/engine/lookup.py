@@ -5,7 +5,7 @@ encoded table — the reference's third entry point
 
 Spark rendering: a read touches the chunks pos//W .. (pos+k-1)//W of
 its doc. A small read (every point lookup, and a gather of at most
-``DRIVER_CHUNKS`` touched chunk keys) is a manifest-shaped predicate
+``finish.DRIVER_CHUNKS`` touched chunk keys) is a manifest-shaped predicate
 on the encoded table — ``doc_id IN (...) AND chunk_idx BETWEEN ...``,
 plus ``bucket IN (...)`` for a point lookup, which Parquet row-group
 statistics prune on the bucket-clustered layout, and the exact
@@ -17,12 +17,14 @@ O(touched chunks) of decode either way.
 
 Membership is a token-range read like any other: ``token_membership``
 is ``agg_tokens`` per doc over the one-token range, so it prunes with
-the zone rule and counts inside the kernel of engine/agg.py, which
-owns both (``zone_range_filter`` / ``zone_filter`` are importable from
-here too).
+the zone rule, counts inside the kernel of engine/agg.py, which owns
+both (``zone_range_filter`` / ``zone_filter`` are importable from here
+too), and finishes on the driver when its zone candidates are few.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -30,20 +32,13 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
+from . import finish
 # the zone predicates live with the kernel they prune for; imported
 # here so callers can keep reaching them through this module
 from .agg import agg_tokens, zone_filter, zone_range_filter  # noqa: F401
 from .decode import DECODE_COLS, chunk_headers, decode_batch_kernel
 from .encode import STORE_SCHEMA, bucket_of
-
-# Gathers that touch at most this many chunk keys finish on the driver:
-# one bounded Spark job collects the touched store rows into Arrow and
-# numpy does the dedup, gap guard, decode and stitch. Above it the
-# broadcast join is faster: on a 4-core host and a 20,722-chunk store
-# the driver finish took 0.65-0.85x the broadcast plan's time up to
-# 2048 keys, 0.94-1.11x at 4096 and 1.3x at 8192. At W=4096 the cap is
-# ~32 MB of decoded int32 on the driver. 0 turns the driver finish off.
-DRIVER_CHUNKS = 2048
+from .pipeline import EncodeJob
 
 
 def token_membership(encoded_df, token: int):
@@ -55,7 +50,13 @@ def token_membership(encoded_df, token: int):
     matches inside the kernel, and only docs with a match get a row.
     At-least-once duplicate chunks are dropped on their summary rows,
     i.e. on decoded content, not on payload bytes. Random-token
-    corpora degrade gracefully to a full scan."""
+    corpora degrade gracefully to a full scan.
+
+    The call sizes the zone candidates in one payload-free Spark job
+    first: up to ``finish.DRIVER_CHUNKS`` of them are read and counted
+    on the driver and the result is an eager local snapshot, as a
+    small gather's is; with more, the call returns agg_tokens' lazy
+    Spark plan after that sizing job."""
     t = int(token)
     return agg_tokens(encoded_df, "doc_id", token_range=(t, t)).select(
         "doc_id", F.col("n_tokens").alias("n_occurrences")
@@ -242,7 +243,7 @@ def gather_slices(
       fully lazy API) the probes join the store with a shuffle join
       inside the main query.
     * Driver finish. When the collected probes touch at most
-      ``DRIVER_CHUNKS`` chunk keys (2048; 8M tokens at W=4096),
+      ``finish.DRIVER_CHUNKS`` chunk keys (2048; 8M tokens at W=4096),
       one more job reads exactly those keys' store rows into Arrow
       (``doc_id IN (...)`` and a ``chunk_idx`` bound prune the scan;
       the ``(doc_id, chunk_idx)`` key set is filtered on the
@@ -299,12 +300,10 @@ def gather_slices(
         keys_ub = int(np.sum(-(-k // W) + 1))
         if head.num_rows <= broadcast_threshold and keys_ub <= 2 * broadcast_threshold:
             spark = probes_df.sparkSession
-            if DRIVER_CHUNKS and keys_ub <= DRIVER_CHUNKS:
-                got = _gather_local(encoded_df, head, W)
-                # createDataFrame rejects the zero-chunk columns that
-                # an empty filter leaves behind
-                return spark.createDataFrame(
-                    got if got.num_rows else got.schema.empty_table(),
+            cap = finish.DRIVER_CHUNKS
+            if cap and keys_ub <= cap:
+                return finish.local_frame(
+                    spark, _gather_local(encoded_df, head, W),
                     StructType(
                         live.schema.fields
                         + [StructField("tokens", ArrayType(IntegerType()))]
@@ -372,15 +371,39 @@ def point_lookup(
     doc_id: str,
     pos: int,
     k: int,
-    chunk_width: int = 4096,
+    chunk_width: int | None = None,
     n_buckets: int | None = None,
 ) -> np.ndarray:
     """tokens[pos : pos+k] of ``doc_id`` (short reads past the doc end).
     ``encoded_path`` is an EncodeJob store, read with its declared
-    schema (``STORE_SCHEMA``). The one-probe case of the driver gather:
-    one Spark job reads the touched chunks (pruned by ``bucket`` too
-    when ``n_buckets`` is given), under gather_slices' gap and
-    duplicate rules; a missing doc reads as empty."""
+    schema (``STORE_SCHEMA``). When it is a store's ``encoded``
+    directory with the store's format marker beside it, EncodeJob's
+    marker check runs: a wrong format version fails, and
+    ``chunk_width`` / ``n_buckets`` are adopted from the marker when
+    None and must match it otherwise. Any other parquet path reads
+    with ``chunk_width`` (None = the default width) and prunes by
+    bucket only when ``n_buckets`` is given.
+
+    The one-probe case of the driver gather: one Spark job reads the
+    touched chunks (pruned by ``bucket`` too when the bucket count is
+    known), under gather_slices' gap and duplicate rules; a missing
+    doc reads as empty."""
+    path = os.path.normpath(encoded_path)
+    # a reader job: it encodes nothing, so its partition count is moot
+    # (resolving the default costs a JVM round trip per lookup)
+    job = EncodeJob(
+        spark, os.path.dirname(path),
+        chunk_width=chunk_width, n_buckets=n_buckets, num_partitions=1,
+    )
+    # the marker describes only the store's own encoded directory
+    if path == os.path.normpath(job.encoded_path) and os.path.exists(
+        job.format_marker_path
+    ):
+        stored = job._check_format_marker("point lookup")
+        # a marker written before the bucket count was persisted
+        # leaves it unknown: no bucket pruning then
+        if n_buckets is not None or stored.get("n_buckets") is not None:
+            n_buckets = job.n_buckets
     if k <= 0:
         return np.zeros(0, dtype=np.int32)
     probe = pa.table({
@@ -388,7 +411,7 @@ def point_lookup(
         "pos": pa.array([pos], pa.int64()), "k": pa.array([k], pa.int64()),
     })
     enc = spark.read.schema(STORE_SCHEMA).parquet(encoded_path)
-    got = _gather_local(enc, probe, chunk_width, n_buckets).column("tokens")
+    got = _gather_local(enc, probe, job.chunk_width, n_buckets).column("tokens")
     if not len(got):
         return np.zeros(0, dtype=np.int32)
     return got[0].values.to_numpy(zero_copy_only=False)

@@ -177,13 +177,14 @@ class EncodeJob:
                     f"{key}={value} (or omit it to adopt the store's)."
                 )
 
-    def _check_format_marker(self, action: str) -> None:
+    def _check_format_marker(self, action: str) -> dict:
         """Refuse to mix payload format versions in one store. Payloads
         carry no self-describing version (headers are packed structs),
         so the store-level marker is the loud guard: a v1 store (or any
         store written before markers existed) fails here with a clear
         message instead of decoding to silently wrong tokens. Catalog
-        mode keeps the same marker as table properties."""
+        mode keeps the same marker as table properties. Returns the
+        marker (empty for a raw object-store path, which has none)."""
         from ..codecs import FORMAT_VERSION
 
         if self.table_prefix is not None:
@@ -203,7 +204,7 @@ class EncodeJob:
             }
             missing = f"no {self._MARKER_PROP} table property"
         elif "://" in self.out_dir:
-            return
+            return {}
         else:
             where = self.out_dir
             try:
@@ -229,6 +230,7 @@ class EncodeJob:
                 "store (resume=False) or use a matching tokseq build."
             )
         self._apply_stored(marker, action)
+        return marker
 
     def _read_manifest(self) -> DataFrame | None:
         """The store's chunk manifest, read payload-free; None when no
@@ -392,7 +394,11 @@ class EncodeJob:
         tokens are materialized or shuffled. ``token_range`` restricts
         to tokens in [lo, hi] with zone-map chunk pruning at the scan;
         ``use_mask=True`` restricts to valid positions per the chunk
-        validity bitmaps."""
+        validity bitmaps. A ranged call sizes its zone candidates in
+        one payload-free Spark job: up to ``finish.DRIVER_CHUNKS``
+        finish on the driver as an eager local snapshot, as a small
+        gather does; above the cap it returns the lazy Spark plan
+        after that job. Unranged calls return the lazy plan."""
         from .agg import agg_tokens
 
         return agg_tokens(
@@ -419,7 +425,11 @@ class EncodeJob:
     ) -> DataFrame:
         """Token count over the store's deduped chunks, optionally
         restricted to a token range: payload-free when unranged, the
-        ranged agg_chunks summaries otherwise (agg.count_tokens)."""
+        ranged agg_chunks summaries otherwise (agg.count_tokens). A
+        ranged count with at most ``finish.DRIVER_CHUNKS`` zone
+        candidates finishes on the driver as an eager local snapshot;
+        above the cap it returns the lazy plan after the payload-free
+        sizing job."""
         from .agg import count_tokens
 
         return count_tokens(self.encoded(), token_range)
