@@ -14,6 +14,24 @@ def pytest_addoption(parser):
     )
 
 
+def spark_jobs(spark, run):
+    """[(job id, stage count)] of the Spark jobs ``run()`` starts."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    return [
+        (j, len(tracker.getJobInfo(j).stageIds))
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+
+
 @pytest.fixture(scope="session")
 def spark():
     from tokseq.engine.session import get_spark

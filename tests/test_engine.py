@@ -87,7 +87,6 @@ def test_resume_pending_exact(spark, corpus_df, tmp_path, drop_store_chunks):
     )
     victim_docs = {r.doc_id for r in man.filter(victim).select("doc_id").distinct().collect()}
     victim_docs.add(partial_doc)
-    expected_new = man.filter(F.col("doc_id").isin(list(victim_docs))).count()
     drop_store_chunks(job, ~victim & ~(
         (F.col("doc_id") == partial_doc) & (F.col("chunk_idx") == 0)
     ))
@@ -97,13 +96,14 @@ def test_resume_pending_exact(spark, corpus_df, tmp_path, drop_store_chunks):
     pend = {r.doc_id for r in pending.select("doc_id").collect()}
     assert pend == victim_docs
 
-    # a resumed run appends exactly the pending docs' chunks; dup rows
-    # (the partial doc's surviving chunks) are deduped by the reader —
-    # roundtrip must still be exact.
+    # a resumed run appends exactly the missing chunk keys: the partial
+    # doc's surviving chunks are not written again, so the store holds
+    # no duplicate key, and the roundtrip is exact.
     res = job.run(corpus_df, resume=True)
     assert res.n_chunks == total_chunks  # job totals count deduped chunks
-    enc_rows = spark.read.parquet(job.encoded_path).count()
-    assert enc_rows == kept + expected_new
+    stored = spark.read.parquet(job.encoded_path)
+    assert stored.count() == kept + (total_chunks - kept)
+    assert stored.dropDuplicates(["doc_id", "chunk_idx"]).count() == stored.count()
     assert job.verify_roundtrip(corpus_df) == 0
 
 
@@ -148,8 +148,9 @@ def test_resume_duplicated_chunk_does_not_mask_missing(spark):
     """Store appends are at-least-once, so a doc's chunks are counted
     distinct — a DUPLICATED chunk must not mask a MISSING one. The
     pending plan at its edges (W=10, giants above 16*W=160 tokens):
-    incomplete small docs come back whole, a giant only its missing
-    chunks, and store keys of docs outside the input are ignored."""
+    an incomplete doc, small or giant, comes back as exactly its
+    missing chunks, a doc absent from the store as planned fresh, and
+    store keys of docs outside the input are ignored."""
 
     def doc(d, n):
         return (d, list(range(n)), n, "s")
@@ -181,7 +182,7 @@ def test_resume_duplicated_chunk_does_not_mask_missing(spark):
     plan = pending_plan(docs, manifest, chunk_width=10)
     rows = plan.select("doc_id", "chunk_idx", F.size("chunk_tokens")).collect()
     assert sorted(tuple(r) for r in rows) == [
-        ("b", 0, 20), ("c", 0, 20), ("e", 0, 0), ("g", 0, 160), ("h", 8, 10),
+        ("b", 1, 10), ("c", 1, 10), ("e", 0, 0), ("g", 7, 10), ("h", 8, 10),
     ]
 
 

@@ -4,6 +4,7 @@ push the predicates to the parquet scan."""
 
 import numpy as np
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from tokseq.engine.lookup import point_lookup
@@ -573,24 +574,6 @@ def test_gather_many_probes_on_one_chunk(spark, store, corpus_df):
         assert _slices(gather_slices(store.encoded(), probes, CHUNK_W, threshold)) == want
 
 
-def _jobs(spark, run):
-    """[(job id, stage count)] of the Spark jobs ``run()`` starts."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count jobs")
-    try:
-        run()
-    finally:
-        sc._jsc.clearJobGroup()
-    tracker = sc.statusTracker()
-    return [
-        (j, len(tracker.getJobInfo(j).stageIds))
-        for j in tracker.getJobIdsForGroup(group)
-    ]
-
-
 def test_small_gather_finishes_on_the_driver(spark, store, corpus_df):
     """A small gather is 2 Spark jobs, the probe read and the store
     read, and the store read does not shuffle (the probe read's bounded
@@ -607,10 +590,10 @@ def test_small_gather_finishes_on_the_driver(spark, store, corpus_df):
         [(i, doc["doc_id"], i * 97, 2 * CHUNK_W) for i in range(8)], PROBE_SCHEMA
     )
     enc = store.encoded()
-    jobs = sorted(_jobs(spark, lambda: _slices(gather_slices(enc, probes, CHUNK_W))))
+    jobs = sorted(spark_jobs(spark, lambda: _slices(gather_slices(enc, probes, CHUNK_W))))
     assert len(jobs) == 2, jobs
     assert jobs[1][1] == 1, jobs  # the store read: one stage, no shuffle
-    point = _jobs(spark, lambda: point_lookup(
+    point = spark_jobs(spark, lambda: point_lookup(
         spark, store.encoded_path, doc["doc_id"], 5, 2 * CHUNK_W,
         chunk_width=CHUNK_W, n_buckets=store.n_buckets,
     ))
@@ -810,7 +793,7 @@ def test_small_range_reads_finish_on_the_driver(spark, store, monkeypatch):
 
         with pytest.MonkeyPatch.context() as m:
             m.setattr(type(enc), "toArrow", counted)
-            jobs = _jobs(spark, lambda: read().collect())
+            jobs = spark_jobs(spark, lambda: read().collect())
         return jobs, plans
 
     def read_schema(df):

@@ -49,8 +49,10 @@ def test_giant_doc_resumes_at_chunk_level(spark, tmp_path, drop_store_chunks):
     assert len(pend) == len(giant_pend) + len(small_pend)
     # exactly the one missing giant chunk, already W-sized
     assert [(r.chunk_idx, r.sz) for r in giant_pend] == [(17, CHUNK_W)]
-    # the small doc re-plans whole (one pass-through row)
-    assert len(small_pend) == 1 and small_pend[0].chunk_idx == 0
+    # the small doc re-plans as W-token chunk rows
+    assert sorted((r.chunk_idx, r.sz) for r in small_pend) == [
+        (0, CHUNK_W), (1, CHUNK_W), (2, 700 - 2 * CHUNK_W),
+    ]
 
     res = job.run(docs, resume=True)
     assert res.n_chunks == total  # deduped chunk count restored

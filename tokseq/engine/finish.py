@@ -9,9 +9,10 @@ lookup always finishes on the driver, cap or not: its result is a
 numpy array there anyway.
 
 Over 4 rows in 4 partitions on a 4-core host, a job with a Python
-stage (``mapInArrow``) took ~140 ms and a JVM-only job ~25 ms. Small
-reads hold a few ms of kernel, so the Python stage is the cost to
-remove."""
+stage (``mapInArrow``) takes ~90-95 ms, with workers started from
+``pyspark_tokseq_worker`` (session.get_spark; ~120-130 ms without it),
+and a JVM-only job ~17-22 ms (BENCH/KERNELS.md). Small reads hold a
+few ms of kernel, so the Python stage is the cost to remove."""
 
 from __future__ import annotations
 
@@ -26,8 +27,12 @@ from pyspark.sql.types import StructType
 # gather took 0.65-0.85x the broadcast plan's time up to 2048 keys,
 # 0.94-1.11x at 4096 and 1.3x at 8192; a ranged agg_tokens / count
 # took 0.53-0.76x the mapInArrow plan's time at 436-2040 candidates,
-# 0.96-0.98x at 2784 and 1.16-1.29x from 6858 up. One cap at 2048 sits
-# on the winning side of both. At W=4096 it is ~32 MB of decoded int32
+# 0.96-0.98x at 2784 and 1.16-1.29x from 6858 up. Re-measured with the
+# cheaper Python stage of pyspark_tokseq_worker (19,990-chunk store,
+# min of 3): the gather took 0.70x at 1024 keys, 0.77x at 2048, 0.87x
+# at 4096 and 1.67x at 8192; ranged reads 0.84-1.03x at 9 candidates,
+# 0.81-0.91x at 2110 and 1.41-1.58x at 6204. One cap at 2048 sits on
+# the winning side of both. At W=4096 it is ~32 MB of decoded int32
 # on the driver. 0 turns the driver finish off. Callers read it at
 # call time (``finish.DRIVER_CHUNKS``), so one assignment governs
 # every read.

@@ -22,17 +22,48 @@ makes the encoded buffer addressable and the job resumable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 CHUNK_MANIFEST_COLS = [
     "doc_id", "chunk_idx", "bucket", "codec", "bit_width",
     "n_values", "in_bytes", "out_bytes", "floor_bytes", "part_id",
 ]
+TOTAL_COLS = ["n_values", "in_bytes", "out_bytes", "floor_bytes"]
 
 
 def chunk_manifest(encoded: DataFrame) -> DataFrame:
     return encoded.select(*CHUNK_MANIFEST_COLS)
+
+
+def totals() -> list[Column]:
+    """The aggregates (n_chunks, n_values, in_bytes, out_bytes,
+    floor_bytes) of chunk rows, named as EncodeResult's fields: for
+    ``DataFrame.observe``, whose Observation the first action over the
+    observed frame fills with no job of its own, or for ``agg``."""
+    return [F.count("*").alias("n_chunks")] + [F.sum(c).alias(c) for c in TOTAL_COLS]
+
+
+def observed(obs: Observation) -> dict | None:
+    """What ``obs`` observed, or None when nothing filled it: it was
+    never put on a frame, or adaptive execution dropped the observed
+    subplan from a join one of whose sides came back empty. Spark (pyspark
+    4.1.2, the version the engine is built on) completes the
+    Observation of such a subplan with an empty row, which
+    ``Observation.get`` cannot convert, so its private row is looked at
+    first; a Spark that left it uncompleted would block here."""
+    if obs._jo is None or obs._jo.getRow().length() == 0:
+        return None
+    return obs.get
+
+
+def deduped_chunks(manifest: DataFrame) -> DataFrame:
+    """The store's chunks, one row per (doc_id, chunk_idx), with the
+    columns ``totals`` sums. Appends are at-least-once, and stores
+    written by earlier builds may hold duplicates whose out_bytes
+    differ, so the dedup is keyed."""
+    keys = ["doc_id", "chunk_idx"]
+    return manifest.select(*keys, *TOTAL_COLS).dropDuplicates(keys)
 
 
 def partition_manifest(encoded: DataFrame) -> DataFrame:

@@ -19,6 +19,24 @@ Layout under ``out_dir``:
                          which chunks exist
     _tokseq_format.json  payload format version, chunk width and bucket
                          count
+
+EncodeResult's totals come from the write itself, with no pass over
+the store after it: the write job observes the rows it writes
+(``DataFrame.observe``). A fresh write replaces the store, so those
+are the store's totals. An append writes only chunk keys the store
+lacks (resume.pending_plan), so its totals add to the store's
+deduplicated totals before it, which the pending plan's dedup of the
+store's chunks observes in the same job. When the append wrote nothing
+or that observation is missing (no store, a store with no rows),
+``run`` counts the store.
+
+The write's totals are observed in the write's result stage, which
+Spark counts once per partition. The store's totals before an append
+are observed in a shuffle-map stage: if Spark re-runs a finished task
+of it (its shuffle output was lost, or a speculative copy also
+succeeded), that task's part is counted again and the result
+over-counts. A local session, with speculation off (the default),
+re-runs no finished task.
 """
 
 from __future__ import annotations
@@ -29,19 +47,22 @@ import time
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .chunk import DEFAULT_CHUNK_WIDTH, plan_chunks, repartition_chunks
 from .decode import decode_docs
 from .encode import DEFAULT_BUCKETS, STORE_SCHEMA, bucket_of, encode_chunks
-from .manifest import chunk_manifest, codec_summary
+from .manifest import chunk_manifest, codec_summary, deduped_chunks, observed, totals
 from .resume import pending_plan
 from .verify import count_mismatches
 
 
 @dataclass
 class EncodeResult:
+    """The store's deduplicated totals after a run; the module
+    docstring names the one case in which they over-count."""
+
     n_chunks: int
     n_values: int
     in_bytes: int
@@ -269,38 +290,43 @@ class EncodeJob:
         )
 
     # --- the job ---
-    def plan(self, docs: DataFrame, resume: bool = False) -> DataFrame:
+    def plan(self, docs: DataFrame, resume: bool = False, obs=None) -> DataFrame:
         """The hybrid chunk plan (chunk.plan_chunks: whole docs plus
-        pre-exploded giants). On resume, only what the store lacks
-        (resume.pending_plan): incomplete docs, minus the one-chunk rows
-        the store already holds. With no store yet, everything."""
+        pre-exploded giants). On resume, only the chunk keys the store
+        lacks (resume.pending_plan; with no store yet, everything), and
+        the first action over the plan fills the Observation ``obs``,
+        if given, with the store's deduped totals before it."""
         if resume:
             # the manifest read first: it adopts the store's chunk width
             manifest = self._read_manifest()
-            return pending_plan(docs, manifest, self.chunk_width)
+            return pending_plan(docs, manifest, self.chunk_width, obs)
         return plan_chunks(docs, self.chunk_width)
 
-    def store_rows(self, docs: DataFrame, resume: bool = False) -> DataFrame:
+    def store_rows(self, docs: DataFrame, resume: bool = False, obs=None) -> DataFrame:
         """docs -> the rows a store write appends: plan -> salted
         repartition -> encode -> store layout. The DataFrame route of
         ``run`` and every micro-batch of streaming.stream_encode."""
-        chunks = repartition_chunks(self.plan(docs, resume), self.num_partitions)
+        chunks = repartition_chunks(self.plan(docs, resume, obs), self.num_partitions)
         return self.store_layout(encode_chunks(
             chunks, self.enable_fsst, self.chunk_width,
             self.quality_threshold, self.mask_vocab,
         ))
 
-    def write_rows(self, rows: DataFrame, mode: str) -> None:
+    def write_rows(self, rows: DataFrame, mode: str) -> Observation:
         """Write store rows (``store_rows`` / ``store_layout`` output)
         to the encoded table or path: the one store write of ``run``
-        and of streaming.stream_encode. Parquet compression is off:
-        payloads are already bit-packed, and one setting keeps both
-        routes' stores alike."""
+        and of streaming.stream_encode. Returns the totals of the rows
+        written, observed by the write job itself. Parquet compression
+        is off: payloads are already bit-packed, and one setting keeps
+        both routes' stores alike."""
+        written = Observation()
+        rows = rows.observe(written, *totals())
         writer = rows.write.mode(mode).option("compression", "none")
         if self.table_prefix is not None:
             writer.saveAsTable(self.encoded_table)
         else:
             writer.parquet(self.encoded_path)
+        return written
 
     def run(
         self,
@@ -311,8 +337,10 @@ class EncodeJob:
     ) -> EncodeResult:
         """Encode. Either from a DataFrame (generic path: plan ->
         shuffle -> encode; required for resume) or directly from a
-        parquet corpus path (fast path: worker-side pyarrow scan)."""
+        parquet corpus path (fast path: worker-side pyarrow scan).
+        The result's totals cover the whole store, deduplicated."""
         t0 = time.time()
+        before = Observation()
         if resume:
             self._check_format_marker("resume-append onto store")
         elif self.table_prefix is None:
@@ -328,32 +356,27 @@ class EncodeJob:
         else:
             if docs is None:
                 docs = self.spark.read.parquet(corpus_path)
-            out = self.store_rows(docs, resume)
-        self.write_rows(out, "append" if resume else "overwrite")
+            out = self.store_rows(docs, resume, before)
+        written = self.write_rows(out, "append" if resume else "overwrite")
         if self.table_prefix is not None and not resume:
             self._write_format_marker()  # property needs the table
 
-        # totals over the deduped logical table: appends are
-        # at-least-once, and stores written by earlier builds may hold
-        # duplicates whose out_bytes differ, so the dedup is keyed
-        totals = (
-            chunk_manifest(self.encoded()).dropDuplicates(["doc_id", "chunk_idx"])
-            .agg(
-                F.count("*").alias("c"),
-                F.sum("n_values").alias("v"),
-                F.sum("in_bytes").alias("i"),
-                F.sum("out_bytes").alias("o"),
-                F.sum("floor_bytes").alias("f"),
-            ).collect()[0]
-        )
-        wall = time.time() - t0
+        # the write observed its rows: a fresh write replaces the store
+        # (doc ids are unique), and an append writes only keys the
+        # store lacks, on top of the deduped totals its plan observed
+        total = written.get
+        if resume:
+            prior = observed(before) if total["n_chunks"] else None
+            if prior is None:
+                # nothing written (adaptive execution then drops the
+                # empty plan, observation and all), or no pre-write
+                # totals (no store, or one with no rows): count the store
+                total = deduped_chunks(self._read_manifest()).agg(*totals()).first()
+                total = total.asDict()
+            else:
+                total = {k: (v or 0) + (prior[k] or 0) for k, v in total.items()}
         result = EncodeResult(
-            n_chunks=totals["c"] or 0,
-            n_values=totals["v"] or 0,
-            in_bytes=totals["i"] or 0,
-            out_bytes=totals["o"] or 0,
-            floor_bytes=totals["f"] or 0,
-            wall_sec=wall,
+            **{k: v or 0 for k, v in total.items()}, wall_sec=time.time() - t0
         )
         if verify:
             if docs is None:

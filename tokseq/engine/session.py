@@ -8,6 +8,7 @@ handling are runtime-adaptive.
 
 from __future__ import annotations
 
+import importlib.util
 import os
 
 from pyspark.sql import SparkSession
@@ -15,6 +16,8 @@ from pyspark.sql import SparkSession
 # chunk rows carry up to chunk_width int32 values (~16 KB at 4096);
 # 1024 rows/batch keeps Arrow batches ~16-64 MB in the Python worker.
 ARROW_BATCH_ROWS = 1024
+# the top-level pyspark_tokseq_worker.py next to tokseq/
+WORKER_MODULE = "pyspark_tokseq_worker"
 
 
 def get_spark(
@@ -36,7 +39,14 @@ def get_spark(
     "encode from dirA, decode from dirB" fail with "table does not
     exist". On a real deployment it is the shared metastore / Iceberg
     catalog configured via spark-submit (these configs are then
-    supplied there and this default is unused)."""
+    supplied there and this default is unused).
+
+    In local mode (``cores`` given) Python workers start from
+    ``WORKER_MODULE``, which skips a re-read of every zip and jar
+    directory per task. pyspark's daemon imports it when it starts,
+    from the driver's working directory and PYTHONPATH, so it must be
+    importable from there, as ``tokseq`` is. On a cluster the daemon starts before ``--py-files``
+    reach its path, so workers keep pyspark's own module."""
     b = SparkSession.builder.appName(app_name)
     if hive:
         root = os.path.abspath(
@@ -55,7 +65,15 @@ def get_spark(
             )
         )
     if cores is not None:
-        b = b.master(f"local[{cores}]")
+        if importlib.util.find_spec(WORKER_MODULE) is None:
+            raise RuntimeError(
+                f"cannot start a tokseq session: {WORKER_MODULE}.py is not"
+                " importable; put the directory holding it and tokseq/ on"
+                " the PYTHONPATH"
+            )
+        b = b.master(f"local[{cores}]").config(
+            "spark.python.worker.module", WORKER_MODULE
+        )
         # local mode = one JVM; the 1g default heap OOMs the vectorized
         # parquet reader on giant token arrays. On a cluster this is
         # spark-submit's --executor-memory.
