@@ -677,3 +677,79 @@ def test_ranged_ops_one_sided_bounds(spark):
             assert count_tokens(enc, rng).collect()[0]["n_tokens"] == ref["n"], rng
     finally:
         enc.unpersist()
+
+
+def test_zone_candidates_twin_matches_zone_range_filter(spark):
+    """zone_candidates (numpy, for the driver's reads of store files)
+    keeps exactly the rows zone_range_filter keeps, row for row: every
+    codec family incl. the inexact pfor/pfor_ef zones, widths from 0 to
+    64 (>= 62 unbounded), and open ranges on either side."""
+    import itertools
+
+    from tokseq.engine.agg import zone_candidates, zone_range_filter
+
+    rows = [
+        (codec, w, m)
+        for codec in ("for", "bitpack", "rle", "dict", "pfor", "pfor_ef")
+        for w in (0, 1, 3, 10, 31, 61, 62, 63, 64)
+        for m in (0, 1, 7, 1000, 2**31 - 1)
+        # Spark's shiftleft(1L, 63) is Long.MIN: min_val 0 would overflow
+        if not (w == 63 and m == 0)
+    ]
+    bounds = (None, 0, 5, 7, 1000, 1007, 2**31 - 1, 2**40)
+    ranges = [
+        (lo, hi) for lo, hi in itertools.product(bounds, bounds)
+        if lo is None or hi is None or lo <= hi
+    ]
+    df = spark.createDataFrame(rows, "codec string, bit_width int, min_val long")
+    got = df.select(
+        "codec", "bit_width", "min_val",
+        *(zone_range_filter(lo, hi).alias(f"r{i}") for i, (lo, hi) in enumerate(ranges)),
+    ).collect()
+    codecs = np.array([r["codec"] for r in got], object)
+    widths = np.array([r["bit_width"] for r in got], np.int64)
+    mins = np.array([r["min_val"] for r in got], np.int64)
+    for i, (lo, hi) in enumerate(ranges):
+        want = np.array([r[f"r{i}"] for r in got])
+        assert np.array_equal(zone_candidates(codecs, widths, mins, lo, hi), want), (lo, hi)
+
+
+def test_ranged_driver_finish_derives_its_schema(spark, tmp_path, monkeypatch):
+    """A driver-finished ranged read derives its result schema without
+    building its Spark plan: _agg_schema equals the plan's schema,
+    ungrouped and grouped (case-insensitive names kept as spelled), and
+    a small store's ranged reads build no mapInArrow DataFrame; a name
+    that is not a summary column is left to the plan, which raises."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import DataFrame
+
+    from tokseq.datagen import generate_corpus
+    from tokseq.engine import finish
+    from tokseq.engine.agg import _COUNT_SCHEMA, _agg_schema, agg_tokens, count_tokens
+    from tokseq.engine.encode import STORE_SCHEMA
+    from tokseq.engine.lookup import token_membership
+    from tokseq.engine.pipeline import EncodeJob
+
+    empty = spark.createDataFrame([], STORE_SCHEMA)
+    monkeypatch.setattr(finish, "DRIVER_CHUNKS", 0)
+    for group in ((), ("source",), ("doc_id", "Source"), ("CHUNK_IDX", "n_values")):
+        plan = agg_tokens(empty, *group, token_range=(0, 10))
+        assert _agg_schema(*group) == plan.schema, group
+    assert count_tokens(empty, (0, 10)).schema == _COUNT_SCHEMA
+    assert _agg_schema("no_such_col") is None
+
+    job = EncodeJob(spark, str(tmp_path / "s"), chunk_width=256, n_buckets=4)
+    job.run(spark.createDataFrame(generate_corpus(scale=0.05, seed=3).to_pandas()))
+    monkeypatch.setattr(finish, "DRIVER_CHUNKS", 2048)
+
+    def no_plan(*args, **kwargs):
+        raise AssertionError("a driver finish built a mapInArrow plan")
+
+    monkeypatch.setattr(DataFrame, "mapInArrow", no_plan)
+    enc = job.encoded()
+    assert agg_tokens(enc, "Source", token_range=(100, 700)).count() > 0
+    assert agg_tokens(enc, token_range=(100, 700), use_mask=True).count() == 1
+    assert count_tokens(enc, (100, 700)).first()[0] > 0
+    token_membership(enc, 100).collect()
+    with pytest.raises(AnalysisException):
+        agg_tokens(enc, "no_such_col", token_range=(100, 700))

@@ -320,3 +320,15 @@ def test_hypothesis_selected_size_le_floor(vals, runs):
     floor = packed_size(len(v), max(1, int(v.max()).bit_length()))
     assert sel.floor_bytes[0] == floor
     assert sel.est_bytes[0] <= floor
+
+
+def test_store_arrow_schema_is_store_schema(spark):
+    """STORE_ARROW_SCHEMA, which the driver's pyarrow store reads
+    declare, is STORE_SCHEMA in Arrow: column order, types and
+    nullability."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    from tokseq.engine.encode import STORE_ARROW_SCHEMA, STORE_SCHEMA
+
+    assert to_arrow_schema(_parse_datatype_string(STORE_SCHEMA)) == STORE_ARROW_SCHEMA

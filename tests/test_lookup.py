@@ -400,10 +400,12 @@ def test_reopened_store_adopts_bucket_count(spark, tmp_path):
         EncodeJob(spark, out, n_buckets=16).encoded()
 
 
-def _store_with_copy(spark, job, tmp_path, doc_id, chunk_idx, change=None):
+def _store_with_copy(spark, job, tmp_path, doc_id, chunk_idx, change=None,
+                     out_bytes=None):
     """A copy of ``job``'s store with a second copy of one chunk
     appended, re-encoded with a different codec: its payload differs,
-    and it decodes to the chunk's own tokens, or to ``change(tokens)``."""
+    and it decodes to the chunk's own tokens, or to ``change(tokens)``.
+    ``out_bytes``, if given, replaces the copy's out_bytes."""
     import shutil
 
     from tokseq.codecs import get_codec
@@ -426,6 +428,8 @@ def _store_with_copy(spark, job, tmp_path, doc_id, chunk_idx, change=None):
     assert bytes(e.payload) != bytes(row["payload"])
     row.update(codec=codec, payload=e.payload, bit_width=e.bit_width,
                min_val=e.min_val)
+    if out_bytes is not None:
+        row.update(out_bytes=out_bytes)
     spark.createDataFrame(
         [tuple(row[c] for c in enc.columns)], STORE_SCHEMA
     ).write.mode("append").parquet(dup.encoded_path)
@@ -575,11 +579,12 @@ def test_gather_many_probes_on_one_chunk(spark, store, corpus_df):
 
 
 def test_small_gather_finishes_on_the_driver(spark, store, corpus_df):
-    """A small gather is 2 Spark jobs, the probe read and the store
-    read, and the store read does not shuffle (the probe read's bounded
-    limit gathers a multi-partition probe table into one partition); a
-    point lookup is 1 job. The store read ships exactly the touched
-    chunk rows to the driver."""
+    """On a DataFrame derived from the store scan (the JVM route), a
+    small gather is 2 Spark jobs, the probe read and the store read,
+    and the store read does not shuffle (the probe read's bounded
+    limit gathers a multi-partition probe table into one partition).
+    The store read ships exactly the touched chunk rows to the
+    driver. (Point lookups: tests/test_job_budget.py.)"""
     from tokseq.engine.lookup import gather_slices
 
     doc = corpus_df.filter(F.col("n_tok") > 3 * CHUNK_W).select(
@@ -589,15 +594,10 @@ def test_small_gather_finishes_on_the_driver(spark, store, corpus_df):
     probes = spark.createDataFrame(
         [(i, doc["doc_id"], i * 97, 2 * CHUNK_W) for i in range(8)], PROBE_SCHEMA
     )
-    enc = store.encoded()
+    enc = store.encoded().select("*")
     jobs = sorted(spark_jobs(spark, lambda: _slices(gather_slices(enc, probes, CHUNK_W))))
     assert len(jobs) == 2, jobs
     assert jobs[1][1] == 1, jobs  # the store read: one stage, no shuffle
-    point = spark_jobs(spark, lambda: point_lookup(
-        spark, store.encoded_path, doc["doc_id"], 5, 2 * CHUNK_W,
-        chunk_width=CHUNK_W, n_buckets=store.n_buckets,
-    ))
-    assert [n_stages for _, n_stages in point] == [1]
 
     # a doc probed at its first and last chunk reads 2 store rows, not
     # the chunks between them
@@ -759,16 +759,17 @@ def _range_reads(enc, lo, hi):
 
 
 def test_small_range_reads_finish_on_the_driver(spark, store, monkeypatch):
-    """A ranged agg_tokens, count_tokens and token_membership whose
-    zone candidates fit the driver cap each run exactly 2 one-stage
-    Spark jobs, a payload-free sizing read and the candidate read, and
-    no plan they run holds a Python stage: the agg kernel runs on the
+    """On a DataFrame derived from the store scan (the JVM route), a
+    ranged agg_tokens, count_tokens and token_membership whose zone
+    candidates fit the driver cap each run exactly 2 one-stage Spark
+    jobs, a payload-free sizing read and the candidate read, and no
+    plan they run holds a Python stage: the agg kernel runs on the
     driver. Above the cap, the sizing read is the only job before the
     Spark plan, so no payload is read twice."""
     from tokseq.engine import finish
     from tokseq.engine.agg import zone_range_filter
 
-    enc = store.encoded()
+    enc = store.encoded().select("*")
     n_chunks = enc.count()
     assert n_chunks >= 300, n_chunks
     row = enc.filter(F.col("codec") == "for").orderBy("doc_id", "chunk_idx").first()
@@ -900,3 +901,176 @@ def test_driver_range_reads_match_spark_plans(
     monkeypatch.setattr(finish, "DRIVER_CHUNKS", default)
     lo, hi = int(chunk.min()), int(chunk.max())
     assert results(dup.encoded(), lo, hi) == results(store.encoded(), lo, hi)
+
+
+def test_read_routes_agree(spark, store, corpus_df, tmp_path, monkeypatch,
+                           drop_store_chunks):
+    """Gather, point lookup, ranged agg_tokens (with and without
+    use_mask), ranged count_tokens and token_membership return the same
+    rows and schema, or raise the same error, on each read route:
+    pyarrow on ``job.encoded()`` (finish tier 1), the JVM bounded read
+    on ``job.encoded().select("*")`` and the Spark plan with the
+    driver cap at 0; point lookups by pyarrow and by the JVM read. The
+    stores: clean, a duplicate key whose out_bytes differ, a missing
+    interior chunk, a v1 marker, a parquet copy beside a store, and a
+    file appended after ``encoded()`` was taken, which no route reads."""
+    import json
+    import os
+    import shutil
+
+    from tokseq.engine import finish
+    from tokseq.engine.agg import agg_tokens, count_tokens
+    from tokseq.engine.lookup import gather_slices, token_membership
+
+    default = finish.DRIVER_CHUNKS
+    doc = (
+        corpus_df.filter(
+            (F.col("n_tok") > 2 * CHUNK_W + 10)
+            & (F.size(F.array_distinct("tokens")) > 100)
+        )
+        .select("doc_id", "tokens").orderBy("doc_id").first()
+    )
+    d, tokens = doc["doc_id"], np.array(doc["tokens"])
+    n = len(tokens)
+    chunk = tokens[CHUNK_W : 2 * CHUNK_W]
+    lo, hi = int(chunk.min()), int(chunk.min()) + 40
+    probes = spark.createDataFrame(
+        [(0, d, CHUNK_W - 3, CHUNK_W + 6),
+         (1, d, CHUNK_W + 5, 10),
+         (2, d, n - 2, 50),                 # short read
+         (3, d, n + 5, 4),                  # past the end, in its chunk
+         (4, d, n + 2 * CHUNK_W, 4),        # past its last chunk: no row
+         (5, "no-such-doc", 0, 4)],         # missing doc: no row
+        PROBE_SCHEMA,
+    )
+
+    def rows(df):
+        return df.schema, sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.collect()
+        )
+
+    reads = {
+        "gather": lambda enc: rows(gather_slices(enc, probes, CHUNK_W)),
+        "agg": lambda enc: rows(agg_tokens(enc, "source", token_range=(lo, hi))),
+        "agg_mask": lambda enc: rows(
+            agg_tokens(enc, "doc_id", token_range=(lo, hi), use_mask=True)
+        ),
+        "count": lambda enc: rows(count_tokens(enc, (lo, hi))),
+        "membership": lambda enc: rows(token_membership(enc, int(chunk[0]))),
+    }
+    routes = {
+        "pyarrow": (lambda enc: enc, default),
+        "jvm": (lambda enc: enc.select("*"), default),
+        "plan": (lambda enc: enc, 0),
+    }
+    points = [(d, CHUNK_W - 3, CHUNK_W + 6), (d, n - 2, 50), (d, n + 5, 4),
+              (d, n + 2 * CHUNK_W, 4), ("no-such-doc", 0, 4)]
+
+    def outcome(run):
+        try:
+            return "ok", run()
+        except Exception as exc:  # the routes raise different types
+            msg = str(exc)
+            return "raises", [p for p in ("chunk gap", "format v1") if p in msg]
+
+    def on_routes(encoded):
+        """read -> route -> outcome, over ``encoded()``'s DataFrame."""
+        got = {}
+        for name, read in reads.items():
+            for route, (derive, cap) in routes.items():
+                monkeypatch.setattr(finish, "DRIVER_CHUNKS", cap)
+                got.setdefault(name, {})[route] = outcome(
+                    lambda: read(derive(encoded()))
+                )
+        monkeypatch.setattr(finish, "DRIVER_CHUNKS", default)
+        return got
+
+    def points_on_routes(path, **kw):
+        """route -> the outcomes of ``points``, under the read name."""
+        got = {}
+        for route, cap in (("pyarrow", default), ("jvm", 0)):
+            monkeypatch.setattr(finish, "DRIVER_CHUNKS", cap)
+            got[route] = [
+                outcome(lambda: point_lookup(spark, path, *p, **kw).tolist())
+                for p in points
+            ]
+        monkeypatch.setattr(finish, "DRIVER_CHUNKS", default)
+        return {"point": got}
+
+    def agree(got):
+        for name, by_route in got.items():
+            first = by_route["pyarrow"]
+            assert all(v == first for v in by_route.values()), (name, by_route)
+        return {name: by_route["pyarrow"] for name, by_route in got.items()}
+
+    def copy(name):
+        shutil.copytree(store.out_dir, str(tmp_path / name))
+        return EncodeJob(spark, str(tmp_path / name))
+
+    # every route here really is the one it is named for
+    assert finish.store_dataset(store.encoded()) is not None
+    assert finish.store_dataset(store.encoded().select("*")) is None
+
+    clean = agree(on_routes(store.encoded))
+    assert clean["gather"][1][1] == sorted([
+        (0, d, CHUNK_W - 3, CHUNK_W + 6, tuple(tokens[CHUNK_W - 3 : 2 * CHUNK_W + 3])),
+        (1, d, CHUNK_W + 5, 10, tuple(tokens[CHUNK_W + 5 : CHUNK_W + 15])),
+        (2, d, n - 2, 50, tuple(tokens[n - 2 :])),
+        (3, d, n + 5, 4, ()),
+    ])
+    assert clean["count"][1][1][0][0] > 0
+    assert agree(points_on_routes(store.encoded_path))["point"] == [
+        ("ok", tokens[CHUNK_W - 3 : 2 * CHUNK_W + 3].tolist()),
+        ("ok", tokens[n - 2 :].tolist()), ("ok", []), ("ok", []), ("ok", []),
+    ]
+
+    # a duplicate key whose payload and out_bytes differ reads as one
+    dup = _store_with_copy(spark, store, tmp_path / "dup", d, 1, out_bytes=10**6)
+    assert agree(on_routes(dup.encoded)) == clean
+    assert agree(points_on_routes(dup.encoded_path)) == agree(
+        points_on_routes(store.encoded_path)
+    )
+
+    # a missing interior chunk fails every read across it
+    gap = copy("gap")
+    drop_store_chunks(gap, ~((F.col("doc_id") == d) & (F.col("chunk_idx") == 1)))
+    got = agree(on_routes(gap.encoded))
+    assert got["gather"] == ("raises", ["chunk gap"])
+    assert got["count"][1][1][0][0] < clean["count"][1][1][0][0]
+    assert agree(points_on_routes(gap.encoded_path))["point"][0] == (
+        "raises", ["chunk gap"]
+    )
+
+    # a v1 marker fails before any store read
+    old = copy("v1")
+    with open(old.format_marker_path) as f:
+        meta = json.load(f)
+    with open(old.format_marker_path, "w") as f:
+        json.dump({**meta, "format_version": 1}, f)
+    jobs = spark_jobs(spark, lambda: (
+        agree(on_routes(EncodeJob(spark, old.out_dir).encoded)),
+        agree(points_on_routes(old.encoded_path)),
+    ))
+    assert jobs == []
+    assert agree(on_routes(EncodeJob(spark, old.out_dir).encoded))["agg"] == (
+        "raises", ["format v1"]
+    )
+
+    # a parquet copy beside the store reads as a bare path
+    beside = str(tmp_path / "v1" / "copy")
+    shutil.copytree(store.encoded_path, beside)
+    assert agree(points_on_routes(beside, chunk_width=CHUNK_W)) == agree(
+        points_on_routes(store.encoded_path)
+    )
+
+    # a file appended after encoded() was taken is read by no route
+    late = copy("late")
+    taken = late.encoded()
+    bad = _store_with_copy(spark, store, tmp_path / "bad", d, 1,
+                           change=lambda t: t + 1)
+    for f in set(os.listdir(bad.encoded_path)) - set(os.listdir(store.encoded_path)):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(bad.encoded_path, f), late.encoded_path)
+    assert agree(on_routes(lambda: taken)) == clean
+    assert agree(on_routes(late.encoded))["gather"] == ("raises", ["chunk gap"])

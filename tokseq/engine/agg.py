@@ -16,15 +16,17 @@ Cost ladder, cheapest first:
   min/max bounds  SQL over the zone map [min_val, min_val + 2^w) —
                   same, payload never read (zone_range_filter).
   small ranged    a token-range read whose zone candidates number at
-  read            most ``finish.DRIVER_CHUNKS``: a payload-free,
-                  bounded Spark job sizes them, a second JVM-only job
-                  reads them into Arrow (no Python stage, whose fixed
-                  cost dwarfs the kernel: engine/finish.py), the
-                  kernel below runs on the driver, and the dedup and
-                  grouping run in pyarrow — 2 jobs, no Python stage,
-                  no payload in an exchange. Above the cap the read
-                  falls through to the next rung, after paying the
-                  payload-free sizing job.
+  read            most ``finish.DRIVER_CHUNKS``: the kernel below runs
+                  on the driver and the dedup and grouping run in
+                  pyarrow, with no Python stage, whose fixed cost
+                  dwarfs the kernel (engine/finish.py). On
+                  ``EncodeJob.encoded()`` of a small local store,
+                  pyarrow reads its files and zone_candidates counts
+                  the candidates — no Spark job; on any other
+                  DataFrame a payload-free, bounded Spark job sizes
+                  them and a second JVM-only job reads them into
+                  Arrow. Above the cap the read falls through to the
+                  next rung.
   exact agg       ``agg_chunks``: one mapInArrow pass emitting ONE
                   summary row per chunk. rle reads only its run
                   streams (O(runs) ≪ O(n)); dict reads the dictionary
@@ -65,6 +67,7 @@ returns all tokens; masks are a parallel stream).
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import numpy as np
@@ -73,6 +76,8 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..codecs import DICT, RLE
 from ..validity import unpack_mask
@@ -95,6 +100,8 @@ _AGG_PA_SCHEMA = pa.schema(
         ("max_val", pa.int64()),
     ]
 )
+# count_tokens' result: its coalesce makes the count non-null
+_COUNT_SCHEMA = StructType([StructField("n_tokens", LongType(), False)])
 # masked-out sentinel for min/max registers, and the bound of an open range
 _BIG = np.int64(2**62)
 
@@ -138,6 +145,17 @@ def zone_filter(token: int):
     """Single-token membership zone predicate: the range filter
     degenerate case [token, token]."""
     return zone_range_filter(int(token), int(token))
+
+
+def zone_candidates(codecs, widths, mins, lo: int | None, hi: int | None) -> np.ndarray:
+    """Per chunk: does zone_range_filter keep it? (Its numpy twin, for
+    the driver's reads of a store's files.)"""
+    keep = np.ones(len(mins), bool) if hi is None else mins <= hi
+    if lo is not None:
+        ztop = mins + (np.int64(1) << np.minimum(widths, _UNBOUNDED_WIDTH)) - 1
+        inexact = np.isin(codecs, _INEXACT_ZONE_CODECS) | (widths >= _UNBOUNDED_WIDTH)
+        keep &= (ztop >= lo) | inexact
+    return keep
 
 
 def zone_contained(
@@ -329,6 +347,12 @@ def _agg_map_factory(
     return _agg_map
 
 
+def _kernel_cols(use_mask: bool) -> list[str]:
+    """The store columns the agg kernel reads."""
+    return ["doc_id", "chunk_idx", "source", "codec", "bit_width",
+            "n_values", "min_val", "payload"] + ["mask"] * use_mask
+
+
 def _kernel_input(
     encoded_df: DataFrame,
     token_range: tuple[int | None, int | None] | None,
@@ -336,13 +360,9 @@ def _kernel_input(
 ) -> DataFrame:
     """The store columns the agg kernel reads, zone-pruned to
     ``token_range`` (None = every chunk)."""
-    cols = ["doc_id", "chunk_idx", "source", "codec", "bit_width",
-            "n_values", "min_val", "payload"]
     if token_range is not None:
         encoded_df = encoded_df.filter(zone_range_filter(*token_range))
-    if use_mask:
-        cols.append("mask")
-    return encoded_df.select(*cols)
+    return encoded_df.select(*_kernel_cols(use_mask))
 
 
 def agg_chunks(
@@ -366,56 +386,76 @@ def agg_chunks(
     zero-match chunks emit no row. ``use_mask=True`` additionally
     (or independently) restricts to valid positions per the chunk's
     validity bitmap."""
-    return _summaries(
-        _kernel_input(encoded_df, token_range, use_mask), token_range, use_mask
-    )
-
-
-def _summaries(
-    kernel_input: DataFrame,
-    token_range: tuple[int | None, int | None] | None,
-    use_mask: bool,
-) -> DataFrame:
-    """``_kernel_input`` rows -> the agg_chunks summary rows."""
     lo, hi = token_range or (None, None)
-    return kernel_input.mapInArrow(
+    return _kernel_input(encoded_df, token_range, use_mask).mapInArrow(
         _agg_map_factory(lo, hi, use_mask), AGG_CHUNK_SCHEMA
     )
 
 
-def _finish_ranged(
-    plan: DataFrame,
-    kernel_input: DataFrame,
-    token_range: tuple[int | None, int | None] | None,
-    use_mask: bool,
-    reduce,
-) -> DataFrame:
-    """A token-range read's driver finish. A payload-free, one-stage
-    Spark job counts the zone candidates (``kernel_input``), at most
-    ``finish.DRIVER_CHUNKS`` + 1 per partition; if at most the cap
-    exist, a second JVM-only job reads them into Arrow, the agg kernel
-    runs on the driver and emits exactly the rows ``agg_chunks`` would,
-    and ``reduce`` (summary table -> result table) applies the read's
-    dedup and grouping. The result is a local DataFrame with ``plan``'s
-    schema. Unranged reads, and reads with more candidates than the
-    cap, return ``plan`` itself."""
+def _finish_ranged(encoded_df, token_range, use_mask, plan, schema, reduce) -> DataFrame:
+    """A token-range read's driver finish (engine/finish.py). The zone
+    candidates are counted first: on a small local store's files in
+    numpy (zone_candidates, no Spark job), otherwise by a payload-free,
+    one-stage Spark job that returns at most ``finish.DRIVER_CHUNKS`` +
+    1 flags per partition, then a JVM-only job reads them into Arrow.
+    If at most the cap exist, the agg kernel runs on the driver and
+    emits exactly the rows ``agg_chunks`` would, ``reduce`` (summary
+    table -> result table) applies the read's dedup and grouping, and
+    the result is a local DataFrame of ``schema``. With more candidates
+    (or a cap of 0), the call returns ``plan()``, the Spark plan, which
+    is built only then."""
     cap = finish.DRIVER_CHUNKS
-    if token_range is None or not cap:
-        return plan
-    # size in one stage with no payload: the low 33 bits of
-    # monotonically_increasing_id number a partition's rows, so at most
-    # cap + 1 flags per partition come back, more than cap in all iff
-    # more than cap candidates exist. (A limit plans a shuffle into one
-    # partition, and one carrying payloads would ship up to cap + 1 of
-    # them per partition on a read that then falls back.)
-    first = F.expr(f"monotonically_increasing_id() & {(1 << 33) - 1} <= {cap}")
-    if kernel_input.select(first.alias("keep")).filter("keep").toArrow().num_rows > cap:
-        return plan
-    rows = kernel_input.toArrow()
+    if not cap:
+        return plan()
+    lo, hi = token_range
+    store = finish.store_dataset(encoded_df)
+    if store is not None:
+        # the zone rule's top-level bound prunes row groups, as in Spark
+        rows = store.to_table(
+            columns=_kernel_cols(use_mask),
+            filter=None if hi is None else pc.field("min_val") <= hi,
+        )
+        keep = zone_candidates(
+            rows["codec"].to_numpy(), rows["bit_width"].to_numpy(),
+            rows["min_val"].to_numpy(), lo, hi,
+        )
+        if np.count_nonzero(keep) > cap:
+            return plan()
+        rows = rows.filter(pa.array(keep))
+    else:
+        inp = _kernel_input(encoded_df, token_range, use_mask)
+        # size in one stage with no payload: the low 33 bits of
+        # monotonically_increasing_id number a partition's rows, so at
+        # most cap + 1 flags per partition come back, more than cap in
+        # all iff more than cap candidates exist. (A limit plans a
+        # shuffle into one partition, and one carrying payloads would
+        # ship up to cap + 1 of them per partition on a read that then
+        # falls back.)
+        first = F.expr(f"monotonically_increasing_id() & {(1 << 33) - 1} <= {cap}")
+        if inp.select(first.alias("keep")).filter("keep").toArrow().num_rows > cap:
+            return plan()
+        rows = inp.toArrow()
     summaries = pa.Table.from_batches(
-        _agg_map_factory(*token_range, use_mask)(rows.to_batches()), _AGG_PA_SCHEMA
+        _agg_map_factory(lo, hi, use_mask)(rows.to_batches()), _AGG_PA_SCHEMA
     )
-    return finish.local_frame(kernel_input.sparkSession, reduce(summaries), plan.schema)
+    return finish.local_frame(encoded_df.sparkSession, reduce(summaries), schema)
+
+
+def _agg_schema(*group_cols: str) -> StructType | None:
+    """agg_tokens' result schema, derived without building its plan:
+    each group column is a summary column, matched case-insensitively
+    and named as spelled, as Spark resolves it. None when a name is not
+    plainly one (the plan then resolves it, or raises)."""
+    fields = {f.name: f for f in from_arrow_schema(_AGG_PA_SCHEMA)}
+    keys = [fields.get(c.lower()) for c in group_cols]
+    if None in keys:
+        return None
+    return StructType(
+        [StructField(c, f.dataType, f.nullable) for c, f in zip(group_cols, keys)]
+        # ungrouped, the plan coalesces a null count to 0
+        + [StructField("n_tokens", LongType(), bool(group_cols))]
+        + [StructField(c, LongType()) for c in ("sum_tokens", "min_token", "max_token")]
+    )
 
 
 def agg_tokens(
@@ -432,42 +472,49 @@ def agg_tokens(
 
     Unranged, the result is a lazy Spark plan whose dedup exchange
     carries ~56-byte summary rows, never payloads or decoded tokens.
-    Ranged, the call first sizes the zone candidates in one bounded,
-    payload-free Spark job: up to ``finish.DRIVER_CHUNKS`` of them are
-    read and finish on the driver, and the result is a local
-    DataFrame — an eager snapshot of the store, as a small gather's
-    is. With more candidates, the call has paid that sizing job and
-    returns the lazy plan."""
-    # full-row distinct == the keyed dedup here: duplicate chunks decode
-    # to the same tokens, so their summary rows are identical even when
-    # their payload bytes differ — and a keyless distinct plans as a
-    # map-side-combining HashAggregate, where dropDuplicates(keys) needs first()
-    # over the string column and degrades to Sort + SortAggregate on
-    # both sides of the exchange (measured: 2 sorts + sort-aggs removed)
-    inp = _kernel_input(encoded_df, token_range, use_mask)
-    per_chunk = _summaries(inp, token_range, use_mask).dropDuplicates()
-    grouped = (
-        per_chunk.groupBy(*group_cols) if group_cols else per_chunk.groupBy()
-    )
-    plan = grouped.agg(
-        F.sum("n_values").alias("n_tokens"),
-        F.sum("sum_val").alias("sum_tokens"),
-        F.min("min_val").alias("min_token"),
-        F.max("max_val").alias("max_token"),
-    )
-    if not group_cols:
-        # ungrouped: match SQL global-aggregate semantics when nothing
-        # passes the range/mask (COUNT(*) = 0, SUM = NULL) instead of a
-        # NULL count (ADVICE r6 #3; the count_tokens path already did)
-        plan = plan.select(
-            F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-            "sum_tokens", "min_token", "max_token",
+    Ranged, the call first counts the zone candidates
+    (``_finish_ranged``): up to ``finish.DRIVER_CHUNKS`` of them finish
+    on the driver, and the result is a local DataFrame — an eager
+    snapshot of the store, as a small gather's is — whose schema is
+    derived without building the plan (``_agg_schema``). With more
+    candidates, the call returns the lazy plan."""
+    @functools.cache
+    def plan() -> DataFrame:
+        # full-row distinct == the keyed dedup here: duplicate chunks
+        # decode to the same tokens, so their summary rows are identical
+        # even when their payload bytes differ — and a keyless distinct
+        # plans as a map-side-combining HashAggregate, where
+        # dropDuplicates(keys) needs first() over the string column and
+        # degrades to Sort + SortAggregate on both sides of the exchange
+        # (measured: 2 sorts + sort-aggs removed)
+        per_chunk = agg_chunks(encoded_df, token_range, use_mask).dropDuplicates()
+        grouped = (
+            per_chunk.groupBy(*group_cols) if group_cols else per_chunk.groupBy()
         )
+        out = grouped.agg(
+            F.sum("n_values").alias("n_tokens"),
+            F.sum("sum_val").alias("sum_tokens"),
+            F.min("min_val").alias("min_token"),
+            F.max("max_val").alias("max_token"),
+        )
+        if not group_cols:
+            # ungrouped: match SQL global-aggregate semantics when
+            # nothing passes the range/mask (COUNT(*) = 0, SUM = NULL)
+            # instead of a NULL count (ADVICE r6 #3; the count_tokens
+            # path already did)
+            out = out.select(
+                F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long").alias("n_tokens"),
+                "sum_tokens", "min_token", "max_token",
+            )
+        return out
+
+    if token_range is None:
+        return plan()
+    schema = _agg_schema(*group_cols) or plan().schema
 
     def reduce(summaries: pa.Table) -> pa.Table:
-        # Spark resolves group columns case-insensitively and names them
-        # as spelled; the summary columns are lower-case
-        keys = [c.lower() for c in plan.columns[: len(group_cols)]]
+        # the summary columns are lower-case
+        keys = [c.lower() for c in schema.names[: len(group_cols)]]
         out = (
             summaries.group_by(summaries.column_names).aggregate([])
             .group_by(keys)
@@ -479,9 +526,9 @@ def agg_tokens(
         ]
         if not keys:
             cols[0] = cols[0].fill_null(0)  # the plan's coalesce
-        return pa.table(cols, names=plan.columns)
+        return pa.table(cols, names=schema.names)
 
-    return _finish_ranged(plan, inp, token_range, use_mask, reduce)
+    return _finish_ranged(encoded_df, token_range, use_mask, plan, schema, reduce)
 
 
 def count_tokens(
@@ -499,8 +546,8 @@ def count_tokens(
     every candidate chunk counts its matches inside the kernel (rle
     per run, without decoding). Like the ranged ``agg_tokens``, up to
     ``finish.DRIVER_CHUNKS`` candidates finish on the driver as an
-    eager local result; above the cap the call pays the payload-free
-    sizing job, then returns the one-scan Spark plan."""
+    eager local result; above the cap the call returns the one-scan
+    Spark plan."""
     # keyless distinct: equivalent to the keyed dedup because the
     # projected columns depend only on the chunk's tokens (copies agree
     # on them whatever their codec), and a distinct partial-aggregates
@@ -520,6 +567,7 @@ def count_tokens(
         n = pc.sum(rows["n_values"]).as_py() or 0
         return pa.table({"n_tokens": pa.array([n], pa.int64())})
 
-    inp = _kernel_input(encoded_df, token_range, False)
-    plan = count(_summaries(inp, token_range, False))
-    return _finish_ranged(plan, inp, token_range, False, reduce)
+    return _finish_ranged(
+        encoded_df, token_range, False,
+        lambda: count(agg_chunks(encoded_df, token_range)), _COUNT_SCHEMA, reduce,
+    )

@@ -49,15 +49,6 @@ ENCODED_SCHEMA = (
 # parquet footers, which costs a Spark job per read
 STORE_SCHEMA = ENCODED_SCHEMA + ", bucket int"
 
-DEFAULT_BUCKETS = 256
-
-
-def bucket_of(doc_id, n_buckets: int):
-    """The store's bucket rule, ``pmod(xxhash64(doc_id), n_buckets)``,
-    over a doc_id Column. Writes cluster files by it and point lookups
-    prune by it, so both must hash alike."""
-    return F.pmod(F.xxhash64(doc_id), F.lit(int(n_buckets)))
-
 _ENCODED_PA_SCHEMA = pa.schema(
     [
         ("doc_id", pa.string()),
@@ -79,6 +70,19 @@ _ENCODED_PA_SCHEMA = pa.schema(
         ("mask", pa.binary()),
     ]
 )
+# STORE_SCHEMA in Arrow: the driver's pyarrow reads of a store's files
+# (engine/finish.py) declare it, as Spark's store reads declare
+# STORE_SCHEMA
+STORE_ARROW_SCHEMA = _ENCODED_PA_SCHEMA.append(pa.field("bucket", pa.int32()))
+
+DEFAULT_BUCKETS = 256
+
+
+def bucket_of(doc_id, n_buckets: int):
+    """The store's bucket rule, ``pmod(xxhash64(doc_id), n_buckets)``,
+    over a doc_id Column. Writes cluster files by it and point lookups
+    prune by it, so both must hash alike."""
+    return F.pmod(F.xxhash64(doc_id), F.lit(int(n_buckets)))
 
 
 def list_column_to_numpy(arr: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:

@@ -5,15 +5,19 @@ encoded table — the reference's third entry point
 
 Spark rendering: a read touches the chunks pos//W .. (pos+k-1)//W of
 its doc. A small read (every point lookup, and a gather of at most
-``finish.DRIVER_CHUNKS`` touched chunk keys) is a manifest-shaped predicate
-on the encoded table — ``doc_id IN (...) AND chunk_idx BETWEEN ...``,
-plus ``bucket IN (...)`` for a point lookup, which Parquet row-group
-statistics prune on the bucket-clustered layout, and the exact
-``(doc_id, chunk_idx)`` key set, filtered on the executors — read by
-ONE Spark job into Arrow; the dedup, gap guard, decode and stitch then
-run in numpy on the driver, like the reference's local ``slice``.
-Larger probe tables join the store on Spark (:func:`gather_slices`).
-O(touched chunks) of decode either way.
+``finish.DRIVER_CHUNKS`` touched chunk keys) is a manifest-shaped
+predicate on the encoded table — ``doc_id IN (...) AND chunk_idx
+BETWEEN ...``, then the exact ``(doc_id, chunk_idx)`` key set — and
+the dedup, gap guard, decode and stitch run in numpy on the driver,
+like the reference's local ``slice``. The rows come by the tiers of
+engine/finish.py: on a small local store, read as the exact
+``EncodeJob.encoded()`` DataFrame or (point lookups) by its path,
+pyarrow reads the store's files and no Spark job reads the store;
+otherwise ONE JVM-only Spark job reads them into Arrow, pruning on
+``bucket IN (...)`` too for a point lookup (Parquet row-group
+statistics on the bucket-clustered layout). Larger probe tables join
+the store on Spark (:func:`gather_slices`). O(touched chunks) of
+decode either way.
 
 Membership is a token-range read like any other: ``token_membership``
 is ``agg_tokens`` per doc over the one-token range, so it prunes with
@@ -28,6 +32,8 @@ import os
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
@@ -52,11 +58,12 @@ def token_membership(encoded_df, token: int):
     i.e. on decoded content, not on payload bytes. Random-token
     corpora degrade gracefully to a full scan.
 
-    The call sizes the zone candidates in one payload-free Spark job
-    first: up to ``finish.DRIVER_CHUNKS`` of them are read and counted
-    on the driver and the result is an eager local snapshot, as a
-    small gather's is; with more, the call returns agg_tokens' lazy
-    Spark plan after that sizing job."""
+    The call counts the zone candidates first (agg_tokens): up to
+    ``finish.DRIVER_CHUNKS`` of them are counted on the driver and the
+    result is an eager local snapshot, as a small gather's is — with
+    no Spark job when ``encoded_df`` is ``EncodeJob.encoded()`` of a
+    small local store; with more, the call returns agg_tokens' lazy
+    Spark plan."""
     t = int(token)
     return agg_tokens(encoded_df, "doc_id", token_range=(t, t)).select(
         "doc_id", F.col("n_tokens").alias("n_occurrences")
@@ -89,17 +96,20 @@ def _sql_str(s) -> str:
 
 
 def _gather_local(
-    encoded_df, probes: pa.Table, W: int, n_buckets: int | None = None
+    store, probes: pa.Table, W: int, n_buckets: int | None = None
 ) -> pa.Table:
     """Driver-side gather of a small probe table (probe_id, doc_id,
     pos, k > 0) -> the same columns plus ``tokens``, with the row
-    semantics of the Spark plan in :func:`gather_slices`. One Spark job
-    reads exactly the touched chunk keys' store rows (``doc_id IN
-    (...)`` and a ``chunk_idx`` bound for the scan to prune on, plus
-    ``bucket IN (...)`` when ``n_buckets`` is given, and the exact
-    ``(doc_id, chunk_idx)`` key set filtered on the executors), and each
-    row decodes once; copies of a key count as one chunk only if they
-    give each probe the same piece, as in the Spark plan."""
+    semantics of the Spark plan in :func:`gather_slices`. The read
+    keeps exactly the touched chunk keys' store rows: ``doc_id IN
+    (...)`` and a ``chunk_idx`` bound for the scan to prune on, then
+    the exact ``(doc_id, chunk_idx)`` key set. ``store`` is a pyarrow
+    dataset of the store's files (finish tier 1: no Spark job) or a
+    Spark DataFrame, read in one JVM-only job that also prunes on
+    ``bucket IN (...)`` when ``n_buckets`` is given and filters the key
+    set on the executors. Each row decodes once; copies of a key count
+    as one chunk only if they give each probe the same piece, as in
+    the Spark plan."""
     # identical probe rows are one probe, as in the Spark plan's group-by
     probes = probes.group_by(probes.column_names).aggregate([])
     pos = probes.column("pos").to_numpy().astype(np.int64)
@@ -122,25 +132,35 @@ def _gather_local(
     # chunk key = (doc's index in docs, chunk_idx)
     pkey = (pdoc[probe].astype(np.int64) << 32) | chunk
     keys = np.unique(pkey)
-    cond = F.expr(
-        f"doc_id IN ({', '.join(map(_sql_str, docs))})"
-        f" AND chunk_idx BETWEEN {int(c0.min())} AND {int(chunk.max())}"
-        " AND (doc_id, chunk_idx) IN ("
-        + ", ".join(f"({_sql_str(docs[x >> 32])}, {x & 0xFFFFFFFF})" for x in keys)
-        + ")"
-    )
-    if n_buckets is not None:
-        # same hash Spark used at write time -> file/row-group pruning
-        # on the bucket-clustered layout
-        cond &= F.col("bucket").isin(
-            *(bucket_of(F.lit(d), n_buckets) for d in docs.tolist())
+    c_lo, c_hi = int(c0.min()), int(chunk.max())
+    if isinstance(store, ds.Dataset):
+        chunk_idx = pc.field("chunk_idx")
+        rows = store.to_table(columns=DECODE_COLS, filter=(
+            pc.field("doc_id").isin(docs) & (chunk_idx >= c_lo) & (chunk_idx <= c_hi)
+        ))
+    else:
+        cond = F.expr(
+            f"doc_id IN ({', '.join(map(_sql_str, docs))})"
+            f" AND chunk_idx BETWEEN {c_lo} AND {c_hi}"
+            " AND (doc_id, chunk_idx) IN ("
+            + ", ".join(f"({_sql_str(docs[x >> 32])}, {x & 0xFFFFFFFF})" for x in keys)
+            + ")"
         )
-    store = encoded_df.filter(cond).select(*DECODE_COLS).toArrow()
-    sdoc = np.searchsorted(docs, store.column("doc_id").to_numpy(zero_copy_only=False))
-    skey = (sdoc.astype(np.int64) << 32) | store.column("chunk_idx").to_numpy(
+        if n_buckets is not None:
+            # same hash Spark used at write time -> file/row-group pruning
+            # on the bucket-clustered layout
+            cond &= F.col("bucket").isin(
+                *(bucket_of(F.lit(d), n_buckets) for d in docs.tolist())
+            )
+        rows = store.filter(cond).select(*DECODE_COLS).toArrow()
+    sdoc = np.searchsorted(docs, rows.column("doc_id").to_numpy(zero_copy_only=False))
+    skey = (sdoc.astype(np.int64) << 32) | rows.column("chunk_idx").to_numpy(
         zero_copy_only=False
     )
-    flat, offs = decode_batch_kernel(*chunk_headers(store))
+    # the exact key set (a no-op after the executors applied it)
+    wanted = np.isin(skey, keys)
+    rows, skey = rows.filter(pa.array(wanted)), skey[wanted]
+    flat, offs = decode_batch_kernel(*chunk_headers(rows))
 
     # gap guard: a probe's present chunks must be a prefix of its
     # touched range (only TRAILING chunks may be absent: a short read);
@@ -244,12 +264,14 @@ def gather_slices(
       inside the main query.
     * Driver finish. When the collected probes touch at most
       ``finish.DRIVER_CHUNKS`` chunk keys (2048; 8M tokens at W=4096),
-      one more job reads exactly those keys' store rows into Arrow
-      (``doc_id IN (...)`` and a ``chunk_idx`` bound prune the scan;
-      the ``(doc_id, chunk_idx)`` key set is filtered on the
-      executors), and the dedup, gap guard, decode and stitch run in
-      numpy on the driver, under the rules below. The result is a
-      local DataFrame: 2 Spark jobs in all, no join and no stitch
+      exactly those keys' store rows are read (``doc_id IN (...)`` and
+      a ``chunk_idx`` bound prune the scan, then the ``(doc_id,
+      chunk_idx)`` key set), and the dedup, gap guard, decode and
+      stitch run in numpy on the driver, under the rules below. On
+      ``EncodeJob.encoded()`` of a small local store pyarrow reads its
+      files (engine/finish.py): 1 Spark job in all, the probe read.
+      Otherwise one more JVM-only job reads the rows into Arrow. The
+      result is a local DataFrame, with no join and no stitch
       exchange. Between the cap and the broadcast bound, the collected
       probes come back as a local relation that is broadcast instead.
     * Spark plan, one decode+slice stage. Probes expand to their
@@ -302,8 +324,9 @@ def gather_slices(
             spark = probes_df.sparkSession
             cap = finish.DRIVER_CHUNKS
             if cap and keys_ub <= cap:
+                store = finish.store_dataset(encoded_df) or encoded_df
                 return finish.local_frame(
-                    spark, _gather_local(encoded_df, head, W),
+                    spark, _gather_local(store, head, W),
                     StructType(
                         live.schema.fields
                         + [StructField("tokens", ArrayType(IntegerType()))]
@@ -384,10 +407,12 @@ def point_lookup(
     with ``chunk_width`` (None = the default width) and prunes by
     bucket only when ``n_buckets`` is given.
 
-    The one-probe case of the driver gather: one Spark job reads the
-    touched chunks (pruned by ``bucket`` too when the bucket count is
-    known), under gather_slices' gap and duplicate rules; a missing
-    doc reads as empty."""
+    The one-probe case of the driver gather, under gather_slices' gap
+    and duplicate rules; a missing doc reads as empty. When the local
+    path's parquet files fit the driver budget (engine/finish.py),
+    pyarrow reads the touched chunks and no Spark job runs; otherwise
+    one Spark job reads them (pruned by ``bucket`` too when the bucket
+    count is known)."""
     path = os.path.normpath(encoded_path)
     # a reader job: it encodes nothing, so its partition count is moot
     # (resolving the default costs a JVM round trip per lookup)
@@ -410,8 +435,9 @@ def point_lookup(
         "probe_id": [0], "doc_id": [doc_id],
         "pos": pa.array([pos], pa.int64()), "k": pa.array([k], pa.int64()),
     })
-    enc = spark.read.schema(STORE_SCHEMA).parquet(encoded_path)
-    got = _gather_local(enc, probe, job.chunk_width, n_buckets).column("tokens")
+    store = (finish.path_dataset(encoded_path, job.chunk_width)
+             or spark.read.schema(STORE_SCHEMA).parquet(encoded_path))
+    got = _gather_local(store, probe, job.chunk_width, n_buckets).column("tokens")
     if not len(got):
         return np.zeros(0, dtype=np.int32)
     return got[0].values.to_numpy(zero_copy_only=False)

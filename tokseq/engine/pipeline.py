@@ -50,6 +50,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from . import finish
 from .chunk import DEFAULT_CHUNK_WIDTH, plan_chunks, repartition_chunks
 from .decode import decode_docs
 from .encode import DEFAULT_BUCKETS, STORE_SCHEMA, bucket_of, encode_chunks
@@ -387,10 +388,21 @@ class EncodeJob:
         return result
 
     def encoded(self) -> DataFrame:
+        """The store as a lazy DataFrame, after the format-marker
+        check. In path mode the exact object returned is marked as a
+        plain store scan (finish.mark_store_scan): a small gather or
+        small token-range read on it reads the store's files with
+        pyarrow on the driver when they are local and small
+        (engine/finish.py, tier 1), and starts no Spark job for the
+        store. A DataFrame derived from it (``select``, ``filter``, ...)
+        and a catalog table take the JVM bounded read instead."""
         self._check_format_marker("read store")
         if self.table_prefix is not None:
             return self.spark.read.table(self.encoded_table)
-        return self.spark.read.schema(STORE_SCHEMA).parquet(self.encoded_path)
+        return finish.mark_store_scan(
+            self.spark.read.schema(STORE_SCHEMA).parquet(self.encoded_path),
+            self.chunk_width,
+        )
 
     def decode(self) -> DataFrame:
         # appends are at-least-once: a replayed resume or stream batch
@@ -417,11 +429,12 @@ class EncodeJob:
         tokens are materialized or shuffled. ``token_range`` restricts
         to tokens in [lo, hi] with zone-map chunk pruning at the scan;
         ``use_mask=True`` restricts to valid positions per the chunk
-        validity bitmaps. A ranged call sizes its zone candidates in
-        one payload-free Spark job: up to ``finish.DRIVER_CHUNKS``
-        finish on the driver as an eager local snapshot, as a small
-        gather does; above the cap it returns the lazy Spark plan
-        after that job. Unranged calls return the lazy plan."""
+        validity bitmaps. A ranged call with up to
+        ``finish.DRIVER_CHUNKS`` zone candidates finishes on the driver
+        as an eager local snapshot, as a small gather does — reading a
+        small local store's files with pyarrow, with no Spark job;
+        above the cap it returns the lazy Spark plan. Unranged calls
+        return the lazy plan."""
         from .agg import agg_tokens
 
         return agg_tokens(
@@ -450,9 +463,9 @@ class EncodeJob:
         restricted to a token range: payload-free when unranged, the
         ranged agg_chunks summaries otherwise (agg.count_tokens). A
         ranged count with at most ``finish.DRIVER_CHUNKS`` zone
-        candidates finishes on the driver as an eager local snapshot;
-        above the cap it returns the lazy plan after the payload-free
-        sizing job."""
+        candidates finishes on the driver as an eager local snapshot,
+        as ``agg_tokens`` does; above the cap it returns the lazy
+        plan."""
         from .agg import count_tokens
 
         return count_tokens(self.encoded(), token_range)
